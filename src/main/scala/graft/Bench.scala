@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE raw JSON line on stdout (build.sbt sets
@@ -16,34 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached plans otherwise keep their pre-AQE output partitioning:
-      // every .persist() in the engine materialized tiny frames at the
-      // full spark.sql.shuffle.partitions fan-out and pinned that
-      // width on all downstream stages (32 near-empty tasks per job at
-      // local[32]; q138's min/max-MV probe cache measured 1.7x slower
-      // without this). Scale-independent: it simply lets AQE apply the
-      // same coalescing to cached plans that uncached ones already get.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // A 102-query × 4-pass run executes thousands of jobs in ONE
-      // JVM; bound the app-status bookkeeping so it cannot grow with
-      // run length. (Observed: the micro-batch-heavy queries, which
-      // sort last, measure ~1.5× their fresh-JVM cost by the end of a
-      // full run — in-process accumulation, not box load; a 2-minute
-      // periodic-GC was tried against it and rejected because full-GC
-      // pauses on a 24 g heap land inside timed windows.)
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session("graft-bench")
     // optional arg: comma-separated query names (local iteration aid —
     // the driver always times the full surface)
     val only = args.headOption.map(_.split(',').toSet)

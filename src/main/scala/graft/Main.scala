@@ -13,9 +13,23 @@ import graft.warehouse.Connector
   */
 object Main {
 
+  /** App-status bounds: one JVM may run thousands of jobs (a full
+    * `graft.Bench` run, a long-lived `serve` or `mirror`), and Spark's
+    * status store otherwise keeps 1,000 jobs/stages, 100,000 tasks and
+    * 1,000 SQL executions. Bounded, its footprint no longer grows with
+    * run length (a full Bench run measured its late-sorted micro-batch
+    * queries at ~1.5x their fresh-JVM cost from that accumulation). */
+  private val RetainedJobs = 200
+  private val RetainedStages = 200
+  private val RetainedTasks = 2000
+  private val RetainedExecutions = 50
+
+  /** The ONE session builder of every entry point (CLI, Bench, Verify,
+    * Profile): `local[SPARK_GRAFT_CPUS]`, else one thread per
+    * available processor, with graft's SQL functions registered. */
   def session(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
+      Runtime.getRuntime.availableProcessors().toString)
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -32,6 +46,10 @@ object Main {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.ui.retainedJobs", RetainedJobs)
+      .config("spark.ui.retainedStages", RetainedStages)
+      .config("spark.ui.retainedTasks", RetainedTasks)
+      .config("spark.sql.ui.retainedExecutions", RetainedExecutions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

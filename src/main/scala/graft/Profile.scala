@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): runs ONE query
   * under a SparkListener and prints a per-job time breakdown (job id,
@@ -13,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * `explain("formatted")` when a dump path is given.
   *
   * Usage: runMain graft.Profile <queryName> [planOutPath]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default:
+  * the processor count, like every entry point).
   * Not part of the driver contract — a local measurement aid only.
   */
 object Profile {
@@ -21,23 +21,7 @@ object Profile {
     val name = args.headOption.getOrElse(sys.error("usage: Profile <query> [planOut]"))
     val planOut = args.lift(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached plans otherwise keep their pre-AQE output partitioning:
-      // every .persist() in the engine materialized tiny frames at the
-      // full spark.sql.shuffle.partitions fan-out and pinned that
-      // width on all downstream stages (32 near-empty tasks per job at
-      // local[32]; q138's min/max-MV probe cache measured 1.7x slower
-      // without this). Scale-independent: it simply lets AQE apply the
-      // same coalescing to cached plans that uncached ones already get.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session("graft-profile")
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
 
     // warm-up: absorb JIT/codegen/footer costs exactly like Bench

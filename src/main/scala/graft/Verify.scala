@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,23 +11,7 @@ object Verify {
       case Array(s, o, sel)  => (s, o, Some(sel.split(',').toSet))
       case _ => sys.error("usage: Verify <sfDir> <outDir> [q1,q2,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached plans otherwise keep their pre-AQE output partitioning:
-      // every .persist() in the engine materialized tiny frames at the
-      // full spark.sql.shuffle.partitions fan-out and pinned that
-      // width on all downstream stages (32 near-empty tasks per job at
-      // local[32]; q138's min/max-MV probe cache measured 1.7x slower
-      // without this). Scale-independent: it simply lets AQE apply the
-      // same coalescing to cached plans that uncached ones already get.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A query that THROWS must be loud: in round 9 a crashed query was
     // simply absent from the correctness report (no parquet, stderr

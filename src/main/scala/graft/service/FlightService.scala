@@ -85,7 +85,6 @@ final class FlightService(connector: Connector, port: Int = 0,
       catch {
         case Wire.BodyFailed(_) => // response line already sent; just close
         case e: Throwable =>
-          if (sys.env.contains("GRAFT_SERVICE_DEBUG")) e.printStackTrace()
           // machine-readable code for the failure modes clients act on
           // (vs. string-matching relayed messages)
           val code = e match {

@@ -231,10 +231,10 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
   /** SQL TIME TRAVEL composes in any statement — including DML/DDL
     * sub-queries and subquery expressions: `FROM t VERSION AS OF 5`
     * (or `VERSION AS OF 'tag-or-branch'`, r16) / `FROM t TIMESTAMP AS
-    * OF <expr>` over a warehouse table rewrites the parsed
+    * OF <expr>` over a warehouse table resolves the parsed
     * [[org.apache.spark.sql.catalyst.analysis.RelationTimeTravel]]
-    * node into the pinned [[GraftTable.read]]/[[GraftTable.readAsOfTime]]
-    * plan — expired cuts refuse through the table's own guards. */
+    * node into the pinned [[GraftTable.read]] plan in
+    * [[resolveRelations]] — expired cuts refuse in [[travelCut]]. */
   // ------------------------------------------------------------------
   // MATERIALIZED VIEW statements (r19). Spark's grammar has no
   // MATERIALIZED VIEW verb (and neither does DuckDB's — this is
@@ -326,8 +326,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
         "GROUP BY <group keys>, where c and each group key is a bare " +
         "column or a deterministic row-local expression (no JOIN/" +
         "HAVING/DISTINCT/subqueries; use a plain VIEW for those)")
-    val p0 = stripDefaultNs(
-      org.apache.spark.sql.GraftSqlBridge.parsePlan(spark, text))
+    val p0 = org.apache.spark.sql.GraftSqlBridge.parsePlan(spark, text)
     // HAVING (r20) wraps the aggregate in UnresolvedHaving — peel it
     // here and rewrite its condition AFTER the select items are known
     val (havingCond, p1) = p0 match {
@@ -802,121 +801,186 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     // ONE parse feeds every router AND the fallback (the primary user
     // surface pays one ANTLR pass per statement); a statement that
     // doesn't parse falls through so spark.sql reports its own syntax
-    // error. The time-travel and meta-table rewrites are plan-to-plan
-    // and run over the WHOLE statement FIRST, so they compose inside
-    // DML/DDL sub-queries (INSERT INTO t SELECT … FROM t VERSION AS OF
-    // 1, CTAS from `t$snapshots`) and with each other in one statement.
+    // error.
     val plan =
       try Some(org.apache.spark.sql.GraftSqlBridge.parsePlan(spark, cmd))
       catch { case _: Exception => None }
-    // External-committer freshness probe, scoped to the statement
-    // (r19): only the relations the parsed plan names (chased through
-    // stored view definitions) get a snapshot-head check — O(referenced
-    // tables) filesystem probes per statement, not O(#tables). The
-    // reference re-reflects EVERY table with DDL before every query
-    // (`icerunner.py:82-103`); catalog-enumerating verbs (SHOW TABLES/
-    // VIEWS) and unparseable statements keep the full sweep.
-    plan.flatMap(referencedNames(_, Set.empty)) match {
-      case Some(names) => names.foreach(probeTable)
-      case None => tables.foreach(probeTable)
-    }
     plan match {
       case None => spark.sql(cmd)
       case Some(p0) =>
-        // the namespace strip runs FIRST so every later rewrite,
-        // router, and the temp-view fall-through see single-part names
-        val p1 = stripDefaultNs(p0)
-        // view-target refusals run BEFORE the view rewrite inlines the
+        // view-target refusals run BEFORE the resolver inlines the
         // relation — afterwards the statement would fail with a
         // "cannot write to a query" style error that never names the
         // view
-        refuseViewTargets(p1)
-        val p = rewriteViews(rewriteMetaTables(rewriteTimeTravel(p1)))
+        refuseViewTargets(p0)
+        // one walk resolves every relation the statement names, so
+        // time travel, meta tables and views compose inside DML/DDL
+        // sub-queries (INSERT INTO t SELECT … FROM t VERSION AS OF 1,
+        // CTAS from `t$snapshots`) and with each other
+        val p = resolveRelations(p0, Set.empty)
         routeCall(p).orElse(routeDml(p)).getOrElse(
           org.apache.spark.sql.GraftSqlBridge.ofRows(spark, p))
     }
   }
 
-  /** Inline persistent VIEW references (r18): any single-part relation
-    * naming a stored view expands to its analyzed, schema-compensated
-    * plan — plan-to-plan like the meta-table and time-travel rewrites,
-    * so views compose inside ANY statement (DML sources, subquery
-    * expressions, other views) and nested views expand recursively
-    * with a cycle refusal. Top-down: the time-travel-over-view refusal
-    * must see the still-unresolved relation, and the inlined plan is
-    * fully resolved so the walk matches nothing inside it. */
-  private def rewriteViews(
+  /** The ONE relation resolver behind [[sql]], [[viewPlan]] and
+    * [[defineView]]: a single top-down walk through children,
+    * subquery expressions and CTE bodies that decides what each leaf
+    * relation name means in the warehouse, exactly once:
+    *
+    *  - `default.n` is the one namespace spelled out (r19): it loses
+    *    the qualifier when `n` is warehouse-served; any other qualifier
+    *    (and an unserved `default.x`) stays Spark's to resolve or
+    *    refuse;
+    *  - a name an enclosing CTE defines is the CTE's, under every
+    *    warehouse spelling (plain, time travel, `t$kind`);
+    *  - a persistent VIEW inlines its analyzed, schema-compensated plan
+    *    (nested views recurse with a cycle refusal via `seen`); a
+    *    MATERIALIZED view reads as its backing state; `t$kind` reads as
+    *    the [[inspect]] frame; time travel pins a table read or a
+    *    metadata cut, and refuses over (materialized) views;
+    *  - a TABLE is head-probed ([[probeTable]]: the per-statement
+    *    external-committer freshness check, O(referenced tables)
+    *    listings, not O(#tables)) and left for its temp view; the
+    *    catalog-enumerating SHOW TABLES / SHOW VIEWS sweep every table.
+    *
+    * Top-down, so a time-travel or view refusal sees the still-
+    * unresolved relation; every inlined plan is already resolved, so
+    * the walk matches nothing inside it. */
+  private def resolveRelations(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      seen: Set[String] = Set.empty,
+      seen: Set[String],
       shadow: Set[String] = Set.empty)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
+      UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable,
+      UnresolvedTableOrView, UnresolvedView}
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+      ShowTables, ShowViews, SubqueryAlias, UnresolvedWith}
+    def shadowed(r: Rel): Boolean = shadow.contains(r.name.toLowerCase)
+    def probeRel(r: Rel): Unit = r match {
+      case TableRel(n) => probeTable(n)
+      case MetaRel(_, base, _) => probeTable(base)
+      case _ => ()
+    }
     plan match {
-      // CTE names SHADOW persisted views (SQL scoping): `WITH v AS (…)
-      // SELECT … FROM v` must read the CTE even when a stored view
-      // spells v — but ONLY inside this WITH's subtree (r19: the shadow
-      // set used to be collected over the whole statement, so a CTE
-      // named v anywhere blocked the view v in a SIBLING subquery that
-      // never saw the CTE). All of the WITH's names shadow both the
-      // bodies (a body may reference an earlier — or recursively its
-      // own — CTE) and the main child; CTE resolution is
-      // case-insensitive, so the comparison is too. CTE DEFINITIONS
+      // CTE names SHADOW warehouse relations (SQL scoping): `WITH v AS
+      // (…) SELECT … FROM v` must read the CTE even when a stored view
+      // or table spells v — but ONLY inside this WITH's subtree (r19: a
+      // statement-wide shadow set blocked the view v in a SIBLING
+      // subquery that never saw the CTE). All of the WITH's names
+      // shadow both the bodies (a body may reference an earlier — or
+      // recursively its own — CTE) and the main child; CTE resolution
+      // is case-insensitive, so the comparison is too. CTE DEFINITIONS
       // are innerChildren — no transform walks them — hence the
-      // explicit recursion (same in the meta-table and time-travel
-      // rewrites).
+      // explicit recursion.
       case w: UnresolvedWith =>
         val s2 = shadow ++ w.cteRelations.map(_._1.toLowerCase)
         w.copy(
-          child = rewriteViews(w.child, seen, s2),
+          child = resolveRelations(w.child, seen, s2),
           cteRelations = w.cteRelations.map { case (n, sa, mx) =>
-            (n, rewriteViews(sa, seen, s2)
-              .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias],
+            (n, resolveRelations(sa, seen, s2).asInstanceOf[SubqueryAlias],
               mx)
           })
-      case tt: RelationTimeTravel
-        if relNameOf(tt.relation).exists(n =>
-          viewExists(n) && !shadow.contains(n.toLowerCase)) =>
-        throw new IllegalArgumentException(
-          s"time travel over VIEW ${relNameOf(tt.relation).get} is not " +
-            "supported — a view is stored SQL text, not a snapshot " +
-            "object; put VERSION AS OF on the underlying table inside " +
-            "the view's query")
-      case tt: RelationTimeTravel
-        if relNameOf(tt.relation).exists(n =>
-          matViewExists(n) && !shadow.contains(n.toLowerCase)) =>
-        throw new IllegalArgumentException(
-          s"time travel over MATERIALIZED VIEW ${
-            relNameOf(tt.relation).get} is not supported — its history " +
-            "is refresh ticks, not base-table snapshots; travel the " +
-            "base table instead")
-      case r: UnresolvedRelation if r.multipartIdentifier.length == 1 &&
-          !shadow.contains(r.multipartIdentifier.head.toLowerCase) &&
-          viewExists(r.multipartIdentifier.head) =>
-        viewPlan(r.multipartIdentifier.head, seen)
-      // MATERIALIZED views read as their backing state (r19) — same
-      // scoping rules as plain views (CTE shadow, any-statement
-      // composition; a plain view CAN read a materialized one)
-      case r: UnresolvedRelation if r.multipartIdentifier.length == 1 &&
-          !shadow.contains(r.multipartIdentifier.head.toLowerCase) &&
-          matViewExists(r.multipartIdentifier.head) =>
-        mvPlan(r.multipartIdentifier.head)
+      case tt @ RelationTimeTravel(r: UnresolvedRelation, _, _) =>
+        denotes(r.multipartIdentifier).filterNot(shadowed) match {
+          case Some(ViewRel(n)) =>
+            throw new IllegalArgumentException(
+              s"time travel over VIEW $n is not supported — a view is " +
+                "stored SQL text, not a snapshot object; put VERSION AS " +
+                "OF on the underlying table inside the view's query")
+          case Some(MatViewRel(n)) =>
+            throw new IllegalArgumentException(
+              s"time travel over MATERIALIZED VIEW $n is not supported " +
+                "— its history is refresh ticks, not base-table " +
+                "snapshots; travel the base table instead")
+          case Some(MetaRel(_, base, kind)) => metaTravel(base, kind, tt)
+          case Some(TableRel(n)) =>
+            GraftTable.load(spark, tableDir(n), n).fold(tt: LogicalPlan) {
+              t => travelCut(t, n, tt)
+                .fold(id => t.read(Some(id)), t.readBranch)
+                .queryExecution.analyzed
+            }
+          case None => tt
+        }
+      case r: UnresolvedRelation =>
+        denotes(r.multipartIdentifier) match {
+          case None => r
+          case Some(rel) if shadowed(rel) =>
+            r.copy(multipartIdentifier = Seq(rel.name))
+          case Some(ViewRel(n)) => viewPlan(n, seen)
+          // MATERIALIZED views read as their backing state (r19) — a
+          // plain view CAN read a materialized one
+          case Some(MatViewRel(n)) => mvPlan(n)
+          case Some(MetaRel(_, base, kind)) =>
+            inspect(base, kind).queryExecution.analyzed
+          case Some(TableRel(n)) =>
+            probeTable(n)
+            r.copy(multipartIdentifier = Seq(n))
+        }
+      // DDL targets keep their node (the routers match on it) with the
+      // qualifier stripped — RENAME/SHOW TBLPROPERTIES parse theirs as
+      // table-OR-view, DROP VIEW as a view node; left qualified they
+      // would miss the reflected temp view
+      case t: UnresolvedTable =>
+        denotes(t.multipartIdentifier).fold(t) { rel =>
+          probeRel(rel); t.copy(multipartIdentifier = Seq(rel.name)) }
+      case tv: UnresolvedTableOrView =>
+        denotes(tv.multipartIdentifier).fold(tv) { rel =>
+          probeRel(rel); tv.copy(multipartIdentifier = Seq(rel.name)) }
+      case v: UnresolvedView =>
+        denotes(v.multipartIdentifier).fold(v) { rel =>
+          probeRel(rel); v.copy(multipartIdentifier = Seq(rel.name)) }
+      case id: UnresolvedIdentifier =>
+        stripNs(id.nameParts).foreach(probeTable)
+        id
+      // SHOW TABLES / SHOW VIEWS list the session's temp views, so
+      // every table must be fresh
+      case _: ShowTables | _: ShowViews =>
+        tables.foreach(probeTable)
+        plan
       // manual recursion (not transformDownWithSubqueries) so the
       // shadow set stays SCOPED: children inherit this scope's shadow,
       // and subquery-expression plans recurse with it too
       case other =>
-        val withChildren =
-          other.mapChildren(rewriteViews(_, seen, shadow))
-        withChildren.transformExpressionsDown {
-          case se: SubqueryExpression =>
-            se.withNewPlan(rewriteViews(se.plan, seen, shadow))
-        }
+        other.mapChildren(resolveRelations(_, seen, shadow))
+          .transformExpressionsDown {
+            case se: SubqueryExpression =>
+              se.withNewPlan(resolveRelations(se.plan, seen, shadow))
+          }
     }
   }
 
+  /** What a leaf relation name denotes in the warehouse (see
+    * [[resolveRelations]]); `name` is its single-part spelling. */
+  private sealed trait Rel { def name: String }
+  private case class ViewRel(name: String) extends Rel
+  private case class MatViewRel(name: String) extends Rel
+  /** Iceberg-style metadata table `` `t$kind` `` (backquoted — `$`
+    * needs quoting in Spark identifiers) over warehouse table `t`. */
+  private case class MetaRel(name: String, base: String, kind: String)
+    extends Rel
+  /** A single-part name no other kind claims is a table or Spark's own
+    * relation; the freshness probe tells them apart for free. */
+  private case class TableRel(name: String) extends Rel
+
+  /** Decide a leaf's [[Rel]] once: single-part, or `default.`-qualified
+    * when the warehouse serves the name; None leaves it to Spark. */
+  private def denotes(parts: Seq[String]): Option[Rel] =
+    stripNs(parts).flatMap { n =>
+      if (viewExists(n)) Some(ViewRel(n))
+      else if (matViewExists(n)) Some(MatViewRel(n))
+      else n.split("\\$", 2) match {
+        case Array(base, kind) if tableExists(base) =>
+          Some(MetaRel(n, base, kind))
+        case _ if parts.length == 1 || tableExists(n) => Some(TableRel(n))
+        case _ => None
+      }
+    }
+
   /** Build one view's plan from its stored definition: re-parse the
-    * TEXT through the full rewrite pipeline (late-bound — the view
+    * TEXT through [[resolveRelations]] (late-bound — the view
     * sees the live tables and composes with time travel and meta
     * tables inside its own query), re-apply the user column list,
     * then pin the recorded output schema per the view's schema mode
@@ -934,10 +998,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
         s"(${(seen + vname).toSeq.sorted.mkString(", ")})")
     val vd = ViewStore.load(viewsDir, vname)
     val df = try {
-      val p0 = org.apache.spark.sql.GraftSqlBridge.parsePlan(spark, vd.sql)
-      val p = rewriteViews(rewriteMetaTables(rewriteTimeTravel(
-        stripDefaultNs(p0))), seen + vname)
-      var d = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, p)
+      var d = viewFrame(vd.sql, seen + vname)
       vd.cols.foreach { names => d = d.toDF(names: _*) }
       d
     } catch {
@@ -979,6 +1040,12 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       vname, out.queryExecution.analyzed)
   }
 
+  /** A view definition's text, parsed and resolved (`seen`: the views
+    * being expanded, for the cycle refusal). */
+  private def viewFrame(text: String, seen: Set[String]): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, resolveRelations(
+      org.apache.spark.sql.GraftSqlBridge.parsePlan(spark, text), seen))
+
   /** Validate + persist one view definition (CREATE [OR REPLACE] VIEW
     * and ALTER VIEW … AS share this): the text must parse and resolve
     * against the current warehouse NOW — a definition that only fails
@@ -994,10 +1061,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     require(!matViewExists(vname),
       s"CREATE VIEW $vname: '$vname' is a MATERIALIZED VIEW — DROP " +
         "MATERIALIZED VIEW it first (the SQL namespace is shared)")
-    val p0 = org.apache.spark.sql.GraftSqlBridge.parsePlan(spark, text)
-    val p = rewriteViews(rewriteMetaTables(rewriteTimeTravel(
-      stripDefaultNs(p0))), Set(ViewStore.canon(vname)))
-    var d = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, p)
+    var d = viewFrame(text, Set(ViewStore.canon(vname)))
     userCols.foreach { names =>
       require(names.length == d.columns.length,
         s"CREATE VIEW $vname: ${names.length} column name(s) declared " +
@@ -1100,36 +1164,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     }
   }
 
-  /** Iceberg-style SQL METADATA TABLES: a relation named
-    * `` `table$kind` `` (backquoted — `$` needs quoting in Spark
-    * identifiers) over a warehouse table resolves to the matching
-    * [[inspect]] frame, composing inside any query:
-    * `` SELECT * FROM `orders$snapshots` ``, `` `orders$files` ``,
-    * `$partitions`, `$refs`, `$deletes`, `$constraints`. */
-  private def rewriteMetaTables(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    // WithSubqueries: a meta table inside a scalar/EXISTS/IN subquery
-    // must rewrite too — plain transformUp walks only the operator tree
-    plan.transformUpWithSubqueries {
-      // CTE definitions are innerChildren — recurse explicitly (see
-      // rewriteViews) or `WITH h AS (SELECT * FROM `t$snapshots`) …`
-      // would never rewrite
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
-        w.copy(cteRelations = w.cteRelations.map { case (n, sa, mx) =>
-          (n, rewriteMetaTables(sa)
-            .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias],
-            mx)
-        })
-      case r: UnresolvedRelation if r.multipartIdentifier.length == 1 &&
-          r.multipartIdentifier.head.contains('$') =>
-        val Array(name, kind) = r.multipartIdentifier.head.split("\\$", 2)
-        if (!tableExists(name)) r
-        else inspect(name, kind).queryExecution.analyzed
-    }
-  }
-
   /** Evaluate a foldable SQL expression to ONE driver-side constant
     * (optionally cast first) — the shared evaluator behind TIMESTAMP AS
     * OF, column DEFAULTs (CREATE / ADD COLUMN / SET DEFAULT), and CALL
@@ -1206,185 +1240,68 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     case _ => None
   }
 
-  /** Does `n` resolve to a warehouse-served relation (table, view, or
-    * meta table over a warehouse table)? The qualifier strip below
-    * rewrites ONLY names that do — a Spark-catalog `default.x` that is
-    * not ours falls through untouched. */
-  private def servesRelation(n: String): Boolean =
-    tableExists(n) || viewExists(n) || matViewExists(n) ||
-      (n.contains('$') && tableExists(n.split("\\$", 2)(0)))
-
-  /** Rewrite `default.`-qualified leaf nodes naming warehouse-served
-    * relations to their single-part spelling (r19), so every later
-    * rewrite and router — and the temp-view fall-through — sees the
-    * name the warehouse speaks. Runs FIRST in the rewrite pipeline. */
-  private def stripDefaultNs(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation,
-      UnresolvedTable, UnresolvedTableOrView, UnresolvedView}
-    def qualified(parts: Seq[String]): Option[String] = parts match {
-      case Seq(ns, n)
-        if ns.equalsIgnoreCase("default") && servesRelation(n) => Some(n)
-      case _ => None
-    }
-    plan.transformDownWithSubqueries {
-      // CTE definitions are innerChildren — recurse explicitly (see
-      // rewriteViews) or `WITH x AS (SELECT * FROM default.t) …`
-      // would keep the qualifier
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
-        w.copy(cteRelations = w.cteRelations.map { case (n, sa, mx) =>
-          (n, stripDefaultNs(sa)
-            .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias],
-            mx)
-        })
-      case r: UnresolvedRelation
-        if qualified(r.multipartIdentifier).isDefined =>
-        r.copy(multipartIdentifier =
-          Seq(qualified(r.multipartIdentifier).get))
-      case t: UnresolvedTable
-        if qualified(t.multipartIdentifier).isDefined =>
-        t.copy(multipartIdentifier =
-          Seq(qualified(t.multipartIdentifier).get))
-      case tv: UnresolvedTableOrView
-        if qualified(tv.multipartIdentifier).isDefined =>
-        tv.copy(multipartIdentifier =
-          Seq(qualified(tv.multipartIdentifier).get))
-      case v: UnresolvedView
-        if qualified(v.multipartIdentifier).isDefined =>
-        v.copy(multipartIdentifier =
-          Seq(qualified(v.multipartIdentifier).get))
-    }
+  /** The ONE time-travel cut resolver, shared by data and metadata
+    * relations (`what` names the relation in refusals). `VERSION AS
+    * OF v` resolves a RETAINED snapshot id, else a TAG (Left: the cut's
+    * snapshot id), else an open BRANCH (Right: its name — Iceberg's SQL
+    * accepts ref names here); `TIMESTAMP AS OF <expr>` evaluates once
+    * and resolves the latest retained snapshot at-or-before it. Expired
+    * or unknown cuts refuse here, not as a silent head read. */
+  private def travelCut(t: GraftTable, what: String,
+      tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel)
+      : Either[Long, String] = (tt.version, tt.timestamp) match {
+    case (Some(v), _) =>
+      // the parser erases the quote distinction (version is a bare
+      // string either way), so resolution is: RETAINED snapshot id,
+      // else tag, else branch. A spelling that is BOTH a retained id
+      // and a ref name refuses as ambiguous — resolving the id would
+      // silently FLIP to the ref once that id expires (same query text,
+      // different cut); an error now is deterministic forever.
+      val (tags, branches) = (t.tags, t.branches)
+      val idHit = v.toLongOption.filter(id =>
+        t.log.snapshots.exists(_.snapshotId == id))
+      require(idHit.isEmpty || !(tags.contains(v) || branches.contains(v)),
+        s"VERSION AS OF '$v' on $what is AMBIGUOUS: both a retained " +
+          "snapshot id and a tag/branch spell this — rename the ref or " +
+          "expire the snapshot")
+      // tags and branches live in SEPARATE stores, so one name can
+      // denote both — silently preferring the tag would make a WAP
+      // audit of branch 'x' read tag 'x' instead of the staged rows
+      require(!(tags.contains(v) && branches.contains(v)),
+        s"VERSION AS OF '$v' on $what is AMBIGUOUS: both a tag and a " +
+          "branch spell this name — drop or rename one of them")
+      idHit.orElse(tags.get(v)).map(Left(_))
+        .orElse(if (branches.contains(v)) Some(Right(v)) else None)
+        .getOrElse(throw new IllegalArgumentException(
+          s"VERSION AS OF '$v' on $what: no such ref — expects a " +
+            "retained snapshot id, tag, or branch name (head " +
+            s"${t.currentSnapshotId.getOrElse(0L)}, tags: " +
+            s"${tags.keys.toSeq.sorted.mkString(", ")}; branches: " +
+            s"${branches.mkString(", ")})"))
+    case (_, Some(ts)) =>
+      val inst = evalConst(ts, Some(org.apache.spark.sql.types.TimestampType))
+        .asInstanceOf[java.sql.Timestamp]
+      require(inst != null, s"TIMESTAMP AS OF on $what evaluated to NULL")
+      Left(t.snapshotIdAsOfTime(inst.getTime).getOrElse(
+        throw new IllegalArgumentException(
+          s"TIMESTAMP AS OF on $what: no retained snapshot at or before " +
+            s"$inst — earliest retained is id ${t.firstSnapshotId.orNull}")))
+    case _ => Left(t.currentSnapshotId.getOrElse(0L))
   }
 
-  /** Rewrite warehouse-table time-travel relations into pinned reads
-    * (plan-to-plan, so the rewrite composes inside DML/DDL statements).
-    * `VERSION AS OF` resolves a snapshot id, then a TAG, then an open
-    * BRANCH head (Iceberg's SQL accepts ref names here); a non-numeric
-    * non-ref refuses with the router's own message instead of a raw
-    * NumberFormatException. */
-  private def rewriteTimeTravel(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.analysis.RelationTimeTravel
-    // WithSubqueries: `FROM t VERSION AS OF n` inside a scalar/EXISTS/
-    // IN subquery must pin too, not just operator-tree relations
-    plan.transformUpWithSubqueries {
-      // CTE definitions are innerChildren — recurse explicitly (see
-      // rewriteViews) or a travel clause inside a CTE body never pins
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
-        w.copy(cteRelations = w.cteRelations.map { case (n, sa, mx) =>
-          (n, rewriteTimeTravel(sa)
-            .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias],
-            mx)
-        })
-      case tt: RelationTimeTravel
-        if relNameOf(tt.relation).exists(nm => nm.contains('$') &&
-          tableExists(nm.split("\\$", 2)(0))) =>
-        // `` `t$properties` VERSION AS OF n ``: pin a METADATA table to
-        // a historical cut (this runs BEFORE rewriteMetaTables, whose
-        // bottom-up walk would otherwise resolve the inner relation at
-        // head and leave an unresolvable time-travel wrapper)
-        metaTimeTravel(relNameOf(tt.relation).get, tt)
-      case tt: RelationTimeTravel =>
-        relNameOf(tt.relation).filter(tableExists) match {
-          case None => tt
-          case Some(name) =>
-            val t = loadTable(name)
-            val pinned = (tt.version, tt.timestamp) match {
-              case (Some(v), _) =>
-                // the parser erases the quote distinction (version is a
-                // bare string either way), so resolution is: RETAINED
-                // snapshot id, else tag, else branch. A spelling that is
-                // BOTH a retained id and a ref name refuses as ambiguous
-                // — resolving the id would silently FLIP to the ref once
-                // that id expires (same query text, different cut); an
-                // error now is deterministic forever. read(asOf)
-                // resolves "files at-or-before the cut", so a
-                // nonexistent future id must also refuse here, not
-                // silently read the head.
-                val asId = v.toLongOption
-                val idHit = asId.filter(id =>
-                  t.log.snapshots.exists(_.snapshotId == id))
-                val refHit = t.tags.contains(v) || t.branches.contains(v)
-                require(idHit.isEmpty || !refHit,
-                  s"VERSION AS OF '$v' on $name is AMBIGUOUS: both " +
-                    "a retained snapshot id and a tag/branch spell " +
-                    "this — rename the ref or expire the snapshot")
-                // tags and branches live in SEPARATE stores, so one
-                // name can denote both — silently preferring the tag
-                // would make a WAP audit of branch 'x' read tag 'x'
-                // instead of the staged rows; refuse, mirroring the
-                // id-vs-ref ambiguity above
-                require(!(t.tags.contains(v) && t.branches.contains(v)),
-                  s"VERSION AS OF '$v' on $name is AMBIGUOUS: both a " +
-                    "tag and a branch spell this name — drop or rename " +
-                    "one of them")
-                idHit.map(id => t.read(Some(id)))
-                  .orElse(t.tags.get(v).map(id => t.read(Some(id))))
-                  .orElse(if (t.branches.contains(v))
-                    Some(t.readBranch(v)) else None)
-                  .getOrElse(throw new IllegalArgumentException(
-                    s"VERSION AS OF '$v' on $name: no such ref — " +
-                      "expects a retained snapshot id, tag, or branch " +
-                      s"name (head ${t.currentSnapshotId.getOrElse(0L)}, " +
-                      s"tags: ${t.tags.keys.toSeq.sorted.mkString(", ")}; " +
-                      s"branches: ${t.branches.mkString(", ")})"))
-              case (_, Some(ts)) =>
-                val inst = evalConst(ts,
-                  Some(org.apache.spark.sql.types.TimestampType))
-                  .asInstanceOf[java.sql.Timestamp]
-                require(inst != null,
-                  s"TIMESTAMP AS OF on $name evaluated to NULL")
-                t.readAsOfTime(inst.getTime)
-              case _ => t.read()
-            }
-            pinned.queryExecution.analyzed
-        }
-    }
-  }
-
-  /** Resolve a time-travel cut over a METADATA table (`$properties`,
-    * `$files` — the kinds whose builders take an `asOf`): a retained
-    * snapshot id or a tag (branch heads live in a SEPARATE id
-    * sequence and cannot cut the main log — they refuse through the
-    * "id or tag" message). Same id-vs-ref ambiguity refusal as the
-    * data-relation path. */
-  private def metaTimeTravel(nm: String,
+  /** A METADATA table pinned to a historical cut (`$properties`,
+    * `$files`, `$partitions` — the kinds whose builders take an
+    * `asOf`). Branch heads live in a SEPARATE id sequence and cannot
+    * cut the main log, so they refuse. */
+  private def metaTravel(base: String, kind: String,
       tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    val Array(base, kind) = nm.split("\\$", 2)
     val t = loadTable(base)
-    val cut: Long = (tt.version, tt.timestamp) match {
-      case (Some(v), _) =>
-        val idHit = v.toLongOption.filter(id =>
-          t.log.snapshots.exists(_.snapshotId == id))
-        val tagHit = t.tags.get(v)
-        require(idHit.isEmpty || tagHit.isEmpty,
-          s"VERSION AS OF '$v' on `$nm` is AMBIGUOUS: both a retained " +
-            "snapshot id and a tag spell this — rename the tag or " +
-            "expire the snapshot")
-        // same tag-vs-branch refusal as the data-relation path:
-        // silently preferring the tag would read the wrong cut when a
-        // WAP branch shares the name (branch heads are not metadata-
-        // travelable here, but the collision must refuse, not pick)
-        require(!(t.tags.contains(v) && t.branches.contains(v)),
-          s"VERSION AS OF '$v' on `$nm` is AMBIGUOUS: both a tag and " +
-            "a branch spell this name — drop or rename one of them")
-        idHit.orElse(tagHit).getOrElse(throw new IllegalArgumentException(
-          s"VERSION AS OF '$v' on `$nm`: expects a retained snapshot " +
-            "id or tag name"))
-      case (_, Some(ts)) =>
-        val inst = evalConst(ts,
-          Some(org.apache.spark.sql.types.TimestampType))
-          .asInstanceOf[java.sql.Timestamp]
-        require(inst != null, s"TIMESTAMP AS OF on `$nm` evaluated to NULL")
-        t.log.snapshots.filter(_.timestampMs <= inst.getTime)
-          .lastOption.map(_.snapshotId)
-          .getOrElse(throw new IllegalArgumentException(
-            s"TIMESTAMP AS OF on `$nm`: no snapshot at or before $inst"))
-      case _ => t.currentSnapshotId.getOrElse(0L)
-    }
+    val what = s"`$base$$$kind`"
+    val cut = travelCut(t, what, tt).fold(identity, b =>
+      throw new IllegalArgumentException(
+        s"VERSION AS OF '$b' on $what: a branch head cannot cut a " +
+          "metadata table — expects a retained snapshot id or tag name"))
     val df = kind match {
       case "properties" => t.propertiesDf(Some(cut))
       case "files" => t.filesDf(Some(cut))
@@ -2841,73 +2758,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     probes.incrementAndGet()
     val head = new SnapshotLog(tableDir(name)).headIdByName.getOrElse(0L)
     if (!reflectedAt.get(name).contains(head)) reflectView(name)
-  }
-
-  /** Every warehouse-relation name a parsed statement could resolve —
-    * relations (meta tables reduce to their base), DDL targets, and
-    * the tables reachable through any stored VIEW the statement names
-    * (the view's text re-plans against them, so they must be fresh
-    * too). Returns None when the statement ENUMERATES the catalog
-    * (SHOW TABLES / SHOW VIEWS list the session's temp views), which
-    * needs every table reflected. */
-  private def referencedNames(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      seenViews: Set[String]): Option[Set[String]] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedIdentifier,
-      UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView,
-      UnresolvedView}
-    import org.apache.spark.sql.catalyst.plans.logical.{ShowTables,
-      ShowViews, UnresolvedWith}
-    var enumerates = false
-    val out = scala.collection.mutable.Set.empty[String]
-    def leaf(parts: Seq[String]): Unit =
-      stripNs(parts).foreach(n => out += n.split("\\$", 2)(0))
-    def walk(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : Unit =
-      p.foreach { node =>
-        node match {
-          // CTE definitions are innerChildren — walked explicitly
-          case w: UnresolvedWith =>
-            w.cteRelations.foreach { case (_, sa, _) => walk(sa) }
-          case r: UnresolvedRelation => leaf(r.multipartIdentifier)
-          case t: UnresolvedTable => leaf(t.multipartIdentifier)
-          case tv: UnresolvedTableOrView => leaf(tv.multipartIdentifier)
-          case v: UnresolvedView => leaf(v.multipartIdentifier)
-          case id: UnresolvedIdentifier => leaf(id.nameParts)
-          // a LEAF node: its relation is not a child, walk it by hand
-          case tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel =>
-            relNameOf(tt.relation).foreach(n => out += n.split("\\$", 2)(0))
-          case _: ShowTables | _: ShowViews => enumerates = true
-          case _ => ()
-        }
-        // subquery-expression plans (scalar/EXISTS/IN/lateral)
-        node.subqueries.foreach(walk)
-      }
-    walk(plan)
-    if (enumerates) return None
-    // chase stored views breadth-first: each adds the tables ITS text
-    // names (cycle-guarded; a broken definition surfaces at read time
-    // with the view-resolution message, not here)
-    var frontier = out.toSet.filter(n =>
-      !seenViews.contains(ViewStore.canon(n)) && viewExists(n))
-    var seen = seenViews
-    while (frontier.nonEmpty) {
-      seen = seen ++ frontier.map(ViewStore.canon)
-      val next = scala.collection.mutable.Set.empty[String]
-      frontier.foreach { vn =>
-        try {
-          val sub = org.apache.spark.sql.GraftSqlBridge.parsePlan(
-            spark, ViewStore.load(viewsDir, vn).sql)
-          referencedNames(sub, seen).foreach { ns =>
-            out ++= ns
-            next ++= ns.filter(n =>
-              !seen.contains(ViewStore.canon(n)) && viewExists(n))
-          }
-        } catch { case scala.util.control.NonFatal(_) => () }
-      }
-      frontier = next.toSet
-    }
-    Some(out.toSet)
   }
 
   /** Register/refresh one table's temp view (called on every commit).

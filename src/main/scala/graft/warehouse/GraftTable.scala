@@ -1959,11 +1959,13 @@ final class GraftTable private (
     * normalized to epoch millis (min floored, max ceiled: bounds only
     * widen), dates/booleans rendered as the same ISO/true-false
     * strings the aggregate path recorded. All-null chunks contribute
-    * nothing; a column with no surviving bound is simply absent
-    * (conservative: unknown ⇒ match). Returns None — caller falls
-    * back to the aggregate job — when any wanted column carries a
-    * physical/logical type outside this table, NaN double bounds, or
-    * a footer without statistics. */
+    * nothing; any OTHER chunk without bounds (parquet drops them for a
+    * float/double chunk holding a NaN) makes the column unbounded for
+    * the file — its bounds must never narrow past a value — and a
+    * column with no surviving bound is simply absent (conservative:
+    * unknown ⇒ match). Returns None — caller falls back to the
+    * aggregate job — when any wanted column carries a physical/logical
+    * type outside this table, or a footer without statistics. */
   private def footerColumnStats(paths: Seq[Path], cols: Seq[String])
       : Option[Map[String, FileStat]] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -1984,17 +1986,19 @@ final class GraftTable private (
           cols.foreach { c =>
             var nMn: Option[Double] = None; var nMx: Option[Double] = None
             var sMn: Option[String] = None; var sMx: Option[String] = None
+            var unbounded = false
             blocks.foreach { b =>
               val cc = b.getColumns.asScala
                 .find(_.getPath.toDotString == c)
                 .getOrElse(return None) // column absent from the footer
               val st = cc.getStatistics
               if (st == null) return None
-              if (st.hasNonNullValue) {
+              if (!st.hasNonNullValue) {
+                if (st.getNumNulls != b.getRowCount) unbounded = true
+              } else {
                 val pt = cc.getPrimitiveType
                 val la = pt.getLogicalTypeAnnotation
                 def mergeNum(mn: Double, mx: Double): Unit = {
-                  if (mn.isNaN || mx.isNaN) return // skip: bounds widen
                   nMn = Some(nMn.fold(mn)(math.min(_, mn)))
                   nMx = Some(nMx.fold(mx)(math.max(_, mx)))
                 }
@@ -2066,8 +2070,10 @@ final class GraftTable private (
                 }
               }
             }
-            nMn.foreach(v => numMin += c -> v); nMx.foreach(v => numMax += c -> v)
-            sMn.foreach(v => strMin += c -> v); sMx.foreach(v => strMax += c -> v)
+            if (!unbounded) {
+              nMn.foreach(v => numMin += c -> v); nMx.foreach(v => numMax += c -> v)
+              sMn.foreach(v => strMin += c -> v); sMx.foreach(v => strMax += c -> v)
+            }
           }
           out += dir.relativize(p).toString -> FileStat(
             numMin, numMax, strMin, strMax,

@@ -704,6 +704,19 @@ class DdlSurfaceSpec extends AnyFunSuite {
       "SELECT count(*) AS n FROM h").collect().head.getLong(0) == 2L)
     assert(c.sql(s"WITH o AS (SELECT id FROM cte_t VERSION AS OF $s1) " +
       "SELECT count(*) AS n FROM o").collect().head.getLong(0) == 1L)
+    // every kind in ONE plan: a default.-qualified time-travel relation
+    // in a scalar subquery in a CTE body, joined to a view and to a
+    // metadata table
+    c.sql("CREATE VIEW cte_v AS SELECT id FROM cte_t")
+    val mixed = c.sql(
+      s"""WITH o AS (SELECT id, (SELECT count(*) FROM default.cte_t
+         |  VERSION AS OF $s1) AS n1 FROM cte_t)
+         |SELECT o.id, o.n1, s.snapshot_id FROM o
+         |JOIN cte_v v ON o.id = v.id
+         |JOIN `cte_t$$snapshots` s ON o.id = s.snapshot_id
+         |ORDER BY o.id""".stripMargin)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(mixed == Seq((1L, 1L, 1L), (2L, 1L, 2L)), mixed.toString)
   }
 
   // ------------------------------------------------ replace (cols)

@@ -152,6 +152,17 @@ class ViewSpec extends AnyFunSuite {
     // and a CTE can READ the view under a different name
     assert(c.sql("WITH w AS (SELECT * FROM v) SELECT count(*) AS n " +
       "FROM w").collect().head.getLong(0) == 1L)
+    // the shadow covers every warehouse spelling of a TABLE name too:
+    // time travel over the CTE is Spark's to refuse (it never pins the
+    // warehouse table), and a CTE spelled `t$snapshots` is read as-is
+    val s1 = c.getCurrentSnapshotId("t").get
+    val tt = intercept[Exception] {
+      c.sql(s"WITH t AS (SELECT 1 AS id) SELECT * FROM t VERSION AS OF $s1")
+        .collect() }
+    assert(tt.getMessage.toLowerCase.contains("time travel"), tt.getMessage)
+    assert(c.sql("WITH `t$snapshots` AS (SELECT 7L AS snapshot_id) " +
+      "SELECT snapshot_id FROM `t$snapshots`").as[Long].collect().toSeq ==
+      Seq(7L))
   }
 
   test("time travel composes INSIDE a view and refuses OVER a view") {

@@ -530,6 +530,9 @@ class WarehouseSpec extends AnyFunSuite {
     assert(probesFor("SELECT count(*) AS n FROM wide_1 a " +
       "JOIN wide_2 b ON a.id = b.id") <= 6L)
     assert(probesFor("SELECT count(*) AS n FROM wv") <= 6L)
+    // a view over a view chases through both definitions to the table
+    c.sql("CREATE VIEW wvv AS SELECT id FROM wv")
+    assert(probesFor("SELECT count(*) AS n FROM wvv") <= 6L)
     // a relation-free statement probes nothing
     assert(probesFor("SELECT 1 + 1") === 0L)
     // catalog-enumerating verbs keep the full sweep (they list the
@@ -2035,6 +2038,41 @@ class WarehouseSpec extends AnyFunSuite {
       .select("id", "v")
       .coalesce(1).write.mode("overwrite").parquet(bad.toString)
     intercept[IllegalArgumentException] { t.addFiles(Seq(onlyParquet(bad))) }
+  }
+
+  test("footer stats never narrow a file's range past a NaN row group") {
+    import org.apache.spark.sql.functions.col
+    // one external file of 2-row row groups (the block-size check runs
+    // every 2 records and any buffered row group exceeds a 1-byte
+    // block); the middle group holds [500.0, NaN], for which parquet
+    // records no min/max although the group is not all-null
+    val ext = Files.createTempDirectory("graft-nan-")
+    Seq(1.0, 2.0, 500.0, Double.NaN, 3.0, 4.0).toDF("x")
+      .coalesce(1).write
+      .option("parquet.block.size", "1")
+      .option("parquet.page.size.row.check.min", "2")
+      .option("parquet.page.size.row.check.max", "2")
+      .mode("overwrite").parquet(ext.toString)
+    val src = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(ext)
+      try s.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+      finally s.close()
+    }
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(src.toUri),
+        spark.sparkContext.hadoopConfiguration))
+    try assert(reader.getFooter.getBlocks.size >= 3,
+      "the fixture needs several row groups")
+    finally reader.close()
+    val t = GraftTable.create(spark, Files.createTempDirectory("graft-nan-t-"),
+      "t", Seq.empty[Double].toDF("x")).get
+    t.addFiles(Seq(src), statsCols = Seq("x"))
+    assert(t.readWhere("x", Some(500.0), Some(500.0))
+      .filter(col("x") === 500.0).count() == 1L,
+      "the file holding 500.0 was pruned by footer bounds")
   }
 
   test("shallow clone shares bytes, evolves independently, and prunes via carried stats") {
