@@ -76,6 +76,10 @@ object Profile {
     // can be attributed to code instead of guessed at
     val samples = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val sampling = new AtomicBoolean(true)
+    // a loop costs the 20 ms sleep PLUS a full stack walk of every
+    // thread, so a sample stands for the measured wall time per loop,
+    // not a fixed 20 ms
+    val loops = new java.util.concurrent.atomic.AtomicLong(0L)
     val sampler = new Thread(() => {
       while (sampling.get()) {
         val all = Thread.getAllStackTraces
@@ -95,10 +99,12 @@ object Profile {
               }
           }
         }
+        loops.incrementAndGet()
         Thread.sleep(20)
       }
     }, "graft-sampler")
     sampler.setDaemon(true)
+    val samplingStart = System.nanoTime()
     sampler.start()
     val t0 = System.nanoTime()
     val df = fn(spark, sfDir)
@@ -106,6 +112,9 @@ object Profile {
     df.count()
     val wall = (System.nanoTime() - t0) / 1e9
     sampling.set(false)
+    sampler.join()
+    val secPerSample =
+      (System.nanoTime() - samplingStart) / 1e9 / math.max(1L, loops.get())
     spark.sparkContext.removeSparkListener(listener)
 
     planOut.foreach { p =>
@@ -128,9 +137,10 @@ object Profile {
     }
     val gaps = all.map(_._2).sum / 1000.0
     println(f"  job time total=$gaps%.3f s (wall minus this = driver-side gaps)")
-    println("  top sampled frames (20 ms wall-clock samples, RUNNABLE non-worker threads):")
+    println(f"  top sampled frames (${loops.get()} samples of ${secPerSample * 1000}%.1f ms " +
+      "wall each, RUNNABLE non-worker threads):")
     samples.entrySet().asScala.toSeq.sortBy(-_.getValue.intValue()).take(30)
-      .foreach(e => println(f"    ${e.getValue.intValue() * 0.02}%7.2f s  ${e.getKey}"))
+      .foreach(e => println(f"    ${e.getValue.intValue() * secPerSample}%7.2f s  ${e.getKey}"))
     println("  top stages by wall (stage, tasks, execRunTime s, wall s, " +
       "inputRows, shufReadRows, shufWriteBytes):")
     stages.asScala.toSeq.sortBy(-_._8).take(15).foreach {

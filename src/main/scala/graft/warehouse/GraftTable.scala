@@ -23,12 +23,17 @@ final class GraftTable private (
     val name: String,
     val dir: Path,
     private[warehouse] val spark: SparkSession) {
+  import GraftTable.Staged
 
   val log = new SnapshotLog(dir)
 
   def schema: StructType =
-    log.head.map(s => DataType.fromJson(s.schemaJson).asInstanceOf[StructType])
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshots"))
+    DataType.fromJson(headOrThrow.schemaJson).asInstanceOf[StructType]
+
+  private def noSnapshots = new IllegalStateException(s"table $name has no snapshots")
+
+  /** The current head; every write on an empty log refuses the same way. */
+  private def headOrThrow: Snapshot = log.head.getOrElse(throw noSnapshots)
 
   def currentSnapshotId: Option[Long] = log.currentSnapshotId
 
@@ -101,8 +106,7 @@ final class GraftTable private (
     val cut = asOf.getOrElse(Long.MaxValue)
     snaps.filter(_.snapshotId <= cut).lastOption.orElse(snaps.lastOption)
       .map(s => DataType.fromJson(s.schemaJson).asInstanceOf[StructType])
-      .getOrElse(throw new IllegalStateException(
-        s"table $name has no snapshots"))
+      .getOrElse(throw noSnapshots)
   }
 
   /** Read the table head (or a past snapshot). Empty-but-created tables
@@ -367,8 +371,7 @@ final class GraftTable private (
     * incremental across appends as long as the visible delete set is
     * unchanged between its cuts. */
   def deleteKeysMor(keys: DataFrame): Snapshot = {
-    val head = log.head.getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = headOrThrow
     require(keys.schema.fields.nonEmpty, "delete needs at least one key column")
     val sch = schema
     keys.schema.fields.foreach { f =>
@@ -377,15 +380,7 @@ final class GraftTable private (
         s"equality-delete column ${f.name}: ${f.dataType} absent or " +
           s"mistyped for table schema $sch")
     }
-    val commitDir = dir.resolve("data").resolve(s"e${UUID.randomUUID().toString.take(12)}")
-    keys.distinct().write.parquet(commitDir.toString)
-    val listing = Files.list(commitDir) // close: fd leak otherwise
-    val files =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
-      finally listing.close()
+    val files = writeStaged(keys.distinct(), newCommitDir('e'))
     log.commit("eqdelete", Seq.empty, head.schemaJson,
       deleteFiles = files)
   }
@@ -407,8 +402,7 @@ final class GraftTable private (
     * a stored predicate that failed to re-parse would silently
     * resurrect rows on read). */
   def deleteWhereMor(cond: org.apache.spark.sql.Column): Snapshot = {
-    val head = log.head.getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = headOrThrow
     // resolve against the schema: unknown columns / unresolvable
     // functions throw HERE, not at some later read; the stored SQL is
     // rendered from the RESOLVED condition (the raw Column wrapper's
@@ -456,10 +450,7 @@ final class GraftTable private (
     * every CoW DML. */
   def deletePosMor(cond: org.apache.spark.sql.Column): Snapshot = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-    var attempt = 0
-    while (true) {
-      val head = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
+    publish(s"position delete of $name") { head =>
       val snaps = log.snapshots
       val sch = schemaAsOfIn(snaps, Some(head.snapshotId))
       val matches = readWithDeletes(
@@ -482,55 +473,37 @@ final class GraftTable private (
         // row-side path decoding can ever mis-bind a position.
         val uris = matches.select("__pd_f").distinct()
           .collect().map(_.getString(0))
-        if (uris.isEmpty) return head
-        val relByUri = uris.map(u => u ->
-          dir.relativize(Paths.get(java.net.URI.create(u).getPath)).toString).toMap
-        val mapDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(relByUri.toSeq.map {
-            case (u, r) => org.apache.spark.sql.Row(u, r) }, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__pd_f",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("file",
-              org.apache.spark.sql.types.StringType))))
-        val commitDir = dir.resolve("data")
-          .resolve(s"x${UUID.randomUUID().toString.take(12)}")
-        val sidecar = matches.join(broadcast(mapDf), "__pd_f")
-          .select(col("file"), col("__pd_pos").cast("long").as("pos"))
-          .distinct()
-        sidecar.write.parquet(commitDir.toString)
-        val listing = java.nio.file.Files.list(commitDir) // close: fd leak
-        val files =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(p => dir.relativize(p).toString)
-            .toSeq.sorted
-          finally listing.close()
-        // per-file position counts: the metadata-only COUNT stays exact
-        // under pure position tombstones ([[metaCount]]). One bounded
-        // aggregation over the just-written sidecar.
-        val counts = spark.read
-          .parquet(files.map(f => dir.resolve(f).toString): _*)
-          .groupBy("file").count().collect()
-          .map(r => (SnapshotLog.PosCountPrefix + r.getString(0)) ->
-            r.getLong(1).toString).toMap
-        try {
-          return log.commit("posdelete", Seq.empty, head.schemaJson,
-            deleteFiles = files,
-            expectedHead = Some(head.snapshotId),
+        if (uris.isEmpty) None
+        else {
+          val relByUri = uris.map(u => u -> relOfUri(u)).toMap
+          val mapDf = spark.createDataFrame(
+            spark.sparkContext.parallelize(relByUri.toSeq.map {
+              case (u, r) => org.apache.spark.sql.Row(u, r) }, 1),
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("__pd_f",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("file",
+                org.apache.spark.sql.types.StringType))))
+          val commitDir = newCommitDir('x')
+          val files = writeStaged(matches.join(broadcast(mapDf), "__pd_f")
+            .select(col("file"), col("__pd_pos").cast("long").as("pos"))
+            .distinct(), commitDir)
+          // per-file position counts: the metadata-only COUNT stays exact
+          // under pure position tombstones ([[metaCount]]). One bounded
+          // aggregation over the just-written sidecar.
+          val counts = spark.read
+            .parquet(files.map(f => dir.resolve(f).toString): _*)
+            .groupBy("file").count().collect()
+            .map(r => (SnapshotLog.PosCountPrefix + r.getString(0)) ->
+              r.getLong(1).toString).toMap
+          Some(Staged("posdelete", Seq.empty, head.schemaJson,
+            deleteFiles = files, commitDir = Some(commitDir),
             properties = counts ++ Map(SnapshotLog.PosDeleteKey -> "1",
               SnapshotLog.PosFilesKey ->
-                relByUri.values.toSeq.sorted.mkString("\n")))
-        } catch {
-          case e: java.util.ConcurrentModificationException =>
-            discardStaged(commitDir)
-            attempt += 1
-            if (attempt >= 20) throw new IllegalStateException(
-              s"position delete of $name lost $attempt head races; giving up", e)
+                relByUri.values.toSeq.sorted.mkString("\n"))))
         }
       } finally matches.unpersist()
-    }
-    throw new IllegalStateException("unreachable")
+    }.merge
   }
 
   /** Live merge-on-read tombstones at a cut (empty ⇔ reads are
@@ -629,7 +602,8 @@ final class GraftTable private (
   // ---- hidden partitioning (see Partitioning.scala) -----------------
 
   private def specsPath: Path = dir.resolve("partition_specs.txt")
-  private def specsDir: Path = dir.resolve("partition_specs")
+  private val specLog = new LineLog(dir.resolve("partition_specs"), 's',
+    ".spec-", "partition-spec")
 
   /** Declare the partition spec used by FUTURE [[append]]s (Iceberg
     * hidden partitioning: transforms over source columns, not stored
@@ -660,39 +634,62 @@ final class GraftTable private (
     * REPLACEMENT's schema (the current schema is about to be swapped
     * out, so checking against it would wrongly refuse a spec on a
     * column the replacement introduces). */
-  private def declareSpecLine(fields: Seq[PartitionField]): Unit = {
-    Files.createDirectories(specsDir)
-    val line = Partitioning.specLine(fields)
-    var attempt = 0
-    while (attempt < 10000) {
-      val next = specVersions.lastOption.getOrElse(0L) + 1
-      val tmp = Files.createTempFile(specsDir, ".spec-", ".tmp")
-      Files.writeString(tmp, line + "\n")
-      try {
-        Files.createLink(specsDir.resolve(f"s$next%016d.txt"), tmp)
-        Files.deleteIfExists(tmp)
-        return
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          attempt += 1 // lost the race; re-probe versions and retry
-      }
-    }
-    throw new IllegalStateException(
-      "partition-spec contention: 10000 failed attempts")
-  }
+  private def declareSpecLine(fields: Seq[PartitionField]): Unit =
+    specLog.publish(Partitioning.specLine(fields))
 
-  private def specVersions: Seq[Long] =
-    if (!Files.isDirectory(specsDir)) Nil
-    else {
-      val listing = Files.list(specsDir) // close: fd leak otherwise
-      try listing.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.matches("s\\d{16}\\.txt"))
-        .map(n => n.substring(1, 17).toLong)
-        .toSeq.sorted
-      finally listing.close()
+  /** A directory of versioned one-line files `<letter><16-digit
+    * version>.txt`, each published by `link(2)`: a racing publisher
+    * loses with EEXIST and retries under the next version, so
+    * concurrent declarations are never silently dropped. Partition
+    * specs and CHECK constraints are both kept this way. */
+  private final class LineLog(d: Path, letter: Char, tmpPrefix: String,
+      what: String) {
+    private def fileOf(v: Long): Path = d.resolve(f"$letter$v%016d.txt")
+
+    def versions: Seq[Long] =
+      if (!Files.isDirectory(d)) Nil
+      else {
+        val listing = Files.list(d) // close: fd leak otherwise
+        try listing.iterator().asScala
+          .map(_.getFileName.toString)
+          .filter(_.matches(s"$letter\\d{16}\\.txt"))
+          .map(n => n.substring(1, 17).toLong)
+          .toSeq.sorted
+        finally listing.close()
+      }
+
+    /** Every published line, raw, in version order. */
+    def lines: Seq[String] = versions.map(v => Files.readString(fileOf(v)))
+
+    /** Copy every version file into `to` (a clone's own directory). */
+    def copyInto(to: Path): Unit =
+      if (Files.isDirectory(d)) {
+        Files.createDirectories(to)
+        versions.foreach(v =>
+          Files.copy(fileOf(v), to.resolve(fileOf(v).getFileName)))
+      }
+
+    def publish(line: String): Unit = {
+      Files.createDirectories(d)
+      var attempt = 0
+      while (attempt < 10000) {
+        val next = versions.lastOption.getOrElse(0L) + 1
+        val tmp = Files.createTempFile(d, tmpPrefix, ".tmp")
+        Files.writeString(tmp, line + "\n")
+        try {
+          Files.createLink(fileOf(next), tmp)
+          Files.deleteIfExists(tmp)
+          return
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            Files.deleteIfExists(tmp)
+            attempt += 1 // lost the race; re-probe versions and retry
+        }
+      }
+      throw new IllegalStateException(
+        s"$what contention: 10000 failed attempts")
     }
+  }
 
   /** All declared spec lines in declaration order: legacy single-file
     * lines (pre-CAS tables) first, then versioned CAS files. */
@@ -700,8 +697,7 @@ final class GraftTable private (
     val legacy =
       if (!Files.exists(specsPath)) Nil
       else Files.readAllLines(specsPath).asScala.toSeq.filter(_.nonEmpty)
-    val versioned = specVersions.map(v =>
-      Files.readString(specsDir.resolve(f"s$v%016d.txt")).trim)
+    val versioned = specLog.lines.map(_.trim)
     legacy ++ versioned
   }
 
@@ -775,55 +771,18 @@ final class GraftTable private (
 
   // ---- CHECK constraints (Delta's ALTER TABLE ADD CONSTRAINT) -------
 
-  private def constraintsDir: Path = dir.resolve("constraints")
-
-  private def constraintVersions: Seq[Long] =
-    if (!Files.isDirectory(constraintsDir)) Nil
-    else {
-      val listing = Files.list(constraintsDir) // close: fd leak otherwise
-      try listing.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.matches("c\\d{16}\\.txt"))
-        .map(n => n.substring(1, 17).toLong)
-        .toSeq.sorted
-      finally listing.close()
-    }
+  private val constraintLog = new LineLog(dir.resolve("constraints"), 'c',
+    ".c-", "constraint")
 
   /** (name, status, referenced columns, sql) per declaration, in CAS
     * version order — the fold's last entry per name wins. */
   private def constraintEntries: Seq[(String, String, Set[String], String)] =
-    constraintVersions.map { v =>
-      val line = Files.readString(
-        constraintsDir.resolve(f"c$v%016d.txt")).stripLineEnd
-      val parts = line.split("\t", 4)
+    constraintLog.lines.map { raw =>
+      val parts = raw.stripLineEnd.split("\t", 4)
       (parts(0), parts(1),
         parts(2).split(',').filter(_.nonEmpty).toSet,
         if (parts.length > 3) parts(3) else "")
     }
-
-  /** Same link(2)-CAS publication protocol as [[setPartitionSpec]]: a
-    * racing declaration loses with EEXIST and retries under the next
-    * version — concurrent adds are never silently dropped. */
-  private def publishConstraintLine(line: String): Unit = {
-    Files.createDirectories(constraintsDir)
-    var attempt = 0
-    while (attempt < 10000) {
-      val next = constraintVersions.lastOption.getOrElse(0L) + 1
-      val tmp = Files.createTempFile(constraintsDir, ".c-", ".tmp")
-      Files.writeString(tmp, line + "\n")
-      try {
-        Files.createLink(constraintsDir.resolve(f"c$next%016d.txt"), tmp)
-        Files.deleteIfExists(tmp)
-        return
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException(
-      "constraint contention: 10000 failed attempts")
-  }
 
   /** Active CHECK constraints: name → predicate SQL. */
   def checkConstraints: Map[String, String] =
@@ -872,7 +831,7 @@ final class GraftTable private (
     if (h0.nonEmpty)
       require(!violated(),
         s"cannot add constraint '$cname' to $name: existing rows violate it")
-    publishConstraintLine(
+    constraintLog.publish(
       s"$cname\tACTIVE\t${cols.toSeq.sorted.mkString(",")}\t$sql")
     // The validation above ran at a PRE-publish head: a write landing
     // between that scan and the publish carries rows no enforcement
@@ -885,7 +844,7 @@ final class GraftTable private (
     // after this re-check escapes both passes.
     val h1 = log.head.map(_.snapshotId)
     if (h1 != h0 && h1.nonEmpty && violated()) {
-      publishConstraintLine(s"$cname\tDROPPED\t\t")
+      constraintLog.publish(s"$cname\tDROPPED\t\t")
       throw new IllegalArgumentException(
         s"cannot add constraint '$cname' to $name: rows committed " +
           "concurrently with the declaration violate it — rolled back")
@@ -895,7 +854,7 @@ final class GraftTable private (
   def dropCheckConstraint(cname: String): Unit = {
     require(checkConstraints.contains(cname),
       s"no active constraint '$cname' on $name")
-    publishConstraintLine(s"$cname\tDROPPED\t\t")
+    constraintLog.publish(s"$cname\tDROPPED\t\t")
   }
 
   /** One aggregate pass over `df` counting violations of every active
@@ -950,14 +909,13 @@ final class GraftTable private (
     }
     enforceConstraints(df, "append")
     healRenamedLayouts()
-    val commitDir = dir.resolve("data").resolve(s"s${UUID.randomUUID().toString.take(12)}")
+    val commitDir = newCommitDir('s')
     // an explicit clusterBy wins; otherwise the table's declared sort
     // order applies by default ([[setSortOrder]])
     val effCluster =
       if (clusterBy.nonEmpty) clusterBy
       else sortOrder.filter(df.schema.fieldNames.contains)
-    val pspec = partitionSpec
-      .filter(f => df.schema.fieldNames.contains(f.column))
+    val pspec = specOver(df.schema)
     val out =
       if (effCluster.nonEmpty) {
         val cols = effCluster.map(org.apache.spark.sql.functions.col)
@@ -978,43 +936,12 @@ final class GraftTable private (
         df.repartition(pspec.map(f =>
           f.expr(df.schema(f.column).dataType)): _*)
       } else df
-    if (pspec.isEmpty) out.write.parquet(commitDir.toString)
-    else {
-      // derive partition values with codegen'd expressions, let Spark
-      // lay out one directory per value; partitionBy DROPS the derived
-      // columns from the data files (hidden partitioning: the source
-      // columns stay, the transform is recomputable)
-      val withP = pspec.foldLeft(out) { (d, f) =>
-        d.withColumn(f.statName, f.expr(df.schema(f.column).dataType))
-      }
-      withP.write.partitionBy(pspec.map(_.statName): _*)
-        .parquet(commitDir.toString)
-    }
-    val files = parquetFilesIn(commitDir)
-      .map(p => dir.relativize(p).toString)
-      .toSeq.sorted
+    val files = writeStaged(out, commitDir, pspec)
     val schemaJson = existing.map(_.schemaJson).getOrElse(df.schema.json)
-    val wanted = (effCluster ++ statsCols).distinct
-    val stats0 = collectStats(commitDir, wanted)
-    val stats =
-      if (pspec.isEmpty) stats0
-      else {
-        val hist = partitionSpecHistory
-        val dtOf = (c: String) =>
-          df.schema.fields.find(_.name == c).map(_.dataType)
-        stats0.map { case (rel, st) =>
-          val (nm, sm) = Partitioning.pathStatEntries(rel, hist, dtOf)
-          rel -> st.copy(
-            numMin = st.numMin ++ nm, numMax = st.numMax ++ nm,
-            strMin = st.strMin ++ sm, strMax = st.strMax ++ sm)
-        }
-      }
-    val statsB =
-      if (bloomCols.isEmpty) stats
-      else mergeBlooms(commitDir, stats,
-        bloomCols.filter(df.schema.fieldNames.contains))
+    val stats = stageStats(commitDir, (effCluster ++ statsCols).distinct,
+      pspec, df.schema, bloomCols.filter(df.schema.fieldNames.contains))
     log.commit(if (existing.isEmpty) "create" else "append", files,
-      schemaJson, statsB, properties = properties)
+      schemaJson, stats, properties = properties)
   }
 
   /** Per-file bloom sketches for `cols`, sized from the commit's own
@@ -1046,8 +973,7 @@ final class GraftTable private (
       .agg(aggs.head, aggs.tail: _*)
       .collect()
     val byFile = rows.map { r =>
-      val uri = java.net.URI.create(r.getAs[String]("__f"))
-      val rel = dir.relativize(Paths.get(uri.getPath)).toString
+      val rel = relOfUri(r.getAs[String]("__f"))
       rel -> cols.flatMap(c =>
         Option(r.getAs[Array[Byte]](s"__bf_$c")).map(c -> _)).toMap
     }.toMap
@@ -1099,8 +1025,7 @@ final class GraftTable private (
       require(compatible(expected, got),
         s"addFiles schema mismatch for $name:\n expected $expected\n got $got")
     }
-    val commitDir = dir.resolve("data")
-      .resolve(s"i${UUID.randomUUID().toString.take(12)}")
+    val commitDir = newCommitDir('i')
     Files.createDirectories(commitDir)
     val linked = paths.zipWithIndex.map { case (src, i) =>
       val dst = commitDir.resolve(f"import-$i%05d.parquet")
@@ -1111,17 +1036,20 @@ final class GraftTable private (
     val files = linked.map(p => dir.relativize(p).toString).sorted
     val schemaJson = existing.map(_.schemaJson).getOrElse(
       spark.read.parquet(paths.map(_.toString): _*).schema.json)
-    val wanted = statsCols.distinct
-    val stats0 = collectStats(commitDir, wanted)
     // check existing.isEmpty FIRST: on the table-creating commit
     // `schema` has no snapshots to read and would throw before the
     // short-circuit could apply
-    val stats = mergeBlooms(commitDir, stats0,
-      bloomCols.filter(c => existing.isEmpty ||
+    val stats = stageStats(commitDir, statsCols.distinct,
+      bloomCols = bloomCols.filter(c => existing.isEmpty ||
         schema.fieldNames.contains(c)))
     log.commit(if (existing.isEmpty) "create" else "append", files,
       schemaJson, stats)
   }
+
+  // ---- commit pipeline: stage → stats → publish ---------------------
+  // Every data-writing primitive computes its frame, its removed set and
+  // its properties; staging the files, their manifest stats and the one
+  // CAS retry loop live here.
 
   /** All parquet data files under `root`, recursively (partitioned
     * commits nest files in one directory per partition value). */
@@ -1132,13 +1060,75 @@ final class GraftTable private (
     finally s.close()
   }
 
-  /** Stats/bloom bookkeeping for a REWRITE commit, shared by every CoW
-    * DML path (merge/delete/update/overwrite): re-collect stats on the
-    * rewritten files for the explicitly requested columns plus every
+  /** A fresh commit directory; its first letter names the kind of
+    * write that staged it. */
+  private def newCommitDir(letter: Char): Path =
+    dir.resolve("data").resolve(s"$letter${UUID.randomUUID().toString.take(12)}")
+
+  /** Manifest-relative path of a scanned file's URI (as
+    * `input_file_name()` renders it). */
+  private def relOfUri(uri: String): String =
+    dir.relativize(Paths.get(java.net.URI.create(uri).getPath)).toString
+
+  /** The distinct files `probe`'s `__f` column names, manifest-relative
+    * and sorted — a driver list bounded by the affected file count. */
+  private def affectedFiles(probe: DataFrame): Seq[String] =
+    probe.select("__f").distinct().collect()
+      .map(r => relOfUri(r.getString(0))).toSeq.sorted
+
+  /** The partition fields `sch` can derive (a spec column absent from
+    * the frame being written cannot partition it). */
+  private def specOver(sch: StructType,
+      spec: Seq[PartitionField] = partitionSpec): Seq[PartitionField] =
+    spec.filter(f => sch.fieldNames.contains(f.column))
+
+  /** Stage step: write `df`, already distributed the way its caller
+    * wants, into `out`. Under a non-empty `pspec` the partition values
+    * derive with codegen'd expressions and Spark lays out one directory
+    * per value; partitionBy DROPS the derived columns from the data
+    * files (hidden partitioning: the source columns stay, the transform
+    * is recomputable). Returns the written files, manifest-relative and
+    * sorted. */
+  private def writeStaged(df: DataFrame, out: Path,
+      pspec: Seq[PartitionField] = Nil): Seq[String] = {
+    if (pspec.isEmpty) df.write.parquet(out.toString)
+    else pspec.foldLeft(df) { (d, f) =>
+      d.withColumn(f.statName, f.expr(df.schema(f.column).dataType))
+    }.write.partitionBy(pspec.map(_.statName): _*).parquet(out.toString)
+    parquetFilesIn(out).map(p => dir.relativize(p).toString).sorted
+  }
+
+  /** Stats step for the files staged under `commitDir`: footer (or
+    * aggregate) min/max for `cols`, then — when `pspec` is non-empty —
+    * each file's partition path-stats for every spec era, typed by
+    * `sch` (the staged frame's schema), then bloom sketches for
+    * `bloomCols`. */
+  private def stageStats(commitDir: Path, cols: Seq[String],
+      pspec: Seq[PartitionField] = Nil, sch: StructType = StructType(Nil),
+      bloomCols: Seq[String] = Nil): Map[String, FileStat] = {
+    val stats = collectStats(commitDir, cols)
+    val withPaths =
+      if (pspec.isEmpty) stats
+      else {
+        val hist = partitionSpecHistory
+        val dtOf = (c: String) => sch.fields.find(_.name == c).map(_.dataType)
+        stats.map { case (rel, st) =>
+          val (nm, sm) = Partitioning.pathStatEntries(rel, hist, dtOf)
+          rel -> st.copy(
+            numMin = st.numMin ++ nm, numMax = st.numMax ++ nm,
+            strMin = st.strMin ++ sm, strMax = st.strMax ++ sm)
+        }
+      }
+    mergeBlooms(commitDir, withPaths, bloomCols)
+  }
+
+  /** The stats step for a REWRITE commit, shared by every CoW DML path
+    * (merge/delete/update/overwrite) and binpack: re-collect stats on
+    * the rewritten files for the explicitly requested columns plus every
     * stat column the AFFECTED files carried (a rewrite must not
-    * silently strip the pruning index its inputs had), merge partition
-    * path-stats when the table is partitioned, and re-record inherited
-    * bloom sketches (recomputed — bloom bytes cannot merge by range). */
+    * silently strip the pruning index its inputs had), and re-record
+    * inherited bloom sketches (recomputed — bloom bytes cannot merge by
+    * range). */
   private def rewriteStats(commitDir: Path, affected: Seq[String],
       sch: StructType, statsCols: Seq[String],
       pspec: Seq[PartitionField]): Map[String, FileStat] = {
@@ -1148,30 +1138,72 @@ final class GraftTable private (
     val inheritedBlooms = affected.flatMap(f =>
       prevStats.get(f).toSeq.flatMap(_.blooms.keySet))
       .distinct.filter(sch.fieldNames.contains)
-    val stats0 = collectStats(commitDir,
-      (statsCols ++ inherited).distinct.filter(sch.fieldNames.contains))
-    val statsP =
-      if (pspec.isEmpty) stats0
-      else {
-        val hist = partitionSpecHistory
-        val dtOf = (c: String) => sch.fields.find(_.name == c).map(_.dataType)
-        stats0.map { case (rel, st) =>
-          val (nm, sm) = Partitioning.pathStatEntries(rel, hist, dtOf)
-          rel -> st.copy(
-            numMin = st.numMin ++ nm, numMax = st.numMax ++ nm,
-            strMin = st.strMin ++ sm, strMax = st.strMax ++ sm)
-        }
-      }
-    mergeBlooms(commitDir, statsP, inheritedBlooms)
+    stageStats(commitDir,
+      (statsCols ++ inherited).distinct.filter(sch.fieldNames.contains),
+      pspec, sch, inheritedBlooms)
   }
 
-  /** Delete a staged commit directory after a lost head race (the CAS
-    * retry path of every CoW DML). */
+  /** Era-projected rewrite source: the `affected` files as of `head`,
+    * each decoded under its own era and mapped to the CURRENT names
+    * (rewrites normalize old eras as a side effect), with live
+    * tombstones applied (era-grouped anti-joins/predicate filters), so
+    * a rewritten file can never resurrect a merge-on-read-deleted row.
+    * Under row lineage the rows also carry their id and sequence
+    * columns, so survivors keep their identity. */
+  private def rewriteSource(head: Snapshot, affected: Seq[String],
+      sch: StructType, lineage: Boolean): DataFrame = {
+    val snaps = log.snapshots
+    val sidByRel = log.filesWithSnapOf(snaps, Some(head.snapshotId))
+      .map { case (abs, sid) =>
+        dir.relativize(Paths.get(abs)).toString -> sid }.toMap
+    val fs = affected.map(f => dir.resolve(f).toString ->
+      sidByRel.getOrElse(f, head.snapshotId))
+    val dels = log.eqDeletesOf(snaps, Some(head.snapshotId))
+    if (lineage) readWithLineage(fs, dels, sch, snaps)
+    else readWithDeletes(fs, dels, sch, snaps)
+  }
+
+  /** Delete a staged commit directory after a lost head race. */
   private def discardStaged(commitDir: Path): Unit = {
     val walk = Files.walk(commitDir)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .iterator().asScala.foreach(p => Files.deleteIfExists(p))
     finally walk.close()
+  }
+
+  /** Publish step: the one compare-and-swap retry loop. Each attempt
+    * re-reads the head and hands it to `attempt`, which stages a commit
+    * against it (or returns None: nothing to do at that head, which
+    * publish returns as `Left(head)`). The commit is conditional on
+    * that head; a concurrent commit landing in between makes it lose,
+    * its staged directory is discarded and the attempt re-runs over the
+    * new head — 20 lost races give up, naming `what`. */
+  private def publish(what: String)(attempt: Snapshot => Option[Staged])
+      : Either[Snapshot, Snapshot] = {
+    @annotation.tailrec def run(lost: Int): Either[Snapshot, Snapshot] = {
+      val head = headOrThrow
+      attempt(head) match {
+        case None => Left(head)
+        case Some(st) =>
+          val won =
+            try Some(log.commit(st.operation, st.files, st.schemaJson,
+              st.stats, expectedHead = Some(head.snapshotId),
+              removedFiles = st.removed, deleteFiles = st.deleteFiles,
+              properties = st.properties))
+            catch {
+              case e: java.util.ConcurrentModificationException =>
+                st.commitDir.filter(Files.isDirectory(_)).foreach(discardStaged)
+                if (lost + 1 >= 20) throw new IllegalStateException(
+                  s"$what lost ${lost + 1} head races; giving up", e)
+                None
+            }
+          won match {
+            case Some(s) => Right(s)
+            case None => run(lost + 1)
+          }
+      }
+    }
+    run(0)
   }
 
   /** Copy-on-write UPSERT (MERGE INTO by key): rows of `incoming`
@@ -1259,9 +1291,7 @@ final class GraftTable private (
     // tombstones applying at read, era-correctly, until a compact
     // materializes table-wide. The O(1)-delete path no longer costs a
     // full-table compact before the next DML.
-    var attempt = 0
-    while (true) {
-      val base = log.head.get
+    publish(s"merge of $name") { base =>
       val expected = DataType.fromJson(base.schemaJson).asInstanceOf[StructType]
       val byName = incoming.schema.fields.map(f => f.name -> f.dataType).toMap
       expected.fields.foreach { f =>
@@ -1297,13 +1327,9 @@ final class GraftTable private (
             Seq((k, Some(bounds.get(0)), Some(bounds.get(1)))),
             Some(base.snapshotId), Some("__f"))
         } else readTagged(Some(base.snapshotId), "__f")
-      val keyHitFiles = probeSrc
+      val keyHitFiles = affectedFiles(probeSrc
         .select(keyCols.map(col) :+ col("__f"): _*)
-        .join(keys, keyCond)
-        .select("__f").distinct()
-        .collect().map(_.getString(0))
-        .map(f => dir.relativize(Paths.get(java.net.URI.create(f).getPath)).toString)
-        .toSeq
+        .join(keys, keyCond))
       // the not-matched-by-source arm adds every file holding a stored
       // row with NO incoming key that satisfies its condition — those
       // rows must be dropped, so their files join the rewrite set (an
@@ -1311,23 +1337,12 @@ final class GraftTable private (
       val nmsFiles = whenNotMatchedBySourceDelete match {
         case None => Nil
         case Some(c) =>
-          readTagged(Some(base.snapshotId), "__f")
+          affectedFiles(readTagged(Some(base.snapshotId), "__f")
             .join(keys, keyCond, "left_anti")
-            .filter(coalesce(c, lit(false)))
-            .select("__f").distinct()
-            .collect().map(_.getString(0))
-            .map(f => dir.relativize(Paths.get(java.net.URI.create(f).getPath)).toString)
-            .toSeq
+            .filter(coalesce(c, lit(false))))
       }
       val affected = (keyHitFiles ++ nmsFiles).distinct.sorted
-      val commitDir = dir.resolve("data").resolve(s"u${UUID.randomUUID().toString.take(12)}")
-      // era-projected rewrite source: affected files may predate a
-      // rename — decode each under its own era and rewrite under the
-      // CURRENT names (rewrites normalize old eras as a side effect)
-      val snapsNow = log.snapshots
-      val sidByRel = log.filesWithSnapOf(snapsNow, Some(base.snapshotId))
-        .map { case (abs, sid) =>
-          dir.relativize(Paths.get(abs)).toString -> sid }.toMap
+      val commitDir = newCommitDir('u')
       // row lineage (the v3 MERGE contract): carried-along survivors
       // AND matched updates keep their identity — the rewrite reads
       // every affected row's id, matched incoming rows inherit the
@@ -1335,26 +1350,11 @@ final class GraftTable private (
       // only genuine INSERTS mint fresh ids from the counter
       val lineage = rowLineageEnabled(Some(base.snapshotId))
       val next0 =
-        if (lineage) SnapshotLog.rowIdNextOf(snapsNow).get else 0L
-      // live tombstones apply to the rewrite source (readWithDeletes —
-      // era-grouped anti-joins/predicate filters), so a rewritten file
-      // can never resurrect a merge-on-read-deleted row
-      val srcAll =
-        if (affected.isEmpty) {
-          val e = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            schemaAsOf(Some(base.snapshotId)))
-          if (lineage) e.withColumn(GraftTable.RowIdCol, lit(null).cast("long"))
-            .withColumn(GraftTable.RowSeqCol, lit(null).cast("long"))
-          else e
-        } else {
-          val fs = affected.map(f => dir.resolve(f).toString ->
-            sidByRel.getOrElse(f, base.snapshotId))
-          val dl = log.eqDeletesOf(snapsNow, Some(base.snapshotId))
-          val sc = schemaAsOf(Some(base.snapshotId))
-          if (lineage) readWithLineage(fs, dl, sc, snapsNow)
-          else readWithDeletes(fs, dl, sc, snapsNow)
-        }
+        if (lineage) SnapshotLog.rowIdNextOf(log.snapshots).get else 0L
+      // no affected file reads as the empty frame (with the lineage
+      // columns under lineage): every incoming row then inserts
+      val srcAll = rewriteSource(base, affected,
+        schemaAsOf(Some(base.snapshotId)), lineage)
       val survivors0 = srcAll.join(keys, keyCond, "left_anti")
       // not-matched-by-source deletes: unmatched stored rows whose arm
       // condition is TRUE are dropped (NULL keeps, SQL WHEN-semantics)
@@ -1400,42 +1400,21 @@ final class GraftTable private (
       // the table's partition spec survives the rewrite (same rule as
       // compact): rewritten rows re-land one-partition-value-per-file,
       // so point pruning doesn't decay under DML
-      val pspec = partitionSpec
-        .filter(f => rewritten.schema.fieldNames.contains(f.column))
-      if (pspec.isEmpty) rewritten.write.parquet(commitDir.toString)
-      else {
-        val withP = pspec.foldLeft(rewritten) { (dd, f) =>
-          dd.withColumn(f.statName, f.expr(rewritten.schema(f.column).dataType))
-        }
-        withP.write.partitionBy(pspec.map(_.statName): _*)
-          .parquet(commitDir.toString)
-      }
-      val files = parquetFilesIn(commitDir)
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
+      val pspec = specOver(rewritten.schema)
+      val files = writeStaged(rewritten, commitDir, pspec)
       val stats = rewriteStats(commitDir, affected, expected, statsCols, pspec)
-      try {
-        // record the merge keys so changeFeed can pair this commit's
-        // delete+insert rows into update pre/post images; ours second
-        // so a colliding caller property cannot shadow the real keys
-        val props0 =
-          if (keyCols.exists(_.contains(","))) properties
-          else properties + (GraftTable.DmlKeysKey -> keyCols.mkString(","))
-        val props =
-          if (!lineage) props0
-          else props0 ++ lineageCommitProps(files, next0)
-        return log.commit("merge", files, base.schemaJson, stats,
-          expectedHead = Some(base.snapshotId), removedFiles = affected,
-          properties = props)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          discardStaged(commitDir)
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"merge of $name lost $attempt head races; giving up", e)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      // record the merge keys so changeFeed can pair this commit's
+      // delete+insert rows into update pre/post images; ours second
+      // so a colliding caller property cannot shadow the real keys
+      val props0 =
+        if (keyCols.exists(_.contains(","))) properties
+        else properties + (GraftTable.DmlKeysKey -> keyCols.mkString(","))
+      val props =
+        if (!lineage) props0
+        else props0 ++ lineageCommitProps(files, next0)
+      Some(Staged("merge", files, base.schemaJson, stats, removed = affected,
+        properties = props, commitDir = Some(commitDir)))
+    }.merge
   }
 
   /** Copy-on-write DELETE: remove rows matching `cond`. Same
@@ -1455,74 +1434,55 @@ final class GraftTable private (
     }
 
   def deleteWhere(cond: org.apache.spark.sql.Column): Snapshot = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
     requireDeterministicCond(cond, "deleteWhere")
     // live tombstones don't block (see merge): they apply to the
-    // survivor read below and keep applying to untouched files
-    var attempt = 0
-    while (true) {
-      val head = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
-      val sch = schemaAsOf(Some(head.snapshotId))
-      val affected = probeTagged(cond, head.snapshotId, sch)
-        .filter(cond)
-        .select("__f").distinct()
-        .collect().map(_.getString(0))
-        .map(f => dir.relativize(Paths.get(java.net.URI.create(f).getPath)).toString)
-        .toSeq.sorted
-      if (affected.isEmpty)
-        return head // nothing matches: no-op, current head stands
-      val commitDir = dir.resolve("data").resolve(s"d${UUID.randomUUID().toString.take(12)}")
-      // era-projected rewrite source (see merge): old-era files decode
-      // under their own names and re-land under the current schema
-      val snapsNow = log.snapshots
-      val sidByRel = log.filesWithSnapOf(snapsNow, Some(head.snapshotId))
-        .map { case (abs, sid) =>
-          dir.relativize(Paths.get(abs)).toString -> sid }.toMap
-      val affectedWithSnap = affected.map(f => dir.resolve(f).toString ->
-        sidByRel.getOrElse(f, head.snapshotId))
-      val delsNow = log.eqDeletesOf(snapsNow, Some(head.snapshotId))
-      // row lineage: survivors keep their ids — read them, write them
-      val lineage = rowLineageEnabled(Some(head.snapshotId))
-      val survivors = (if (lineage)
-          readWithLineage(affectedWithSnap, delsNow, sch, snapsNow)
-        else readWithDeletes(affectedWithSnap, delsNow, sch, snapsNow))
-        // SQL DELETE semantics: remove only rows where cond is TRUE. A
-        // bare `!cond` would also drop NULL-evaluating rows (NULL
-        // satisfies neither side) — silent data loss.
-        .filter(!org.apache.spark.sql.functions.coalesce(cond,
-          org.apache.spark.sql.functions.lit(false)))
-      // spec survives the rewrite, same as merge/compact
-      val pspec = partitionSpec.filter(f => sch.fieldNames.contains(f.column))
-      if (pspec.isEmpty) survivors.write.parquet(commitDir.toString)
-      else {
-        val withP = pspec.foldLeft(survivors) { (dd, f) =>
-          dd.withColumn(f.statName, f.expr(sch(f.column).dataType))
-        }
-        withP.write.partitionBy(pspec.map(_.statName): _*)
-          .parquet(commitDir.toString)
-      }
-      val files = parquetFilesIn(commitDir)
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
-      // same stat-column (and bloom) inheritance as merge: surviving
-      // rows keep the pruning stats their source files carried
-      val stats = rewriteStats(commitDir, affected, sch, Nil, pspec)
-      try {
-        return log.commit("delete", files, head.schemaJson, stats,
-          expectedHead = Some(head.snapshotId), removedFiles = affected,
-          properties =
-            if (lineage) Map(SnapshotLog.RowIdMaterializedKey -> "1")
-            else Map.empty)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          discardStaged(commitDir)
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"delete of $name lost $attempt head races; giving up", e)
-      }
+    // survivor read and keep applying to untouched files
+    rewriteWhere(cond, "delete", 'd', _ => Map.empty) {
+      // SQL DELETE semantics: remove only rows where cond is TRUE. A
+      // bare `!cond` would also drop NULL-evaluating rows (NULL
+      // satisfies neither side) — silent data loss.
+      (src, _, _, _) => src.filter(!coalesce(cond, lit(false)))
     }
-    throw new IllegalStateException("unreachable")
   }
+
+  /** The copy-on-write rewrite [[deleteWhere]] and [[updateWhere]]
+    * share: probe the files holding a `cond` row (stats-pruned), read
+    * them era-projected with live tombstones applied
+    * ([[rewriteSource]]), re-land `transform(source, head, schema,
+    * lineage)` under the table's partition spec, and publish one CAS
+    * commit that removes the affected files. No affected file: no
+    * commit, the head read stands. The commit carries `properties` of
+    * the head's schema, plus the physical-ids flag under row lineage. */
+  private def rewriteWhere(cond: org.apache.spark.sql.Column,
+      operation: String, letter: Char,
+      properties: StructType => Map[String, String])(
+      transform: (DataFrame, Snapshot, StructType, Boolean) => DataFrame)
+      : Snapshot =
+    publish(s"$operation of $name") { head =>
+      val sch = schemaAsOf(Some(head.snapshotId))
+      val affected = affectedFiles(
+        probeTagged(cond, head.snapshotId, sch).filter(cond))
+      if (affected.isEmpty) None // nothing matches: no-op
+      else {
+        val commitDir = newCommitDir(letter)
+        val lineage = rowLineageEnabled(Some(head.snapshotId))
+        val rows = transform(rewriteSource(head, affected, sch, lineage),
+          head, sch, lineage)
+        // the spec survives the rewrite, same as merge/compact
+        val pspec = specOver(sch)
+        val files = writeStaged(rows, commitDir, pspec)
+        // same stat-column and bloom inheritance as merge: the rewrite
+        // keeps the pruning stats its source files carried (rewritten
+        // columns recompute from the new bytes like any write)
+        val stats = rewriteStats(commitDir, affected, sch, Nil, pspec)
+        Some(Staged(operation, files, head.schemaJson, stats,
+          removed = affected, commitDir = Some(commitDir),
+          properties = properties(sch) ++
+            (if (lineage) Map(SnapshotLog.RowIdMaterializedKey -> "1")
+             else Map.empty)))
+      }
+    }.merge
 
   /** Copy-on-write UPDATE (SQL `UPDATE t SET c = expr WHERE cond`, the
     * Delta/Iceberg update shape): rows where `cond` is TRUE get every
@@ -1550,7 +1510,7 @@ final class GraftTable private (
     * SET did not touch) rather than bare delete+insert. Incremental
     * readers treat it as a rewrite ([[changesSince]] refuses across
     * it; Mirror escalates to diff) — rows changed in place. CAS +
-    * re-probe on head races, like every CoW DML. */
+    * re-probe when the head moves, like every CoW DML. */
   def updateWhere(cond: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Snapshot = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when => fwhen}
@@ -1559,91 +1519,38 @@ final class GraftTable private (
     val sch0 = schema
     set.keys.foreach(k => require(sch0.fieldNames.contains(k),
       s"update on $name: SET column '$k' is not a table column"))
-    var attempt = 0
-    while (true) {
-      val head = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
-      val sch = schemaAsOf(Some(head.snapshotId))
-      val affected = probeTagged(cond, head.snapshotId, sch)
-        .filter(cond)
-        .select("__f").distinct()
-        .collect().map(_.getString(0))
-        .map(f => dir.relativize(Paths.get(java.net.URI.create(f).getPath)).toString)
-        .toSeq.sorted
-      if (affected.isEmpty)
-        return head // nothing matches: no-op, current head stands
-      val commitDir = dir.resolve("data").resolve(s"u${UUID.randomUUID().toString.take(12)}")
-      val snapsNow = log.snapshots
-      val sidByRel = log.filesWithSnapOf(snapsNow, Some(head.snapshotId))
-        .map { case (abs, sid) =>
-          dir.relativize(Paths.get(abs)).toString -> sid }.toMap
-      val affectedWithSnap = affected.map(f => dir.resolve(f).toString ->
-        sidByRel.getOrElse(f, head.snapshotId))
-      val delsNow = log.eqDeletesOf(snapsNow, Some(head.snapshotId))
-      // row lineage: an UPDATE preserves row identity — the pre-image's
-      // id rides through the assignment select into the rewrite
-      val lineage = rowLineageEnabled(Some(head.snapshotId))
-      val src = (if (lineage)
-          readWithLineage(affectedWithSnap, delsNow, sch, snapsNow)
-        else readWithDeletes(affectedWithSnap, delsNow, sch, snapsNow))
-      // one select, every branch reading INPUT columns: assignments
-      // cannot observe each other, and `cond` is evaluated on the
-      // pre-image (a SET that flips its own predicate still applies)
-      val hit = coalesce(cond, lit(false))
-      // lineage: hit rows keep their id and BUMP their seq to this
-      // commit (head+1 under the CAS guard); carried survivors keep both
-      def postImage(d: DataFrame): DataFrame = d.select(sch.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) => fwhen(hit, e.cast(f.dataType))
-            .otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      } ++ (if (lineage) Seq(col(GraftTable.RowIdCol),
-        fwhen(hit, lit(head.snapshotId + 1))
-          .otherwise(col(GraftTable.RowSeqCol)).as(GraftTable.RowSeqCol))
-      else Nil): _*)
-      // constraints gate the post-image of the rows the update TOUCHES;
-      // one bounded agg over affected files, before any bytes land
-      enforceConstraints(postImage(src.filter(hit)), "update")
-      val rewritten = postImage(src)
-      val pspec = partitionSpec.filter(f => sch.fieldNames.contains(f.column))
-      if (pspec.isEmpty) rewritten.write.parquet(commitDir.toString)
-      else {
-        val withP = pspec.foldLeft(rewritten) { (dd, f) =>
-          dd.withColumn(f.statName, f.expr(sch(f.column).dataType))
-        }
-        withP.write.partitionBy(pspec.map(_.statName): _*)
-          .parquet(commitDir.toString)
-      }
-      val files = parquetFilesIn(commitDir)
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
-      // same stat-column and bloom inheritance as delete/merge: the
-      // rewrite keeps the pruning stats its source files carried
-      // (assigned columns recompute from the new bytes like any write)
-      val stats = rewriteStats(commitDir, affected, sch, Nil, pspec)
-      // pre and post images share every NON-assigned column — record
-      // them so changeFeed pairs this commit into update pre/post rows
+    // pre and post images share every NON-assigned column — record
+    // them so changeFeed pairs this commit into update pre/post rows
+    def pairing(sch: StructType): Map[String, String] = {
       val pairKeys = sch.fieldNames.toSeq.filterNot(set.contains)
-      val props =
-        (if (pairKeys.isEmpty || pairKeys.exists(_.contains(",")))
-          Map.empty[String, String]
-        else Map(GraftTable.DmlKeysKey -> pairKeys.mkString(","))) ++
-        (if (lineage) Map(SnapshotLog.RowIdMaterializedKey -> "1")
-         else Map.empty)
-      try {
-        return log.commit("update", files, head.schemaJson, stats,
-          expectedHead = Some(head.snapshotId), removedFiles = affected,
-          properties = props)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          discardStaged(commitDir)
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"update of $name lost $attempt head races; giving up", e)
-      }
+      if (pairKeys.isEmpty || pairKeys.exists(_.contains(","))) Map.empty
+      else Map(GraftTable.DmlKeysKey -> pairKeys.mkString(","))
     }
-    throw new IllegalStateException("unreachable")
+    // row lineage: an UPDATE preserves row identity — the pre-image's
+    // id rides through the assignment select into the rewrite
+    rewriteWhere(cond, "update", 'u', pairing) {
+      (src, head, sch, lineage) =>
+        // one select, every branch reading INPUT columns: assignments
+        // cannot observe each other, and `cond` is evaluated on the
+        // pre-image (a SET that flips its own predicate still applies)
+        val hit = coalesce(cond, lit(false))
+        // lineage: hit rows keep their id and BUMP their seq to this
+        // commit (head+1 under the CAS guard); carried survivors keep both
+        def postImage(d: DataFrame): DataFrame = d.select(sch.fields.toSeq.map { f =>
+          set.get(f.name) match {
+            case Some(e) => fwhen(hit, e.cast(f.dataType))
+              .otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
+          }
+        } ++ (if (lineage) Seq(col(GraftTable.RowIdCol),
+          fwhen(hit, lit(head.snapshotId + 1))
+            .otherwise(col(GraftTable.RowSeqCol)).as(GraftTable.RowSeqCol))
+        else Nil): _*)
+        // constraints gate the post-image of the rows the update TOUCHES;
+        // one bounded agg over affected files, before any bytes land
+        enforceConstraints(postImage(src.filter(hit)), "update")
+        postImage(src)
+    }
   }
 
   /** Predicate-scoped atomic OVERWRITE (Delta's `replaceWhere` /
@@ -1705,10 +1612,7 @@ final class GraftTable private (
       s"overwriteWhere on $name: incoming rows violate the predicate " +
         "(every replacement row must satisfy the overwrite condition)")
     enforceConstraints(df, "overwrite")
-    var attempt = 0
-    while (true) {
-      val head = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
+    publish(s"overwrite of $name") { head =>
       val sch = schemaAsOf(Some(head.snapshotId))
       val probeSrc = pruneFiles match {
         // no partition-tuple hint: still stats-prune by the predicate's
@@ -1724,26 +1628,9 @@ final class GraftTable private (
             log.eqDeletesOf(snapsP, Some(head.snapshotId)),
             schemaAsOfIn(snapsP, Some(head.snapshotId)), snapsP, Some("__f"))
       }
-      val affected = probeSrc
-        .filter(cond)
-        .select("__f").distinct()
-        .collect().map(_.getString(0))
-        .map(f => dir.relativize(Paths.get(java.net.URI.create(f).getPath)).toString)
-        .toSeq.sorted
-      val commitDir = dir.resolve("data").resolve(s"w${UUID.randomUUID().toString.take(12)}")
-      val snapsNow = log.snapshots
-      val pspec = partitionSpec.filter(f => sch.fieldNames.contains(f.column))
-      def land(rows: DataFrame, sub: String): Unit = {
-        val out = commitDir.resolve(sub)
-        if (pspec.isEmpty) rows.write.parquet(out.toString)
-        else {
-          val withP = pspec.foldLeft(rows) { (dd, f) =>
-            dd.withColumn(f.statName, f.expr(sch(f.column).dataType))
-          }
-          withP.write.partitionBy(pspec.map(_.statName): _*)
-            .parquet(out.toString)
-        }
-      }
+      val affected = affectedFiles(probeSrc.filter(cond))
+      val commitDir = newCommitDir('w')
+      val pspec = specOver(sch)
       // row lineage: the replaced REGION's identity dies with it, but
       // survivor rows of affected files are OUTSIDE the region — they
       // must keep their ids (the property test caught the file-level
@@ -1751,44 +1638,24 @@ final class GraftTable private (
       // mint dense fresh ids
       val lineage = rowLineageEnabled(Some(head.snapshotId))
       val next0 =
-        if (lineage) SnapshotLog.rowIdNextOf(snapsNow).get else 0L
-      if (affected.nonEmpty) {
-        val sidByRel = log.filesWithSnapOf(snapsNow, Some(head.snapshotId))
-          .map { case (abs, sid) =>
-            dir.relativize(Paths.get(abs)).toString -> sid }.toMap
-        val fs = affected.map(f => dir.resolve(f).toString ->
-          sidByRel.getOrElse(f, head.snapshotId))
-        val dl = log.eqDeletesOf(snapsNow, Some(head.snapshotId))
-        val survivors =
-          (if (lineage) readWithLineage(fs, dl, sch, snapsNow)
-           else readWithDeletes(fs, dl, sch, snapsNow))
-            .filter(!coalesce(cond, lit(false)))
-        land(survivors, "keep")
-      }
+        if (lineage) SnapshotLog.rowIdNextOf(log.snapshots).get else 0L
+      val kept =
+        if (affected.isEmpty) Nil
+        else writeStaged(rewriteSource(head, affected, sch, lineage)
+          .filter(!coalesce(cond, lit(false))), commitDir.resolve("keep"), pspec)
       // the replaced region is NEW identity: fresh ids, this commit's seq
-      land(if (lineage) withMintedIds(df, next0)
+      val landed = writeStaged(if (lineage) withMintedIds(df, next0)
         .withColumn(GraftTable.RowSeqCol, lit(head.snapshotId + 1))
-      else df, "new")
-      val files = parquetFilesIn(commitDir)
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
+      else df, commitDir.resolve("new"), pspec)
+      val files = (kept ++ landed).sorted
       // survivors + new rows inherit the affected files' stat/bloom
       // columns, same as deleteWhere/merge — pruning must not degrade
       val stats = rewriteStats(commitDir, affected, sch, Nil, pspec)
-      try {
-        return log.commit("overwrite", files, head.schemaJson, stats,
-          expectedHead = Some(head.snapshotId), removedFiles = affected,
-          properties =
-            if (lineage) lineageCommitProps(files, next0) else Map.empty)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          discardStaged(commitDir)
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"overwrite of $name lost $attempt head races; giving up", e)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      Some(Staged("overwrite", files, head.schemaJson, stats,
+        removed = affected, commitDir = Some(commitDir),
+        properties =
+          if (lineage) lineageCommitProps(files, next0) else Map.empty))
+    }.merge
   }
 
   /** DYNAMIC partition overwrite (Spark's
@@ -1904,8 +1771,7 @@ final class GraftTable private (
       .agg(aggs.head, aggs.tail: _*)
       .collect()
     val byFile = rows.map { r =>
-      val uri = java.net.URI.create(r.getAs[String]("__f"))
-      val rel = dir.relativize(java.nio.file.Paths.get(uri.getPath)).toString
+      val rel = relOfUri(r.getAs[String]("__f"))
       var numMin = Map.empty[String, Double]; var numMax = Map.empty[String, Double]
       var strMin = Map.empty[String, String]; var strMax = Map.empty[String, String]
       cols.foreach { c =>
@@ -2141,60 +2007,34 @@ final class GraftTable private (
     enforceConstraints(df, "replace")
     var specDeclared = false
     // a terminal failure AFTER the spec declaration (stats collection,
-    // 20 lost head races) must not leave the new spec durably current
+    // 20 lost CAS attempts) must not leave the new spec durably current
     // with no replacement data — the compensator RE-DECLARES the prior
     // spec (append-only, race-safe: a concurrent writer that already
     // recorded entries for the new era keeps a probed history line,
     // unlike a delete of the version file would)
     val prevSpec = partitionSpec
-    try {
-    var attempt = 0
-    while (true) {
-      val base = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
+    try publish(s"replace of $name") { base =>
       val removed = log.dataFiles(Some(base.snapshotId))
         .map(f => dir.relativize(Paths.get(f)).toString).sorted
-      val commitDir = dir.resolve("data").resolve(s"r${UUID.randomUUID().toString.take(12)}")
+      val commitDir = newCommitDir('r')
       // same spec-preservation rule as append/merge/compact: a rebuild
       // (mirror changelog apply, MV recovery) re-lands partitioned
-      val pspec = declareSpec.getOrElse(partitionSpec)
-        .filter(f => df.schema.fieldNames.contains(f.column))
-      if (pspec.isEmpty) df.write.parquet(commitDir.toString)
-      else {
-        // same hash write distribution as append: one shuffle keyed on
-        // the partition values → one file per value per commit, not
-        // one per (value × task)
-        val dist = df.repartition(pspec.map(f =>
-          f.expr(df.schema(f.column).dataType)): _*)
-        val withP = pspec.foldLeft(dist) { (dd, f) =>
-          dd.withColumn(f.statName, f.expr(df.schema(f.column).dataType))
-        }
-        withP.write.partitionBy(pspec.map(_.statName): _*)
-          .parquet(commitDir.toString)
-      }
-      val files = parquetFilesIn(commitDir)
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
+      val pspec = specOver(df.schema, declareSpec.getOrElse(partitionSpec))
+      // same hash write distribution as append: one shuffle keyed on
+      // the partition values → one file per value per commit, not
+      // one per (value × task)
+      val files = writeStaged(
+        if (pspec.isEmpty) df
+        else df.repartition(pspec.map(f =>
+          f.expr(df.schema(f.column).dataType)): _*),
+        commitDir, pspec)
       // the payload is now fully materialized on disk — the earliest
       // point a redeclared spec may durably commit (see scaladoc); the
       // flag keeps head-race retries from declaring it twice
       if (!specDeclared) declareSpec.foreach { s =>
         declareSpecLine(s); specDeclared = true
       }
-      val stats0 = collectStats(commitDir, statsCols)
-      val stats =
-        if (pspec.isEmpty) stats0
-        else {
-          val hist = partitionSpecHistory
-          val dtOf = (c: String) =>
-            df.schema.fields.find(_.name == c).map(_.dataType)
-          stats0.map { case (rel, st) =>
-            val (nm, sm) = Partitioning.pathStatEntries(rel, hist, dtOf)
-            rel -> st.copy(
-              numMin = st.numMin ++ nm, numMax = st.numMax ++ nm,
-              strMin = st.strMin ++ sm, strMax = st.strMax ++ sm)
-          }
-        }
+      val stats = stageStats(commitDir, statsCols, pspec, df.schema)
       val committedSchema =
         if (!keepSchema) df.schema.json
         else {
@@ -2205,20 +2045,11 @@ final class GraftTable private (
               s"got ${df.schema}")
           base.schemaJson
         }
-      try {
-        return log.commit("replace", files, committedSchema, stats,
-          expectedHead = Some(base.snapshotId), removedFiles = removed,
-          properties = properties)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          discardStaged(commitDir)
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"replace of $name lost $attempt head races; giving up", e)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-    } catch {
+      Some(Staged("replace", files, committedSchema, stats,
+        removed = removed, properties = properties,
+        commitDir = Some(commitDir)))
+    }.merge
+    catch {
       case e: Throwable =>
         // the compensating redeclare is itself a DISK WRITE: the same
         // IO failure that aborted the commit can throw again — attach
@@ -2616,10 +2447,7 @@ final class GraftTable private (
     // reads (the rewrite doesn't contain its rows, and dataFiles resolves
     // from the latest compact). Pin the read at the base snapshot, commit
     // with compare-and-swap on the head, and rebuild on conflict.
-    var attempt = 0
-    while (true) {
-      val base = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
+    publish(s"compact of $name") { base =>
       // row lineage: the rewrite READS every row's id and WRITES it as
       // a physical column — maintenance preserves identity (v3's rule)
       val lineage = rowLineageEnabled(Some(base.snapshotId))
@@ -2628,7 +2456,7 @@ final class GraftTable private (
         else read(Some(base.snapshotId))
       val parts = if (targetFiles > 0) targetFiles
         else math.max(1, spark.sparkContext.defaultParallelism / 2)
-      val commitDir = dir.resolve("data").resolve(s"c${UUID.randomUUID().toString.take(12)}")
+      val commitDir = newCommitDir('c')
       // compaction is WHEN a long-appended table gets its Z-layout:
       // appends land in arrival order; one rewrite re-lays the whole
       // visible set along the curve (2 or 3 columns, matching
@@ -2656,62 +2484,26 @@ final class GraftTable private (
       // as Iceberg's rewrite): files re-land one-partition-value-each
       // and keep pruning; an explicit zOrder/cluster layout wins instead
       val pspec =
-        if (zOrderBy.isEmpty && clusterBy.isEmpty)
-          partitionSpec.filter(f => current.schema.fieldNames.contains(f.column))
+        if (zOrderBy.isEmpty && clusterBy.isEmpty) specOver(current.schema)
         else Nil
-      if (pspec.isEmpty) out.write.parquet(commitDir.toString)
-      else {
-        val withP = pspec.foldLeft(out) { (d, f) =>
-          d.withColumn(f.statName, f.expr(current.schema(f.column).dataType))
-        }
-        withP.write.partitionBy(pspec.map(_.statName): _*)
-          .parquet(commitDir.toString)
-      }
-      val files = parquetFilesIn(commitDir)
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
+      val files = writeStaged(out, commitDir, pspec)
       // without re-collected stats the compacted files would be unprunable
       // (a silent regression for readWhere) — record them when asked
       val wanted = (zOrderBy ++ clusterBy ++
         (if (zOrderBy.isEmpty && clusterBy.isEmpty)
           sortOrder.filter(current.schema.fieldNames.contains) else Nil) ++
         statsCols).distinct
-      val stats0 = collectStats(commitDir, wanted)
-      val statsP =
-        if (pspec.isEmpty) stats0
-        else {
-          val hist = partitionSpecHistory
-          val dtOf = (c: String) =>
-            current.schema.fields.find(_.name == c).map(_.dataType)
-          stats0.map { case (rel, st) =>
-            val (nm, sm) = Partitioning.pathStatEntries(rel, hist, dtOf)
-            rel -> st.copy(
-              numMin = st.numMin ++ nm, numMax = st.numMax ++ nm,
-              strMin = st.strMin ++ sm, strMax = st.strMax ++ sm)
-          }
-        }
-      val stats = mergeBlooms(commitDir, statsP,
+      val stats = stageStats(commitDir, wanted, pspec, current.schema,
         bloomCols.filter(current.schema.fieldNames.contains))
-      try {
-        return log.commit("compact", files, base.schemaJson, stats,
-          expectedHead = Some(base.snapshotId),
-          properties = carriedTxnMarkers(log.snapshots) ++
-            (if (lineage)
-              Map(SnapshotLog.RowIdMaterializedKey -> "1",
-                SnapshotLog.RowIdNextKey ->
-                  SnapshotLog.rowIdNextOf(log.snapshots).get.toString)
-             else Map.empty))
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          // lost to a concurrent commit: discard the stale rewrite and
-          // redo it over the new head
-          discardStaged(commitDir)
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"compact of $name lost $attempt head races; giving up", e)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      Some(Staged("compact", files, base.schemaJson, stats,
+        commitDir = Some(commitDir),
+        properties = carriedTxnMarkers(log.snapshots) ++
+          (if (lineage)
+            Map(SnapshotLog.RowIdMaterializedKey -> "1",
+              SnapshotLog.RowIdNextKey ->
+                SnapshotLog.rowIdNextOf(log.snapshots).get.toString)
+           else Map.empty)))
+    }.merge
   }
 
   /** PARTIAL binpack compaction (Iceberg's `rewrite_data_files`
@@ -2747,10 +2539,7 @@ final class GraftTable private (
   def compactSmall(smallBytes: Long, targetBytes: Long = 128L << 20,
       statsCols: Seq[String] = Nil): Option[Snapshot] = {
     require(smallBytes > 0 && targetBytes > 0, "sizes must be positive")
-    var attempt = 0
-    while (true) {
-      val base = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
+    publish(s"compactSmall of $name") { base =>
       val snaps = log.snapshots
       val statsByFile = snaps.flatMap(_.stats).toMap
       val visible = log.filesWithSnapOf(snaps, Some(base.snapshotId))
@@ -2760,76 +2549,58 @@ final class GraftTable private (
       val small = visible.map { case (abs, sid) =>
         (abs, sid, dir.relativize(Paths.get(abs)).toString)
       }.filter { case (abs, _, rel) => sizeOf(abs, rel) < smallBytes }
-      if (small.size < 2) return None
-      val sch = schemaAsOfIn(snaps, Some(base.snapshotId))
-      val lineage = rowLineageEnabled(Some(base.snapshotId))
-      val dels = log.eqDeletesOf(snaps, Some(base.snapshotId))
-      val posDels = dels.filter(_._2.isInstanceOf[Tomb.Pos])
-      val rowDelSnaps = dels.collect {
-        case (s, t) if !t.isInstanceOf[Tomb.Pos] => s }
-      val bySid = snaps.map(s => s.snapshotId -> s).toMap
-      def eff(abs: String, sid: Long): Long =
-        GraftTable.tombSidOf(bySid, dir, abs, sid)
-      // one rewrite group per tombstone era (index -1: after every
-      // live delete); without live key/pred deletes this is ONE group
-      val eraGroups = small
-        .groupBy { case (abs, sid, _) =>
-          rowDelSnaps.indexWhere(_ > eff(abs, sid)) }
-        .toSeq.sortBy(_._1)
-      val commitDir = dir.resolve("data")
-        .resolve(s"p${UUID.randomUUID().toString.take(12)}")
-      val pspec = partitionSpec.filter(f => sch.fieldNames.contains(f.column))
-      val tombProps = scala.collection.mutable.Map.empty[String, String]
-      eraGroups.zipWithIndex.foreach { case ((gi, gfiles), idx) =>
-        val gBytes = gfiles.map { case (abs, _, rel) => sizeOf(abs, rel) }.sum
-        val gParts = math.max(1, ((gBytes + targetBytes - 1) / targetBytes).toInt)
-        // position tombstones apply to the rewrite source (visible rows
-        // unchanged); key/pred tombstones deliberately do NOT. Row
-        // lineage: binpack must be invisible to identity — ids ride
-        // into the re-packed files as a physical column.
-        val gws = gfiles.map { case (abs, sid, _) => (abs, sid) }
-        val packed = (if (lineage) readWithLineage(gws, posDels, sch, snaps)
-          else readWithDeletes(gws, posDels, sch, snaps))
-          .repartition(gParts)
-        val sub = commitDir.resolve(f"g$idx%02d")
-        if (pspec.isEmpty) packed.write.parquet(sub.toString)
-        else {
-          val withP = pspec.foldLeft(packed) { (dd, f) =>
-            dd.withColumn(f.statName, f.expr(sch(f.column).dataType))
+      if (small.size < 2) None
+      else {
+        val sch = schemaAsOfIn(snaps, Some(base.snapshotId))
+        val lineage = rowLineageEnabled(Some(base.snapshotId))
+        val dels = log.eqDeletesOf(snaps, Some(base.snapshotId))
+        val posDels = dels.filter(_._2.isInstanceOf[Tomb.Pos])
+        val rowDelSnaps = dels.collect {
+          case (s, t) if !t.isInstanceOf[Tomb.Pos] => s }
+        val bySid = snaps.map(s => s.snapshotId -> s).toMap
+        def eff(abs: String, sid: Long): Long =
+          GraftTable.tombSidOf(bySid, dir, abs, sid)
+        // one rewrite group per tombstone era (index -1: after every
+        // live delete); without live key/pred deletes this is ONE group
+        val eraGroups = small
+          .groupBy { case (abs, sid, _) =>
+            rowDelSnaps.indexWhere(_ > eff(abs, sid)) }
+          .toSeq.sortBy(_._1)
+        val commitDir = newCommitDir('p')
+        val pspec = specOver(sch)
+        val tombProps = scala.collection.mutable.Map.empty[String, String]
+        val files = eraGroups.zipWithIndex.flatMap { case ((gi, gfiles), idx) =>
+          val gBytes = gfiles.map { case (abs, _, rel) => sizeOf(abs, rel) }.sum
+          val gParts = math.max(1, ((gBytes + targetBytes - 1) / targetBytes).toInt)
+          // position tombstones apply to the rewrite source (visible rows
+          // unchanged); key/pred tombstones deliberately do NOT. Row
+          // lineage: binpack must be invisible to identity — ids ride
+          // into the re-packed files as a physical column.
+          val gws = gfiles.map { case (abs, sid, _) => (abs, sid) }
+          val packed = (if (lineage) readWithLineage(gws, posDels, sch, snaps)
+            else readWithDeletes(gws, posDels, sch, snaps))
+            .repartition(gParts)
+          val gFiles = writeStaged(packed, commitDir.resolve(f"g$idx%02d"), pspec)
+          if (gi >= 0) {
+            // the group's rows stay scoped by their sources' era: record
+            // the inherited sid (any member's effective sid — all map to
+            // the same delete-era interval by construction)
+            val repSid = eff(gfiles.head._1, gfiles.head._2)
+            gFiles.foreach(f =>
+              tombProps(GraftTable.TombSidPrefix + f) = repSid.toString)
           }
-          withP.write.partitionBy(pspec.map(_.statName): _*)
-            .parquet(sub.toString)
-        }
-        if (gi >= 0) {
-          // the group's rows stay scoped by their sources' era: record
-          // the inherited sid (any member's effective sid — all map to
-          // the same delete-era interval by construction)
-          val repSid = eff(gfiles.head._1, gfiles.head._2)
-          parquetFilesIn(sub).foreach(p =>
-            tombProps(GraftTable.TombSidPrefix +
-              dir.relativize(p).toString) = repSid.toString)
-        }
-      }
-      val files = parquetFilesIn(commitDir)
-        .map(p => dir.relativize(p).toString).toSeq.sorted
-      val removed = small.map(_._3).sorted
-      // same stat/bloom inheritance discipline as merge/deleteWhere
-      val stats = rewriteStats(commitDir, removed, sch, statsCols, pspec)
-      try {
-        return Some(log.commit("rewrite", files, base.schemaJson, stats,
-          expectedHead = Some(base.snapshotId), removedFiles = removed,
+          gFiles
+        }.sorted
+        val removed = small.map(_._3).sorted
+        // same stat/bloom inheritance discipline as merge/deleteWhere
+        val stats = rewriteStats(commitDir, removed, sch, statsCols, pspec)
+        Some(Staged("rewrite", files, base.schemaJson, stats,
+          removed = removed, commitDir = Some(commitDir),
           properties = tombProps.toMap ++
             (if (lineage) Map(SnapshotLog.RowIdMaterializedKey -> "1")
              else Map.empty)))
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          discardStaged(commitDir)
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"compactSmall of $name lost $attempt head races; giving up", e)
       }
-    }
-    throw new IllegalStateException("unreachable")
+    }.toOption
   }
 
   /** METADATA CHECKPOINT: commit a `compact`-resolving snapshot that
@@ -2869,8 +2640,7 @@ final class GraftTable private (
     * equal across the carry). */
   def checkpoint(): Snapshot = {
     val snaps = log.snapshots
-    val base = snaps.lastOption.getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val base = snaps.lastOption.getOrElse(throw noSnapshots)
     val head = schemaAsOfIn(snaps, None)
     val legacy = GraftTable.legacyNames(snaps)
     val legacyInv = legacy.map(_.swap) // name -> id at upgrade time
@@ -3037,60 +2807,44 @@ final class GraftTable private (
     * tombstones. */
   def compactDeletes(): Option[Snapshot] = {
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (true) {
-      val head = log.head.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
+    publish(s"delete compaction of $name") { head =>
       val snaps = log.snapshots
       val pos = log.eqDeletesOf(snaps, Some(head.snapshotId))
         .collect { case (sid, p: Tomb.Pos) => (sid, p) }
-      if (pos.isEmpty) return None
-      val visibleRel = log.dataFilesOf(snaps, Some(head.snapshotId))
-        .map(a => dir.relativize(Paths.get(a)).toString).toSet
-      val namedLive = pos.flatMap(_._2.files).toSet.intersect(visibleRel)
-      val commitDir = dir.resolve("data")
-        .resolve(s"x${UUID.randomUUID().toString.take(12)}")
-      var files = Seq.empty[String]
-      var counts = Map.empty[String, String]
-      if (namedLive.nonEmpty) {
-        // output sidecar count scales with tombstone volume, not with
-        // how fragmented the inputs were — usually exactly one file
-        val parts = math.max(1, pos.map(_._2.sidecars.size).sum / 16)
-        spark.read.parquet(pos.flatMap(_._2.sidecars): _*)
-          .filter(col("file").isInCollection(namedLive))
-          .distinct()
-          .coalesce(parts)
-          .write.parquet(commitDir.toString)
-        files = parquetFilesIn(commitDir)
-          .map(p => dir.relativize(p).toString).toSeq.sorted
-        counts = spark.read
-          .parquet(files.map(f => dir.resolve(f).toString): _*)
-          .groupBy("file").count().collect()
-          .map(r => (SnapshotLog.PosCountPrefix + r.getString(0)) ->
-            r.getLong(1).toString).toMap
+      if (pos.isEmpty) None
+      else {
+        val visibleRel = log.dataFilesOf(snaps, Some(head.snapshotId))
+          .map(a => dir.relativize(Paths.get(a)).toString).toSet
+        val namedLive = pos.flatMap(_._2.files).toSet.intersect(visibleRel)
+        val commitDir = newCommitDir('x')
+        var files = Seq.empty[String]
+        var counts = Map.empty[String, String]
+        if (namedLive.nonEmpty) {
+          // output sidecar count scales with tombstone volume, not with
+          // how fragmented the inputs were — usually exactly one file
+          val parts = math.max(1, pos.map(_._2.sidecars.size).sum / 16)
+          files = writeStaged(spark.read.parquet(pos.flatMap(_._2.sidecars): _*)
+            .filter(col("file").isInCollection(namedLive))
+            .distinct()
+            .coalesce(parts), commitDir)
+          counts = spark.read
+            .parquet(files.map(f => dir.resolve(f).toString): _*)
+            .groupBy("file").count().collect()
+            .map(r => (SnapshotLog.PosCountPrefix + r.getString(0)) ->
+              r.getLong(1).toString).toMap
+        }
+        // all-dangling ⇒ a pure CLEAR: PosRewriteKey alone supersedes
+        // the vacuous tombstones, no sidecar at all
+        val props = Map(SnapshotLog.PosRewriteKey -> "1") ++
+          (if (files.nonEmpty)
+            counts + (SnapshotLog.PosDeleteKey -> "1") +
+              (SnapshotLog.PosFilesKey -> namedLive.toSeq.sorted.mkString("\n"))
+          else Map.empty[String, String])
+        Some(Staged("posrewrite", Seq.empty, head.schemaJson,
+          deleteFiles = files, properties = props,
+          commitDir = Some(commitDir)))
       }
-      // all-dangling ⇒ a pure CLEAR: PosRewriteKey alone supersedes
-      // the vacuous tombstones, no sidecar at all
-      val props = Map(SnapshotLog.PosRewriteKey -> "1") ++
-        (if (files.nonEmpty)
-          counts + (SnapshotLog.PosDeleteKey -> "1") +
-            (SnapshotLog.PosFilesKey -> namedLive.toSeq.sorted.mkString("\n"))
-        else Map.empty[String, String])
-      try {
-        return Some(log.commit("posrewrite", Seq.empty, head.schemaJson,
-          deleteFiles = files, expectedHead = Some(head.snapshotId),
-          properties = props))
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (Files.isDirectory(commitDir)) {
-            discardStaged(commitDir)
-          }
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"delete compaction of $name lost $attempt head races; giving up", e)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    }.toOption
   }
 
   /** Expire history: delete manifests with id < `keepFromId` and any
@@ -3220,8 +2974,7 @@ final class GraftTable private (
       s"rollback of $name across a merge-on-read delete boundary " +
         "unsupported (tombstone visibility differs between the cuts) " +
         "— compact() to materialize first")
-    val head = snaps.lastOption.map(_.snapshotId).getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = snaps.lastOption.map(_.snapshotId).getOrElse(throw noSnapshots)
     require(snaps.exists(_.snapshotId == snapshotId),
       s"snapshot $snapshotId of $name does not exist (expired or never committed)")
     require(snapshotId < head,
@@ -3337,8 +3090,7 @@ final class GraftTable private (
     * snapshot id the branch's reads and its publish CAS are pinned to. */
   def createBranch(b: String): Long = {
     requireBranchName(b)
-    val parent = currentSnapshotId.getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val parent = currentSnapshotId.getOrElse(throw noSnapshots)
     val bd = branchDir(b)
     try Files.createDirectories(bd.getParent)
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
@@ -3365,19 +3117,11 @@ final class GraftTable private (
     require(compatible(expected, df.schema),
       s"branch append schema mismatch for $name@$b:\n" +
         s" expected $expected\n got ${df.schema}")
-    val commitDir = dir.resolve("data").resolve(s"b${UUID.randomUUID().toString.take(12)}")
-    val out = if (clusterBy.isEmpty) df
-      else df.repartitionByRange(clusterBy.map(org.apache.spark.sql.functions.col): _*)
-    out.write.parquet(commitDir.toString)
-    val listing = Files.list(commitDir) // close: fd leak otherwise
-    val files =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => dir.relativize(p).toString)
-        .toSeq.sorted
-      finally listing.close()
-    val wanted = (clusterBy ++ statsCols).distinct
-    val stats = collectStats(commitDir, wanted)
+    val commitDir = newCommitDir('b')
+    val files = writeStaged(if (clusterBy.isEmpty) df
+      else df.repartitionByRange(clusterBy.map(org.apache.spark.sql.functions.col): _*),
+      commitDir)
+    val stats = stageStats(commitDir, (clusterBy ++ statsCols).distinct)
     new SnapshotLog(dir, Some(b)).commit("append", files, expected.json, stats,
       properties = properties)
   }
@@ -3469,8 +3213,7 @@ final class GraftTable private (
     require(name.matches("[A-Za-z0-9_.-]+"), s"invalid tag name: '$name'")
     val snaps = log.snapshots
     val id = if (snapshotId < 0)
-      snaps.lastOption.map(_.snapshotId).getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
+      snaps.lastOption.map(_.snapshotId).getOrElse(throw noSnapshots)
     else snapshotId
     require(snaps.exists(_.snapshotId == id),
       s"snapshot $id of ${this.name} does not exist (expired or never committed)")
@@ -3521,8 +3264,7 @@ final class GraftTable private (
     require(props.nonEmpty, s"setProperties on $name: empty property map")
     props.keys.foreach(k => require(k.nonEmpty,
       s"setProperties on $name: empty property key"))
-    val head = log.head.getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = headOrThrow
     log.commit("properties", Nil, head.schemaJson,
       properties = props.map { case (k, v) =>
         (GraftTable.UserPropSetPrefix + k) -> v })
@@ -3533,8 +3275,7 @@ final class GraftTable private (
     * accepting a typo'd UNSET would leave the real key set forever. */
   def unsetProperties(keys: Seq[String], ifExists: Boolean = false): Snapshot = {
     require(keys.nonEmpty, s"unsetProperties on $name: no keys")
-    val head = log.head.getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = headOrThrow
     val current = userProperties()
     val missing = keys.filterNot(current.contains)
     require(ifExists || missing.isEmpty,
@@ -3627,8 +3368,7 @@ final class GraftTable private (
     // no torn read under a concurrent commit, no repeated manifest
     // listing/parsing per derived value.
     val snaps = log.snapshots
-    val head = snaps.lastOption.map(_.snapshotId).getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = snaps.lastOption.map(_.snapshotId).getOrElse(throw noSnapshots)
     val to = if (toId == Long.MaxValue) head else toId
     require(to >= fromId, s"diff range reversed: ($fromId, $to]")
     require(to <= head, s"snapshot $to of $name does not exist (head is $head)")
@@ -3747,8 +3487,7 @@ final class GraftTable private (
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit,
       max => fmax, min => fmin, sum => fsum, when => fwhen}
     val snaps = log.snapshots
-    val head = snaps.lastOption.map(_.snapshotId).getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = snaps.lastOption.map(_.snapshotId).getOrElse(throw noSnapshots)
     val to = if (toId == Long.MaxValue) head else toId
     require(to >= fromId, s"changeFeed range reversed: ($fromId, $to]")
     require(to <= head, s"snapshot $to of $name does not exist (head is $head)")
@@ -4095,11 +3834,8 @@ final class GraftTable private (
     // the enablement would otherwise land a visible file the retro-
     // assignment never saw (it can't auto-assign — the counter isn't
     // committed yet), permanently holing every future lineage read
-    var attempt = 0
-    while (true) {
+    publish(s"enableRowLineage on $name") { head =>
       val snaps = log.snapshots
-      val head = snaps.lastOption.getOrElse(
-        throw new IllegalStateException(s"table $name has no snapshots"))
       require(SnapshotLog.rowIdNextOf(snaps).isEmpty,
         s"row lineage already enabled on $name")
       require(!schema.fieldNames.contains(GraftTable.RowIdCol),
@@ -4116,19 +3852,9 @@ final class GraftTable private (
         n += rows
         e
       }
-      try {
-        return log.commit("evolve", Seq.empty, head.schemaJson,
-          expectedHead = Some(head.snapshotId),
-          properties = entries.toMap +
-            (SnapshotLog.RowIdNextKey -> n.toString))
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= 20) throw new IllegalStateException(
-            s"enableRowLineage on $name lost $attempt head races; giving up", e)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      Some(Staged("evolve", Seq.empty, head.schemaJson,
+        properties = entries.toMap + (SnapshotLog.RowIdNextKey -> n.toString)))
+    }.merge
   }
 
   /** Is row lineage on (at the cut)? */
@@ -4561,16 +4287,14 @@ final class GraftTable private (
     * as they would have on the source. */
   def cloneTo(dstDir: Path, newName: String): GraftTable = {
     val snaps = log.snapshots
-    val head = snaps.lastOption.getOrElse(
-      throw new IllegalStateException(s"table $name has no snapshots"))
+    val head = snaps.lastOption.getOrElse(throw noSnapshots)
     val statsByFile = snaps.flatMap(_.stats).toMap
     val dst = new GraftTable(newName, dstDir.toAbsolutePath.normalize(), spark)
     require(!(dst.log.exists && dst.log.head.nonEmpty),
       s"clone target $newName already exists")
     Files.createDirectories(dstDir)
     dst.log.init()
-    val commitDir = dst.dir.resolve("data")
-      .resolve(s"k${UUID.randomUUID().toString.take(12)}")
+    val commitDir = dst.newCommitDir('k')
     Files.createDirectories(commitDir)
     val mapped = log.dataFiles(None).zipWithIndex.map { case (abs, i) =>
       val src = Paths.get(abs)
@@ -4616,17 +4340,12 @@ final class GraftTable private (
                 org.apache.spark.sql.types.StringType),
               org.apache.spark.sql.types.StructField("__new",
                 org.apache.spark.sql.types.StringType))))
-          val outDir = commitDir.resolve(f"clone-pd-$cn%05d")
-          spark.read.parquet(sidecars: _*)
+          dst.writeStaged(spark.read.parquet(sidecars: _*)
             .join(org.apache.spark.sql.functions.broadcast(mapDf), "file")
             .select(org.apache.spark.sql.functions.col("__new").as("file"),
               org.apache.spark.sql.functions.col("pos"))
-            .coalesce(1)
-            .write.parquet(outDir.toString)
-          parquetFilesIn(outDir).foreach { p =>
-            val rel = dst.dir.relativize(p).toString
-            addCarry(s"$sid:O:$rel"); cloneSidecars += rel
-          }
+            .coalesce(1), commitDir.resolve(f"clone-pd-$cn%05d"))
+            .foreach { rel => addCarry(s"$sid:O:$rel"); cloneSidecars += rel }
           remap.foreach { case (of, nf) =>
             addCarry(s"$sid:F:$nf")
             // counts re-keyed to the CLONE's file names so the clone's
@@ -4653,14 +4372,7 @@ final class GraftTable private (
     // partition spec and the default sort order
     if (Files.exists(specsPath))
       Files.copy(specsPath, dst.dir.resolve("partition_specs.txt"))
-    if (Files.isDirectory(specsDir)) {
-      Files.createDirectories(dst.dir.resolve("partition_specs"))
-      specVersions.foreach { v =>
-        val fn = f"s$v%016d.txt"
-        Files.copy(specsDir.resolve(fn),
-          dst.dir.resolve("partition_specs").resolve(fn))
-      }
-    }
+    specLog.copyInto(dst.dir.resolve("partition_specs"))
     if (Files.exists(sortOrderPath))
       Files.copy(sortOrderPath, dst.dir.resolve("sort_order.txt"))
     // row lineage travels: each cloned file keeps its identity
@@ -5044,6 +4756,15 @@ final class GraftTable private (
 }
 
 object GraftTable {
+  /** What one [[GraftTable.publish]] attempt commits, staged against the head the
+    * attempt read. `commitDir` is where its files were staged, if it
+    * staged any. */
+  private final case class Staged(operation: String, files: Seq[String],
+      schemaJson: String, stats: Map[String, FileStat] = Map.empty,
+      removed: Seq[String] = Nil, deleteFiles: Seq[String] = Nil,
+      properties: Map[String, String] = Map.empty,
+      commitDir: Option[Path] = None)
+
   /** Create a new table from initial data. Idempotency matches the
     * reference's create_table (`icerunner.py:133-161`): returns None if
     * the table already exists. */

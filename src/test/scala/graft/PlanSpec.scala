@@ -176,22 +176,25 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** `count()` once it stops moving: job events reach the status store
+    * and listeners asynchronously, so a straggling event from earlier
+    * work could otherwise shift a before/after reading. */
+  private def settled(count: () => Int): Int = {
+    var prev = -1
+    var cur = count()
+    var spins = 0
+    while (cur != prev && spins < 40) { // bounded: ~10s, then fail loudly below
+      prev = cur; Thread.sleep(250)
+      cur = count()
+      spins += 1
+    }
+    assert(spins < 40, "job-event stream never settled; cannot audit eager jobs")
+    cur
+  }
+
   test("q53 tf-idf builds without running any eager job (corpus count is in-plan)") {
     val tracker = spark.sparkContext.statusTracker
-    // wait until the async job-event stream is quiescent, so a straggling
-    // event from earlier work can't shift the before/after counts
-    def settledJobCount(): Int = {
-      var prev = -1
-      var cur = tracker.getJobIdsForGroup(null).length
-      var spins = 0
-      while (cur != prev && spins < 40) { // bounded: ~10s, then fail loudly below
-        prev = cur; Thread.sleep(250)
-        cur = tracker.getJobIdsForGroup(null).length
-        spins += 1
-      }
-      assert(spins < 40, "job-event stream never settled; cannot audit eager jobs")
-      cur
-    }
+    def settledJobCount(): Int = settled(() => tracker.getJobIdsForGroup(null).length)
     T.documents(spark, sf).schema // parquet schema inference job, not q53's
     val before = settledJobCount()
     val df = SparkEntry.queries("q53_tfidf")(spark, sf)
@@ -206,18 +209,7 @@ class PlanSpec extends AnyFunSuite {
   test("exactCosinePairs sizing probes run once per corpus plan (cached)") {
     import graft.operators.Similarity
     val tracker = spark.sparkContext.statusTracker
-    def settledJobCount(): Int = {
-      var prev = -1
-      var cur = tracker.getJobIdsForGroup(null).length
-      var spins = 0
-      while (cur != prev && spins < 40) {
-        prev = cur; Thread.sleep(250)
-        cur = tracker.getJobIdsForGroup(null).length
-        spins += 1
-      }
-      assert(spins < 40, "job-event stream never settled; cannot audit eager jobs")
-      cur
-    }
+    def settledJobCount(): Int = settled(() => tracker.getJobIdsForGroup(null).length)
     val emb = T.embeddings(spark, sf)
     // first build may run the two bounded probe jobs (dims + capped count)
     Similarity.exactCosinePairs(emb, "vec_id", "embedding", 0.8)
@@ -230,6 +222,61 @@ class PlanSpec extends AnyFunSuite {
     val after = settledJobCount()
     assert(after === before,
       s"re-probing a cached corpus ran ${after - before} jobs")
+  }
+
+  test("commit primitives stay within their Spark job budgets") {
+    import java.nio.file.Files
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.streaming.GraftTableSink
+    import graft.warehouse.GraftTable
+    val s = spark
+    import s.implicits._
+    // Spark jobs per call on these inputs, as measured when the budgets
+    // were introduced. A budget may only ever tighten.
+    val budgets = Map("append" -> 1, "upsert" -> 9, "deleteWhere" -> 3,
+      "deletePosMor" -> 8, "compact" -> 2, "replace" -> 1, "sinkBatch" -> 2)
+    val sc = spark.sparkContext
+    val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the job group is a thread-local property that every job run from
+    // this thread (or on its behalf) carries, so other work is not counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, s"v$i")).toDF("id", "v")
+    def table(): GraftTable = GraftTable.create(spark,
+      Files.createTempDirectory("graft-budget-"), "t", rows(0L, 200L)).get
+    def jobsOf(f: => Any): Int = {
+      val before = settled(() => jobs.get)
+      f
+      settled(() => jobs.get) - before
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "commit job budgets")
+    val measured = try {
+      val Seq(appended, upserted, deleted, posDeleted, compacted, replaced,
+        sunk) = Seq.fill(7)(table())
+      compacted.append(rows(200L, 300L))
+      val sink = new GraftTableSink(sunk.dir, "budget-app", complete = false)
+      Map(
+        "append" -> jobsOf(appended.append(rows(200L, 300L))),
+        "upsert" -> jobsOf(upserted.upsert(rows(190L, 210L), Seq("id"))),
+        "deleteWhere" -> jobsOf(deleted.deleteWhere(col("id") < 20L)),
+        "deletePosMor" -> jobsOf(posDeleted.deletePosMor(col("id") === 5L)),
+        "compact" -> jobsOf(compacted.compact(targetFiles = 1)),
+        "replace" -> jobsOf(replaced.replace(rows(0L, 50L))),
+        "sinkBatch" -> jobsOf(sink.addBatch(1L, rows(200L, 250L))))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    info(s"jobs per call: ${measured.toSeq.sortBy(_._1).mkString(", ")}")
+    budgets.foreach { case (op, budget) =>
+      assert(measured(op) <= budget, s"$op ran ${measured(op)} jobs, budget $budget")
+    }
   }
 
   test("funnel is a single aggregation shuffle (+ presentation sort)") {

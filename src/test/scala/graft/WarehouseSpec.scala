@@ -863,6 +863,49 @@ class WarehouseSpec extends AnyFunSuite {
     (1 to 5).foreach(k => assert(rows(1000L * k + 7) === s"x${k}7"))
   }
 
+  test("each CAS-committing write survives exactly one lost head race") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.warehouse.Snapshot
+    val race = LostRaceHook.passLong
+    val base = (1L to 6L).map(i => (i, s"v$i"))
+    def raced(df: org.apache.spark.sql.DataFrame) =
+      df.select(race(col("id")).as("id"), col("v"))
+    // (operation, committed operation name, the call, rows afterwards);
+    // `race` sits in the operation's own input, so its first evaluation
+    // lands inside the first attempt, after the head was read
+    val cases: Seq[(String, String, GraftTable => Snapshot, Seq[(Long, String)])] = Seq(
+      ("deleteWhere", "delete", _.deleteWhere(race(col("id")) <= 2L),
+        base.drop(2)),
+      ("updateWhere", "update",
+        _.updateWhere(race(col("id")) === 3L, Map("v" -> lit("U"))),
+        base.map { case (i, v) => (i, if (i == 3L) "U" else v) }),
+      ("upsert", "merge",
+        _.upsert(raced(Seq((2L, "U"), (9L, "I")).toDF("id", "v")), Seq("id")),
+        base.map { case (i, v) => (i, if (i == 2L) "U" else v) } :+ ((9L, "I"))),
+      ("replace", "replace", _.replace(raced(Seq((7L, "R")).toDF("id", "v"))),
+        Seq((7L, "R"))),
+      ("deletePosMor", "posdelete", _.deletePosMor(race(col("id")) === 4L),
+        base.filterNot(_._1 == 4L)))
+    cases.foreach { case (op, opName, run, want) =>
+      val dir = Files.createTempDirectory("graft-race-")
+      val t = GraftTable.create(spark, dir, "t", base.toDF("id", "v")).get
+      // the rival commits through its own handle on the same table
+      val rival = GraftTable.load(spark, dir, "t").get
+      val raceId = new java.util.concurrent.atomic.AtomicLong(-1L)
+      LostRaceHook.arm(() =>
+        raceId.set(rival.setProperties(Map("race" -> op)).snapshotId))
+      val snap = run(t)
+      assert(raceId.get > 0L, s"$op: the rival commit never ran")
+      assert(snap.snapshotId == raceId.get + 1, s"$op committed at ${snap.snapshotId}")
+      assert(snap.operation == opName, op)
+      assert(t.read().as[(Long, String)].collect().sorted.toSeq == want, op)
+      assert(t.userProperties().get("race").contains(op),
+        s"$op: the winner's commit must stay visible")
+      // the lost attempt's staged files were discarded, not orphaned
+      assert(t.removeOrphans(graceMs = 0L).isEmpty, op)
+    }
+  }
+
   test("connector upsert/delete re-reflect views so sql() sees the change") {
     val c = new Connector(spark, freshWarehouse())
     c.createTable("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
@@ -2045,9 +2088,13 @@ class WarehouseSpec extends AnyFunSuite {
     // one external file of 2-row row groups (the block-size check runs
     // every 2 records and any buffered row group exceeds a 1-byte
     // block); the middle group holds [500.0, NaN], for which parquet
-    // records no min/max although the group is not all-null
+    // records no min/max although the group is not all-null. Its string
+    // chunk holds a 5,000-character value: parquet drops min/max for a
+    // binary chunk whose bounds exceed 4 KB, so "m" — outside every
+    // other group's [a, d] — must not be pruned either
     val ext = Files.createTempDirectory("graft-nan-")
-    Seq(1.0, 2.0, 500.0, Double.NaN, 3.0, 4.0).toDF("x")
+    Seq(1.0 -> "a", 2.0 -> "b", 500.0 -> "m", Double.NaN -> "z" * 5000,
+      3.0 -> "c", 4.0 -> "d").toDF("x", "s")
       .coalesce(1).write
       .option("parquet.block.size", "1")
       .option("parquet.page.size.row.check.min", "2")
@@ -2068,11 +2115,14 @@ class WarehouseSpec extends AnyFunSuite {
       "the fixture needs several row groups")
     finally reader.close()
     val t = GraftTable.create(spark, Files.createTempDirectory("graft-nan-t-"),
-      "t", Seq.empty[Double].toDF("x")).get
-    t.addFiles(Seq(src), statsCols = Seq("x"))
+      "t", Seq.empty[(Double, String)].toDF("x", "s")).get
+    t.addFiles(Seq(src), statsCols = Seq("x", "s"))
     assert(t.readWhere("x", Some(500.0), Some(500.0))
       .filter(col("x") === 500.0).count() == 1L,
       "the file holding 500.0 was pruned by footer bounds")
+    assert(t.readWhere("s", Some("m"), Some("m"))
+      .filter(col("s") === "m").count() == 1L,
+      "the file holding \"m\" was pruned by footer bounds")
   }
 
   test("shallow clone shares bytes, evolves independently, and prunes via carried stats") {
@@ -3575,4 +3625,22 @@ class WarehouseSpec extends AnyFunSuite {
     assert(m.forall(_.getLong(1) > 0), "manifest files must exist on disk")
     assert(m.map(r => r.getInt(3)).toSeq == Seq(1, 1))
   }
+}
+
+/** Forces one lost head race from inside an operation's own input:
+  * `passLong` is an identity UDF (deterministic, as declared) whose
+  * first call runs the armed callback — a rival commit — while the
+  * operation is between reading the head and committing. It lives in
+  * an object so the UDF closure serialises without the suite. */
+object LostRaceHook {
+  @volatile private var onFirstCall: () => Unit = () => ()
+  private val fired = new java.util.concurrent.atomic.AtomicBoolean(true)
+
+  def arm(f: () => Unit): Unit = { onFirstCall = f; fired.set(false) }
+
+  val passLong: org.apache.spark.sql.expressions.UserDefinedFunction =
+    org.apache.spark.sql.functions.udf { (x: Long) =>
+      if (fired.compareAndSet(false, true)) onFirstCall()
+      x
+    }
 }
