@@ -263,10 +263,11 @@ final class FlightService(connector: Connector, port: Int = 0,
         try {
           // Keyed on createTable's return value, not a check-then-act
           // tableExists probe: when it reports the table already existed
-          // the body is appended instead of silently dropped. Row safety
-          // under a true create RACE comes from the snapshot log's
-          // link(2) commit protocol (both racers' appends land; the
-          // `created` flag is then best-effort, not a race verdict).
+          // the body is appended instead of silently dropped. Under a
+          // true create RACE the snapshot log's commit loop keeps every
+          // racer's rows and derives each commit's operation from the
+          // head it lands on, so exactly one snapshot is the `create`;
+          // the `created` flag is best-effort, not a race verdict.
           val created = connector.createTable(req.table, body.df)
           if (!created) connector.insert(req.table, body.df)
           Wire.writeLine(out, Wire.obj(

@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * create/append, full scan, count, raw SQL, snapshot ids, changes-since.
   *
   * Differences by design (SURVEY.md §4):
-  *  - views are registered lazily and refreshed only on commit, not
-  *    re-reflected before every query (`icerunner.py:82-103` does
-  *    O(#tables) DDL per query);
+  *  - views are registered lazily, re-reflected only when a statement
+  *    names a table whose head moved, not before every query
+  *    (`icerunner.py:82-103` does O(#tables) DDL per query);
   *  - `sql()` goes through Catalyst, which supplies the whole §2B
   *    relational surface;
   *  - changes-since reads only the files committed after the snapshot
@@ -96,18 +96,14 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     require(!name.startsWith("_"),
       s"create table $name: leading-underscore table names are " +
         "reserved for warehouse metadata stores")
-    val created =
-      GraftTable.create(spark, tableDir(name), name, data, properties, spec)
-    created.foreach(_ => reflectView(name))
-    created.isDefined
+    GraftTable.create(spark, tableDir(name), name, data, properties, spec)
+      .isDefined
   }
 
   /** Transactional append (reference: `insert`, `icerunner.py:163-178`). */
   def insert(name: String, data: DataFrame,
       properties: Map[String, String] = Map.empty): Boolean = {
-    val t = loadTable(name)
-    t.append(data, properties = properties)
-    reflectView(name)
+    loadTable(name).append(data, properties = properties)
     true
   }
 
@@ -116,12 +112,11 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     * [[GraftTable.upsert]] for the file-targeted rewrite contract. */
   def upsert(name: String, data: DataFrame, keyCols: Seq[String],
       statsCols: Seq[String] = Nil): Boolean = {
-    val t = loadTable(name)
     // default the rewrite's stats to the key columns: a rewritten file
     // with no stats would be unprunable for every future readWhere —
     // the silent regression the compact path also guards against
-    t.upsert(data, keyCols, if (statsCols.nonEmpty) statsCols else keyCols)
-    reflectView(name)
+    loadTable(name).upsert(data, keyCols,
+      if (statsCols.nonEmpty) statsCols else keyCols)
     true
   }
 
@@ -134,19 +129,15 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       properties: Map[String, String] = Map.empty,
       whenNotMatchedBySourceDelete: Option[org.apache.spark.sql.Column] = None)
       : Boolean = {
-    val t = loadTable(name)
-    t.merge(data, keyCols, whenMatchedDelete,
+    loadTable(name).merge(data, keyCols, whenMatchedDelete,
       if (statsCols.nonEmpty) statsCols else keyCols, properties,
       whenNotMatchedBySourceDelete)
-    reflectView(name)
     true
   }
 
   /** Copy-on-write DELETE of rows matching `cond` (parity-plus). */
   def delete(name: String, cond: org.apache.spark.sql.Column): Boolean = {
-    val t = loadTable(name)
-    t.deleteWhere(cond)
-    reflectView(name)
+    loadTable(name).deleteWhere(cond)
     true
   }
 
@@ -155,9 +146,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     * rebuilt in place (mirror changelog apply): one CAS commit swaps
     * the visible set, readers never observe a missing table. */
   def replaceTable(name: String, data: DataFrame): Boolean = {
-    val t = loadTable(name)
-    t.replace(data)
-    reflectView(name)
+    loadTable(name).replace(data)
     true
   }
 
@@ -194,47 +183,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     t.metaCount().getOrElse(t.read().count())
   }
 
-  /** Raw SQL over all warehouse tables (reference: `sql`,
-    * `icerunner.py:200-207`) — the full relational surface via Catalyst.
-    *
-    * Views are refreshed on commit; here only tables whose snapshot head
-    * moved since their last reflection (e.g. an EXTERNAL committer on the
-    * shared warehouse) are re-registered, detected from manifest
-    * filenames alone — one directory listing per table, no manifest
-    * reads, no plan rebuilds for unchanged tables. The reference instead
-    * re-reflects every table with DDL before every query
-    * (`icerunner.py:82-103`). */
-  /** DML and DDL verbs are SQL-addressable too: `CREATE [OR REPLACE]
-    * TABLE t AS SELECT …`, plain column-list `CREATE TABLE t (col
-    * type [DEFAULT k], …)` (r16 — an EMPTY warehouse table; defaults
-    * land as the same v3 initial/write-default metadata ALTER…ADD
-    * COLUMN writes), `PARTITIONED BY (years/months/days/hours(c),
-    * bucket(n, c), truncate(w, c), c)` on any create form (r16 —
-    * routes to hidden partitioning, declared before the payload lands
-    * so a partitioned CTAS clusters its create commit),
-    * `DROP TABLE [IF EXISTS] t`, `INSERT INTO t [cols] VALUES
-    * …/SELECT …` (OVERWRITE ⇒ [[GraftTable.replace]]),
-    * `UPDATE t SET … [WHERE …]`,
-    * `DELETE FROM t [WHERE …]` and `MERGE INTO t USING s ON … WHEN …`
-    * over a warehouse table route to the transactional
-    * [[GraftTable.updateWhere]]/[[GraftTable.deleteWhere]]/
-    * [[GraftTable.merge]] verbs — SQL text is the reference's ENTIRE
-    * user surface (`icerunner.py:200-207`), and `spark.sql` alone
-    * cannot run DML against a temp view. Statements are parsed by
-    * Spark's OWN parser (no hand-rolled SQL): the unresolved DML plan
-    * is pattern-matched and its expressions rebound as Columns. A DML
-    * statement naming a non-warehouse relation (and every non-DML
-    * statement) falls through to Catalyst untouched — executed from
-    * the SAME parse, never re-parsed. DML returns a one-row
-    * `[snapshot_id]` frame — the commit it produced. Maintenance verbs
-    * route as `CALL` procedures ([[routeCall]], r16). */
-  /** SQL TIME TRAVEL composes in any statement — including DML/DDL
-    * sub-queries and subquery expressions: `FROM t VERSION AS OF 5`
-    * (or `VERSION AS OF 'tag-or-branch'`, r16) / `FROM t TIMESTAMP AS
-    * OF <expr>` over a warehouse table resolves the parsed
-    * [[org.apache.spark.sql.catalyst.analysis.RelationTimeTravel]]
-    * node into the pinned [[GraftTable.read]] plan in
-    * [[resolveRelations]] — expired cuts refuse in [[travelCut]]. */
   // ------------------------------------------------------------------
   // MATERIALIZED VIEW statements (r19). Spark's grammar has no
   // MATERIALIZED VIEW verb (and neither does DuckDB's — this is
@@ -706,10 +654,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
 
   private def deleteDirTree(dir: Path): Unit =
     if (Files.isDirectory(dir)) {
-      val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-      finally walk.close()
+      SnapshotLog.deleteTree(dir)
       // a recreate at this path would otherwise serve stale cached
       // manifests — same reuse hazard as dropTable
       SnapshotLog.invalidateUnder(dir)
@@ -797,6 +742,51 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       name, df.queryExecution.analyzed)
   }
 
+  /** Raw SQL over all warehouse tables (reference: `sql`,
+    * `icerunner.py:200-207`) — the full relational surface via Catalyst.
+    *
+    * Reflection is lazy: commits register nothing, and each statement
+    * head-probes only the tables it names ([[probeTable]]),
+    * re-reflecting those whose snapshot head moved since their last
+    * reflection — by this connector's commits or an EXTERNAL
+    * committer's on the shared warehouse alike — detected from manifest
+    * filenames alone: one directory listing per named table, no
+    * manifest reads, no plan rebuilds for unchanged tables. The
+    * reference instead re-reflects every table with DDL before every
+    * query (`icerunner.py:82-103`).
+    *
+    * DML and DDL verbs are SQL-addressable too: `CREATE [OR REPLACE]
+    * TABLE t AS SELECT …`, plain column-list `CREATE TABLE t (col
+    * type [DEFAULT k], …)` (r16 — an EMPTY warehouse table; defaults
+    * land as the same v3 initial/write-default metadata ALTER…ADD
+    * COLUMN writes), `PARTITIONED BY (years/months/days/hours(c),
+    * bucket(n, c), truncate(w, c), c)` on any create form (r16 —
+    * routes to hidden partitioning, declared before the payload lands
+    * so a partitioned CTAS clusters its create commit),
+    * `DROP TABLE [IF EXISTS] t`, `INSERT INTO t [cols] VALUES
+    * …/SELECT …` (OVERWRITE ⇒ [[GraftTable.replace]]),
+    * `UPDATE t SET … [WHERE …]`,
+    * `DELETE FROM t [WHERE …]` and `MERGE INTO t USING s ON … WHEN …`
+    * over a warehouse table route to the transactional
+    * [[GraftTable.updateWhere]]/[[GraftTable.deleteWhere]]/
+    * [[GraftTable.merge]] verbs — SQL text is the reference's ENTIRE
+    * user surface (`icerunner.py:200-207`), and `spark.sql` alone
+    * cannot run DML against a temp view. Statements are parsed by
+    * Spark's OWN parser (no hand-rolled SQL): the unresolved DML plan
+    * is pattern-matched and its expressions rebound as Columns. A DML
+    * statement naming a non-warehouse relation (and every non-DML
+    * statement) falls through to Catalyst untouched — executed from
+    * the SAME parse, never re-parsed. DML returns a one-row
+    * `[snapshot_id]` frame — the commit it produced. Maintenance verbs
+    * route as `CALL` procedures ([[routeCall]], r16).
+    *
+    * SQL TIME TRAVEL composes in any statement — including DML/DDL
+    * sub-queries and subquery expressions: `FROM t VERSION AS OF 5`
+    * (or `VERSION AS OF 'tag-or-branch'`, r16) / `FROM t TIMESTAMP AS
+    * OF <expr>` over a warehouse table resolves the parsed
+    * [[org.apache.spark.sql.catalyst.analysis.RelationTimeTravel]]
+    * node into the pinned [[GraftTable.read]] plan in
+    * [[resolveRelations]] — expired cuts refuse in [[travelCut]]. */
   def sql(cmd: String): DataFrame = routeMatView(cmd).getOrElse {
     // ONE parse feeds every router AND the fallback (the primary user
     // surface pays one ANTLR pass per statement); a statement that
@@ -1332,8 +1322,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
         UnresolvedAttribute(Seq(a.nameParts.last))
     }
     def asCol(e: Expression): org.apache.spark.sql.Column = column(unqual(e))
-    def done(name: String, snap: Snapshot): DataFrame = {
-      reflectView(name)
+    def done(snap: Snapshot): DataFrame = {
       import spark.implicits._
       Seq(snap.snapshotId).toDF("snapshot_id")
     }
@@ -1425,7 +1414,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
             // RTAS leaves the spec unchanged (see GraftTable.replace)
             loadTable(name).replace(df, properties = tprops ++ clears,
               declareSpec = if (spec.nonEmpty) Some(spec) else None)
-            reflectView(name)
           } else {
             createTable(name, df, properties = tprops, spec = spec)
             checks.foreach { case (n, sql) =>
@@ -1464,7 +1452,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
               .map(k => (GraftTable.UserPropUnsetPrefix + k) -> "").toMap
             loadTable(name).replace(empty, properties = tprops ++ clears,
               declareSpec = if (spec.nonEmpty) Some(spec) else None)
-            reflectView(name)
           } else {
             require(rpt.orCreate,
               s"REPLACE TABLE $name: table not found " +
@@ -1608,7 +1595,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       // DROP VIEW: a persistent view's definition file dies (r18). On
       // a warehouse-TABLE name: refuse — falling through would drop
       // the reflected temp view while the table survives, and SQL on
-      // the table then fails until the next commit re-reflects it.
+      // the table then fails until its next commit re-reflects it.
       case dv: DropView =>
         val nm = identOf(dv.child).orElse(relNameOf(dv.child))
         nm.filter(viewExists).map { vname =>
@@ -1737,12 +1724,11 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       // log — see GraftTable.userProperties).
       case sp: SetTableProperties =>
         nameOf(sp.table).filter(tableExists).map { name =>
-          done(name, loadTable(name).setProperties(sp.properties))
+          done(loadTable(name).setProperties(sp.properties))
         }
       case up: UnsetTableProperties =>
         nameOf(up.table).filter(tableExists).map { name =>
-          done(name,
-            loadTable(name).unsetProperties(up.propertyKeys, up.ifExists))
+          done(loadTable(name).unsetProperties(up.propertyKeys, up.ifExists))
         }
       // SHOW TBLPROPERTIES t ['key']: read back the user properties
       // (Spark's own would refuse on the temp view).
@@ -1958,7 +1944,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
           val t = loadTable(name)
           // Spark's parser maps `IS NULL` to the empty string, so ""
           // (like null) clears the comment rather than storing ''
-          done(name, Option(cot.comment).filter(_.nonEmpty) match {
+          done(Option(cot.comment).filter(_.nonEmpty) match {
             case Some(text) => t.setProperties(Map("comment" -> text))
             case None => t.unsetProperties(Seq("comment"), ifExists = true)
           })
@@ -1982,7 +1968,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
               q.colName -> evalConst(dv.child, Some(q.dataType)))
             (f, d)
           }.unzip
-          done(name, t.addColumns(
+          done(t.addColumns(
             org.apache.spark.sql.types.StructType(fields),
             defaults.flatten.toMap))
         }
@@ -2032,7 +2018,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
             s"ALTER TABLE $name ALTER COLUMN: nothing to do — " +
               "only SET DEFAULT / DROP DEFAULT / TYPE <wider> are " +
               "supported")
-          done(name, actions.map {
+          done(actions.map {
             case Left((cn, dt)) => t.widenColumn(cn, dt)
             case Right((cn, v)) => t.setColumnDefault(cn, v)
           }.last)
@@ -2041,8 +2027,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
         nameOf(rc.table).filter(tableExists).map { name =>
           require(rc.column.name.length == 1,
             s"ALTER TABLE $name: nested column renames are not supported")
-          done(name,
-            loadTable(name).renameColumn(rc.column.name.head, rc.newName))
+          done(loadTable(name).renameColumn(rc.column.name.head, rc.newName))
         }
       case dc: DropColumns =>
         nameOf(dc.table).filter(tableExists).map { name =>
@@ -2054,7 +2039,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
             if (!dc.ifExists || t.schema.fieldNames.contains(f.name.head))
               last = Some(t.dropColumn(f.name.head))
           }
-          done(name, last.getOrElse(t.log.head.get))
+          done(last.getOrElse(t.log.head.get))
         }
       case i: InsertIntoStatement =>
         nameOf(i.table).filter(tableExists).map { name =>
@@ -2172,7 +2157,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
           val dynamicMode = spark.conf
             .getOption("spark.sql.sources.partitionOverwriteMode")
             .exists(_.equalsIgnoreCase("dynamic"))
-          done(name,
+          done(
             if (i.overwrite && staticPred.nonEmpty)
               t.overwriteWhere(staticPred.get, cast)
             else if (i.overwrite && dynamicMode &&
@@ -2204,18 +2189,18 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
             k -> asCol(a.value)
           }.toMap
           val cond = u.condition.map(asCol).getOrElse(lit(true))
-          done(name, loadTable(name).updateWhere(cond, set))
+          done(loadTable(name).updateWhere(cond, set))
         }
       case d: DeleteFromTable =>
         nameOf(d.table).filter(tableExists).map { name =>
           val cond = Option(d.condition).map(asCol).getOrElse(lit(true))
-          done(name, loadTable(name).deleteWhere(cond))
+          done(loadTable(name).deleteWhere(cond))
         }
       // TRUNCATE TABLE ≡ the unconditional transactional delete: one
       // CoW commit empties the visible set, history stays travelable
       case tr: TruncateTable =>
         nameOf(tr.table).filter(tableExists).map { name =>
-          done(name, loadTable(name).deleteWhere(lit(true)))
+          done(loadTable(name).deleteWhere(lit(true)))
         }
       // TRUNCATE TABLE … PARTITION (c = v, …): partition-scoped
       // truncate routes to the transactional CoW delete on the
@@ -2236,7 +2221,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
           }
           require(spec.nonEmpty,
             s"TRUNCATE TABLE $name PARTITION: empty partition spec")
-          done(name, t.deleteWhere(
+          done(t.deleteWhere(
             identityPartitionPredicate(t, spec,
               s"TRUNCATE TABLE $name PARTITION")))
         }
@@ -2317,7 +2302,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
             s"MERGE INTO $name: at most one NOT MATCHED BY SOURCE arm")
           val incoming = org.apache.spark.sql.GraftSqlBridge
             .ofRows(spark, m.sourceTable)
-          done(name, loadTable(name).merge(incoming, keys, matchedDelete,
+          done(loadTable(name).merge(incoming, keys, matchedDelete,
             whenNotMatchedBySourceDelete = bySource.headOption))
         }
       case _ => None
@@ -2602,7 +2587,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
             "CALL drop_branch: 'name' argument is required")).toString
           t.dropBranch(n); s"branch '$n' dropped"
       }
-      reflectView(tname)
       import spark.implicits._
       Seq((proc, tname, getCurrentSnapshotId(tname).getOrElse(0L), detail))
         .toDF("procedure", "table", "snapshot_id", "detail")
@@ -2621,16 +2605,12 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
   def compact(name: String, targetFiles: Int = 0,
       clusterBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Unit = {
     loadTable(name).compact(targetFiles, clusterBy, statsCols)
-    reflectView(name)
   }
 
   /** Partial binpack compaction (see [[GraftTable.compactSmall]]). */
   def compactSmall(name: String, smallBytes: Long,
-      targetBytes: Long = 128L << 20): Boolean = {
-    val r = loadTable(name).compactSmall(smallBytes, targetBytes)
-    r.foreach(_ => reflectView(name))
-    r.isDefined
-  }
+      targetBytes: Long = 128L << 20): Boolean =
+    loadTable(name).compactSmall(smallBytes, targetBytes).isDefined
 
   def expireSnapshots(name: String, keepFromId: Long): Unit =
     loadTable(name).expireSnapshots(keepFromId)
@@ -2645,10 +2625,7 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       // create-lineage identity, captured BEFORE the directory dies —
       // the artifact-cascade guard below compares against it
       val corpusUuid = GraftTable.load(spark, dir, name).map(_.tableUuid)
-      val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-      finally walk.close()
+      SnapshotLog.deleteTree(dir)
       // a recreate at this path restarts the manifest id sequence,
       // reusing v…1.json paths with new content — purge the per-JVM
       // manifest parse cache or reads would serve the dropped table
@@ -2751,19 +2728,22 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     * warehouse's table count. */
   private[graft] val probes = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Head-check one table and re-reflect its temp view if an EXTERNAL
-    * committer moved it (internal commits already reflect inline). A
-    * name that is not a warehouse table no-ops. */
+  /** Head-check one table and re-reflect its temp view if its head
+    * moved since the last reflection — the ONE freshness path: commits
+    * reflect nothing eagerly, so this connector's own commits and an
+    * external committer's are seen alike, on the next statement that
+    * names the table. A name that is not a warehouse table no-ops. */
   private def probeTable(name: String): Unit = {
     probes.incrementAndGet()
     val head = new SnapshotLog(tableDir(name)).headIdByName.getOrElse(0L)
     if (!reflectedAt.get(name).contains(head)) reflectView(name)
   }
 
-  /** Register/refresh one table's temp view (called on every commit).
-    * The head is captured FIRST and the view pinned to it — recording a
-    * head read after building the view would let an external commit land
-    * in between and be treated as already-reflected forever. */
+  /** Register/refresh one table's temp view ([[probeTable]]'s lazy
+    * re-reflection, and a rename's new name). The head is captured
+    * FIRST and the view pinned to it — recording a head read after
+    * building the view would let a commit land in between and be
+    * treated as already-reflected forever. */
   private def reflectView(name: String): Unit =
     GraftTable.load(spark, tableDir(name), name).foreach { t =>
       val head = t.currentSnapshotId.getOrElse(0L)
@@ -2771,7 +2751,4 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       reflectedAt(name) = head
       reflections.incrementAndGet()
     }
-
-  /** Register temp views for every table (cheap: builds lazy plans only). */
-  def reflectViews(): Unit = tables.foreach(reflectView)
 }

@@ -23,17 +23,16 @@ final class GraftTable private (
     val name: String,
     val dir: Path,
     private[warehouse] val spark: SparkSession) {
-  import GraftTable.Staged
 
   val log = new SnapshotLog(dir)
 
-  def schema: StructType =
-    DataType.fromJson(headOrThrow.schemaJson).asInstanceOf[StructType]
+  def schema: StructType = schemaOf(log.head.getOrElse(throw noSnapshots))
 
+  private def schemaOf(s: Snapshot): StructType =
+    DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
+
+  /** How every read or write of an empty log refuses. */
   private def noSnapshots = new IllegalStateException(s"table $name has no snapshots")
-
-  /** The current head; every write on an empty log refuses the same way. */
-  private def headOrThrow: Snapshot = log.head.getOrElse(throw noSnapshots)
 
   def currentSnapshotId: Option[Long] = log.currentSnapshotId
 
@@ -371,18 +370,20 @@ final class GraftTable private (
     * incremental across appends as long as the visible delete set is
     * unchanged between its cuts. */
   def deleteKeysMor(keys: DataFrame): Snapshot = {
-    val head = headOrThrow
     require(keys.schema.fields.nonEmpty, "delete needs at least one key column")
-    val sch = schema
-    keys.schema.fields.foreach { f =>
+    def requireKeysIn(sch: StructType): Unit = keys.schema.fields.foreach { f =>
       val m = sch.fields.find(_.name == f.name)
       require(m.exists(_.dataType == f.dataType),
         s"equality-delete column ${f.name}: ${f.dataType} absent or " +
           s"mistyped for table schema $sch")
     }
+    requireKeysIn(schema)
     val files = writeStaged(keys.distinct(), newCommitDir('e'))
-    log.commit("eqdelete", Seq.empty, head.schemaJson,
-      deleteFiles = files)
+    // the key columns must still bind at the head the delete lands on
+    relink(s"equality delete of $name") { head =>
+      requireKeysIn(schemaOf(head))
+      Staged("eqdelete", Seq.empty, head.schemaJson, deleteFiles = files)
+    }
   }
 
   /** PREDICATE merge-on-read delete: `DELETE WHERE` at O(1) write
@@ -401,27 +402,28 @@ final class GraftTable private (
     * columns (validated by resolving it against the current schema —
     * a stored predicate that failed to re-parse would silently
     * resurrect rows on read). */
-  def deleteWhereMor(cond: org.apache.spark.sql.Column): Snapshot = {
-    val head = headOrThrow
-    // resolve against the schema: unknown columns / unresolvable
-    // functions throw HERE, not at some later read; the stored SQL is
-    // rendered from the RESOLVED condition (the raw Column wrapper's
-    // node has no stable SQL form in Spark 4)
-    val analyzed = emptyDf(schema).filter(cond).queryExecution.analyzed
-    val filterCond = analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.getOrElse(throw new IllegalArgumentException(
-      s"predicate delete on $name: condition did not analyze to a filter"))
-    require(filterCond.deterministic,
-      s"predicate delete on $name requires a deterministic predicate")
-    val sql = filterCond.sql
-    // round-trip guard: the stored text must re-parse to the same
-    // semantic filter (expr() is how every future read applies it)
-    emptyDf(schema).filter(org.apache.spark.sql.functions.expr(sql))
-      .queryExecution.assertAnalyzed()
-    log.commit("eqdelete", Seq.empty, head.schemaJson,
-      properties = Map(SnapshotLog.PredDeleteKey -> sql))
-  }
+  def deleteWhereMor(cond: org.apache.spark.sql.Column): Snapshot =
+    relink(s"predicate delete of $name") { head =>
+      // resolve against the head's schema: unknown columns /
+      // unresolvable functions throw HERE, not at some later read; the
+      // stored SQL is rendered from the RESOLVED condition (the raw
+      // Column wrapper's node has no stable SQL form in Spark 4)
+      val sch = schemaOf(head)
+      val analyzed = emptyDf(sch).filter(cond).queryExecution.analyzed
+      val filterCond = analyzed.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.getOrElse(throw new IllegalArgumentException(
+        s"predicate delete on $name: condition did not analyze to a filter"))
+      require(filterCond.deterministic,
+        s"predicate delete on $name requires a deterministic predicate")
+      val sql = filterCond.sql
+      // round-trip guard: the stored text must re-parse to the same
+      // semantic filter (expr() is how every future read applies it)
+      emptyDf(sch).filter(org.apache.spark.sql.functions.expr(sql))
+        .queryExecution.assertAnalyzed()
+      Staged("eqdelete", Seq.empty, head.schemaJson,
+        properties = Map(SnapshotLog.PredDeleteKey -> sql))
+    }
 
   /** POSITION merge-on-read delete (the Iceberg v2 position-delete /
     * deletion-vector shape — what engines emit for MERGE-produced
@@ -467,15 +469,20 @@ final class GraftTable private (
       // pins the selection and saves the second full scan.
       matches.persist()
       try {
-        // distinct file uris: bounded by the AFFECTED file count — the
-        // same driver-side discipline as every DML probe. The uri → rel
-        // mapping happens here (driver, via the proven URI parse), so no
-        // row-side path decoding can ever mis-bind a position.
-        val uris = matches.select("__pd_f").distinct()
-          .collect().map(_.getString(0))
-        if (uris.isEmpty) None
+        // ONE collect yields the affected files and each one's position
+        // count (the counts keep the metadata-only COUNT exact under
+        // pure position tombstones, [[metaCount]]); a driver list
+        // bounded by the AFFECTED file count — the same discipline as
+        // every DML probe. The probe holds each (file, pos) once: the
+        // visible files are distinct, row_index is unique within a file
+        // and the tombstone anti-joins never duplicate a row. The uri →
+        // rel mapping happens here (driver, via the proven URI parse),
+        // so no row-side path decoding can ever mis-bind a position.
+        val perUri = matches.groupBy("__pd_f").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1))
+        if (perUri.isEmpty) None
         else {
-          val relByUri = uris.map(u => u -> relOfUri(u)).toMap
+          val relByUri = perUri.map { case (u, _) => u -> relOfUri(u) }.toMap
           val mapDf = spark.createDataFrame(
             spark.sparkContext.parallelize(relByUri.toSeq.map {
               case (u, r) => org.apache.spark.sql.Row(u, r) }, 1),
@@ -485,17 +492,13 @@ final class GraftTable private (
               org.apache.spark.sql.types.StructField("file",
                 org.apache.spark.sql.types.StringType))))
           val commitDir = newCommitDir('x')
+          // one sidecar file per commit: positions are two narrow
+          // columns, and every read of a named file opens each sidecar
           val files = writeStaged(matches.join(broadcast(mapDf), "__pd_f")
             .select(col("file"), col("__pd_pos").cast("long").as("pos"))
-            .distinct(), commitDir)
-          // per-file position counts: the metadata-only COUNT stays exact
-          // under pure position tombstones ([[metaCount]]). One bounded
-          // aggregation over the just-written sidecar.
-          val counts = spark.read
-            .parquet(files.map(f => dir.resolve(f).toString): _*)
-            .groupBy("file").count().collect()
-            .map(r => (SnapshotLog.PosCountPrefix + r.getString(0)) ->
-              r.getLong(1).toString).toMap
+            .coalesce(1), commitDir)
+          val counts = perUri.map { case (u, n) =>
+            (SnapshotLog.PosCountPrefix + relByUri(u)) -> n.toString }.toMap
           Some(Staged("posdelete", Seq.empty, head.schemaJson,
             deleteFiles = files, commitDir = Some(commitDir),
             properties = counts ++ Map(SnapshotLog.PosDeleteKey -> "1",
@@ -603,7 +606,7 @@ final class GraftTable private (
 
   private def specsPath: Path = dir.resolve("partition_specs.txt")
   private val specLog = new LineLog(dir.resolve("partition_specs"), 's',
-    ".spec-", "partition-spec")
+    "partition-spec")
 
   /** Declare the partition spec used by FUTURE [[append]]s (Iceberg
     * hidden partitioning: transforms over source columns, not stored
@@ -638,12 +641,11 @@ final class GraftTable private (
     specLog.publish(Partitioning.specLine(fields))
 
   /** A directory of versioned one-line files `<letter><16-digit
-    * version>.txt`, each published by `link(2)`: a racing publisher
-    * loses with EEXIST and retries under the next version, so
-    * concurrent declarations are never silently dropped. Partition
-    * specs and CHECK constraints are both kept this way. */
-  private final class LineLog(d: Path, letter: Char, tmpPrefix: String,
-      what: String) {
+    * version>.txt`, each published by `link(2)` ([[SnapshotLog.linkNew]]):
+    * a racing publisher loses with EEXIST and retries under the next
+    * version, so concurrent declarations are never silently dropped.
+    * Partition specs and CHECK constraints are both kept this way. */
+  private final class LineLog(d: Path, letter: Char, what: String) {
     private def fileOf(v: Long): Path = d.resolve(f"$letter$v%016d.txt")
 
     def versions: Seq[Long] =
@@ -671,23 +673,12 @@ final class GraftTable private (
 
     def publish(line: String): Unit = {
       Files.createDirectories(d)
-      var attempt = 0
-      while (attempt < 10000) {
-        val next = versions.lastOption.getOrElse(0L) + 1
-        val tmp = Files.createTempFile(d, tmpPrefix, ".tmp")
-        Files.writeString(tmp, line + "\n")
-        try {
-          Files.createLink(fileOf(next), tmp)
-          Files.deleteIfExists(tmp)
-          return
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            Files.deleteIfExists(tmp)
-            attempt += 1 // lost the race; re-probe versions and retry
-        }
-      }
-      throw new IllegalStateException(
-        s"$what contention: 10000 failed attempts")
+      // a lost race re-probes the versions and retries under the next
+      if (!Iterator.range(0, SnapshotLog.RelinkLimit).exists(_ =>
+          SnapshotLog.linkNew(fileOf(versions.lastOption.getOrElse(0L) + 1),
+            line + "\n")))
+        throw new IllegalStateException(
+          s"$what contention: ${SnapshotLog.RelinkLimit} failed attempts")
     }
   }
 
@@ -772,7 +763,7 @@ final class GraftTable private (
   // ---- CHECK constraints (Delta's ALTER TABLE ADD CONSTRAINT) -------
 
   private val constraintLog = new LineLog(dir.resolve("constraints"), 'c',
-    ".c-", "constraint")
+    "constraint")
 
   /** (name, status, referenced columns, sql) per declaration, in CAS
     * version order — the fold's last entry per name wins. */
@@ -857,11 +848,12 @@ final class GraftTable private (
     constraintLog.publish(s"$cname\tDROPPED\t\t")
   }
 
-  /** One aggregate pass over `df` counting violations of every active
-    * constraint at once; throws naming the violated ones. No-op (no
-    * scan at all) when the table has no constraints. */
-  private def enforceConstraints(df: DataFrame, op: String): Unit = {
-    val cs = checkConstraints.toSeq.sortBy(_._1)
+  /** One aggregate pass over `df` counting violations of every
+    * constraint in `active` at once; throws naming the violated ones.
+    * No-op (no scan at all) when there are none. */
+  private def enforceConstraints(df: DataFrame, op: String,
+      active: Map[String, String] = checkConstraints): Unit = {
+    val cs = active.toSeq.sortBy(_._1)
     if (cs.isEmpty) return
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not, sum, when}
     val aggs = cs.map { case (n, sql) =>
@@ -902,12 +894,9 @@ final class GraftTable private (
           org.apache.spark.sql.functions.col): _*)
       }
     }.getOrElse(df0)
-    existing.foreach { h =>
-      val expected = DataType.fromJson(h.schemaJson).asInstanceOf[StructType]
-      require(compatible(expected, df.schema),
-        s"append schema mismatch for $name:\n expected $expected\n got ${df.schema}")
-    }
-    enforceConstraints(df, "append")
+    existing.foreach(h => requireSchema("append", schemaOf(h), df.schema))
+    val enforced = checkConstraints
+    enforceConstraints(df, "append", enforced)
     healRenamedLayouts()
     val commitDir = newCommitDir('s')
     // an explicit clusterBy wins; otherwise the table's declared sort
@@ -937,12 +926,39 @@ final class GraftTable private (
           f.expr(df.schema(f.column).dataType)): _*)
       } else df
     val files = writeStaged(out, commitDir, pspec)
-    val schemaJson = existing.map(_.schemaJson).getOrElse(df.schema.json)
     val stats = stageStats(commitDir, (effCluster ++ statsCols).distinct,
       pspec, df.schema, bloomCols.filter(df.schema.fieldNames.contains))
-    log.commit(if (existing.isEmpty) "create" else "append", files,
-      schemaJson, stats, properties = properties)
+    landStaged("append", df.schema, files, stats, properties, Some(enforced))
   }
+
+  /** Commit files staged ONCE, before the loop, as the fresh head's
+    * `create` or `append` under its schema. Each attempt re-checks the
+    * staged shape `got`: columns the head gained since (a racing
+    * [[addColumns]]) read back as NULL or their initial default; any
+    * other difference refuses. A CHECK constraint declared after the
+    * write passed `enforced` is enforced on the staged rows. */
+  private def landStaged(op: String, got: StructType, files: Seq[String],
+      stats: Map[String, FileStat], properties: Map[String, String] = Map.empty,
+      enforced: Option[Map[String, String]] = None): Snapshot =
+    log.publish(s"$op to $name", SnapshotLog.RelinkLimit) { h =>
+      h.foreach { head =>
+        val sch = schemaOf(head)
+        require(compatible(StructType(sch.fields.filter(f =>
+            got.fieldNames.contains(f.name))), got),
+          s"$op schema mismatch for $name:\n expected $sch\n got $got")
+      }
+      enforced.foreach { done =>
+        val fresh = checkConstraints.filterNot { case (n, q) => done.get(n).contains(q) }
+        if (fresh.nonEmpty) enforceConstraints(spark.read.schema(got)
+          .parquet(files.map(f => dir.resolve(f).toString): _*), op, fresh)
+      }
+      Right(Staged(if (h.isEmpty) "create" else "append", files,
+        h.fold(got.json)(_.schemaJson), stats, properties = properties))
+    }.merge
+
+  private def requireSchema(op: String, expected: StructType, got: StructType): Unit =
+    require(compatible(expected, got),
+      s"$op schema mismatch for $name:\n expected $expected\n got $got")
 
   /** Per-file bloom sketches for `cols`, sized from the commit's own
     * row counts, merged into the stat map. One distributed aggregation
@@ -1019,12 +1035,11 @@ final class GraftTable private (
     require(paths.nonEmpty, "addFiles needs at least one file")
     paths.foreach(p => require(Files.isRegularFile(p), s"not a file: $p"))
     val existing = log.head
-    existing.foreach { h =>
-      val expected = DataType.fromJson(h.schemaJson).asInstanceOf[StructType]
-      val got = spark.read.parquet(paths.head.toString).schema
-      require(compatible(expected, got),
-        s"addFiles schema mismatch for $name:\n expected $expected\n got $got")
-    }
+    // a create takes Spark's schema over every file; an append checks
+    // the first file's footer (see scaladoc)
+    val got = spark.read.parquet((if (existing.isEmpty) paths else paths.take(1))
+      .map(_.toString): _*).schema
+    existing.foreach(h => requireSchema("addFiles", schemaOf(h), got))
     val commitDir = newCommitDir('i')
     Files.createDirectories(commitDir)
     val linked = paths.zipWithIndex.map { case (src, i) =>
@@ -1034,16 +1049,9 @@ final class GraftTable private (
       dst
     }
     val files = linked.map(p => dir.relativize(p).toString).sorted
-    val schemaJson = existing.map(_.schemaJson).getOrElse(
-      spark.read.parquet(paths.map(_.toString): _*).schema.json)
-    // check existing.isEmpty FIRST: on the table-creating commit
-    // `schema` has no snapshots to read and would throw before the
-    // short-circuit could apply
     val stats = stageStats(commitDir, statsCols.distinct,
-      bloomCols = bloomCols.filter(c => existing.isEmpty ||
-        schema.fieldNames.contains(c)))
-    log.commit(if (existing.isEmpty) "create" else "append", files,
-      schemaJson, stats)
+      bloomCols = bloomCols.filter(got.fieldNames.contains))
+    landStaged("addFiles", got, files, stats)
   }
 
   // ---- commit pipeline: stage → stats → publish ---------------------
@@ -1163,48 +1171,22 @@ final class GraftTable private (
     else readWithDeletes(fs, dels, sch, snaps)
   }
 
-  /** Delete a staged commit directory after a lost head race. */
-  private def discardStaged(commitDir: Path): Unit = {
-    val walk = Files.walk(commitDir)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-    finally walk.close()
-  }
-
-  /** Publish step: the one compare-and-swap retry loop. Each attempt
-    * re-reads the head and hands it to `attempt`, which stages a commit
-    * against it (or returns None: nothing to do at that head, which
-    * publish returns as `Left(head)`). The commit is conditional on
-    * that head; a concurrent commit landing in between makes it lose,
-    * its staged directory is discarded and the attempt re-runs over the
-    * new head — 20 lost races give up, naming `what`. */
-  private def publish(what: String)(attempt: Snapshot => Option[Staged])
-      : Either[Snapshot, Snapshot] = {
-    @annotation.tailrec def run(lost: Int): Either[Snapshot, Snapshot] = {
-      val head = headOrThrow
-      attempt(head) match {
-        case None => Left(head)
-        case Some(st) =>
-          val won =
-            try Some(log.commit(st.operation, st.files, st.schemaJson,
-              st.stats, expectedHead = Some(head.snapshotId),
-              removedFiles = st.removed, deleteFiles = st.deleteFiles,
-              properties = st.properties))
-            catch {
-              case e: java.util.ConcurrentModificationException =>
-                st.commitDir.filter(Files.isDirectory(_)).foreach(discardStaged)
-                if (lost + 1 >= 20) throw new IllegalStateException(
-                  s"$what lost ${lost + 1} head races; giving up", e)
-                None
-            }
-          won match {
-            case Some(s) => Right(s)
-            case None => run(lost + 1)
-          }
-      }
+  /** Publish step: [[SnapshotLog.publish]], the one commit loop, for a
+    * write on an existing table. Each attempt gets the fresh head and
+    * stages a commit against it, or returns None: nothing to do at that
+    * head, returned as `Left(head)`. The default `limit` is the one for
+    * attempts that redo their Spark work on every lost race. */
+  private def publish(what: String, limit: Int = SnapshotLog.RestageLimit)(
+      attempt: Snapshot => Option[Staged]): Either[Snapshot, Snapshot] =
+    log.publish(what, limit) { h =>
+      val head = h.getOrElse(throw noSnapshots)
+      attempt(head).toRight(head)
     }
-    run(0)
-  }
+
+  /** [[publish]] for a metadata commit that always lands: each lost
+    * race only re-derives it from the new head and re-links. */
+  private def relink(what: String)(attempt: Snapshot => Staged): Snapshot =
+    publish(what, SnapshotLog.RelinkLimit)(h => Some(attempt(h))).merge
 
   /** Copy-on-write UPSERT (MERGE INTO by key): rows of `incoming`
     * replace current rows with the same `keyCols` tuple; unmatched
@@ -1926,10 +1908,17 @@ final class GraftTable private (
                       st.genericGetMax.asInstanceOf[java.lang.Float].toDouble)
                   case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
                     // parquet may truncate long binary bounds, but only
-                    // outward — still a sound (wider) range
-                    mergeStr(
-                      new String(st.getMinBytes, java.nio.charset.StandardCharsets.UTF_8),
-                      new String(st.getMaxBytes, java.nio.charset.StandardCharsets.UTF_8))
+                    // outward — still a sound (wider) range. A bound
+                    // that is not valid UTF-8 decodes lossily (U+FFFD)
+                    // and may sort inside the real bytes: unbounded
+                    import java.nio.charset.StandardCharsets.UTF_8
+                    def utf8(b: Array[Byte]): Option[String] =
+                      Some(new String(b, UTF_8))
+                        .filter(t => java.util.Arrays.equals(t.getBytes(UTF_8), b))
+                    (utf8(st.getMinBytes), utf8(st.getMaxBytes)) match {
+                      case (Some(mn), Some(mx)) => mergeStr(mn, mx)
+                      case _ => unbounded = true
+                    }
                   case (BOOLEAN, _) =>
                     mergeStr(st.genericGetMin.toString, st.genericGetMax.toString)
                   case _ => return None // decimal/int96/unsigned/binary-raw
@@ -2105,33 +2094,39 @@ final class GraftTable private (
     * through by-name reads. Expire the old eras first. */
   def addColumns(newCols: StructType,
       defaults: Map[String, Any] = Map.empty): Snapshot = {
-    val current = schema
     require(newCols.fields.forall(_.nullable),
       s"new columns must be nullable: $newCols")
-    require(newCols.fields.forall(f => !current.fieldNames.contains(f.name)),
-      s"column already exists: ${newCols.fieldNames.mkString(",")}")
     defaults.keys.foreach(k => require(newCols.fieldNames.contains(k),
       s"default for '$k' names no added column"))
-    val snaps = log.snapshots
-    val idMode = current.fields.exists(f => GraftTable.fieldIdOf(f).nonEmpty)
-    val added0 =
-      if (!idMode) newCols.fields
-      else {
-        newCols.fieldNames.foreach(n => requireNameFresh(snaps, n, None))
-        var next = GraftTable.maxFieldId(snaps) + 1
-        newCols.fields.map { f =>
-          val tagged = GraftTable.withFieldId(f, next); next += 1; tagged
+    evolve(s"addColumns on $name") { current =>
+      require(newCols.fields.forall(f => !current.fieldNames.contains(f.name)),
+        s"column already exists: ${newCols.fieldNames.mkString(",")}")
+      val snaps = log.snapshots
+      val idMode = current.fields.exists(f => GraftTable.fieldIdOf(f).nonEmpty)
+      val added0 =
+        if (!idMode) newCols.fields
+        else {
+          newCols.fieldNames.foreach(n => requireNameFresh(snaps, n, None))
+          var next = GraftTable.maxFieldId(snaps) + 1
+          newCols.fields.map { f =>
+            val tagged = GraftTable.withFieldId(f, next); next += 1; tagged
+          }
+        }
+      val added = added0.map { f =>
+        defaults.get(f.name) match {
+          case None => f
+          case Some(v) => GraftTable.withDefaultMetadata(f, v)
         }
       }
-    val added = added0.map { f =>
-      defaults.get(f.name) match {
-        case None => f
-        case Some(v) => GraftTable.withDefaultMetadata(f, v)
-      }
+      StructType(current.fields ++ added)
     }
-    val evolved = StructType(current.fields ++ added)
-    log.commit("evolve", Seq.empty, evolved.json)
   }
+
+  /** One metadata-only `evolve` commit: `change` maps each attempt's
+    * fresh head schema to the evolved one, running its refusals against
+    * that head, so a racing evolution is built on, never reverted. */
+  private def evolve(what: String)(change: StructType => StructType): Snapshot =
+    relink(what)(head => Staged("evolve", Seq.empty, change(schemaOf(head)).json))
 
   /** Change (SET) or remove (DROP, `value = None`) a column's
     * WRITE-default — the MUTABLE half of the v3 pair: future writers
@@ -2140,30 +2135,29 @@ final class GraftTable private (
     * in files predating the column keep reading the value it was added
     * with. Metadata-only `evolve` commit, zero rewrite — same contract
     * as Iceberg's ALTER COLUMN … SET DEFAULT. */
-  def setColumnDefault(colName: String, value: Option[Any]): Snapshot = {
-    val current = schema
-    require(current.fieldNames.contains(colName),
-      s"no column '$colName' on $name")
-    val evolved = StructType(current.fields.map { f =>
-      if (f.name != colName) f
-      else value match {
-        case Some(v) =>
-          // render through the one shared discipline, then keep ONLY
-          // the write half — the exists half must not move
-          val rendered = GraftTable.withDefaultMetadata(
-            f.copy(metadata = org.apache.spark.sql.types.Metadata.empty), v)
-          f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putString(GraftTable.CurrentDefaultKey, rendered.metadata
-              .getString(GraftTable.CurrentDefaultKey)).build())
-        case None =>
-          f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .remove(GraftTable.CurrentDefaultKey).build())
-      }
-    })
-    log.commit("evolve", Seq.empty, evolved.json)
-  }
+  def setColumnDefault(colName: String, value: Option[Any]): Snapshot =
+    evolve(s"setColumnDefault on $name") { current =>
+      require(current.fieldNames.contains(colName),
+        s"no column '$colName' on $name")
+      StructType(current.fields.map { f =>
+        if (f.name != colName) f
+        else value match {
+          case Some(v) =>
+            // render through the one shared discipline, then keep ONLY
+            // the write half — the exists half must not move
+            val rendered = GraftTable.withDefaultMetadata(
+              f.copy(metadata = org.apache.spark.sql.types.Metadata.empty), v)
+            f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+              .withMetadata(f.metadata)
+              .putString(GraftTable.CurrentDefaultKey, rendered.metadata
+                .getString(GraftTable.CurrentDefaultKey)).build())
+          case None =>
+            f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+              .withMetadata(f.metadata)
+              .remove(GraftTable.CurrentDefaultKey).build())
+        }
+      })
+    }
 
   /** Does any RETAINED era know `name` under an id other than
     * `allowedId` (or with no id at all)? By-name projection of
@@ -2253,40 +2247,44 @@ final class GraftTable private (
   def renameColumn(oldName: String, newName: String): Snapshot = {
     requireEvolvable("renameColumn")
     requireColumnUnbound("rename", oldName)
-    val current = ensureFieldIds()
-    val snaps = log.snapshots
-    require(current.fieldNames.contains(oldName),
-      s"no column '$oldName' in $name")
-    require(!current.fieldNames.contains(newName),
-      s"column '$newName' already exists in $name")
-    require(oldName != newName, "rename to the same name")
-    constraintCols.find(_._2.contains(oldName)).foreach { case (cn, _) =>
-      throw new IllegalArgumentException(
-        s"column '$oldName' is referenced by CHECK constraint '$cn' of " +
-          s"$name — drop the constraint first (its stored SQL would " +
-          "silently stop resolving)")
+    val snap = evolveIds(s"renameColumn on $name") { current =>
+      require(current.fieldNames.contains(oldName),
+        s"no column '$oldName' in $name")
+      require(!current.fieldNames.contains(newName),
+        s"column '$newName' already exists in $name")
+      require(oldName != newName, "rename to the same name")
+      constraintCols.find(_._2.contains(oldName)).foreach { case (cn, _) =>
+        throw new IllegalArgumentException(
+          s"column '$oldName' is referenced by CHECK constraint '$cn' of " +
+            s"$name — drop the constraint first (its stored SQL would " +
+            "silently stop resolving)")
+      }
+      val myId = GraftTable.fieldIdOf(current(oldName))
+      requireNameFresh(log.snapshots, newName, myId)
+      StructType(current.fields.map(f =>
+        if (f.name == oldName) f.copy(name = newName) else f))
     }
-    val myId = GraftTable.fieldIdOf(current(oldName))
-    requireNameFresh(snaps, newName, myId)
-    val evolved = StructType(current.fields.map(f =>
-      if (f.name == oldName) f.copy(name = newName) else f))
-    val snap = log.commit("evolve", Seq.empty, evolved.json)
     renameInLayouts(oldName, newName)
     snap
   }
 
-  /** Upgrade the table to FIELD-ID mode if needed: ONE evolve commit
-    * whose schema carries ids with UNCHANGED names — the bridge record
-    * that lets id-less eras resolve by the name each id had at upgrade
-    * time ([[GraftTable.legacyNames]]). Returns the id-bearing head
-    * schema. */
-  private def ensureFieldIds(): StructType = {
-    val current = schema
-    if (current.fields.forall(f => GraftTable.fieldIdOf(f).nonEmpty)) current
-    else {
-      val up = GraftTable.withFieldIds(current)
-      log.commit("evolve", Seq.empty, up.json)
-      up
+  /** [[evolve]] on a FIELD-ID table, upgrading it first if needed: ONE
+    * evolve commit whose schema carries ids with UNCHANGED names — the
+    * bridge record that lets id-less eras resolve by the name each id
+    * had at upgrade time ([[GraftTable.legacyNames]]). An attempt whose
+    * head has no ids (a rollback reverted the upgrade meanwhile)
+    * refuses rather than evolve an id-less schema. */
+  private def evolveIds(what: String)(change: StructType => StructType): Snapshot = {
+    def idMode(sch: StructType) = sch.fields.forall(f => GraftTable.fieldIdOf(f).nonEmpty)
+    publish(s"field-id upgrade of $name", SnapshotLog.RelinkLimit) { head =>
+      val current = schemaOf(head)
+      if (idMode(current)) None
+      else Some(Staged("evolve", Seq.empty, GraftTable.withFieldIds(current).json))
+    }
+    evolve(what) { current =>
+      if (!idMode(current)) throw new java.util.ConcurrentModificationException(
+        s"$what: a concurrent commit reverted the table's field ids")
+      change(current)
     }
   }
 
@@ -2336,10 +2334,11 @@ final class GraftTable private (
   def widenColumn(colName: String,
       to: org.apache.spark.sql.types.DataType): Snapshot = {
     widenPreflight(colName, to)
-    val current = ensureFieldIds()
-    val evolved = StructType(current.fields.map(g =>
-      if (g.name == colName) g.copy(dataType = to) else g))
-    log.commit("evolve", Seq.empty, evolved.json)
+    evolveIds(s"widenColumn on $name") { current =>
+      widenPreflight(colName, to) // again, at the head this attempt lands on
+      StructType(current.fields.map(g =>
+        if (g.name == colName) g.copy(dataType = to) else g))
+    }
   }
 
   /** DROP a column — metadata-only: the field leaves the schema, reads
@@ -2352,21 +2351,21 @@ final class GraftTable private (
   def dropColumn(colName: String): Snapshot = {
     requireEvolvable("dropColumn")
     requireColumnUnbound("drop", colName)
-    val current = ensureFieldIds()
-    require(current.fieldNames.contains(colName),
-      s"no column '$colName' in $name")
-    require(current.fields.length > 1,
-      s"cannot drop the last column of $name")
-    require(!partitionSpec.exists(_.column == colName),
-      s"column '$colName' is referenced by the current partition spec " +
-        s"of $name — declare a spec without it first")
-    constraintCols.find(_._2.contains(colName)).foreach { case (cn, _) =>
-      throw new IllegalArgumentException(
-        s"column '$colName' is referenced by CHECK constraint '$cn' of " +
-          s"$name — drop the constraint first")
+    val snap = evolveIds(s"dropColumn on $name") { current =>
+      require(current.fieldNames.contains(colName),
+        s"no column '$colName' in $name")
+      require(current.fields.length > 1,
+        s"cannot drop the last column of $name")
+      require(!partitionSpec.exists(_.column == colName),
+        s"column '$colName' is referenced by the current partition spec " +
+          s"of $name — declare a spec without it first")
+      constraintCols.find(_._2.contains(colName)).foreach { case (cn, _) =>
+        throw new IllegalArgumentException(
+          s"column '$colName' is referenced by CHECK constraint '$cn' of " +
+            s"$name — drop the constraint first")
+      }
+      StructType(current.fields.filterNot(_.name == colName))
     }
-    val evolved = StructType(current.fields.filterNot(_.name == colName))
-    val snap = log.commit("evolve", Seq.empty, evolved.json)
     if (sortOrder.contains(colName))
       setSortOrder(sortOrder.filterNot(_ == colName))
     snap
@@ -2773,13 +2772,11 @@ final class GraftTable private (
     // Set membership, not Seq.contains: the carry filter runs once per
     // recorded stat — linear, not O(stats × files), at metadata scale
     val relSet = rel.toSet
-    log.commit("compact", rel, base.schemaJson,
-      statsByFile.filter { case (f, _) => relSet(f) },
-      expectedHead = Some(base.snapshotId),
-      removedFiles = Nil,
+    log.publishAt(base.snapshotId, s"checkpoint of $name")(Staged("compact",
+      rel, base.schemaJson, statsByFile.filter { case (f, _) => relSet(f) },
       deleteFiles = carrySidecars.result().distinct.sorted,
       properties = carriedTxnMarkers(snaps) ++ props +
-        (GraftTable.CheckpointKey -> "true"))
+        (GraftTable.CheckpointKey -> "true")))
   }
 
   /** POSITION-TOMBSTONE compaction (Iceberg's
@@ -2958,8 +2955,8 @@ final class GraftTable private (
     * instead of being silently reverted. */
   def rollbackTo(snapshotId: Long): Snapshot = {
     // one atomic log capture serves every derived view (same
-    // discipline as diff); the CAS on expectedHead still rejects a
-    // commit that lands after this read
+    // discipline as diff); publishAt still rejects a commit that lands
+    // after this read
     val snaps = log.snapshots
     // LIVE tombstones allow a rollback exactly when the visible delete
     // set is UNCHANGED between the target and the head (since r13 —
@@ -3006,10 +3003,9 @@ final class GraftTable private (
               GraftTable.tombSidOf(bySid, dir, abs, sid).toString
         }.toMap
       }
-    log.commit("rollback", added, targetSchema,
-      statsByFile.filter { case (f, _) => added.contains(f) },
-      expectedHead = Some(head), removedFiles = removed,
-      properties = tombProps)
+    log.publishAt(head, s"rollback of $name")(Staged("rollback", added,
+      targetSchema, statsByFile.filter { case (f, _) => addedSet(f) },
+      removed = removed, properties = tombProps))
   }
 
   /** Delete data files referenced by NO retained snapshot — the debris
@@ -3122,8 +3118,10 @@ final class GraftTable private (
       else df.repartitionByRange(clusterBy.map(org.apache.spark.sql.functions.col): _*),
       commitDir)
     val stats = stageStats(commitDir, (clusterBy ++ statsCols).distinct)
-    new SnapshotLog(dir, Some(b)).commit("append", files, expected.json, stats,
-      properties = properties)
+    // the branch view is pinned to the fork point: nothing to re-derive
+    new SnapshotLog(dir, Some(b)).publish(s"branch append to $name@$b",
+      SnapshotLog.RelinkLimit)(_ => Right(Staged("append", files,
+        expected.json, stats, properties = properties))).merge
   }
 
   /** [[lastTxnBatch]] for a sink staging onto BRANCH `b` (the WAP
@@ -3188,14 +3186,13 @@ final class GraftTable private (
     }
     val stats = bsnaps.flatMap(_.stats).toMap
       .filter { case (f, _) => added.contains(f) }
-    val snap = log.commit("publish",
+    val snap = log.publishAt(parent, s"publish of $name@$b")(Staged("publish",
       added.iterator().asScala.toSeq, schemaAsOf(Some(parent)).json, stats,
-      expectedHead = Some(parent),
+      removed = removed.iterator().asScala.toSeq,
       // staged streaming txn markers ride the publish (carry-keyed, one
       // per appId): a sink replay arriving AFTER publish+drop probes
       // the main log and still no-ops instead of re-staging
-      properties = carriedTxnMarkers(bsnaps),
-      removedFiles = removed.iterator().asScala.toSeq)
+      properties = carriedTxnMarkers(bsnaps)))
     dropBranch(b)
     snap
   }
@@ -3264,10 +3261,9 @@ final class GraftTable private (
     require(props.nonEmpty, s"setProperties on $name: empty property map")
     props.keys.foreach(k => require(k.nonEmpty,
       s"setProperties on $name: empty property key"))
-    val head = headOrThrow
-    log.commit("properties", Nil, head.schemaJson,
-      properties = props.map { case (k, v) =>
-        (GraftTable.UserPropSetPrefix + k) -> v })
+    relink(s"setProperties on $name")(head => Staged("properties", Nil,
+      head.schemaJson, properties = props.map { case (k, v) =>
+        (GraftTable.UserPropSetPrefix + k) -> v }))
   }
 
   /** Unset user properties. A key that is not currently set refuses
@@ -3275,21 +3271,22 @@ final class GraftTable private (
     * accepting a typo'd UNSET would leave the real key set forever. */
   def unsetProperties(keys: Seq[String], ifExists: Boolean = false): Snapshot = {
     require(keys.nonEmpty, s"unsetProperties on $name: no keys")
-    val head = headOrThrow
-    val current = userProperties()
-    val missing = keys.filterNot(current.contains)
-    require(ifExists || missing.isEmpty,
-      s"UNSET TBLPROPERTIES on $name: no such " +
-        s"propert${if (missing.size == 1) "y" else "ies"} " +
-        s"${missing.mkString("'", "', '", "'")} (use IF EXISTS)")
-    val deltas = keys.filter(current.contains).map(k =>
-      (GraftTable.UserPropUnsetPrefix + k) -> "").toMap
-    // IF EXISTS with nothing present (or a repeated COMMENT … IS NULL)
-    // is a NO-OP — committing an empty properties snapshot would
-    // advance the head for nothing (streams plan an empty batch, the
-    // IVF re-stamps, $history gains a meaningless row)
-    if (deltas.isEmpty) head
-    else log.commit("properties", Nil, head.schemaJson, properties = deltas)
+    publish(s"unsetProperties on $name", SnapshotLog.RelinkLimit) { head =>
+      val current = userPropertiesIn(log.snapshots, Some(head.snapshotId))
+      val missing = keys.filterNot(current.contains)
+      require(ifExists || missing.isEmpty,
+        s"UNSET TBLPROPERTIES on $name: no such " +
+          s"propert${if (missing.size == 1) "y" else "ies"} " +
+          s"${missing.mkString("'", "', '", "'")} (use IF EXISTS)")
+      val deltas = keys.filter(current.contains).map(k =>
+        (GraftTable.UserPropUnsetPrefix + k) -> "").toMap
+      // IF EXISTS with nothing present (or a repeated COMMENT … IS NULL)
+      // is a NO-OP — committing an empty properties snapshot would
+      // advance the head for nothing (streams plan an empty batch, the
+      // IVF re-stamps, $history gains a meaningless row)
+      if (deltas.isEmpty) None
+      else Some(Staged("properties", Nil, head.schemaJson, properties = deltas))
+    }.merge
   }
 
   /** Effective user properties at `asOf` (head when None): fold the
@@ -3323,14 +3320,7 @@ final class GraftTable private (
 
   /** Discard a branch: metadata-only delete (the audit-failed path).
     * Staged data files become unreferenced debris for [[removeOrphans]]. */
-  def dropBranch(b: String): Unit = {
-    val bd = branchDir(b)
-    if (!Files.isDirectory(bd)) return
-    val walk = Files.walk(bd)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-    finally walk.close()
-  }
+  def dropBranch(b: String): Unit = SnapshotLog.deleteTree(branchDir(b))
 
   /** Row-level changes between two snapshots as a changelog feed
     * (the Delta-CDF / Iceberg-changelog shape the reference's mirror
@@ -4281,19 +4271,17 @@ final class GraftTable private (
     * with the clone's remapped file names (O(positions), dangling
     * entries pruned for free), and every cloned file records its
     * tombstone-era sid so scoping is preserved verbatim. The create
-    * commit pins itself at the SOURCE's head id ([[SnapshotLog.commit]]
-    * `atLeastId`), so the clone's future appends land ABOVE every
-    * carried sid and escape the carried deletes by sequence — exactly
-    * as they would have on the source. */
+    * commit pins itself at the SOURCE's head id ([[Staged.atLeastId]]),
+    * so the clone's future appends land ABOVE every carried sid and
+    * escape the carried deletes by sequence — exactly as they would
+    * have on the source. */
   def cloneTo(dstDir: Path, newName: String): GraftTable = {
     val snaps = log.snapshots
     val head = snaps.lastOption.getOrElse(throw noSnapshots)
     val statsByFile = snaps.flatMap(_.stats).toMap
     val dst = new GraftTable(newName, dstDir.toAbsolutePath.normalize(), spark)
-    require(!(dst.log.exists && dst.log.head.nonEmpty),
-      s"clone target $newName already exists")
+    require(dst.log.head.isEmpty, s"clone target $newName already exists")
     Files.createDirectories(dstDir)
-    dst.log.init()
     val commitDir = dst.newCommitDir('k')
     Files.createDirectories(commitDir)
     val mapped = log.dataFiles(None).zipWithIndex.map { case (abs, i) =>
@@ -4399,11 +4387,14 @@ final class GraftTable private (
       }
       props(SnapshotLog.RowIdNextKey) = next.toString
     }
-    dst.log.commit("create", mapped.map(_._2).sorted, head.schemaJson, stats,
-      deleteFiles = cloneSidecars.result().distinct.sorted,
-      properties = props.toMap,
-      // pin at the source head id: carried sids < every future commit
-      atLeastId = Some(head.snapshotId))
+    dst.log.publish(s"clone of $name", SnapshotLog.RelinkLimit) { h =>
+      require(h.isEmpty, s"clone target $newName already exists")
+      Right(Staged("create", mapped.map(_._2).sorted, head.schemaJson, stats,
+        deleteFiles = cloneSidecars.result().distinct.sorted,
+        properties = props.toMap,
+        // pin at the source head id: carried sids < every future commit
+        atLeastId = Some(head.snapshotId)))
+    }
     dst
   }
 
@@ -4756,15 +4747,6 @@ final class GraftTable private (
 }
 
 object GraftTable {
-  /** What one [[GraftTable.publish]] attempt commits, staged against the head the
-    * attempt read. `commitDir` is where its files were staged, if it
-    * staged any. */
-  private final case class Staged(operation: String, files: Seq[String],
-      schemaJson: String, stats: Map[String, FileStat] = Map.empty,
-      removed: Seq[String] = Nil, deleteFiles: Seq[String] = Nil,
-      properties: Map[String, String] = Map.empty,
-      commitDir: Option[Path] = None)
-
   /** Create a new table from initial data. Idempotency matches the
     * reference's create_table (`icerunner.py:133-161`): returns None if
     * the table already exists. */
@@ -5071,10 +5053,9 @@ object GraftTable {
     // absolute dir: the rewrite probes relativize input_file_name()'s
     // absolute URIs, which throws against a relative table dir
     val t = new GraftTable(name, dir.toAbsolutePath.normalize(), spark)
-    if (t.log.exists && t.log.head.nonEmpty) None
+    if (t.log.head.nonEmpty) None
     else {
       Files.createDirectories(dir)
-      t.log.init()
       // hidden partitioning declared BEFORE the first write lays out
       // the create payload itself transform-clustered (a partitioned
       // CTAS needs no schema-only create + separate append)
@@ -5090,6 +5071,6 @@ object GraftTable {
 
   def load(spark: SparkSession, dir: Path, name: String): Option[GraftTable] = {
     val t = new GraftTable(name, dir.toAbsolutePath.normalize(), spark)
-    if (t.log.exists && t.log.head.nonEmpty) Some(t) else None
+    if (t.log.head.nonEmpty) Some(t) else None
   }
 }

@@ -1,8 +1,7 @@
 package graft.warehouse
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
 /** One committed snapshot: the unit of ACID append.
   *
@@ -43,6 +42,23 @@ final case class Snapshot(
       * finds its batchId already committed and becomes a no-op, the
       * Delta-style exactly-once sink protocol. */
     properties: Map[String, String] = Map.empty)
+
+/** What one [[SnapshotLog.publish]] attempt commits, derived against
+  * the head it was handed; the log assigns id, timestamp and parent.
+  *
+  * @param commitDir a directory only this attempt staged, deleted when
+  *                  the attempt loses its race
+  * @param atLeastId floors the allocated id: a CLONE's create pins itself
+  *                  at the SOURCE's head id so the tombstone sids it
+  *                  carries stay below every later commit (from id 1, new
+  *                  appends would land BELOW a carried delete's sid and be
+  *                  wrongly scoped by it); incremental reads treat the
+  *                  id gap before the floor as expired history. */
+final case class Staged(operation: String, files: Seq[String],
+    schemaJson: String, stats: Map[String, FileStat] = Map.empty,
+    removed: Seq[String] = Nil, deleteFiles: Seq[String] = Nil,
+    properties: Map[String, String] = Map.empty,
+    commitDir: Option[Path] = None, atLeastId: Option[Long] = None)
 
 /** Per-data-file column statistics recorded in the manifest at commit
   * time — the Iceberg-style metadata that lets a reader prune files
@@ -224,12 +240,12 @@ object Tomb {
   * write the manifest to a temp file, then publish it via
   * `Files.createLink` to its versioned name — `link(2)` atomically
   * fails with EEXIST when the id is taken, so a concurrent committer
-  * racing on the same id loses, re-reads the head, and retries with the
-  * next id (POSIX `rename(2)` would silently replace the winner — see
-  * `commit`). Data files are written *before* the manifest; a crash
-  * between the two leaves orphan files that no manifest references,
-  * which readers never see (same recovery model as Iceberg's
-  * orphan-file semantics).
+  * racing on the same id loses, re-derives its commit against the new
+  * head, and retries with the next id (POSIX `rename(2)` would silently
+  * replace the winner — see `publish`, the one commit loop). Data
+  * files are written *before* the manifest; a crash between the two
+  * leaves orphan files that no manifest references, which readers
+  * never see (same recovery model as Iceberg's orphan-file semantics).
   *
   * Scale: manifests grow with commit count, not row count. A read
   * resolves the file list driver-side (cheap JSON scan) and hands Spark
@@ -312,14 +328,19 @@ object SnapshotLog {
     * committing snapshot's id for rows they changed or minted). */
   val RowSeqFilePrefix = "graft.rowseq.file."
 
-  /** The TRUE parent snapshot id, recorded by [[SnapshotLog.commit]] at
-    * commit time (the head the winning CAS attempt observed). `$history`
+  /** The TRUE parent snapshot id, recorded by [[SnapshotLog.publish]] at
+    * commit time (the head the winning attempt was handed). `$history`
     * reads this instead of inferring the parent from log position —
     * after expire_snapshots the preceding RETAINED snapshot is not the
     * commit's actual parent (Iceberg records parent-snapshot-id in the
     * snapshot itself for the same reason). Absent on pre-r17 manifests
     * and on a table's first commit. */
   val ParentKey = "graft.parent"
+
+  /** [[SnapshotLog.publish]]'s give-up bounds: lost races for an attempt
+    * that redoes its Spark work, and for one that only re-links. */
+  val RestageLimit = 20
+  val RelinkLimit = 10000
 
   /** The table's next unassigned row id at the cut, None ⇔ lineage
     * never enabled. Latest wins: every assigning commit re-states it. */
@@ -382,6 +403,29 @@ object SnapshotLog {
   private val parseCache =
     new graft.operators.BoundedLru[String, Snapshot](65536)
 
+  /** Publish `content` at `target` only if no file has that name: write
+    * a temp file beside it, then `link(2)` it into place. False ⇔ EEXIST,
+    * a concurrent publisher took the name. */
+  private[warehouse] def linkNew(target: Path, content: String): Boolean = {
+    val tmp = Files.createTempFile(target.getParent, ".link-", ".tmp")
+    try {
+      Files.writeString(tmp, content)
+      Files.createLink(target, tmp)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Delete a directory tree, children first; no-op when absent. */
+  private[warehouse] def deleteTree(root: Path): Unit =
+    if (Files.isDirectory(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
+
   /** Purge cached manifest parses under a table directory. The
     * immutability argument in [[SnapshotLog.snapshots]] covers
     * commit/rollback/expiry but NOT drop + recreate at the same path:
@@ -407,10 +451,6 @@ final class SnapshotLog(tableDir: Path, branch: Option[String] = None) {
 
   private def manifestPath(id: Long): Path =
     snapDir.resolve(f"v$id%016d.json")
-
-  def init(): Unit = Files.createDirectories(snapDir)
-
-  def exists: Boolean = Files.isDirectory(snapDir)
 
   /** All snapshots in id order.
     *
@@ -625,108 +665,108 @@ final class SnapshotLog(tableDir: Path, branch: Option[String] = None) {
   def deleteManifest(id: Long): Unit =
     Files.deleteIfExists(manifestPath(id))
 
-  /** Commit a new snapshot; retries on id races. Returns the committed
-    * snapshot.
+  /** The one commit loop: every snapshot of every log publishes here.
     *
-    * The publish step is `Files.createLink` (hard link), NOT an
-    * `ATOMIC_MOVE`: POSIX `rename(2)` silently REPLACES an existing
-    * target, so a move-based commit lets a racing committer overwrite an
-    * already-published snapshot (found by the commit-race property
-    * test). `link(2)` atomically fails with EEXIST instead — the loser
-    * observes `FileAlreadyExistsException`, re-reads the head, and
-    * retries with the next id, keeping ids contiguous and every commit
-    * durable. */
-  /** `expectedHead`, when set, makes the commit CONDITIONAL: it only
-    * succeeds if the current head is still that id (compare-and-swap at
-    * the log level). A `compact` snapshot REPLACES the visible file set,
-    * so committing one from a stale read would silently drop any rows a
-    * concurrent append landed in between — the conditional commit turns
-    * that into a retryable [[java.util.ConcurrentModificationException]]
-    * instead. */
-  /** `atLeastId` floors the allocated snapshot id (still head+1 when
-    * that is higher): a CLONE's create commit pins itself at the
-    * SOURCE's head id so the tombstone sids it carries stay strictly
-    * below every future commit of the fresh log — a clone starting at
-    * id 1 would let new appends land BELOW a carried delete's sid and
-    * be wrongly scoped by it. Id gaps before the floor are fine:
-    * incremental reads treat pre-first-id cuts as expired history. */
-  def commit(operation: String, addedFiles: Seq[String], schemaJson: String,
-      stats: Map[String, FileStat] = Map.empty,
-      expectedHead: Option[Long] = None,
-      removedFiles: Seq[String] = Nil,
-      deleteFiles: Seq[String] = Nil,
-      properties: Map[String, String] = Map.empty,
-      atLeastId: Option[Long] = None): Snapshot = {
-    init()
-    var attempt = 0
-    while (attempt < 10000) {
-      val head = currentSnapshotId.getOrElse(0L)
-      expectedHead.foreach { e =>
-        if (head != e) throw new java.util.ConcurrentModificationException(
-          s"snapshot head moved: expected $e, found $head")
-      }
-      // ROW-LINEAGE auto-assignment (the Iceberg v3 first-row-id
-      // inheritance): once lineage is enabled, every commit that adds
-      // data files assigns each NEW file its first row id from the
-      // table counter and re-states the advanced counter — recomputed
-      // per attempt so a lost head race re-reads the winner's counter.
-      // Skipped when the commit states lineage itself (enablement and
-      // checkpoint carries pass RowIdNextKey; materializing rewrites
-      // pass RowIdMaterializedKey — their files carry physical ids),
-      // and per-file for rels that already have an identity (a
-      // rollback re-listing old files must not re-number them).
-      val effProps =
-        if (addedFiles.isEmpty ||
-            properties.contains(SnapshotLog.RowIdNextKey) ||
-            properties.contains(SnapshotLog.RowIdMaterializedKey)) properties
-        else {
-          val snaps = snapshots
-          SnapshotLog.rowIdNextOf(snaps) match {
-            case None => properties
-            case Some(next0) =>
-              val known = SnapshotLog.rowIdFirsts(snaps).keySet ++
-                SnapshotLog.rowIdMatRels(snaps)
-              val fresh = addedFiles.filterNot(known).sorted
-              if (fresh.isEmpty) properties
-              else {
-                var n = next0
-                val entries = fresh.map { f =>
-                  val rows = stats.get(f).map(_.rows).getOrElse(-1L)
-                  require(rows >= 0, s"row lineage on this table needs a " +
-                    s"recorded row count for every added file; '$f' has none")
-                  val e = (SnapshotLog.RowIdFirstPrefix + f) -> n.toString
-                  n += rows
-                  e
-                }
-                properties ++ entries + (SnapshotLog.RowIdNextKey -> n.toString)
-              }
-          }
+    * Each attempt lists the log and hands its head (None while the log
+    * is empty) to `attempt`, which derives the commit against THAT head
+    * — schema, operation name, compatibility and constraint checks,
+    * property deltas — and returns it as `Right`, or declines with a
+    * `Left` that publish returns as is. The log adds what it owns: the
+    * id (head + 1, floored by [[Staged.atLeastId]]), the true parent
+    * ([[SnapshotLog.ParentKey]]) and, once row lineage is on, the new
+    * files' first row ids.
+    *
+    * The attempt then makes ONE `link(2)` of a temp manifest to the id's
+    * name ([[SnapshotLog.linkNew]]), not an `ATOMIC_MOVE`: POSIX
+    * `rename(2)` silently REPLACES an existing target, so a racing
+    * committer could overwrite a published snapshot (found by the
+    * commit-race property test). `link(2)` fails with EEXIST instead, so
+    * it is the compare-and-swap: it succeeds only while the attempt's
+    * head is still the head. A lost attempt deletes its
+    * [[Staged.commitDir]] and the loop runs again over the new head; the
+    * `limit`-th lost race gives up, naming `what`. Ids stay contiguous
+    * and every commit durable. */
+  def publish[A](what: String, limit: Int)(
+      attempt: Option[Snapshot] => Either[A, Staged]): Either[A, Snapshot] = {
+    Files.createDirectories(snapDir)
+    @annotation.tailrec def run(lost: Int): Either[A, Snapshot] = {
+      val snaps = snapshots
+      attempt(snaps.lastOption) match {
+        case Left(a) => Left(a)
+        case Right(st) => link(snaps, st) match {
+          case Some(snap) => Right(snap)
+          case None =>
+            st.commitDir.foreach(SnapshotLog.deleteTree)
+            if (lost + 1 >= limit) throw new IllegalStateException(
+              s"$what lost ${lost + 1} head races; giving up")
+            run(lost + 1)
         }
-      val id = math.max(head + 1, atLeastId.getOrElse(0L))
-      // record the TRUE parent (the head this attempt is committing on
-      // top of) — re-read per retry so a lost race records the winner;
-      // a first commit (head 0) has no parent and records nothing
-      val withParent =
-        if (head == 0L || effProps.contains(SnapshotLog.ParentKey)) effProps
-        else effProps + (SnapshotLog.ParentKey -> head.toString)
-      val snap = Snapshot(id, System.currentTimeMillis(), operation,
-        addedFiles, schemaJson, stats, removedFiles, deleteFiles, withParent)
-      val tmp = Files.createTempFile(snapDir, ".commit-", ".tmp")
-      Files.writeString(tmp, SnapshotJson.write(snap))
-      try {
-        Files.createLink(manifestPath(id), tmp)
-        Files.deleteIfExists(tmp)
-        return snap
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          attempt += 1 // lost the race; re-read head and retry
-        case NonFatal(e) =>
-          Files.deleteIfExists(tmp)
-          throw e
       }
     }
-    throw new IllegalStateException("commit contention: 10000 failed attempts")
+    run(0)
+  }
+
+  /** [[publish]] for a commit decided at head `at` that must not be
+    * re-derived (checkpoint, rollback, branch publish): it lands only
+    * while `at` is the head, and a moved head throws
+    * [[java.util.ConcurrentModificationException]] instead of silently
+    * reverting or dropping the commit that moved it. */
+  def publishAt(at: Long, what: String)(st: Staged): Snapshot =
+    publish(what, SnapshotLog.RelinkLimit) { h =>
+      val found = h.map(_.snapshotId).getOrElse(0L)
+      if (found != at) throw new java.util.ConcurrentModificationException(
+        s"snapshot head moved: expected $at, found $found")
+      Right(st)
+    }.merge
+
+  /** One publish attempt over the listing `snaps`: link the manifest at
+    * the id after their head. None ⇔ EEXIST, a commit took the id. */
+  private def link(snaps: Seq[Snapshot], st: Staged): Option[Snapshot] = {
+    val head = snaps.lastOption.map(_.snapshotId).getOrElse(0L)
+    // ROW-LINEAGE auto-assignment (the Iceberg v3 first-row-id
+    // inheritance): once lineage is enabled, every commit that adds
+    // data files assigns each NEW file its first row id from the table
+    // counter and re-states the advanced counter — from this attempt's
+    // listing, so a lost race re-reads the winner's counter. Skipped
+    // when the commit states lineage itself (enablement and checkpoint
+    // carries pass RowIdNextKey; materializing rewrites pass
+    // RowIdMaterializedKey — their files carry physical ids), and
+    // per-file for rels that already have an identity (a rollback
+    // re-listing old files must not re-number them).
+    val props =
+      if (st.files.isEmpty ||
+          st.properties.contains(SnapshotLog.RowIdNextKey) ||
+          st.properties.contains(SnapshotLog.RowIdMaterializedKey)) st.properties
+      else SnapshotLog.rowIdNextOf(snaps) match {
+        case None => st.properties
+        case Some(next0) =>
+          val known = SnapshotLog.rowIdFirsts(snaps).keySet ++
+            SnapshotLog.rowIdMatRels(snaps)
+          val fresh = st.files.filterNot(known).sorted
+          if (fresh.isEmpty) st.properties
+          else {
+            var n = next0
+            val entries = fresh.map { f =>
+              val rows = st.stats.get(f).map(_.rows).getOrElse(-1L)
+              require(rows >= 0, s"row lineage on this table needs a " +
+                s"recorded row count for every added file; '$f' has none")
+              val e = (SnapshotLog.RowIdFirstPrefix + f) -> n.toString
+              n += rows
+              e
+            }
+            st.properties ++ entries + (SnapshotLog.RowIdNextKey -> n.toString)
+          }
+      }
+    val id = math.max(head + 1, st.atLeastId.getOrElse(0L))
+    // record the TRUE parent (the head this attempt commits on top of);
+    // a first commit (head 0) has no parent and records nothing
+    val withParent =
+      if (head == 0L || props.contains(SnapshotLog.ParentKey)) props
+      else props + (SnapshotLog.ParentKey -> head.toString)
+    val snap = Snapshot(id, System.currentTimeMillis(), st.operation,
+      st.files, st.schemaJson, st.stats, st.removed, st.deleteFiles, withParent)
+    Some(snap).filter(_ =>
+      SnapshotLog.linkNew(manifestPath(id), SnapshotJson.write(snap)))
   }
 }
 

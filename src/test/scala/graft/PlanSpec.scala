@@ -234,7 +234,8 @@ class PlanSpec extends AnyFunSuite {
     // Spark jobs per call on these inputs, as measured when the budgets
     // were introduced. A budget may only ever tighten.
     val budgets = Map("append" -> 1, "upsert" -> 9, "deleteWhere" -> 3,
-      "deletePosMor" -> 8, "compact" -> 2, "replace" -> 1, "sinkBatch" -> 2)
+      "deletePosMor" -> 5, "compact" -> 2, "replace" -> 1, "sinkBatch" -> 2,
+      "merge" -> 9, "updateWhere" -> 3, "overwriteWhere" -> 4)
     val sc = spark.sparkContext
     val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -258,7 +259,7 @@ class PlanSpec extends AnyFunSuite {
     sc.setJobGroup(group, "commit job budgets")
     val measured = try {
       val Seq(appended, upserted, deleted, posDeleted, compacted, replaced,
-        sunk) = Seq.fill(7)(table())
+        sunk, merged, updated, overwritten) = Seq.fill(10)(table())
       compacted.append(rows(200L, 300L))
       val sink = new GraftTableSink(sunk.dir, "budget-app", complete = false)
       Map(
@@ -268,7 +269,14 @@ class PlanSpec extends AnyFunSuite {
         "deletePosMor" -> jobsOf(posDeleted.deletePosMor(col("id") === 5L)),
         "compact" -> jobsOf(compacted.compact(targetFiles = 1)),
         "replace" -> jobsOf(replaced.replace(rows(0L, 50L))),
-        "sinkBatch" -> jobsOf(sink.addBatch(1L, rows(200L, 250L))))
+        "sinkBatch" -> jobsOf(sink.addBatch(1L, rows(200L, 250L))),
+        // a live when-matched-delete arm: even ids among the matches go
+        "merge" -> jobsOf(merged.merge(rows(190L, 210L), Seq("id"),
+          whenMatchedDelete = col("id") % 2 === 0L)),
+        "updateWhere" -> jobsOf(updated.updateWhere(col("id") < 20L,
+          Map("v" -> lit("u")))),
+        "overwriteWhere" -> jobsOf(overwritten.overwriteWhere(col("id") < 20L,
+          rows(0L, 10L))))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

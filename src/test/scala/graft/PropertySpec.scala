@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.service.{FlightClient, SyncState}
-import graft.warehouse.SnapshotLog
+import graft.warehouse.{SnapshotLog, Staged}
 
 /** Property-based coverage for the pure-logic components (SURVEY.md
   * §5.4): snapshot-log conservation laws, commit-race safety, hash
@@ -20,6 +20,10 @@ class PropertySpec extends AnyFunSuite {
   /** Deterministic sample stream from a Gen. */
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(0xC0FFEE + i)))
+
+  /** One metadata-only commit of `files` through the log's commit loop. */
+  private def commitFiles(log: SnapshotLog, op: String, files: Seq[String]) =
+    log.publish(op, SnapshotLog.RelinkLimit)(_ => Right(Staged(op, files, "{}")))
 
   private val fileName: Gen[String] =
     Gen.nonEmptyListOf(Gen.alphaNumChar).map(cs => s"data/${cs.mkString.take(12)}.parquet")
@@ -138,7 +142,7 @@ class PropertySpec extends AnyFunSuite {
       }
       val log = new SnapshotLog(Files.createTempDirectory("graft-prop"))
       commits.zipWithIndex.foreach { case (files, i) =>
-        log.commit(if (i == 0) "create" else "append", files, "{}")
+        commitFiles(log, if (i == 0) "create" else "append", files)
       }
       assert(log.snapshots.map(_.snapshotId) == (1L to commits.length).toSeq)
       val total = commits.map(_.size).sum
@@ -154,7 +158,7 @@ class PropertySpec extends AnyFunSuite {
     val log = new SnapshotLog(Files.createTempDirectory("graft-race"))
     val threads = (1 to 8).map { i =>
       new Thread(() => (1 to 5).foreach { j =>
-        log.commit("append", Seq(s"data/t$i-$j.parquet"), "{}")
+        commitFiles(log, "append", Seq(s"data/t$i-$j.parquet"))
       })
     }
     threads.foreach(_.start())

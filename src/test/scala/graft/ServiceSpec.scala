@@ -141,6 +141,8 @@ class ServiceSpec extends AnyFunSuite {
       // every writer's rows must land exactly once, whoever won create
       assert(c.count("raced") === 400)
       assert(c.query("raced").select("id").distinct().count() === 400)
+      // each commit derives its operation from the head it lands on
+      assert(c.loadTable("raced").log.snapshots.count(_.operation == "create") === 1)
     }
   }
 

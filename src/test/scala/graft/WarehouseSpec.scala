@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.streaming.EventStreams
-import graft.warehouse.{Connector, GraftTable, SnapshotLog}
+import graft.warehouse.{Connector, GraftTable, SnapshotLog, Staged}
 import org.scalatest.funsuite.AnyFunSuite
 
 class WarehouseSpec extends AnyFunSuite {
@@ -554,15 +554,16 @@ class WarehouseSpec extends AnyFunSuite {
   test("conditional commit rejects a moved head (compact CAS)") {
     val dir = Files.createTempDirectory("graft-cas-")
     val log = new SnapshotLog(dir)
-    log.commit("create", Seq("data/s1/a.parquet"), "{}")
-    log.commit("append", Seq("data/s2/b.parquet"), "{}")
+    def commit(op: String, file: String) = log.publish(op,
+      SnapshotLog.RelinkLimit)(_ => Right(Staged(op, Seq(file), "{}"))).merge
+    commit("create", "data/s1/a.parquet")
+    commit("append", "data/s2/b.parquet")
+    val compact = Staged("compact", Seq("data/c1/c.parquet"), "{}")
     intercept[java.util.ConcurrentModificationException] {
-      log.commit("compact", Seq("data/c1/c.parquet"), "{}",
-        expectedHead = Some(1L)) // head is 2
+      log.publishAt(1L, "compact")(compact) // head is 2
     }
     assert(log.currentSnapshotId.contains(2L), "failed CAS must not commit")
-    val ok = log.commit("compact", Seq("data/c1/c.parquet"), "{}",
-      expectedHead = Some(2L))
+    val ok = log.publishAt(2L, "compact")(compact)
     assert(ok.snapshotId === 3L)
   }
 
@@ -872,8 +873,15 @@ class WarehouseSpec extends AnyFunSuite {
       df.select(race(col("id")).as("id"), col("v"))
     // (operation, committed operation name, the call, rows afterwards);
     // `race` sits in the operation's own input, so its first evaluation
-    // lands inside the first attempt, after the head was read
+    // lands inside the first attempt, after the head was read — or, for
+    // the writes that stage once and only re-link (append,
+    // deleteKeysMor), while their files are staged
     val cases: Seq[(String, String, GraftTable => Snapshot, Seq[(Long, String)])] = Seq(
+      ("append", "append", _.append(raced(Seq((7L, "A")).toDF("id", "v"))),
+        base :+ ((7L, "A"))),
+      ("deleteKeysMor", "eqdelete",
+        _.deleteKeysMor(Seq(2L).toDF("id").select(race(col("id")).as("id"))),
+        base.filterNot(_._1 == 2L)),
       ("deleteWhere", "delete", _.deleteWhere(race(col("id")) <= 2L),
         base.drop(2)),
       ("updateWhere", "update",
@@ -904,6 +912,25 @@ class WarehouseSpec extends AnyFunSuite {
       // the lost attempt's staged files were discarded, not orphaned
       assert(t.removeOrphans(graceMs = 0L).isEmpty, op)
     }
+  }
+
+  test("an append racing addColumns keeps the added column; its rows read NULL there") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val dir = Files.createTempDirectory("graft-race-evolve-")
+    val t = GraftTable.create(spark, dir, "t", Seq((1L, "a")).toDF("id", "v")).get
+    val rival = GraftTable.load(spark, dir, "t").get
+    // the rival evolves the table while the append writes its data
+    LostRaceHook.arm(() =>
+      rival.addColumns(StructType(Seq(StructField("note", StringType)))))
+    val snap = t.append(Seq((2L, "b")).toDF("id", "v")
+      .select(LostRaceHook.passLong(col("id")).as("id"), col("v")))
+    assert(snap.operation == "append")
+    assert(t.schema.fieldNames.toSeq == Seq("id", "v", "note"),
+      "the append must not revert the evolution with its stale schema")
+    val rows = t.read().orderBy("id").as[(Long, String, Option[String])]
+      .collect().toSeq
+    assert(rows == Seq((1L, "a", None), (2L, "b", None)))
   }
 
   test("connector upsert/delete re-reflect views so sql() sees the change") {
@@ -1890,10 +1917,12 @@ class WarehouseSpec extends AnyFunSuite {
   test("snapshot log json round-trip incl. escapes") {
     val dir = Files.createTempDirectory("graft-log-")
     val log = new SnapshotLog(dir)
-    val s = log.commit("create", Seq("data/s1/part-0.parquet"),
-      """{"type":"struct","fields":[]}""")
+    def commit(st: Staged) =
+      log.publish(st.operation, SnapshotLog.RelinkLimit)(_ => Right(st)).merge
+    val s = commit(Staged("create", Seq("data/s1/part-0.parquet"),
+      """{"type":"struct","fields":[]}"""))
     assert(s.snapshotId == 1L)
-    val s2 = log.commit("append", Seq("data/s2/a.parquet", "data/s2/b.parquet"), s.schemaJson)
+    val s2 = commit(Staged("append", Seq("data/s2/a.parquet", "data/s2/b.parquet"), s.schemaJson))
     assert(s2.snapshotId == 2L)
     assert(log.snapshots.map(_.snapshotId) == Seq(1L, 2L))
     assert(log.changedFiles(1L).size == 2)
@@ -2100,29 +2129,52 @@ class WarehouseSpec extends AnyFunSuite {
       .option("parquet.page.size.row.check.min", "2")
       .option("parquet.page.size.row.check.max", "2")
       .mode("overwrite").parquet(ext.toString)
-    val src = {
+    def onlyParquet(d: java.nio.file.Path) = {
       import scala.jdk.CollectionConverters._
-      val s = Files.list(ext)
+      val s = Files.list(d)
       try s.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
       finally s.close()
     }
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(src.toUri),
-        spark.sparkContext.hadoopConfiguration))
+    def footer(p: java.nio.file.Path) =
+      org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toUri),
+          spark.sparkContext.hadoopConfiguration))
+    val src = onlyParquet(ext)
+    val reader = footer(src)
     try assert(reader.getFooter.getBlocks.size >= 3,
       "the fixture needs several row groups")
     finally reader.close()
+    // a second file whose one string row group holds the invalid UTF-8
+    // byte 0xFF: decoded, its max would read U+FFFD (EF BF BD), below
+    // the raw byte and below U+FFFF (EF BF BF)
+    val bad = Files.createTempDirectory("graft-badutf8-")
+    Seq(5.0 -> "FF", 6.0 -> "65").toDF("x", "h")
+      .select(col("x"), org.apache.spark.sql.functions.unhex(col("h"))
+        .cast("string").as("s"))
+      .coalesce(1).write.mode("overwrite").parquet(bad.toString)
+    val badSrc = onlyParquet(bad)
+    val badReader = footer(badSrc)
+    try {
+      import scala.jdk.CollectionConverters._
+      val st = badReader.getFooter.getBlocks.get(0).getColumns.asScala
+        .find(_.getPath.toDotString == "s").get.getStatistics
+      assert(st.getMaxBytes.toSeq == Seq(0xFF.toByte),
+        "the fixture needs the raw 0xFF byte as its footer max")
+    } finally badReader.close()
     val t = GraftTable.create(spark, Files.createTempDirectory("graft-nan-t-"),
       "t", Seq.empty[(Double, String)].toDF("x", "s")).get
-    t.addFiles(Seq(src), statsCols = Seq("x", "s"))
+    t.addFiles(Seq(src, badSrc), statsCols = Seq("x", "s"))
     assert(t.readWhere("x", Some(500.0), Some(500.0))
       .filter(col("x") === 500.0).count() == 1L,
       "the file holding 500.0 was pruned by footer bounds")
     assert(t.readWhere("s", Some("m"), Some("m"))
       .filter(col("s") === "m").count() == 1L,
       "the file holding \"m\" was pruned by footer bounds")
+    assert(t.readWhere("s", Some("\uFFFF"), None)
+      .filter(col("x") === 5.0).count() == 1L,
+      "the file holding 0xFF was pruned by lossily decoded footer bounds")
   }
 
   test("shallow clone shares bytes, evolves independently, and prunes via carried stats") {
