@@ -2,44 +2,21 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Test-table accessors over the driver-generated parquet dirs
-  * (`/root/testdata/sf*`, see TESTDATA.md / FIXTURES.md).
-  *
-  * Mirrors the reference's view reflection (`icerunner.py:82-103`) in
-  * Spark terms: one temp view per table, registered lazily; Spark views
-  * resolve at query time, so no per-query re-reflection is needed.
+/** Test-table accessors over the generated per-scale-factor parquet
+  * dirs (see TESTDATA.md / FIXTURES.md): one cached DataFrame per table
+  * and session.
   */
 object T {
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Plan cache: each `spark.read.parquet` call pays a footer/schema
     * inference job; table accessors are called hundreds of times across
     * a bench run, so reuse the (immutable) DataFrame per path. Only ONE
-    * session's plans are retained (reference-compared — a DataFrame must
-    * never leak across sessions, and dead sessions must not be pinned);
-    * a new session simply drops the previous session's entries. */
+    * session's plans are retained — a DataFrame must never leak across
+    * sessions, and dead sessions must not be pinned. */
   private val planCache =
-    new graft.operators.BoundedLru[(String, String), DataFrame](64)
-  @volatile private var cacheSession: SparkSession = null
+    new graft.operators.SessionCache[(String, String), DataFrame](64)
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val cached = synchronized {
-      if (cacheSession ne spark) { planCache.clear(); cacheSession = spark }
-      planCache.get((sfDir, name))
-    }
-    cached.getOrElse {
-      // build OUTSIDE the lock (schema inference runs a Spark job;
-      // concurrent callers must not serialize on it) — a racing double
-      // build is harmless, last one wins
-      val df = build(spark, sfDir, name)
-      synchronized {
-        if (cacheSession eq spark) planCache.put((sfDir, name), df)
-      }
-      df
-    }
-  }
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    planCache.getOrBuild(spark, (sfDir, name))(build(spark, sfDir, name))
 
   private def build(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
@@ -71,13 +48,6 @@ object T {
   def events(s: SparkSession, d: String): DataFrame = apply(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
-
-  /** Register every test table as a temp view so `spark.sql` works over
-    * the same names the DuckDB oracle uses. */
-  def reflectViews(spark: SparkSession, sfDir: String): Unit =
-    tableNames.foreach { n =>
-      apply(spark, sfDir, n).createOrReplaceTempView(n)
-    }
 }
 
 /** One graded query: Spark plan + (optional) DuckDB oracle SQL.

@@ -463,59 +463,31 @@ object Dedup {
     *
     * @return (id, sig: array&lt;bigint&gt; of length numHashes)
     */
-  /** Plan-keyed cache of PERSISTED signature relations, the ivfCache
-    * discipline applied to minhash: signatures are the corpus INDEX —
-    * at scale you compute them once per (table snapshot, params) and
-    * share them across queries — and within one candidates query the
-    * banded census, the band-shuffle feed, and the pair re-attach are
-    * three separate plan references that would otherwise EACH re-run
-    * the shingle explode + K affine permutations + groupBy min (the
-    * expensive half of the pipeline; measured ~3× redundant work at
-    * sf0.1). MEMORY_AND_DISK: a signature row is id + K longs, ~1/50th
-    * of its document, so the cache spills long before the corpus
-    * would. Bounded LRU (same hygiene rule as the other plan caches);
-    * eviction and session change UNPERSIST the evictee — the cache
-    * owns its blocks, nothing leaks past the cap. */
-  private val sigCache = new BoundedLru[(Int, Int, Int, String),
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)](32,
-    (_, v) => { try { v._2.unpersist(false); () } catch { case _: Throwable => () } })
-  @volatile private var sigCacheSession: org.apache.spark.sql.SparkSession = null
+  /** Session cache of PERSISTED signature relations, keyed on the plan
+    * of the (id, text) projection plus the signature parameters:
+    * signatures are the corpus INDEX — at scale you compute them once
+    * per (table snapshot, params) and share them across queries — and
+    * within one candidates query the banded census, the band-shuffle
+    * feed, and the pair re-attach are three separate plan references
+    * that would otherwise EACH re-run the shingle explode + K affine
+    * permutations + groupBy min (the expensive half of the pipeline;
+    * measured ~3× redundant work at sf0.1). MEMORY_AND_DISK: a
+    * signature row is id + K longs, ~1/50th of its document, so the
+    * cache spills long before the corpus would. Bounded LRU (same
+    * hygiene rule as the other session caches); eviction, a lost build
+    * race and a session change UNPERSIST the value — the cache owns its
+    * blocks, nothing leaks past the cap. */
+  private val sigCache = new SessionCache[(PlanKey, Int, Int, String), DataFrame](32,
+    sig => { try { sig.unpersist(false); () } catch { case _: Throwable => () } })
 
   private def cachedSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int, numHashes: Int, family: String)(
-      build: => DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val plan = df.select(col(idCol), col(textCol))
-      .queryExecution.analyzed.canonicalized
-    val key = (plan.semanticHash(), shingleWords, numHashes, family)
-    // session check + lookup are ONE atomic step: the unsynchronized
-    // r7 shape let a clear() (new session) land between another
-    // thread's get and its query — unpersisting a DataFrame mid-use
-    // (ADVICE r7 check-then-act race).
-    def lookup(): Option[DataFrame] = synchronized {
-      if (sigCacheSession ne spark) { sigCache.clear(); sigCacheSession = spark }
-      sigCache.get(key).filter(_._1.sameResult(plan)).map(_._2)
+      build: => DataFrame): DataFrame =
+    sigCache.getOrBuild(df.sparkSession,
+        (new PlanKey(df.select(col(idCol), col(textCol))), shingleWords,
+          numHashes, family)) {
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    lookup().getOrElse {
-      val sig = build.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      synchronized {
-        if (sigCacheSession ne spark) { sigCache.clear(); sigCacheSession = spark }
-        sigCache.get(key).filter(_._1.sameResult(plan)).map(_._2) match {
-          case Some(winner) =>
-            // lost a build race: discard OUR unpublished copy and adopt
-            // the cached winner. The r7 shape instead put() over the
-            // winner, whose onEvict unpersisted a DataFrame the winning
-            // thread was possibly mid-query over (silent recompute).
-            try sig.unpersist(false) catch { case _: Throwable => () }
-            winner
-          case None =>
-            sigCache.put(key, (plan, sig))
-            sig
-        }
-      }
-    }
-  }
 
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int = 3, numHashes: Int = 64): DataFrame =

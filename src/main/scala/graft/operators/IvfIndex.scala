@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.warehouse.Connector
@@ -26,11 +25,11 @@ import graft.warehouse.Connector
   *
   * [[topK]] REFUSES on a stale stamp (corpus head moved since the
   * build) instead of silently serving drifted results — the caller
-  * re-[[build]]s (full retrain; an incremental assign-only refresh is
-  * possible for append-only corpora but not implemented). Training is
-  * bounded (`maxTrainRows`, deterministic top-k-by-key-hash sample)
-  * and seeded, same spherical k-means math as the session-cached path,
-  * so the recall floor carries over.
+  * [[refresh]]es: append-only drift assigns only the new rows against
+  * the persisted centroids, anything else re-[[build]]s (full
+  * retrain). Training, cell assignment and the probe/rank tail are the
+  * session-cached path's own ([[Quantizer]], [[Similarity.ivfCells]],
+  * [[Similarity.ivfRank]]), so the recall floor carries over.
   */
 object IvfIndex {
 
@@ -96,43 +95,18 @@ object IvfIndex {
     * witnesses that the clustered layout actually pruned. */
   @volatile var lastProbeScan: Option[(Long, Long)] = None
 
-  private def dotU(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.ArrayDot(
-        org.apache.spark.sql.GraftColumnBridge.expression(a),
-        org.apache.spark.sql.GraftColumnBridge.expression(b)))
-
-  private def unit(v: Array[Double]): Array[Double] = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    val n = math.sqrt(s)
-    if (n == 0) v else v.map(_ / n)
-  }
-
-  /** `n` nearest cells of `raw` by euclidean distance on the unit
-    * sphere (ascending) — assignment AND probing share this math. */
-  private def nearestCells(cents: Array[Array[Double]], raw: Seq[Double],
-      n: Int): Array[Int] = {
-    val v = unit(raw.toArray)
-    val d = new Array[Double](cents.length)
-    var c = 0
-    while (c < cents.length) {
-      val ctr = cents(c)
-      var s = 0.0; var i = 0
-      val m = math.min(ctr.length, v.length)
-      while (i < m) { val t = v(i) - ctr(i); s += t * t; i += 1 }
-      d(c) = s; c += 1
-    }
-    d.indices.sortBy(d).take(n).toArray
-  }
+  /** The persisted centroids, cell-ordered — an O(nlist×dim) driver
+    * read. */
+  private def loadCentroids(conn: Connector, baseName: String)
+      : Quantizer.Centroids =
+    conn.loadTable(centroidsTable(baseName)).read()
+      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
 
   /** Train + persist the index of `baseName`'s current snapshot.
     * Returns the stamped corpus snapshot id. Idempotent per corpus
     * head: rebuilding over the same head replaces both artifacts. */
   def build(conn: Connector, baseName: String, idCol: String,
       vecCol: String, nlist: Int = 16, maxTrainRows: Int = 100000): Long = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     require(nlist > 0, "nlist must be positive")
     val base = conn.loadTable(baseName)
     val head = base.currentSnapshotId.getOrElse(
@@ -140,19 +114,10 @@ object IvfIndex {
     val corpus = base.read(Some(head))
     val spark = conn.spark
     trainings.incrementAndGet()
-    val unitU = udf(unit _)
-    // DETERMINISTIC bounded sample (top-k by portable key hash, the
-    // Sampling rule) — a persisted artifact must not depend on
-    // partition arrival order, or two builds of one snapshot differ
-    val train = corpus
-      .select(col(idCol).cast("string").as("__id"),
-        col(vecCol).cast("array<double>").as("__v"))
-      .filter(col("__v").isNotNull)
-      .orderBy(Sampling.keyHash(col("__id")), col("__id"))
-      .limit(maxTrainRows)
-      .select(array_to_vector(unitU(col("__v"))).as("features"))
-    val cents = new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
-      .fit(train).clusterCenters.map(_.toArray)
+    // uncached: a build must retrain even when this session already
+    // holds a quantizer for the same corpus plan
+    val cents = Quantizer.train(Quantizer.project(corpus, idCol, vecCol),
+      nlist, 5, maxTrainRows, spherical = true)
     val fp = fingerprint(cents)
     val props = Map(StampKey -> head.toString, NlistKey -> nlist.toString,
       VecColKey -> vecCol, CentFpKey -> fp,
@@ -165,13 +130,7 @@ object IvfIndex {
     // one corpus pass: nearest-cell assignment, row-local against the
     // broadcast k×dim centroids; lands range-clustered on cell with
     // cell stats so probes prune files
-    val bc = spark.sparkContext.broadcast(cents)
-    val cellU = udf { v: Seq[Double] => nearestCells(bc.value, v, 1)(0) }
-    val assigned = corpus
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .filter(col("v").isNotNull)
-      .withColumn("n", sqrt(dotU(col("v"), col("v"))))
-      .withColumn("cell", cellU(col("v")))
+    val assigned = Similarity.ivfCells(corpus, idCol, vecCol, cents)
     val parts = math.max(2, nlist / 2)
     // land the ASSIGNMENTS first, the snapshot-STAMPED centroids last:
     // the stamp is what freshness checks trust, so it must never
@@ -241,10 +200,7 @@ object IvfIndex {
               // every property edit cost O(corpus)
               (x.operation == "properties" && x.addedFiles.isEmpty)) &&
               x.removedFiles.isEmpty && x.deleteFiles.isEmpty) =>
-        val spark = conn.spark
-        val cents = conn.loadTable(centroidsTable(baseName)).read()
-          .orderBy("cell").collect()
-          .map(r => r.getSeq[Double](1).toArray)
+        val cents = loadCentroids(conn, baseName)
         val fp = fingerprint(cents)
         // (geometry parity between assignments and centroids was
         // checked ABOVE, before any arm — see geomOk)
@@ -255,14 +211,8 @@ object IvfIndex {
         // rows a second time (idempotent refresh)
         val assignedThrough = assignedThroughOf(conn, baseName).getOrElse(s)
         if (assignedThrough < head) {
-          val bc = spark.sparkContext.broadcast(cents)
-          val cellU = udf { v: Seq[Double] => nearestCells(bc.value, v, 1)(0) }
-          val delta = base.changesSince(assignedThrough, head)
-            .select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("v"))
-            .filter(col("v").isNotNull)
-            .withColumn("n", sqrt(dotU(col("v"), col("v"))))
-            .withColumn("cell", cellU(col("v")))
+          val delta = Similarity.ivfCells(
+            base.changesSince(assignedThrough, head), idCol, vecCol, cents)
           conn.loadTable(assignTable(baseName)).append(delta,
             clusterBy = Seq("cell"), statsCols = Seq("cell"),
             clusterParts = math.max(2, nlist / 2),
@@ -363,8 +313,7 @@ object IvfIndex {
   private def centroidFpOf(conn: Connector, baseName: String)
       : Option[String] = {
     if (!conn.tableExists(centroidsTable(baseName))) return None
-    Some(fingerprint(conn.loadTable(centroidsTable(baseName)).read()
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)))
+    Some(fingerprint(loadCentroids(conn, baseName)))
   }
 
   /** Is the persisted index CURRENT against the corpus head? (stamp id
@@ -400,9 +349,7 @@ object IvfIndex {
         "was since dropped and recreated at this name (create-lineage " +
         "uuid mismatch) — rebuild before serving"))
     val spark = conn.spark
-    val cents = conn.loadTable(centroidsTable(baseName)).read()
-      .orderBy("cell").collect()
-      .map(r => r.getSeq[Double](1).toArray)
+    val cents = loadCentroids(conn, baseName)
     // geometry parity: a build() crash between its assignment commit
     // and centroid replace at an UNCHANGED head passes the stamp check
     // above — refuse to route queries through centroids the rows were
@@ -412,41 +359,26 @@ object IvfIndex {
       s"ivf index of $baseName is INCONSISTENT: assignment rows were " +
         "bucketed by different centroid geometry (an interrupted " +
         "rebuild) — rebuild before serving"))
-    val bc = spark.sparkContext.broadcast(cents)
     val np = math.min(nprobe, cents.length)
-    val probeU = udf { v: Seq[Double] => nearestCells(bc.value, v, np) }
     // the ANN query set is SMALL by contract (the exact path already
     // broadcasts it) — collect it ONCE and probe/join the local frame,
     // so the caller's plan is never evaluated twice (a limit/sample
     // query source would otherwise probe cells one evaluation uses and
     // join rows from another, silently starving results)
-    val q0 = queries
-      .select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
+    val q0 = Similarity.prepped(queries, idCol, vecCol, "query_id", "qv", "qn")
       .filter(col("qv").isNotNull)
-      .withColumn("qn", sqrt(dotU(col("qv"), col("qv"))))
-    val qLocal = spark.createDataFrame(
-      java.util.Arrays.asList(q0.collect(): _*), q0.schema)
-    val q = qLocal.withColumn("cell", explode(probeU(col("qv"))))
-    // the probed cell set is bounded by nlist — a driver-side distinct
-    // over ≤ nlist ints, never O(queries)
-    val cells = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
+    val qRows = q0.collect()
+    val q = spark.createDataFrame(java.util.Arrays.asList(qRows: _*), q0.schema)
+      .withColumn("cell", explode(
+        Quantizer.cells(spark, cents, np, spherical = true)(col("qv"))))
+    // the probed cell set, bounded by nlist, from the collected rows on
+    // the driver — no Spark job
+    val cells = qRows.flatMap(r => Quantizer.nearest(cents,
+      r.getSeq[Double](1).toArray, np, spherical = true)).distinct.toSeq
     val at = conn.loadTable(assignTable(baseName))
     val pruned = at.readWhereIn("cell", cells)
     lastProbeScan = Some((pruned.inputFiles.length.toLong,
       at.log.dataFiles(None).length.toLong))
-    val c = pruned.filter(col("cell").isInCollection(cells))
-      .select(col("id").as("neighbor_id"), col("v").as("cv"),
-        col("n").as("cn"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("sim", dotU(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"), col("rank"))
+    Similarity.ivfRank(pruned.filter(col("cell").isInCollection(cells)), q, k)
   }
 }

@@ -1,13 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Tiny synchronized access-ordered LRU for bounded driver-side
-  * registries (drop counters, plan-keyed probe stats, IVF quantizers,
-  * table plans). Evicts eldest entries above the cap, so a steady
+  * registries (drop counters, snapshot lookups, and through
+  * [[SessionCache]] every session-scoped cache). Evicts eldest entries
+  * above the cap, so a steady
   * working set under the cap stays hot — a clear-all-at-cap variant
   * degenerates to ~0% hit rate once the working set touches the cap,
   * re-paying exactly the probe jobs the cache exists to avoid.
@@ -21,8 +22,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * displaced value sees exactly one onEvict (PropertySpec pins this
   * under concurrent puts). An evicted value may still be in use by a
   * reader that get()'d it moments earlier; callbacks must therefore be
-  * degrade-not-break (unpersist ⇒ recompute), which all three caches'
-  * callbacks are. */
+  * degrade-not-break (unpersist ⇒ recompute), as every caller's
+  * callback is. */
 private[graft] final class BoundedLru[K, V](max: Int,
     onEvict: (K, V) => Unit = (_: K, _: V) => ()) {
   require(max > 0, "LRU cap must be positive")
@@ -70,6 +71,52 @@ private[graft] final class BoundedLru[K, V](max: Int,
       snap.result()
     }
     removed.foreach { case (k, v) => onEvict(k, v) }
+  }
+}
+
+/** A [[BoundedLru]] that holds ONE SparkSession's entries: the first
+  * access from another session clears it, so a cached plan, centroid
+  * set or persisted frame never crosses sessions or pins a dead one.
+  * The session check and the lookup are one atomic step, so a clear
+  * cannot land between another caller's lookup and its use.
+  *
+  * [[getOrBuild]] builds a miss OUTSIDE the lock (builders run Spark
+  * jobs; concurrent callers must not serialize on them). When two
+  * callers race to build one key, the first to publish wins and the
+  * other adopts the winner; `onEvict` releases the loser's value, as
+  * it does every evicted or cleared one. Publishing over the winner
+  * instead would evict a value its builder may be mid-query over. */
+private[graft] final class SessionCache[K, V](max: Int,
+    onEvict: V => Unit = (_: V) => ()) {
+  private val lru = new BoundedLru[K, V](max, (_, v) => onEvict(v))
+  private var session: SparkSession = null
+
+  private def lookup(spark: SparkSession, k: K): Option[V] = synchronized {
+    if (session ne spark) { lru.clear(); session = spark }
+    lru.get(k)
+  }
+
+  def getOrBuild(spark: SparkSession, k: K)(build: => V): V =
+    lookup(spark, k).getOrElse {
+      val built = build
+      val winner = synchronized {
+        lookup(spark, k).getOrElse { lru.put(k, built); built }
+      }
+      if (winner.asInstanceOf[AnyRef] ne built.asInstanceOf[AnyRef])
+        onEvict(built)
+      winner
+    }
+}
+
+/** Cache key for what a DataFrame computes: the canonicalized analyzed
+  * plan, equal under `sameResult` (semantic, not reference, identity —
+  * the same table read twice hits, a hash collision never does). */
+private[graft] final class PlanKey(df: DataFrame) {
+  private val plan = df.queryExecution.analyzed.canonicalized
+  override def hashCode: Int = plan.semanticHash()
+  override def equals(o: Any): Boolean = o match {
+    case k: PlanKey => plan.sameResult(k.plan)
+    case _ => false
   }
 }
 

@@ -1774,8 +1774,11 @@ final class GraftTable private (
           case (mn: java.time.Instant, mx: java.time.Instant) =>
             numMin += c -> mn.toEpochMilli.toDouble
             numMax += c -> mx.toEpochMilli.toDouble
-          case (mn, mx) =>
+          // invalid UTF-8 decodes lossily to U+FFFD, which may sort
+          // inside the real bytes: such a bound leaves c unbounded
+          case (mn, mx) if !s"$mn$mx".contains('\uFFFD') =>
             strMin += c -> mn.toString; strMax += c -> mx.toString
+          case _ => ()
         }
       }
       rel -> FileStat(numMin, numMax, strMin, strMax,

@@ -70,12 +70,13 @@ class PipelineSpec extends AnyFunSuite {
   test("ivfTopK caches the quantizer: second invocation runs fewer jobs, same result") {
     val emb = T.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 8)
-    def runCountingJobs(group: String): (Int, Array[(Long, Long, Int)]) = {
+    def runCountingJobs(group: String,
+        maxTrainRows: Int = 100000): (Int, Array[(Long, Long, Int)]) = {
       val sc = spark.sparkContext
       sc.setJobGroup(group, group)
       val rows =
         try Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 5,
-            nlist = 4, nprobe = 2)
+            nlist = 4, nprobe = 2, maxTrainRows = maxTrainRows)
           .orderBy("query_id", "rank")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
         finally sc.clearJobGroup()
@@ -91,6 +92,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows1 === rows2)
     assert(jobs2 < jobs1,
       s"cached invocation should skip the k-means training jobs ($jobs2 vs $jobs1)")
+    // a smaller training sample trains different centroids: it must not
+    // be served the quantizer cached for the full sample
+    val (jobs3, _) = runCountingJobs("ivf-third", maxTrainRows = 100)
+    assert(jobs3 > jobs2,
+      s"a call differing only in maxTrainRows must train ($jobs3 vs $jobs2)")
+  }
+
+  test("ivfTopK's answer does not depend on the corpus's partitioning") {
+    val emb = T.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 16)
+    val answers = Seq(1, 3, 7, 13).map { p =>
+      Similarity.ivfTopK(emb.repartition(p), queries, "vec_id", "embedding",
+          5, nlist = 8, nprobe = 3)
+        .orderBy("query_id", "rank").collect().toSeq
+    }
+    assert(answers.forall(_.nonEmpty))
+    val distinct = answers.distinct.size
+    assert(distinct == 1,
+      s"$distinct distinct answers over 1, 3, 7 and 13 partitions")
   }
 
   test("IvfIndex: persisted index serves a fresh connector with zero training, matches ivf math") {

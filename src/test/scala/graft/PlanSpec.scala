@@ -224,9 +224,37 @@ class PlanSpec extends AnyFunSuite {
       s"re-probing a cached corpus ran ${after - before} jobs")
   }
 
+  /** Runs `body` inside a fresh job group; the function it receives
+    * returns how many Spark jobs its argument ran. The job group is a
+    * thread-local property that every job run from this thread (or on
+    * its behalf) carries, so other work is not counted. */
+  private def withJobCounter[A](label: String)(body: ((=> Any) => Int) => A): A = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Any): Int = {
+      val before = settled(() => jobs.get)
+      f
+      settled(() => jobs.get) - before
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, label)
+    try body(jobsOf _)
+    finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("commit primitives stay within their Spark job budgets") {
     import java.nio.file.Files
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.streaming.GraftTableSink
     import graft.warehouse.GraftTable
     val s = spark
@@ -236,28 +264,10 @@ class PlanSpec extends AnyFunSuite {
     val budgets = Map("append" -> 1, "upsert" -> 9, "deleteWhere" -> 3,
       "deletePosMor" -> 5, "compact" -> 2, "replace" -> 1, "sinkBatch" -> 2,
       "merge" -> 9, "updateWhere" -> 3, "overwriteWhere" -> 4)
-    val sc = spark.sparkContext
-    val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the job group is a thread-local property that every job run from
-    // this thread (or on its behalf) carries, so other work is not counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
     def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, s"v$i")).toDF("id", "v")
     def table(): GraftTable = GraftTable.create(spark,
       Files.createTempDirectory("graft-budget-"), "t", rows(0L, 200L)).get
-    def jobsOf(f: => Any): Int = {
-      val before = settled(() => jobs.get)
-      f
-      settled(() => jobs.get) - before
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "commit job budgets")
-    val measured = try {
+    val measured = withJobCounter("commit job budgets") { jobsOf =>
       val Seq(appended, upserted, deleted, posDeleted, compacted, replaced,
         sunk, merged, updated, overwritten) = Seq.fill(10)(table())
       compacted.append(rows(200L, 300L))
@@ -277,9 +287,35 @@ class PlanSpec extends AnyFunSuite {
           Map("v" -> lit("u")))),
         "overwriteWhere" -> jobsOf(overwritten.overwriteWhere(col("id") < 20L,
           rows(0L, 10L))))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+    }
+    info(s"jobs per call: ${measured.toSeq.sortBy(_._1).mkString(", ")}")
+    budgets.foreach { case (op, budget) =>
+      assert(measured(op) <= budget, s"$op ran ${measured(op)} jobs, budget $budget")
+    }
+  }
+
+  test("vector operators stay within their Spark job budgets") {
+    import graft.operators.{IvfIndex, Similarity}
+    // Spark jobs per collected call with the quantizer already trained
+    // (session cache or persisted index), as measured when the budgets
+    // were introduced. A budget may only ever tighten.
+    val budgets = Map("ivfTopK" -> 4, "kmeansAssignN" -> 1,
+      "IvfIndex.topK" -> 8)
+    val emb = T.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 8)
+    val conn = new graft.warehouse.Connector(spark,
+      java.nio.file.Files.createTempDirectory("graft-vecbudget-").toString)
+    conn.createTable("emb", emb)
+    IvfIndex.build(conn, "emb", "vec_id", "embedding", nlist = 8)
+    def ivf() = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 5,
+      nlist = 8, nprobe = 3).collect()
+    def assignN() = Similarity.kmeansAssignN(emb, "vec_id", "embedding",
+      8, 2).collect()
+    ivf(); assignN() // train both quantizers outside the measurement
+    val measured = withJobCounter("vector job budgets") { jobsOf =>
+      Map("ivfTopK" -> jobsOf(ivf()), "kmeansAssignN" -> jobsOf(assignN()),
+        "IvfIndex.topK" -> jobsOf(IvfIndex.topK(conn, "emb", queries,
+          "vec_id", "embedding", 5, nprobe = 3).collect()))
     }
     info(s"jobs per call: ${measured.toSeq.sortBy(_._1).mkString(", ")}")
     budgets.foreach { case (op, budget) =>

@@ -2175,6 +2175,20 @@ class WarehouseSpec extends AnyFunSuite {
     assert(t.readWhere("s", Some("\uFFFF"), None)
       .filter(col("x") === 5.0).count() == 1L,
       "the file holding 0xFF was pruned by lossily decoded footer bounds")
+    // the 0xFF string beside a decimal stats column: decimals have no
+    // footer mapping, so this commit's stats come from the aggregate
+    // fallback, whose decoded strings must not narrow the range either
+    val badDec = Files.createTempDirectory("graft-badutf8-dec-")
+    spark.read.parquet(bad.toString)
+      .withColumn("d", col("x").cast("decimal(10,2)"))
+      .coalesce(1).write.mode("overwrite").parquet(badDec.toString)
+    val t2 = GraftTable.create(spark,
+      Files.createTempDirectory("graft-badutf8-t-"), "t",
+      spark.read.parquet(badDec.toString).limit(0)).get
+    t2.addFiles(Seq(onlyParquet(badDec)), statsCols = Seq("x", "s", "d"))
+    assert(t2.readWhere("s", Some("\uFFFF"), None)
+      .filter(col("x") === 5.0).count() == 1L,
+      "the file holding 0xFF was pruned by lossily decoded aggregate bounds")
   }
 
   test("shallow clone shares bytes, evolves independently, and prunes via carried stats") {
