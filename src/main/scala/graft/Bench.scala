@@ -23,9 +23,8 @@ object Bench {
     // (r11) showed the warehouse/service rigs leave hundreds of live
     // threads behind (Spark's cached shuffle-exchange / AQE-stage /
     // broadcast pools grow to max-ever concurrency and never drain
-    // between back-to-back queries; Hadoop's local-FS Shell execs leave
-    // process reapers), which taxes exactly the queries that schedule
-    // hundreds of tiny driver jobs — the streaming micro-batch rigs
+    // between back-to-back queries), which taxes exactly the queries that
+    // schedule hundreds of tiny driver jobs — the streaming micro-batch rigs
     // measured 2.5-3x their true cost when name-sorted last. Run the
     // latency-sensitive streaming block FIRST on the clean JVM, plain
     // relational/pipeline queries next, and the pool-polluting

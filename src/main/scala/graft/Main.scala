@@ -50,6 +50,7 @@ object Main {
       .config("spark.ui.retainedStages", RetainedStages)
       .config("spark.ui.retainedTasks", RetainedTasks)
       .config("spark.sql.ui.retainedExecutions", RetainedExecutions)
+      .config(ForkFreeLocalFs.sessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

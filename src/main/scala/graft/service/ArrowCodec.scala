@@ -10,6 +10,8 @@ import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.types._
 
 /** DataFrame ⇄ Arrow IPC stream, over the public arrow-vector API.
@@ -19,9 +21,9 @@ import org.apache.spark.sql.types._
   * on the offline classpath (SURVEY.md §7.1), so framing is ours but the
   * payload encoding is standard Arrow streaming format.
   *
-  * Write path streams `toLocalIterator` in bounded batches — the whole
-  * table is never materialized on the driver (the reference materializes
-  * twice per read, `icerunner.py:278-279, 306`).
+  * Write path streams in bounded batches — the whole table is never
+  * materialized on the driver (the reference materializes twice per
+  * read, `icerunner.py:278-279, 306`).
   *
   * Type surface = the reference's declared conversion table
   * (`icerunner.py:112-131`) plus the widths its generator actually emits
@@ -156,7 +158,13 @@ object ArrowCodec {
   }
 
   /** Stream a DataFrame as one Arrow IPC stream in bounded row batches.
-    * Driver memory is O(batchRows), not O(table). */
+    * Driver memory is O(batchRows), not O(table).
+    *
+    * A body whose rows already sit on the driver (a local relation, e.g.
+    * `createDataFrame(rows)`) is encoded straight from its plan and runs
+    * no Spark job: `toLocalIterator` would run one job per slice,
+    * min(rows, cores) of them. Every other plan streams through
+    * `toLocalIterator`, so table scans stay bounded. */
   def write(df: DataFrame, out: OutputStream, batchRows: Int = 4096): Long = {
     val schema = df.schema
     val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
@@ -164,7 +172,14 @@ object ArrowCodec {
     var total = 0L
     try {
       writer.start()
-      val it = df.toLocalIterator()
+      val it: Iterator[Row] = df.queryExecution.executedPlan match {
+        case local: LocalTableScanExec =>
+          val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+          // row by row from the relation itself: O(batchRows) extra
+          // memory, no UnsafeRow copy of the whole body
+          local.rows.iterator.map(r => toRow(r).asInstanceOf[Row])
+        case _ => df.toLocalIterator().asScala
+      }
       val vectors = root.getFieldVectors.asScala.toArray
       while (it.hasNext) {
         var n = 0

@@ -14,12 +14,21 @@ import org.apache.spark.sql.types.StructType
 final class FlightClient(spark: SparkSession, val host: String, val port: Int,
     batchRows: Int = 4096) {
 
-  private def call[A](request: String)(f: (Wire.Resp, BufferedInputStream) => A): A = {
+  /** One request on a fresh connection. A `body` is streamed after the
+    * request line as one Arrow IPC stream, and the write side is then
+    * shut so the server reads it to EOF. */
+  private def call[A](request: String, body: Option[DataFrame] = None)(
+      f: (Wire.Resp, BufferedInputStream) => A): A = {
     val sock = new Socket(host, port)
     try {
       val out = new BufferedOutputStream(sock.getOutputStream)
       val in = new BufferedInputStream(sock.getInputStream)
       Wire.writeLine(out, request)
+      body.foreach { df =>
+        ArrowCodec.write(df, out, batchRows)
+        out.flush()
+        sock.shutdownOutput()
+      }
       val resp = new Wire.Resp(Wire.readLine(in)).require()
       f(resp, in)
     } finally sock.close()
@@ -162,35 +171,18 @@ final class FlightClient(spark: SparkSession, val host: String, val port: Int,
 
   /** Append rows (reference: `do_put`, `icerunner.py:284-295`); creates
     * the table on first put. Returns the new snapshot id. */
-  def doPut(table: String, df: DataFrame): Long = {
-    val sock = new Socket(host, port)
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream)
-      val in = new BufferedInputStream(sock.getInputStream)
-      Wire.writeLine(out, Wire.obj("action" -> "do_put", "table" -> table))
-      ArrowCodec.write(df, out, batchRows)
-      out.flush()
-      sock.shutdownOutput() // body complete; server reads to EOF
-      new Wire.Resp(Wire.readLine(in)).require().num("snapshot_id")
-    } finally sock.close()
-  }
+  def doPut(table: String, df: DataFrame): Long =
+    call(Wire.obj("action" -> "do_put", "table" -> table), Some(df)) {
+      (r, _) => r.num("snapshot_id")
+    }
 
   /** Copy-on-write MERGE INTO by key over the wire (parity-plus: the
     * reference writer can only append). Creates the table when absent;
     * returns the new snapshot id. */
   def doUpsert(table: String, df: DataFrame, keys: Seq[String]): Long = {
     require(keys.nonEmpty, "doUpsert requires at least one key column")
-    val sock = new Socket(host, port)
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream)
-      val in = new BufferedInputStream(sock.getInputStream)
-      Wire.writeLine(out, Wire.obj("action" -> "do_upsert",
-        "table" -> table, "keys" -> keys))
-      ArrowCodec.write(df, out, batchRows)
-      out.flush()
-      sock.shutdownOutput()
-      new Wire.Resp(Wire.readLine(in)).require().num("snapshot_id")
-    } finally sock.close()
+    call(Wire.obj("action" -> "do_upsert", "table" -> table, "keys" -> keys),
+        Some(df)) { (r, _) => r.num("snapshot_id") }
   }
 }
 

@@ -323,6 +323,50 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("arrow encode, do_put and do_upsert stay within their Spark job budgets") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.Row
+    import graft.service.{ArrowCodec, FlightClient, FlightService, SampleData}
+    import graft.warehouse.Connector
+    // Spark jobs per call on a driver-local 200-row body, client and
+    // server together, as measured when the budgets were introduced
+    // (when every encode ran one job per slice: encode 4, doPut 5 and
+    // doUpsert 10 at local[4]). A budget may only ever tighten.
+    val budgets = Map("encodeLocal" -> 0, "doPut" -> 1, "doUpsert" -> 6)
+    val sample = SampleData.create(spark, 200, "default")
+    val rows: java.util.List[Row] = sample.collect().toSeq.asJava
+    def body() = spark.createDataFrame(rows, sample.schema)
+    val callSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sites = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(p => callSites.add(p.getProperty("callSite.short", "")))
+    }
+    spark.sparkContext.addSparkListener(sites)
+    val measured = try withJobCounter("arrow job budgets") { jobsOf =>
+      // created inside the job group, so the service's handler threads
+      // inherit it and their jobs are counted too
+      val svc = new FlightService(new Connector(spark,
+        java.nio.file.Files.createTempDirectory("graft-putbudget-").toString))
+      try {
+        val client = new FlightClient(spark, "localhost", svc.boundPort)
+        client.doPut("t", body()) // create the table outside the measurement
+        callSites.clear()
+        Map(
+          "encodeLocal" -> jobsOf(ArrowCodec.write(body(),
+            new java.io.ByteArrayOutputStream())),
+          "doPut" -> jobsOf(client.doPut("t", body())),
+          "doUpsert" -> jobsOf(client.doUpsert("t", body(), Seq("id"))))
+      } finally svc.close()
+    } finally spark.sparkContext.removeSparkListener(sites)
+    info(s"jobs per call: ${measured.toSeq.sortBy(_._1).mkString(", ")}")
+    budgets.foreach { case (op, budget) =>
+      assert(measured(op) <= budget, s"$op ran ${measured(op)} jobs, budget $budget")
+    }
+    val encodeJobs = callSites.asScala.filter(_.contains("ArrowCodec"))
+    assert(encodeJobs.isEmpty, s"driver-local bodies ran encode jobs: $encodeJobs")
+  }
+
   test("funnel is a single aggregation shuffle (+ presentation sort)") {
     val p = plan(SparkEntry.queries("q63_funnel")(spark, sf))
     // one hash exchange for repartition(user_id), one range exchange for

@@ -12,6 +12,7 @@ object SparkTestSession {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(ForkFreeLocalFs.sessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -38,22 +38,31 @@ class ServiceSpec extends AnyFunSuite {
         java.sql.Date.valueOf("2026-01-02")),
       Row(null, null, null, null, null, null, null, null, null, null,
         null, null))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(ArrowCodec.write(df, bos) === 2)
-    val back = ArrowCodec.read(spark,
-      new java.io.ByteArrayInputStream(bos.toByteArray)).df
-    assert(back.schema === schema)
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.LocalTableScanExec
     import org.apache.spark.sql.functions.col
-    val a = back.orderBy(col("l").asc_nulls_last).collect()
-    val e = df.orderBy(col("l").asc_nulls_last).collect()
-    assert(a.length === 2)
-    // binary needs element-wise compare; the rest compares structurally
-    val binIdx = schema.fieldIndex("bin")
-    assert(a(0).toSeq.patch(binIdx, Nil, 1) === e(0).toSeq.patch(binIdx, Nil, 1))
-    assert(a(0).getAs[Array[Byte]]("bin").toSeq === Seq[Byte](1, 2, 3))
-    assert(a(1).toSeq.forall(_ == null))
+    // both encode paths: a distributed body streams through Spark jobs,
+    // a driver-local one is encoded straight from its relation
+    val distributed = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema)
+    val local = spark.createDataFrame(rows.asJava, schema)
+    assert(!distributed.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+    assert(local.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+    for (df <- Seq(distributed, local)) {
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(ArrowCodec.write(df, bos) === 2)
+      val back = ArrowCodec.read(spark,
+        new java.io.ByteArrayInputStream(bos.toByteArray)).df
+      assert(back.schema === schema)
+      val a = back.orderBy(col("l").asc_nulls_last).collect()
+      val e = df.orderBy(col("l").asc_nulls_last).collect()
+      assert(a.length === 2)
+      // binary needs element-wise compare; the rest compares structurally
+      val binIdx = schema.fieldIndex("bin")
+      assert(a(0).toSeq.patch(binIdx, Nil, 1) === e(0).toSeq.patch(binIdx, Nil, 1))
+      assert(a(0).getAs[Array[Byte]]("bin").toSeq === Seq[Byte](1, 2, 3))
+      assert(a(1).toSeq.forall(_ == null))
+    }
   }
 
   test("do_put creates, do_get round-trips, list_tables and metadata agree") {

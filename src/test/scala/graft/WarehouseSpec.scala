@@ -3691,6 +3691,61 @@ class WarehouseSpec extends AnyFunSuite {
     assert(m.forall(_.getLong(1) > 0), "manifest files must exist on disk")
     assert(m.map(r => r.getInt(3)).toSeq == Seq(1, 1))
   }
+
+  test("fork-free local file system: Hadoop's modes, .crc side files, symlinked warehouse") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{FileContext, FileSystem}
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fileUri = new java.net.URI("file:///")
+    assert(FileSystem.get(fileUri, hconf).getClass == classOf[ForkFreeLocalFileSystem])
+    assert(FileContext.getFileContext(fileUri, hconf).getDefaultFileSystem.getClass ==
+      classOf[ForkFreeLocalFs])
+
+    val base = Files.createTempDirectory("graft-fs-")
+    val c = new Connector(spark, base.resolve("wh").toString)
+    c.createTable("t", (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v"))
+    c.insert("t", (51L to 100L).map(i => (i, s"v$i")).toDF("id", "v"))
+    c.delete("t", $"id" <= 10L) // copy-on-write
+    // one GraftTableSink micro-batch with its streaming checkpoint
+    val in = base.resolve("in").toString
+    (1L to 5L).toDF("id").coalesce(1).write.parquet(in)
+    spark.readStream.schema(StructType(Seq(StructField("id", LongType))))
+      .parquet(in).writeStream
+      .format(classOf[graft.streaming.GraftTableSinkProvider].getName)
+      .option("path", base.resolve("sink").toString)
+      .option("checkpointLocation", base.resolve("ckpt").toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    assert(GraftTable.load(spark, base.resolve("sink"), "s").get.read().count() == 5)
+
+    // the modes Hadoop's chmod path produced under the default 022 umask
+    val walk = Files.walk(base)
+    val entries = try walk.iterator().asScala.filter(_ != base).toList finally walk.close()
+    def mode(p: java.nio.file.Path) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val (dirs, files) = entries.partition(Files.isDirectory(_))
+    // every file Hadoop wrote: data files, checkpoint files, their .crc
+    // (graft's own snapshot log is written through java.nio)
+    val hadoopFiles = files.filter { f =>
+      val n = f.getFileName.toString
+      n.endsWith(".parquet") || n.endsWith(".crc") || f.startsWith(base.resolve("ckpt"))
+    }
+    val names = hadoopFiles.map(_.getFileName.toString)
+    assert(names.exists(_.endsWith(".parquet")) && names.exists(_.endsWith(".parquet.crc")),
+      s"data files and their .crc side files: $names")
+    assert(base.resolve("ckpt").toFile.list().toSeq.contains("commits"))
+    hadoopFiles.foreach(f => assert(mode(f) == "rw-r--r--", s"$f is ${mode(f)}"))
+    dirs.foreach(d => assert(mode(d) == "rwxr-xr-x", s"$d is ${mode(d)}"))
+
+    // a table reached through a symlinked warehouse directory
+    val link = Files.createSymbolicLink(base.resolve("link"), base.resolve("wh"))
+    val viaLink = new Connector(spark, link.toString)
+    assert(viaLink.count("t") == 90)
+    assert(viaLink.query("t").where($"id" === 11L).select("v").as[String].collect()
+      .toSeq == Seq("v11"))
+  }
 }
 
 /** Forces one lost head race from inside an operation's own input:
