@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY.md
-  * §2C). All are shuffle-partitioned on their keys; none materialize on
-  * the driver, so they scale linearly with cluster size.
+  * §2C). All are shuffle-partitioned on their keys; none materialize a
+  * corpus on the driver (crossNearDupFilter collects a capped batch), so
+  * they scale linearly with cluster size.
   *
   * Performance posture (round 2): the hot paths avoid Spark's
   * higher-order lambda functions (`transform`/`aggregate` are
@@ -90,23 +91,61 @@ object Dedup {
   private def normTokens(textCol: Column): Column =
     array_distinct(split(regexp_replace(lower(trim(textCol)), "\\s+", " "), " "))
 
-  /** Merge-count of common elements between two SORTED string arrays —
-    * compiled, allocation-free. The candidate-verify step scores many
-    * millions of pairs; the interpreted `array_intersect` expression is
-    * ~50× slower here. */
-  private val sortedIntersectCount = udf { (a: Array[String], b: Array[String]) =>
-    if (a == null || b == null) 0
+  /** The word token set every Jaccard path scores: [[normTokens]] in
+    * `array_sort` order (UTF-8 byte order, i.e. code-point order). */
+  private def sortedTokens(textCol: Column): Column = array_sort(normTokens(textCol))
+
+  /** `a.compareTo(b)` in code-point order, the order `array_sort` gives
+    * strings. `String.compareTo` compares UTF-16 units, which puts a
+    * surrogate pair below U+E000..U+FFFF; shifting those two ranges past
+    * each other at the first differing unit restores code-point order. */
+  private def compareCodePoints(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) a.length - b.length
     else {
-      var i = 0; var j = 0; var c = 0
-      while (i < a.length && j < b.length) {
-        val cmp = a(i).compareTo(b(j))
-        if (cmp == 0) { c += 1; i += 1; j += 1 }
-        else if (cmp < 0) i += 1
-        else j += 1
-      }
-      c
+      def rank(c: Char): Int =
+        if (c < 0xD800) c else if (c < 0xE000) c + 0x2000 else c - 0x800
+      rank(a.charAt(i)) - rank(b.charAt(i))
     }
   }
+
+  private val codePointOrder: Ordering[String] = compareCodePoints(_, _)
+
+  /** Merge-count of common elements between two arrays sorted by
+    * `array_sort` — compiled, allocation-free. The candidate-verify step
+    * scores many millions of pairs; the interpreted `array_intersect`
+    * expression is ~50× slower here. */
+  private def sortedCommon(a: Array[String], b: Array[String]): Int = {
+    var i = 0; var j = 0; var c = 0
+    while (i < a.length && j < b.length) {
+      val cmp = compareCodePoints(a(i), b(j))
+      if (cmp == 0) { c += 1; i += 1; j += 1 }
+      else if (cmp < 0) i += 1
+      else j += 1
+    }
+    c
+  }
+
+  private val sortedIntersectCount = udf { (a: Array[String], b: Array[String]) =>
+    if (a == null || b == null) 0 else sortedCommon(a, b)
+  }
+
+  /** Size bound: J(A,B) ≤ min(|A|,|B|) / max(|A|,|B|), so a pair failing
+    * this cannot clear `t`. Evaluated as that double quotient because the
+    * verify step compares a double quotient too, and rounding is
+    * monotone: `min ≥ t·max` would reject pairs the verify accepts
+    * (7 of 25 tokens at t = 0.28: 0.28 × 25 rounds to 7.000000000000001). */
+  private def sizeBoundOk(na: Int, nb: Int, t: Double): Boolean =
+    math.min(na, nb).toDouble / math.max(na, nb) >= t
+
+  /** AllPairs prefix length `n − ceil(t·n) + 1` for a set of `n` tokens,
+    * with `t·n` taken 1e-6 low so that rounding can only lengthen the
+    * prefix (0.55 × 100 rounds to 55.00000000000001, which would cut it
+    * by one token and lose a pair whose Jaccard is exactly 0.55). */
+  private def prefixLength(n: Int, t: Double): Int =
+    math.min(n, n - math.ceil(t * n - 1e-6).toInt + 1)
 
   /** Exact word-level Jaccard similarity join: pairs (a, b) with
     * `|tokens(a) ∩ tokens(b)| / |tokens(a) ∪ tokens(b)| >= threshold`,
@@ -117,41 +156,134 @@ object Dedup {
     * `n - ceil(t·n) + 1` tokens under that common ordering. Only prefix
     * tokens enter the self-join, so the frequent-token quadratic blowup
     * of the naive token join never happens; candidates are then verified
-    * exactly with `array_intersect` on the full token sets.
+    * exactly with a merge count on the full token sets.
     *
     * Scale: shuffles on (rare) prefix tokens — skew-free by
     * construction, since a token's join fan-out is bounded by its
     * document frequency rank. This is the standard sub-quadratic exact
-    * set-similarity-join; at 100 TB add the length filter below (already
-    * applied: |A| ≥ t·|B| is implied by the jaccard verify).
+    * set-similarity-join, with the size bound applied before the verify.
+    * A row with a null id or null text has no tokens and pairs with
+    * nothing, on every strategy.
     */
   def jaccardJoin(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame =
     jaccardJoinOnTokens(df.select(col(idCol).as("id"),
-      array_sort(normTokens(col(textCol))).as("toks")), threshold)
+      sortedTokens(col(textCol)).as("toks")), threshold)
 
   /** Cross-corpus near-dup filter: the incremental-crawl dedup step —
     * drop `incoming` docs whose distinct-token Jaccard against ANY
     * `corpus` doc clears `threshold`, keep the rest (this is dedup
     * AGAINST an existing snapshot, not within a batch: a new crawl is
-    * cleaned against everything already ingested).
+    * cleaned against everything already ingested). Ids must be integral
+    * on both sides. A row with a null id or null text, on either side,
+    * is never a near-duplicate of anything, so such a batch row is kept.
     *
-    * Rides the SAME adaptive engine as [[jaccardJoin]] — bitmask64 /
-    * bitmask-wide / AllPairs prefix filtering — by parity-tagging ids
-    * (corpus → 2·id, incoming → 2·id+1; ids must be integral and
-    * < 2^62) and keeping only cross-parity pairs. A naive token-keyed
-    * A×B join melts on small-vocabulary corpora (ubiquitous tokens →
-    * quadratic fan-out; measured 7.6 s vs 0.9 s on the sf0.1 fixture);
-    * the engine's strategy gate is exactly the machinery that handles
-    * that. At 100 TB with a snapshot far larger than the batch, run
-    * MinHash bands over the tagged union instead
-    * ([[minhashCandidatesPoly]] + the same parity filter) so
-    * snapshot×snapshot candidates never materialize. */
+    * Two physical paths, the same result:
+    *  - **probe** (a batch of at most [[bitmaskDocCap]] documents with a
+    *    non-null id and text, and `threshold > 0`): the batch's token
+    *    sets go to the driver and out again as a broadcast, with an
+    *    inverted index over each batch document's AllPairs prefix tokens,
+    *    rarest first by document frequency in the batch. ONE Spark job
+    *    then scans the corpus: each row looks up its own prefix under the
+    *    same order, in which its tokens absent from the batch rank first
+    *    and hit nothing, so a word common in the batch enters a row's
+    *    prefix only when the row has few rarer tokens, and the row is
+    *    scored against the batch documents sharing a rare prefix token,
+    *    not against the whole batch. Each candidate passes the size bound
+    *    and the exact merge-count verify, and each task returns the batch
+    *    documents it hit. The result is a filter of `incoming` on those
+    *    ids, so a driver-local batch runs no further job.
+    *  - **union** (a batch over the cap, e.g. one as large as the
+    *    corpus): the [[jaccardJoin]] engine over the union of both sides,
+    *    ids parity-tagged (corpus → 2·id, incoming → 2·id+1; |id| must be
+    *    < 2^62, checked per row) and only cross-parity pairs kept. The
+    *    union holds more than the cap, so the engine takes its prefix
+    *    strategy. It scores corpus × corpus pairs too, which the probe
+    *    never does, and scores batch rows that share an id as one
+    *    document.
+    *
+    * The cap bounds what the driver collects and broadcasts; it is not a
+    * measured crossover between the two paths.
+    *
+    * A corpus far larger than any batch is where a persisted
+    * corpus-side signature index (MinHash band keys refreshed from the
+    * snapshot log) would beat a scan per batch. */
   def crossNearDupFilter(incoming: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double): DataFrame = {
     require(OpUtil.isIntegralId(incoming.schema(idCol).dataType) &&
       OpUtil.isIntegralId(corpus.schema(idCol).dataType),
-      s"$idCol must be integral on BOTH sides (parity tagging)")
+      s"$idCol must be integral on BOTH sides")
+    val cap = math.min(bitmaskDocCap, Int.MaxValue - 1L).toInt
+    lazy val batch = incoming
+      .filter(col(idCol).isNotNull && col(textCol).isNotNull)
+      .select(col(idCol), sortedTokens(col(textCol)))
+      .limit(cap + 1).collect()
+    if (threshold > 0 && batch.length <= cap)
+      probeFilter(incoming, corpus, idCol, textCol, threshold,
+        batch.map(_.get(0)), batch.map(_.getSeq[String](1).toArray))
+    else unionFilter(incoming, corpus, idCol, textCol, threshold)
+  }
+
+  /** [[crossNearDupFilter]]'s probe path over a collected batch:
+    * `ids(i)` has the sorted token set `toks(i)`. */
+  private def probeFilter(incoming: DataFrame, corpus: DataFrame,
+      idCol: String, textCol: String, threshold: Double,
+      ids: Array[Any], toks: Array[Array[String]]): DataFrame = {
+    lastJaccardStrategy.set("probe")
+    val spark = incoming.sparkSession
+    import spark.implicits._
+    // the AllPairs order is rarest first by document frequency in the
+    // batch; a corpus token absent from the batch ranks first (df 0)
+    val df: Map[String, Int] =
+      toks.iterator.flatten.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val index: Map[String, Array[Int]] = toks.indices
+      .flatMap(i => rarestFirst(toks(i), df).iterator
+        .take(prefixLength(toks(i).length, threshold)).map(_ -> i))
+      .groupMap(_._1)(_._2).map { case (t, is) => t -> is.toArray }
+    val bc = spark.sparkContext.broadcast((toks, df, index))
+    val hit = try corpus.filter(col(idCol).isNotNull)
+      .select(sortedTokens(col(textCol))).as[Array[String]]
+      .mapPartitions { rows =>
+        val (batch, df, idx) = bc.value
+        val dirty = new Array[Boolean](batch.length)
+        val seenBy = new Array[Int](batch.length) // last row that scored i
+        var row = 0
+        rows.filter(_ != null).foreach { a =>
+          row += 1
+          // the row's prefix opens with its tokens absent from the batch,
+          // which can hit nothing: only the rest of it is looked up
+          val known = a.filter(df.contains)
+          val probe = prefixLength(a.length, threshold) - (a.length - known.length)
+          if (probe > 0) rarestFirst(known, df).iterator.take(probe).foreach { tok =>
+            idx.get(tok).foreach(_.foreach { i =>
+              if (!dirty(i) && seenBy(i) != row) {
+                seenBy(i) = row
+                val b = batch(i)
+                if (sizeBoundOk(a.length, b.length, threshold)) {
+                  val c = sortedCommon(a, b)
+                  dirty(i) = c.toDouble / (a.length + b.length - c) >= threshold
+                }
+              }
+            })
+          }
+        }
+        dirty.indices.iterator.filter(dirty(_))
+      }.collect()
+    finally bc.destroy()
+    if (hit.isEmpty) incoming
+    else incoming.filter(col(idCol).isNull ||
+      !col(idCol).isin(hit.map(ids(_)).distinct.toSeq: _*))
+  }
+
+  /** `toks` rarest first by the document frequency `df`, ties in token
+    * order: one total order for both sides of the probe. */
+  private def rarestFirst(toks: Array[String], df: Map[String, Int]): Array[String] =
+    toks.sortBy(t => (df.getOrElse(t, 0), t))
+
+  /** [[crossNearDupFilter]]'s union path: the [[jaccardJoin]] engine
+    * over both sides, ids parity-tagged by side. */
+  private def unionFilter(incoming: DataFrame, corpus: DataFrame,
+      idCol: String, textCol: String, threshold: Double): DataFrame = {
     // 2·id(+1) must not wrap: enforce |id| < 2^62 at runtime, per row,
     // inside the tagging expression itself (no extra aggregation job).
     // Silent non-ANSI overflow here would corrupt the parity mapping
@@ -180,20 +312,24 @@ object Dedup {
   /** Character n-gram Jaccard similarity join: same algorithm over the
     * distinct character n-grams of the whitespace-normalized lowercase
     * text — catches near-duplicates that word-level tokens miss
-    * (insertions inside words, punctuation edits). */
+    * (insertions inside words, punctuation edits). The n-grams are
+    * sorted again once they are Spark strings: an n-gram cut inside a
+    * surrogate pair is UTF-8-encoded with the lone half as '?', which
+    * moves it in the order and may repeat another n-gram. */
   def charNgramJaccard(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame =
     jaccardJoinOnTokens(df.select(col(idCol).as("id"),
-      charNgrams(n)(col(textCol)).as("toks")), threshold)
+      array_sort(array_distinct(charNgrams(n)(col(textCol)))).as("toks")), threshold)
 
-  /** Compiled distinct sorted character n-grams of the normalized text
-    * (empty for texts shorter than n, mirroring the oracle's range()). */
+  /** Compiled distinct character n-grams of the normalized text, in
+    * code-point order (empty for texts shorter than n, mirroring the
+    * oracle's range()). */
   def charNgrams(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { text: String =>
       if (text == null) Array.empty[String]
       else {
         val s = text.trim.toLowerCase.replaceAll("\\s+", " ")
-        val seen = new java.util.TreeSet[String]()
+        val seen = new java.util.TreeSet[String](codePointOrder)
         var i = 0
         while (i + n <= s.length) { seen.add(s.substring(i, i + n)); i += 1 }
         seen.toArray(new Array[String](seen.size))
@@ -206,18 +342,22 @@ object Dedup {
     * wrong for, say, a billion-row enum-ish corpus whose vocabulary
     * happens to be small: strategy choice must key on BOTH vocabulary
     * and doc count. Above the cap the sub-quadratic prefix-filter plan
-    * applies regardless of vocabulary size. Test-tunable. */
+    * applies regardless of vocabulary size. It also caps the batch that
+    * [[crossNearDupFilter]] broadcasts for its probe path. Test-tunable. */
   private[graft] var bitmaskDocCap: Long = 65536L
 
-  /** Which physical strategy the last jaccardJoinOnTokens call picked
-    * ("bitmask64" | "bitmask-wide" | "prefix") — test/diagnostic probe. */
+  /** Which physical strategy the last jaccardJoinOnTokens or
+    * crossNearDupFilter call picked ("bitmask64" | "bitmask-wide" |
+    * "prefix" | "probe") — test/diagnostic probe. */
   private[graft] val lastJaccardStrategy =
     new java.util.concurrent.atomic.AtomicReference[String]("")
 
   /** Shared engine for the Jaccard joins: input is (id, toks) with toks
     * sorted distinct. Adaptive bitmask/prefix-filter strategy as
-    * documented below. */
-  private def jaccardJoinOnTokens(toks: DataFrame, threshold: Double): DataFrame = {
+    * documented below. A row with a null id or null tokens can pair with
+    * nothing, so it is dropped up front, the one rule for every path. */
+  private def jaccardJoinOnTokens(all: DataFrame, threshold: Double): DataFrame = {
+    val toks = all.filter(col("id").isNotNull && col("toks").isNotNull)
     val tokDoc = toks.select(col("id"), size(col("toks")).as("n"),
       explode(col("toks")).as("tok"))
     val dfreq = tokDoc.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -268,7 +408,8 @@ object Dedup {
     val prefix = tokDoc.join(dfreq, "tok")
       .withColumn("rnk", row_number().over(
         Window.partitionBy("id").orderBy(col("df"), col("tok"))))
-      .filter(col("rnk") <= col("n") - ceil(col("n") * threshold) + 1)
+      // prefixLength as a native expression, same 1e-6 margin
+      .filter(col("rnk") <= col("n") - ceil(col("n") * threshold - 1e-6) + 1)
       .select("id", "tok")
     val candPairs = prefix.as("a").join(prefix.as("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
@@ -277,11 +418,11 @@ object Dedup {
     candPairs
       .join(toks.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
       .join(toks.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
-      // size bound before the merge-intersect UDF: J <= min/max, so a
-      // length-mismatched candidate can't clear the threshold — cheap
-      // integer filter below the project that runs the per-pair loop
-      .filter(least(size(col("toks_a")), size(col("toks_b"))).cast("double")
-        >= lit(threshold) * greatest(size(col("toks_a")), size(col("toks_b"))))
+      // size bound before the merge-intersect UDF: a length-mismatched
+      // candidate can't clear the threshold — cheap filter below the
+      // project that runs the per-pair loop (sizeBoundOk, natively)
+      .filter(least(size(col("toks_a")), size(col("toks_b"))).cast("double") /
+        greatest(size(col("toks_a")), size(col("toks_b"))) >= threshold)
       .withColumn("common", sortedIntersectCount(col("toks_a"), col("toks_b")))
       .withColumn("jaccard", col("common").cast("double") /
         (size(col("toks_a")) + size(col("toks_b")) - col("common")))
@@ -356,10 +497,10 @@ object Dedup {
     val b = GridSelfJoin.adaptiveBlocks(spark, nDocs, words * 8L + 32L)
     val out = GridSelfJoin.pairs(rows, b, threshold) { (a, c) =>
       val (ma, na) = a; val (mb, nb) = c
-      // size bound: J(A,B) <= min(|A|,|B|)/max(|A|,|B|) — when even that
-      // can't reach the threshold, skip the popcount loop entirely (the
-      // common case on mixed-length corpora at high thresholds)
-      if (math.min(na, nb) < threshold * math.max(na, nb)) -1.0
+      // size bound: when even min/max can't reach the threshold, skip
+      // the popcount loop entirely (the common case on mixed-length
+      // corpora at high thresholds)
+      if (!sizeBoundOk(na, nb, threshold)) -1.0
       else {
         var common = 0; var w = 0
         while (w < words) {

@@ -44,8 +44,7 @@ final class SyncState(stateDir: Path) {
       "target_snapshot_id" -> Wire.JNum(s.targetSnapshotId.getOrElse(-1L)),
       "rows_synced" -> s.rowsSynced,
       "last_sync_status" -> s.lastSyncStatus)
-    val tmp = Files.createTempFile(stateDir, ".sync-", ".tmp")
-    Files.writeString(tmp, json)
+    val tmp = graft.warehouse.SnapshotLog.writeTemp(stateDir, ".sync-", json)
     Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 }

@@ -82,8 +82,7 @@ object Follower {
     val dir = Option(p.toAbsolutePath.getParent)
       .getOrElse(throw new IllegalArgumentException(s"offset path has no parent: $p"))
     Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".offset-", ".tmp")
-    Files.writeString(tmp, id.toString)
+    val tmp = SnapshotLog.writeTemp(dir, ".offset-", id.toString)
     // REPLACE is correct for offsets: single follower, last write wins
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)

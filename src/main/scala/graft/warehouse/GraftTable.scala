@@ -748,8 +748,7 @@ final class GraftTable private (
     }
     cols.foreach(c => require(!c.contains(',') && !c.contains('\n'),
       s"unsupported character in sort-order column '$c'"))
-    val tmp = Files.createTempFile(dir, ".sort-", ".tmp")
-    Files.writeString(tmp, cols.mkString(","))
+    val tmp = SnapshotLog.writeTemp(dir, ".sort-", cols.mkString(","))
     Files.move(tmp, sortOrderPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)

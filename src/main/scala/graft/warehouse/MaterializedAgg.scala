@@ -355,8 +355,8 @@ object MaterializedAgg {
 
   private def writeState(p: Path, st: State): Unit = {
     // tmp + atomic move: a torn state file would corrupt the WAL logic
-    val tmp = Files.createTempFile(p.getParent, ".mvstate-", ".tmp")
-    Files.writeString(tmp, s"${st.applied},${st.pending},${st.viewHead}")
+    val tmp = SnapshotLog.writeTemp(p.getParent, ".mvstate-",
+      s"${st.applied},${st.pending},${st.viewHead}")
     Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }

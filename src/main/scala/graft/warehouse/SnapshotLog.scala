@@ -407,14 +407,26 @@ object SnapshotLog {
     * a temp file beside it, then `link(2)` it into place. False ⇔ EEXIST,
     * a concurrent publisher took the name. */
   private[warehouse] def linkNew(target: Path, content: String): Boolean = {
-    val tmp = Files.createTempFile(target.getParent, ".link-", ".tmp")
+    val tmp = writeTemp(target.getParent, ".link-", content)
     try {
-      Files.writeString(tmp, content)
       Files.createLink(target, tmp)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Write `content` to a new file `<prefix><random>.tmp` in `dir`, to be
+    * linked or moved into place. The file is created as Hadoop creates
+    * data files, mode 0666 under the process umask; `Files.createTempFile`
+    * would make it `rw-------`, so a user who can read a table's parquet
+    * could not read its log or state files. A write that fails removes
+    * the file it created. */
+  private[graft] def writeTemp(dir: Path, prefix: String, content: String): Path = {
+    val tmp = dir.resolve(s"$prefix${java.util.UUID.randomUUID()}.tmp")
+    try Files.writeString(tmp, content, java.nio.file.StandardOpenOption.CREATE_NEW)
+    catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+    tmp
   }
 
   /** Delete a directory tree, children first; no-op when absent. */

@@ -1006,16 +1006,206 @@ class PipelineSpec extends AnyFunSuite {
   test("crossNearDupFilter fails loudly on ids too large for parity tagging") {
     import spark.implicits._
     // 2·id+1 on an id ≥ 2^62 silently wraps under non-ANSI arithmetic,
-    // corrupting the parity mapping — the guard must raise instead
+    // corrupting the parity mapping — the guard must raise instead. The
+    // guard lives on the union path, which a batch over the cap takes.
     val big = Seq(((1L << 62), "some text here")).toDF("doc_id", "text")
     val ok = Seq((1L, "other text entirely")).toDF("doc_id", "text")
-    val e = intercept[Exception] {
-      graft.operators.Dedup.crossNearDupFilter(big, ok, "doc_id", "text", 0.5)
-        .collect()
-    }
+    val before = Dedup.bitmaskDocCap
+    val e = try {
+      Dedup.bitmaskDocCap = 0L
+      intercept[Exception] {
+        Dedup.crossNearDupFilter(big, ok, "doc_id", "text", 0.5).collect()
+      }
+    } finally Dedup.bitmaskDocCap = before
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
     assert(chain(e).exists(_.contains("parity tagging")), chain(e).mkString(" | "))
+    // at the default cap the probe path never tags ids, so a batch id
+    // ≥ 2^62 is filtered like any other: its near-copy goes, a novel
+    // document stays
+    val batch = Seq((Long.MaxValue, "Other text  ENTIRELY"),
+      ((1L << 62) + 1, "nothing like the corpus")).toDF("doc_id", "text")
+    val kept = Dedup.crossNearDupFilter(batch, ok, "doc_id", "text", 0.5)
+      .as[(Long, String)].collect().toSeq
+    assert(Dedup.lastJaccardStrategy.get() === "probe")
+    assert(kept === Seq(((1L << 62) + 1, "nothing like the corpus")))
+  }
+
+  /** Word token sets exactly as the Jaccard paths tokenise: trim spaces,
+    * lowercase, runs of whitespace to one space, split on spaces. */
+  private def refTokens(text: String): Set[String] =
+    text.replaceAll("^ +| +$", "").toLowerCase(java.util.Locale.ROOT)
+      .replaceAll("\\s+", " ").split(" ", -1).toSet
+
+  private def refJaccard(a: Set[String], b: Set[String]): Double = {
+    val c = (a & b).size
+    c.toDouble / (a.size + b.size - c)
+  }
+
+  /** Plain-Scala crossNearDupFilter: a row is dropped iff its id is not
+    * null and some row with that id and non-null text clears `t`
+    * against a corpus row with a non-null id and text. */
+  private def refCrossFilter(batch: Seq[(java.lang.Long, String)],
+      corpus: Seq[(java.lang.Long, String)], t: Double): Seq[(java.lang.Long, String)] = {
+    val corpusToks = corpus.collect { case (id, text) if id != null && text != null =>
+      refTokens(text) }
+    val dirty = batch.collect { case (id, text) if id != null && text != null &&
+      corpusToks.exists(c => refJaccard(refTokens(text), c) >= t) => id }.toSet
+    batch.filter { case (id, _) => id == null || !dirty.contains(id) }
+  }
+
+  private def crossFilterRows(batch: Seq[(java.lang.Long, String)],
+      corpus: Seq[(java.lang.Long, String)], t: Double,
+      cap: Long = Dedup.bitmaskDocCap): (Seq[(java.lang.Long, String)], String) = {
+    import spark.implicits._
+    val before = Dedup.bitmaskDocCap
+    try {
+      Dedup.bitmaskDocCap = cap
+      val out = Dedup.crossNearDupFilter(batch.toDF("doc_id", "text"),
+          corpus.toDF("doc_id", "text"), "doc_id", "text", t)
+        .as[(java.lang.Long, String)].collect().toSeq
+      (out, Dedup.lastJaccardStrategy.get())
+    } finally Dedup.bitmaskDocCap = before
+  }
+
+  private def sortRows(rows: Seq[(java.lang.Long, String)]) =
+    rows.sortBy { case (id, text) => (Option(id).map(_.longValue), Option(text)) }
+
+  test("null text has no tokens on every Jaccard path: never a near-duplicate, always kept") {
+    import spark.implicits._
+    // vocabulary 30 takes the 64-bit mask path, vocabulary 200 the wide
+    // mask path; a null text sits on both sides of every comparison
+    def docsOver(vocab: Int): (Seq[String], Seq[(java.lang.Long, String)]) = {
+      val rnd = new scala.util.Random(vocab)
+      val texts = Seq.fill(20)(Seq.fill(8)(s"w${rnd.nextInt(vocab)}").mkString(" "))
+      (texts, texts.zipWithIndex.map { case (t, i) => (Long.box(i.toLong), t) } ++
+        Seq((Long.box(100L), texts(0)), (Long.box(101L), null: String),
+          (Long.box(102L), null: String)))
+    }
+    for ((vocab, strategy) <- Seq(30 -> "bitmask64", 200 -> "bitmask-wide")) {
+      val (_, docs) = docsOver(vocab)
+      val pairs = Dedup.jaccardJoin(docs.toDF("id", "text"), "id", "text", 0.5)
+        .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
+      assert(Dedup.lastJaccardStrategy.get() === strategy)
+      val expected = (for {
+        (ia, ta) <- docs; (ib, tb) <- docs
+        if ia < ib && ta != null && tb != null
+        if refJaccard(refTokens(ta), refTokens(tb)) >= 0.5
+      } yield (ia.longValue, ib.longValue)).toSet
+      assert(pairs === expected, s"vocabulary $vocab")
+      assert(pairs.contains((0L, 100L)))
+    }
+    for (vocab <- Seq(30, 200)) {
+      val (texts, docs) = docsOver(vocab)
+      val batch = Seq[(java.lang.Long, String)]((200L, texts(1)),
+        (201L, null), (202L, "novel words only"))
+      val corpus = docs.filter(_._1 != 100L)
+      val want = sortRows(refCrossFilter(batch, corpus, 0.5))
+      assert(want.map(_._1.longValue) === Seq(201L, 202L))
+      val (probed, probeStrategy) = crossFilterRows(batch, corpus, 0.5)
+      assert(probeStrategy === "probe")
+      assert(sortRows(probed) === want, s"probe, vocabulary $vocab")
+      val (unioned, _) = crossFilterRows(batch, corpus, 0.5, cap = 1L)
+      assert(sortRows(unioned) === want, s"union, vocabulary $vocab")
+    }
+  }
+
+  test("crossNearDupFilter: probe path, union path and a plain-Scala Jaccard agree") {
+    // a small vocabulary so that near-copies are common; texts include
+    // the empty and whitespace-only strings (both tokenise to [""]),
+    // mixed case, tabs, null text, duplicate batch ids and null ids
+    val words = Seq("alpha", "Beta", "GAMMA", "delta", "eps", "zeta", "eta", "theta")
+    def text(rnd: scala.util.Random): String = rnd.nextInt(12) match {
+      case 0 => ""
+      case 1 => "   "
+      case 2 => null
+      case _ =>
+        Seq.fill(1 + rnd.nextInt(6))(words(rnd.nextInt(words.size)))
+          .map(w => if (rnd.nextBoolean()) w.toUpperCase else w)
+          .mkString(if (rnd.nextInt(4) == 0) "\t" else " ")
+    }
+    for ((t, seed) <- Seq(0.5, 0.7, 0.8, 0.9, 0.95, 1.0).zipWithIndex) {
+      val rnd = new scala.util.Random(seed)
+      val corpus: Seq[(java.lang.Long, String)] =
+        Seq.tabulate(30)(i => (if (i % 9 == 0) null else Long.box(i.toLong), text(rnd)))
+      val batch: Seq[(java.lang.Long, String)] = Seq.tabulate(30) { i =>
+        val id: java.lang.Long =
+          if (i % 11 == 5) null
+          else if (i % 7 == 3) Long.box((1L << 62) + i)
+          else if (i % 5 == 4) Long.box(1000L + i - 1) // the id of row i - 1
+          else Long.box(1000L + i)
+        val body =
+          if (rnd.nextInt(3) == 0) corpus(rnd.nextInt(corpus.size))._2 else text(rnd)
+        (id, body)
+      }
+      val want = sortRows(refCrossFilter(batch, corpus, t))
+      val (probed, strategy) = crossFilterRows(batch, corpus, t)
+      assert(strategy === "probe")
+      assert(sortRows(probed) === want, s"probe at t=$t")
+      // ids ≥ 2^62 cannot be parity-tagged, and the union engine scores
+      // rows that share an id as one document: both are left out of the
+      // union run
+      val small = batch.filter(r => r._1 == null ||
+        (r._1 < (1L << 62) && batch.count(_._1 == r._1) == 1))
+      val (unioned, _) = crossFilterRows(small, corpus, t, cap = 1L)
+      assert(sortRows(unioned) === sortRows(refCrossFilter(small, corpus, t)),
+        s"union at t=$t")
+      assert(want.size < batch.size && want.exists(_._1 != null),
+        s"t=$t: the data should drop some rows and keep some")
+    }
+  }
+
+  test("Jaccard paths keep pairs at the threshold: rounding edges and code-point order") {
+    import spark.implicits._
+    // 0.55 × 100 rounds to 55.00000000000001: a prefix cut by ceil() of
+    // that product misses B ⊂ A with |A| = 100, |B| = 55, J = 0.55, when
+    // A's 45 other tokens sort first. 0.28 × 25 rounds to
+    // 7.000000000000001: a size bound min ≥ t·max rejects B ⊂ A with
+    // |A| = 25, |B| = 7, J = 0.28. array_sort puts U+FF46 before the
+    // surrogate pair of U+1F600, String.compareTo after it: a merge count
+    // in UTF-16 order finds no common token in {U+FF46, U+1F600} and
+    // {U+1F600}.
+    def toks(p: String, n: Int) = (0 until n).map(i => f"$p$i%03d")
+    val cases = Seq(
+      (0.55, toks("a", 45) ++ toks("b", 55), toks("b", 55)),
+      (0.28, toks("c", 18) ++ toks("d", 7), toks("d", 7)),
+      (0.5, Seq("\uFF46", "\uD83D\uDE00"), Seq("\uD83D\uDE00")))
+    for ((t, a, b) <- cases) {
+      assert(refJaccard(a.toSet, b.toSet) >= t)
+      // a third, unrelated document takes the vocabulary past 64 words
+      val df = Seq((1L, a.mkString(" ")), (2L, b.mkString(" ")),
+        (3L, toks("z", 64).mkString(" "))).toDF("id", "text")
+      val before = Dedup.bitmaskDocCap
+      try {
+        for (cap <- Seq(before, 1L)) {
+          Dedup.bitmaskDocCap = cap
+          val pairs = Dedup.jaccardJoin(df, "id", "text", t)
+            .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSeq
+          assert(pairs === Seq((1L, 2L)),
+            s"t=$t, strategy ${Dedup.lastJaccardStrategy.get()}")
+        }
+      } finally Dedup.bitmaskDocCap = before
+      val batch = Seq[(java.lang.Long, String)]((9L, b.mkString(" ")))
+      val corpus = Seq[(java.lang.Long, String)]((1L, a.mkString(" ")))
+      assert(crossFilterRows(batch, corpus, t)._1.isEmpty, s"probe at t=$t")
+      assert(crossFilterRows(batch, corpus, t, cap = 0L)._1.isEmpty, s"union at t=$t")
+    }
+    // character 3-grams: U+1F600 in front of fullwidth text adds two
+    // grams to its 8, J = 0.8. In UTF-16 order the emoji-led gram comes
+    // first, in code-point order last; a merge over one order that
+    // compares in the other steps past every common gram.
+    val fw = "ｆｇｈ，ｉｊｋ，ｌｍ"
+    val grams = Seq((1L, "😀" + fw), (2L, fw)).toDF("id", "text")
+    val before = Dedup.bitmaskDocCap
+    try {
+      for (cap <- Seq(before, 1L)) {
+        Dedup.bitmaskDocCap = cap
+        val pairs = Dedup.charNgramJaccard(grams, "id", "text", 3, 0.8)
+          .as[(Long, Long, Double)].collect().toSeq
+        assert(pairs === Seq((1L, 2L, 0.8)),
+          s"char 3-grams, strategy ${Dedup.lastJaccardStrategy.get()}")
+      }
+    } finally Dedup.bitmaskDocCap = before
   }
 
   test("crossNearDupFilter drops cross-side near-copies, keeps novel docs") {

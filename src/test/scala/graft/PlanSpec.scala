@@ -323,6 +323,28 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("cross-corpus near-dup filter stays within its Spark job budget") {
+    import scala.jdk.CollectionConverters._
+    // Spark jobs per collected crossNearDupFilter call on a driver-local
+    // 50-document batch against a warehouse corpus, as measured when the
+    // budget was introduced (11 when every batch self-joined the union of
+    // batch and corpus). A budget may only ever tighten.
+    val budget = 1
+    val docs = T.documents(spark, sf)
+    val conn = new graft.warehouse.Connector(spark,
+      java.nio.file.Files.createTempDirectory("graft-dedupbudget-").toString)
+    conn.createTable("docs", docs.filter(col("doc_id") < 400))
+    val corpus = conn.loadTable("docs").read()
+    val rows = docs.filter(col("doc_id") >= 400).orderBy("doc_id").limit(50).collect()
+    val batch = spark.createDataFrame(rows.toSeq.asJava, docs.schema)
+    val jobs = withJobCounter("near-dup job budget") { jobsOf =>
+      jobsOf(Dedup.crossNearDupFilter(batch, corpus, "doc_id", "text", 0.8).collect())
+    }
+    info(s"jobs per call: $jobs")
+    assert(Dedup.lastJaccardStrategy.get() === "probe")
+    assert(jobs <= budget, s"crossNearDupFilter ran $jobs jobs, budget $budget")
+  }
+
   test("arrow encode, do_put and do_upsert stay within their Spark job budgets") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}

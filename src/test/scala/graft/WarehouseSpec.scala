@@ -3726,17 +3726,23 @@ class WarehouseSpec extends AnyFunSuite {
     def mode(p: java.nio.file.Path) =
       PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
     val (dirs, files) = entries.partition(Files.isDirectory(_))
-    // every file Hadoop wrote: data files, checkpoint files, their .crc
-    // (graft's own snapshot log is written through java.nio)
-    val hadoopFiles = files.filter { f =>
+    // every file Hadoop wrote: data files, checkpoint files, their .crc;
+    // and graft's own snapshot manifests, written through java.nio, which
+    // must be as readable as the data files beside them
+    val sharedFiles = files.filter { f =>
       val n = f.getFileName.toString
-      n.endsWith(".parquet") || n.endsWith(".crc") || f.startsWith(base.resolve("ckpt"))
+      n.endsWith(".parquet") || n.endsWith(".crc") || f.startsWith(base.resolve("ckpt")) ||
+        f.getParent.getFileName.toString == "_snapshots"
     }
-    val names = hadoopFiles.map(_.getFileName.toString)
+    val names = sharedFiles.map(_.getFileName.toString)
     assert(names.exists(_.endsWith(".parquet")) && names.exists(_.endsWith(".parquet.crc")),
       s"data files and their .crc side files: $names")
+    val manifests = sharedFiles.filter(_.getParent.getFileName.toString == "_snapshots")
+    assert(manifests.exists(_.startsWith(base.resolve("wh"))) &&
+      manifests.exists(_.startsWith(base.resolve("sink"))),
+      s"snapshot manifests of both tables: $manifests")
     assert(base.resolve("ckpt").toFile.list().toSeq.contains("commits"))
-    hadoopFiles.foreach(f => assert(mode(f) == "rw-r--r--", s"$f is ${mode(f)}"))
+    sharedFiles.foreach(f => assert(mode(f) == "rw-r--r--", s"$f is ${mode(f)}"))
     dirs.foreach(d => assert(mode(d) == "rwxr-xr-x", s"$d is ${mode(d)}"))
 
     // a table reached through a symlinked warehouse directory
