@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.{DataType, LongType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the engine-portable 31-bit polynomial
-  * rolling hash (see Dedup.polyHash31 — the UDF formulation): `h₀=7,
-  * h←(h·131+c) mod 2³¹−1` over the string's chars.
+  * rolling hash (see Dedup.polyHash31 — the plain-Scala reference the
+  * tests compare against): `h₀=7, h←(h·131+c) mod 2³¹−1` over the
+  * string's chars.
   *
   * Why an Expression and not a UDF: `doGenCode` emits a direct static
   * call inside the generated code, so the surrounding operator stays in
@@ -49,8 +50,14 @@ object PolyHash31 {
     * drifts. */
   val Mod: Long = 2147483647L
 
+  /** Column form for Scala callers (no session registry needed): the
+    * hash of a string column, null for null. */
+  def column(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      PolyHash31(org.apache.spark.sql.GraftColumnBridge.expression(c)))
+
   /** Static hot path shared by interpreted eval and generated code.
-    * Iterates UTF-16 code units via String — identical to the UDF and
+    * Iterates UTF-16 code units via String — identical to polyHash31 and
     * the DuckDB `list_reduce` on the ASCII corpus. */
   def hash(u: UTF8String): Long = {
     val s = u.toString

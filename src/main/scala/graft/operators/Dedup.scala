@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.PolyHash31
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY.md
   * §2C). All are shuffle-partitioned on their keys; none materialize a
@@ -163,7 +164,8 @@ object Dedup {
     * document frequency rank. This is the standard sub-quadratic exact
     * set-similarity-join, with the size bound applied before the verify.
     * A row with a null id or null text has no tokens and pairs with
-    * nothing, on every strategy.
+    * nothing, on every strategy. Ids must be unique: a repeated id fails
+    * the query, on every strategy.
     */
   def jaccardJoin(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame =
@@ -197,10 +199,14 @@ object Dedup {
     *    corpus): the [[jaccardJoin]] engine over the union of both sides,
     *    ids parity-tagged (corpus → 2·id, incoming → 2·id+1; |id| must be
     *    < 2^62, checked per row) and only cross-parity pairs kept. The
-    *    union holds more than the cap, so the engine takes its prefix
-    *    strategy. It scores corpus × corpus pairs too, which the probe
-    *    never does, and scores batch rows that share an id as one
-    *    document.
+    *    engine keys each distinct (tagged id, token set), so rows that
+    *    share an id are judged each on its own tokens, as on the probe
+    *    path. The union holds more than the cap, so the engine takes its
+    *    prefix strategy. It scores corpus × corpus pairs too, which the
+    *    probe never does.
+    *
+    * On both paths each batch row is judged on its own tokens, and an id
+    * goes when any of its rows is a near-duplicate.
     *
     * The cap bounds what the driver collects and broadcasts; it is not a
     * measured crossover between the two paths.
@@ -281,7 +287,8 @@ object Dedup {
     toks.sortBy(t => (df.getOrElse(t, 0), t))
 
   /** [[crossNearDupFilter]]'s union path: the [[jaccardJoin]] engine
-    * over both sides, ids parity-tagged by side. */
+    * over both sides, each row keyed by its parity-tagged id and its
+    * token set. */
   private def unionFilter(incoming: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double): DataFrame = {
     // 2·id(+1) must not wrap: enforce |id| < 2^62 at runtime, per row,
@@ -289,21 +296,23 @@ object Dedup {
     // Silent non-ANSI overflow here would corrupt the parity mapping
     // and drop/keep the WRONG incoming docs.
     val lim = 1L << 62
-    def tagged(c: Column, odd: Int): Column = {
-      val id = c.cast("long")
-      when(id >= lim || id <= -lim, raise_error(concat(
+    def keyed(side: DataFrame, odd: Int): DataFrame = {
+      val id = col(idCol).cast("long")
+      val tag = when(id >= lim || id <= -lim, raise_error(concat(
         lit(s"crossNearDupFilter: |$idCol| must be < 2^62 for parity tagging, got "),
         id.cast("string")))).otherwise(id * 2 + odd)
+      val toks = sortedTokens(col(textCol))
+      // a null id gives a null key, which the engine drops
+      side.select(when(id.isNotNull, struct(tag.as("tag"), toks.as("toks"))).as("id"),
+        toks.as("toks"))
     }
-    val a = incoming.select(tagged(col(idCol), 1).as("__id"),
-      col(textCol).as("__t"))
-    val b = corpus.select(tagged(col(idCol), 0).as("__id"),
-      col(textCol).as("__t"))
-    val pairs = jaccardJoin(a.unionByName(b), "__id", "__t", threshold)
+    // identical rows are one key: the engine refuses a repeated key
+    val pairs = jaccardJoinOnTokens(
+      keyed(incoming, 1).unionByName(keyed(corpus, 0)).distinct(), threshold)
     val dirty = pairs
-      .filter(pmod(col("id_a"), lit(2)) =!= pmod(col("id_b"), lit(2)))
-      .select(when(pmod(col("id_a"), lit(2)) === 1, col("id_a"))
-        .otherwise(col("id_b")).as("__odd"))
+      .filter(pmod(col("id_a.tag"), lit(2)) =!= pmod(col("id_b.tag"), lit(2)))
+      .select(when(pmod(col("id_a.tag"), lit(2)) === 1, col("id_a.tag"))
+        .otherwise(col("id_b.tag")).as("__odd"))
       .select(expr("(__odd - 1) div 2").as("__na"))
       .distinct()
     incoming.join(dirty, incoming(idCol) === dirty("__na"), "left_anti")
@@ -312,26 +321,25 @@ object Dedup {
   /** Character n-gram Jaccard similarity join: same algorithm over the
     * distinct character n-grams of the whitespace-normalized lowercase
     * text — catches near-duplicates that word-level tokens miss
-    * (insertions inside words, punctuation edits). The n-grams are
-    * sorted again once they are Spark strings: an n-gram cut inside a
-    * surrogate pair is UTF-8-encoded with the lone half as '?', which
-    * moves it in the order and may repeat another n-gram. */
+    * (insertions inside words, punctuation edits). Ids must be unique,
+    * as for [[jaccardJoin]]. */
   def charNgramJaccard(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame =
     jaccardJoinOnTokens(df.select(col(idCol).as("id"),
-      array_sort(array_distinct(charNgrams(n)(col(textCol)))).as("toks")), threshold)
+      charNgrams(n)(col(textCol)).as("toks")), threshold)
 
   /** Compiled distinct character n-grams of the normalized text, in
-    * code-point order (empty for texts shorter than n, mirroring the
-    * oracle's range()). */
+    * code-point order. A character is a code point, as in the oracle's
+    * `length`/`substr`, so no n-gram splits a surrogate pair (empty for
+    * texts shorter than n code points, mirroring the oracle's range()). */
   def charNgrams(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { text: String =>
       if (text == null) Array.empty[String]
       else {
-        val s = text.trim.toLowerCase.replaceAll("\\s+", " ")
+        val cps = text.trim.toLowerCase.replaceAll("\\s+", " ").codePoints().toArray
         val seen = new java.util.TreeSet[String](codePointOrder)
         var i = 0
-        while (i + n <= s.length) { seen.add(s.substring(i, i + n)); i += 1 }
+        while (i + n <= cps.length) { seen.add(new String(cps, i, n)); i += 1 }
         seen.toArray(new Array[String](seen.size))
       }
     }
@@ -352,15 +360,26 @@ object Dedup {
   private[graft] val lastJaccardStrategy =
     new java.util.concurrent.atomic.AtomicReference[String]("")
 
+  /** Filter predicate: true, or a query failure where `repeated` says
+    * another row shares `id` (a Jaccard pair names documents by id). */
+  private def refuseRepeatedId(repeated: Column, id: Column): Column =
+    when(repeated, raise_error(concat(
+      lit("Jaccard join: ids must be unique, id repeated: "), id.cast("string"))))
+      .otherwise(lit(true))
+
   /** Shared engine for the Jaccard joins: input is (id, toks) with toks
     * sorted distinct. Adaptive bitmask/prefix-filter strategy as
     * documented below. A row with a null id or null tokens can pair with
-    * nothing, so it is dropped up front, the one rule for every path. */
+    * nothing, so it is dropped up front, the one rule for every path.
+    * A repeated id fails the query inside a plan each strategy runs. */
   private def jaccardJoinOnTokens(all: DataFrame, threshold: Double): DataFrame = {
     val toks = all.filter(col("id").isNotNull && col("toks").isNotNull)
+    // explode_outer: a row without tokens keeps one (null-token) row, so
+    // the prefix window below still counts it
     val tokDoc = toks.select(col("id"), size(col("toks")).as("n"),
-      explode(col("toks")).as("tok"))
-    val dfreq = tokDoc.groupBy("tok").agg(count(lit(1)).as("df"))
+      explode_outer(col("toks")).as("tok"))
+    val dfreq = tokDoc.filter(col("tok").isNotNull)
+      .groupBy("tok").agg(count(lit(1)).as("df"))
     // Adaptive physical strategy (decided with one tiny agg job, AQE
     // style). Prefix filtering only pays when token frequencies are
     // skewed; a SMALL-VOCABULARY corpus (tiny dictionaries, char
@@ -391,9 +410,12 @@ object Dedup {
     // ONE doc-count probe, bounded at bitmaskDocCap + 1 (both bitmask
     // branches require nDocs ≤ cap, and a count that comes back ≤ cap is
     // exact, so it also decides the maxBlockDocs comparison); forced
-    // only when a bitmask path is still in play
-    lazy val nDocs = toks.limit(math.min(
-      bitmaskDocCap + 1, Int.MaxValue.toLong).toInt).count()
+    // only when a bitmask path is still in play. It counts ids, refusing
+    // repeats: a count ≤ cap has checked every id, so no bitmask
+    // strategy runs on a repeated id.
+    lazy val nDocs = toks.groupBy("id").agg(count(lit(1)).as("rows"))
+      .filter(refuseRepeatedId(col("rows") > 1, col("id")))
+      .limit(math.min(bitmaskDocCap + 1, Int.MaxValue.toLong).toInt).count()
     if (vocabN <= 64 && nDocs <= bitmaskDocCap) {
       lastJaccardStrategy.set("bitmask64")
       return jaccardJoinBitmask(toks, vocabToks.sorted, threshold)
@@ -405,11 +427,17 @@ object Dedup {
       return jaccardJoinBitmaskWide(toks, threshold, vocabToks.sorted, nDocs)
     }
     lastJaccardStrategy.set("prefix")
-    val prefix = tokDoc.join(dfreq, "tok")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("id").orderBy(col("df"), col("tok"))))
-      // prefixLength as a native expression, same 1e-6 margin
-      .filter(col("rnk") <= col("n") - ceil(col("n") * threshold - 1e-6) + 1)
+    val ranked = Window.partitionBy("id").orderBy(col("df"), col("tok"))
+    val prefix = tokDoc.join(dfreq, Seq("tok"), "left")
+      .withColumn("rnk", row_number().over(ranked))
+      .withColumn("rows", count(lit(1)).over(
+        ranked.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      // a row has one row per token here, or one null-token row if it has
+      // no tokens: more rows under its id means another row shares it
+      .filter(refuseRepeatedId(col("rows") > greatest(col("n"), lit(1)), col("id")) &&
+        col("tok").isNotNull &&
+        // prefixLength as a native expression, same 1e-6 margin
+        col("rnk") <= col("n") - ceil(col("n") * threshold - 1e-6) + 1)
       .select("id", "tok")
     val candPairs = prefix.as("a").join(prefix.as("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
@@ -512,16 +540,6 @@ object Dedup {
     out.select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** Word n-gram shingles: contiguous n-word windows (expression form —
-    * readable, but the nested transform/slice/concat_ws evaluates
-    * interpreted; use [[wordShinglesCompiled]] on hot paths). */
-  def wordShingles(textCol: Column, n: Int): Column = {
-    val toks = split(regexp_replace(lower(trim(textCol)), "\\s+", " "), " ")
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(toks) - n, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-  }
-
   /** Compiled word n-gram shingles WITH duplicates — the multiset the
     * repetition profile needs (the distinct variant below erases the
     * very counts it measures). Same tokenizer and window rule as
@@ -550,10 +568,9 @@ object Dedup {
       }
     }
 
-  /** Compiled distinct word n-gram shingles — same SET as
-    * [[wordShingles]] (order differs, irrelevant downstream: minhash
-    * aggregates are order-insensitive). ~10× the interpreted
-    * expression tree on wide corpora. */
+  /** Compiled distinct word n-gram shingles: contiguous n-word windows
+    * of the whitespace-normalized lowercase text, first-seen order (a
+    * text shorter than n words is one window). */
   def wordShinglesCompiled(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { text: String =>
       if (text == null) Array.empty[String]
@@ -578,32 +595,20 @@ object Dedup {
       }
     }
 
+  // ---- the MinHash/SimHash hash family -------------------------------
+  //
+  // One family, built on the 31-bit polynomial rolling hash
+  //   h(s) = fold(c in s)( (h·131 + code(c)) mod (2^31−1) ), h₀ = 7
+  // (graft.functions.PolyHash31, a codegen'd expression) that DuckDB
+  // computes verbatim with list_reduce, so the whole MinHash/SimHash
+  // pipeline is hash-verifiable end-to-end by the differential oracle.
+
   /** Mersenne prime 2^31-1: the permutation-hash domain (aliases the
     * authoritative [[graft.functions.PolyHash31.Mod]]). Products of two
     * 31-bit values stay < 2^62, so the arithmetic below can never
     * overflow a Long (relevant under ANSI mode, default in Spark 4). */
-  private val P: Long = graft.functions.PolyHash31.Mod
+  private val P: Long = PolyHash31.Mod
 
-  /** Deterministic universal-hash family params (a_i, b_i), a_i ∈ [1,P),
-    * b_i ∈ [0,P). Fixed seed → reproducible across runs and engines. */
-  private def hashParams(numHashes: Int): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(0x9E3779B9L)
-    Seq.fill(numHashes)((rnd.nextInt(Int.MaxValue - 1).toLong + 1L,
-      rnd.nextInt(Int.MaxValue).toLong))
-  }
-
-  /** MinHash signatures, computed codegen-friendly:
-    * explode(shingles) → one `xxhash64` per shingle → `numHashes` cheap
-    * affine permutations `(a_i·h + b_i) mod P` → one hash-aggregate
-    * taking the per-document min of each permutation → signature array.
-    *
-    * One shuffle (on doc id), map-side partial min, no interpreted
-    * lambdas in the per-shingle hot loop. ~60× faster than the
-    * `transform(sequence, seed -> array_min(transform(...)))` HOF
-    * formulation, which is evaluated by the interpreter per element.
-    *
-    * @return (id, sig: array&lt;bigint&gt; of length numHashes)
-    */
   /** Session cache of PERSISTED signature relations, keyed on the plan
     * of the (id, text) projection plus the signature parameters:
     * signatures are the corpus INDEX — at scale you compute them once
@@ -618,106 +623,12 @@ object Dedup {
     * hygiene rule as the other session caches); eviction, a lost build
     * race and a session change UNPERSIST the value — the cache owns its
     * blocks, nothing leaks past the cap. */
-  private val sigCache = new SessionCache[(PlanKey, Int, Int, String), DataFrame](32,
+  private val sigCache = new SessionCache[(PlanKey, Int, Int), DataFrame](32,
     sig => { try { sig.unpersist(false); () } catch { case _: Throwable => () } })
 
-  private def cachedSignatures(df: DataFrame, idCol: String, textCol: String,
-      shingleWords: Int, numHashes: Int, family: String)(
-      build: => DataFrame): DataFrame =
-    sigCache.getOrBuild(df.sparkSession,
-        (new PlanKey(df.select(col(idCol), col(textCol))), shingleWords,
-          numHashes, family)) {
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      shingleWords: Int = 3, numHashes: Int = 64): DataFrame =
-    cachedSignatures(df, idCol, textCol, shingleWords, numHashes, "xx") {
-      minhashSignaturesUncached(df, idCol, textCol, shingleWords, numHashes)
-    }
-
-  private[graft] def minhashSignaturesUncached(df: DataFrame, idCol: String,
-      textCol: String, shingleWords: Int, numHashes: Int): DataFrame = {
-    val exploded = df
-      .select(col(idCol).as("id"),
-        explode(wordShinglesCompiled(shingleWords)(col(textCol))).as("sh"))
-      .withColumn("h0", pmod(xxhash64(col("sh")), lit(P)))
-    val mins = hashParams(numHashes).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h0") * a + b, lit(P))).as(s"m$i")
-    }
-    exploded.groupBy(col("id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** Banded LSH near-dup candidate pairs: split the signature into
-    * `bands` bands of `rowsPerBand`, hash each band, and join documents
-    * sharing any band bucket. Sub-quadratic: the shuffle key is
-    * (band index, band hash); the |docs|² cross product never
-    * materializes.
-    *
-    * Returns candidate pairs (id_a < id_b) with their estimated Jaccard
-    * from the full signatures (positional agreement rate), filtered at
-    * `threshold`.
-    */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      shingleWords: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucketSize: Int = 8192): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val sig = minhashSignatures(df, idCol, textCol, shingleWords, numHashes)
-    // Static band-hash array (codegen'd) instead of transform(sequence(…)).
-    val bandHashes = array((0 until bands).map(b =>
-      hash(lit(b) +: (0 until rowsPerBand).map(r =>
-        col("sig")(b * rowsPerBand + r)): _*)): _*)
-    // Band join and pair-dedup carry only (id, band, bucket) — the 64-long
-    // signature arrays are re-attached to the deduped pairs afterwards,
-    // shrinking the wide shuffle ~16x. The stream is skew-capped and
-    // then explicitly shuffled once (capBucketsForSelfJoin): a
-    // degenerate corpus collapsing into one band bucket bounds the
-    // self-join at cap² pairs instead of |docs|², the drop happens
-    // before the shuffle, and both join sides read a single reused
-    // exchange instead of the signature pipeline (shingle explode + 64
-    // permutations + groupBy, the expensive half of the query)
-    // re-deriving per plan reference.
-    val banded = OpUtil.capBucketsForSelfJoin(
-      sig.select(col("id"), posexplode(bandHashes))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
-      Seq("band", "bucket"), maxBucketSize, "graft.minhash.bucket_drops")
-    val idPairs = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val pairs = idPairs
-      .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-    // Positional agreement as a static codegen'd sum, not zip_with+filter.
-    val agree = (0 until numHashes).map(i =>
-      when(col("sig_a")(i) === col("sig_b")(i), 1).otherwise(0))
-      .reduce(_ + _)
-    pairs
-      .withColumn("est_jaccard", agree.cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
-  }
-
-  // ---- oracle-verifiable (engine-portable) hash family ----------------
-  //
-  // xxhash64 has no DuckDB equivalent, so the minhash/simhash operators
-  // above are only rows-checked by the differential oracle. The *Poly
-  // variants below use a 31-bit polynomial rolling hash
-  //   h(s) = fold(c in s)( (h·131 + code(c)) mod (2^31−1) ), h₀ = 7
-  // that DuckDB can compute verbatim with list_reduce, making the whole
-  // MinHash/SimHash pipeline hash-verifiable end-to-end. Same shuffle
-  // shape and codegen posture as the xxhash64 path; the hash is ~2×
-  // slower per byte, so prefer the xxhash64 variants when no oracle is
-  // needed.
-
-  /** Compiled 31-bit polynomial rolling hash (matches the DuckDB
-    * `list_reduce` formulation exactly; ASCII/UTF-16 agree on the
-    * corpus). */
+  /** Plain-Scala 31-bit polynomial rolling hash: the reference the
+    * native expression and the DuckDB `list_reduce` formulation are
+    * tested against (ASCII/UTF-16 agree on the corpus). */
   private[graft] def polyHash31(s: String): Long = {
     if (s == null) return 0L
     var a = 7L
@@ -725,15 +636,6 @@ object Dedup {
     while (i < s.length) { a = (a * 131 + s.charAt(i)) % P; i += 1 }
     a
   }
-
-  val polyHash = udf(polyHash31 _)
-
-  /** Column form of the NATIVE expression (graft.functions.PolyHash31,
-    * codegen'd) — used on hot paths; the UDF stays for API parity. */
-  private def polyHashCol(c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.PolyHash31(
-        org.apache.spark.sql.GraftColumnBridge.expression(c)))
 
   /** Engine-portable affine family: a_i,b_i from fixed LCG constants so
     * the oracle can regenerate them from `i` alone. */
@@ -744,13 +646,21 @@ object Dedup {
       (if (a == 0) 1L else a, b)
     }
 
-  /** MinHash signatures on the portable hash family — same plan shape as
-    * [[minhashSignatures]] (explode → hash once → affine mins in one
-    * aggregate). */
+  /** MinHash signatures, computed codegen-friendly: explode(shingles) →
+    * one hash per shingle → `numHashes` cheap affine permutations
+    * `(a_i·h + b_i) mod P` → one hash-aggregate taking the per-document
+    * min of each permutation. One shuffle (on doc id), map-side partial
+    * min, no interpreted lambdas in the per-shingle hot loop.
+    *
+    * @return (id, sig: array&lt;bigint&gt; of length numHashes)
+    */
   def minhashSignaturesPoly(df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int = 3, numHashes: Int = 64): DataFrame =
-    cachedSignatures(df, idCol, textCol, shingleWords, numHashes, "poly") {
+    sigCache.getOrBuild(df.sparkSession,
+        (new PlanKey(df.select(col(idCol), col(textCol))), shingleWords,
+          numHashes)) {
       minhashSignaturesPolyUncached(df, idCol, textCol, shingleWords, numHashes)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   private[graft] def minhashSignaturesPolyUncached(df: DataFrame, idCol: String,
@@ -758,7 +668,7 @@ object Dedup {
     val exploded = df
       .select(col(idCol).as("id"),
         explode(wordShinglesCompiled(shingleWords)(col(textCol))).as("sh"))
-      .withColumn("h0", polyHashCol(col("sh")))
+      .withColumn("h0", PolyHash31.column(col("sh")))
     val mins = polyParams(numHashes).zipWithIndex.map { case ((a, b), i) =>
       min(pmod(col("h0") * a + b, lit(P))).as(s"m$i")
     }
@@ -768,10 +678,17 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** Banded LSH candidates on the portable family. The band join keys on
+  /** Banded LSH near-dup candidate pairs: split the signature into
+    * `bands` bands of `rowsPerBand` and join documents sharing any band.
+    * Sub-quadratic: the shuffle key is (band index, band slice); the
+    * |docs|² cross product never materializes. The band join keys on
     * the **raw signature slice** (array equality), not a hash of it —
     * bit-identical to the oracle's slice comparison, no collision-borne
-    * false candidates. */
+    * false candidates.
+    *
+    * Returns candidate pairs (id_a < id_b) with their estimated Jaccard
+    * from the full signatures (positional agreement rate), filtered at
+    * `threshold`. */
   def minhashCandidatesPoly(df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.5, maxBucketSize: Int = 8192): DataFrame = {
@@ -780,14 +697,15 @@ object Dedup {
     val sig = minhashSignaturesPoly(df, idCol, textCol, shingleWords, numHashes)
     val bandSlices = array((0 until bands).map(b =>
       slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)
-    // Same slim-shuffle shape as the xxhash variant: band join and dedup
-    // on bare ids (bucket = raw slice for oracle-exact equality), then
-    // re-attach signatures to the few surviving pairs. Skew-capped like
-    // the xxhash variant; a triggered cap trades oracle-exactness for
-    // bounded work and is LOUD (accumulator), never silent. Capped then
-    // shuffled once explicitly (see minhashCandidates): both self-join
-    // sides reuse the exchange instead of re-deriving the signature
-    // pipeline.
+    // Slim shuffle: band join and dedup on bare ids (bucket = raw slice
+    // for oracle-exact equality), then re-attach signatures to the few
+    // surviving pairs. Skew-capped: a degenerate corpus collapsing into
+    // one band bucket bounds the self-join at cap² pairs instead of
+    // |docs|², and a triggered cap trades oracle-exactness for bounded
+    // work and is LOUD (accumulator), never silent. Capped then
+    // shuffled once explicitly (OpUtil.capBucketsForSelfJoin): both
+    // self-join sides reuse the exchange instead of re-deriving the
+    // signature pipeline (shingle explode + K permutations + groupBy).
     val banded = OpUtil.capBucketsForSelfJoin(
       sig.select(col("id"), posexplode(bandSlices))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
@@ -809,22 +727,24 @@ object Dedup {
       .select("id_a", "id_b", "est_jaccard")
   }
 
-  /** Full near-dup dedup on the portable family (candidates →
-    * components → canonical-keeper). */
+  /** Full MinHash near-dup dedup: candidates → components → keep the
+    * canonical doc per component. */
   def minhashDedupPoly(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5): DataFrame = {
     val cands = minhashCandidatesPoly(df, idCol, textCol, threshold = threshold)
     keepCanonical(df, idCol, cands)
   }
 
-  /** 31-bit SimHash on the portable hash (bits 0..30 of the token
-    * hash) — explode → hash → per-bit votes in one aggregate, like
-    * [[simhashOf]]. */
+  /** 31-bit SimHash over word tokens (bits 0..30 of the token hash),
+    * codegen-friendly: explode tokens → one hash per token → 31 static
+    * per-bit vote expressions summed in a single hash-aggregate, then
+    * assemble the sign bits. One shuffle on doc id; no interpreted
+    * lambdas. */
   def simhashPoly(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val bits = 31
     val toks = df.select(col(idCol).as("id"),
       explode(split(regexp_replace(lower(trim(col(textCol))), "\\s+", " "), " ")).as("tok"))
-      .withColumn("h", polyHashCol(col("tok")))
+      .withColumn("h", PolyHash31.column(col("tok")))
     val votes = (0 until bits).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"v$b"))
     val assembled = (0 until bits).map(b =>
@@ -993,9 +913,6 @@ object Dedup {
       .select(col("id"), coalesce(col("canonical_id"), col("id")).as("canonical_id"))
   }
 
-  /** Diagnostic switch: per-round timing on stderr (tests/profiling). */
-  private[graft] var ccDebug: Boolean = false
-
   /** Edge-count bound for the driver union-find fast path: below this
     * many (undirected) candidate pairs the whole component labeling runs
     * on the driver in one collect (≤ ~16 MB of edge tuples, microseconds
@@ -1083,12 +1000,8 @@ object Dedup {
       }, preservesPartitioning = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       var iter = 0
-      val t0 = System.nanoTime()
       var converged = labels.isEmpty()
-      if (ccDebug) System.err.println(
-        f"[cc] init+edges ${(System.nanoTime() - t0) / 1e9}%.3f s, edges=${edges.count()}")
       while (iter < maxIter && !converged) {
-        val ti = System.nanoTime()
         val changed = sc.longAccumulator(s"cc-changed-$iter")
         // hop 1 — neighbor min: every node takes the min label among its
         // neighbors (one min-reduce shuffle; edge join is narrow)
@@ -1113,8 +1026,6 @@ object Dedup {
         labels = upd
         prev.unpersist(blocking = false)
         converged = changed.value == 0L
-        if (ccDebug) System.err.println(
-          f"[cc] iter $iter ${(System.nanoTime() - ti) / 1e9}%.3f s changed=${changed.value}")
         iter += 1
       }
       if (!converged)
@@ -1159,45 +1070,6 @@ object Dedup {
           "(duplicate-graph diameter exceeds the cap; raise maxIter)")
     labels
   }
-
-  /** Full MinHash near-dup pipeline: candidates → components → keep the
-    * canonical doc per component. */
-  def minhashDedup(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5): DataFrame = {
-    val cands = minhashCandidates(df, idCol, textCol, threshold = threshold)
-    keepCanonical(df, idCol, cands)
-  }
-
-  /** 64-bit SimHash over word tokens, codegen-friendly: explode tokens,
-    * one xxhash64 per token, 64 static per-bit vote expressions summed in
-    * a single hash-aggregate, then assemble the sign bits. One shuffle on
-    * doc id; no interpreted lambdas. */
-  def simhashOf(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("id"),
-      explode(split(regexp_replace(lower(trim(col(textCol))), "\\s+", " "), " ")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val votes = (0 until 64).map(bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"v$bit"))
-    val bits = (0 until 64).map(bit =>
-      when(col(s"v$bit") > 0, lit(1L << bit)).otherwise(0L))
-    toks.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"), bits.reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
-  }
-
-  /** Column-level SimHash (interpreted HOFs — fine for small inputs;
-    * prefer [[simhashOf]] on the hot path). */
-  def simhash(textCol: Column): Column = {
-    val toks = split(regexp_replace(lower(trim(textCol)), "\\s+", " "), " ")
-    val bitVotes = transform(sequence(lit(0), lit(63)), bit =>
-      aggregate(toks, lit(0),
-        (acc, t) => acc + when(call_function("shiftright", xxhash64(t), bit).bitwiseAND(1) === 1, 1).otherwise(-1)))
-    aggregate(zip_with(bitVotes, sequence(lit(0), lit(63)),
-        (vote, bit) => when(vote > 0, call_function("shiftleft", lit(1L), bit)).otherwise(0L)),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** EXACT-SUBSTRING span removal (the Lee et al. 2022 "Deduplicating
     * Training Data" shape, at whitespace-token granularity): any

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling (SURVEY.md §2C): image/audio/video
@@ -191,8 +191,6 @@ object Multimodal {
       }
     out.toDF(idCol, "width", "height", "channels")
   }
-
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Solid-gray PNG generator (REAL JDK encoder) — the deterministic
     * image synthesizer for codec roundtrip checks: a w×h TYPE_INT_RGB

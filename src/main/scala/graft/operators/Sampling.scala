@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.PolyHash31
 
 /** Deterministic, engine-portable sampling and splitting for
   * training-data pipelines (the reproducible train/eval carve-out every
@@ -19,15 +20,10 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  private def polyHashCol(c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.PolyHash31(
-        org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
   /** Stable bucket in [0, buckets) from the key's string rendering. */
   def hashBucket(key: Column, buckets: Int): Column = {
     require(buckets > 0, "buckets must be positive")
-    pmod(polyHashCol(key.cast("string")), lit(buckets.toLong))
+    pmod(PolyHash31.column(key.cast("string")), lit(buckets.toLong))
   }
 
   /** Deterministic train/eval split: rows whose bucket falls below
@@ -51,7 +47,7 @@ object Sampling {
   /** Raw portable hash of the key's string rendering — the stable
     * pseudo-random ORDER the stratified sampler ranks by (bucketing
     * collapses ties; ordering needs the full 31-bit value). */
-  def keyHash(key: Column): Column = polyHashCol(key.cast("string"))
+  def keyHash(key: Column): Column = PolyHash31.column(key.cast("string"))
 
   /** Deterministic stratified sample: up to `k` rows per group, chosen
     * by portable-hash order with the key as tie-break — a reproducible

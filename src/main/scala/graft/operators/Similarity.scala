@@ -352,6 +352,36 @@ object Similarity {
     rankTopK(idPairs.join(q, "query_id").join(c, "neighbor_id"), k)
   }
 
+  /** Row-count cap for the sizing probes: counts saturate here, so the
+    * probe stays cheap on an arbitrarily large corpus. A count AT the cap
+    * means "at least this many" — consumers must treat it as a lower
+    * bound (adaptiveBlocks saturates). */
+  private val ProbeCountCap: Long = 16L << 20
+
+  /** Session cache of (dims, cappedCount) for the sizing probes, keyed
+    * on the plan of the (id, vec) projection. The probes are two
+    * bounded jobs (first-row dims + capped count); without the cache
+    * every exactCosinePairs call re-ran them even when the same corpus
+    * was probed moments before (q60's dedup gate + q33 in one session).
+    * BOUNDED (LRU, same hygiene rule as `OpUtil.dropCounters`): each
+    * entry retains a canonicalized LogicalPlan, so unbounded growth
+    * across a long-lived server session's distinct corpora would leak
+    * plan trees; LRU eviction keeps a steady working set hot and a cold
+    * re-probe costs two bounded jobs. */
+  private val statsCache = new SessionCache[PlanKey, (Int, Long)](64)
+
+  private def corpusStats(df: DataFrame, idCol: String,
+      vecCol: String): (Int, Long) =
+    statsCache.getOrBuild(df.sparkSession,
+        new PlanKey(df.select(col(idCol), col(vecCol)))) {
+      val dims = df.select(col(vecCol)).filter(col(vecCol).isNotNull)
+        .limit(1).collect().headOption
+        .map(_.getSeq[Any](0).length).getOrElse(0)
+      val n = df.select(col(idCol))
+        .limit(math.min(ProbeCountCap, Int.MaxValue.toLong).toInt).count()
+      (dims, n)
+    }
+
   /** Exact pairwise near-duplicate pairs: all (a < b) with cosine >=
     * threshold, with a SHUFFLE-ONLY plan — no driver collect, no
     * broadcast. O(n²) *scoring* is inherent to exact all-pairs
@@ -368,41 +398,8 @@ object Similarity {
     * hash shuffle, executor-sized tasks, AQE-splittable.
     *
     * The sub-quadratic scale path remains [[cosineNearDupPairs]] (LSH
-    * candidates); [[exactCosinePairsBlock]] is the single-node-fastest
-    * variant for corpora that fit a memory budget.
+    * candidates).
     */
-  /** Row-count cap for the sizing probes: counts saturate here, so the
-    * probe stays cheap on an arbitrarily large corpus. A count AT the cap
-    * means "at least this many" — consumers must treat it as a lower
-    * bound (adaptiveBlocks saturates; the block-broadcast gate must
-    * refuse). */
-  private val ProbeCountCap: Long = 16L << 20
-
-  /** Session cache of (dims, cappedCount) for the sizing probes, keyed
-    * on the plan of the (id, vec) projection. The probes are two
-    * bounded jobs (first-row dims + capped count); without the cache
-    * every exactCosinePairs / exactCosinePairsBlock call re-ran them
-    * even when the same corpus was probed moments before (q60's dedup
-    * gate + q33 in one session). BOUNDED (LRU, same hygiene rule as
-    * `OpUtil.dropCounters`): each entry retains a canonicalized
-    * LogicalPlan, so unbounded growth across a long-lived server
-    * session's distinct corpora would leak plan trees; LRU eviction
-    * keeps a steady working set hot and a cold re-probe costs two
-    * bounded jobs. */
-  private val statsCache = new SessionCache[PlanKey, (Int, Long)](64)
-
-  private def corpusStats(df: DataFrame, idCol: String,
-      vecCol: String): (Int, Long) =
-    statsCache.getOrBuild(df.sparkSession,
-        new PlanKey(df.select(col(idCol), col(vecCol)))) {
-      val dims = df.select(col(vecCol)).filter(col(vecCol).isNotNull)
-        .limit(1).collect().headOption
-        .map(_.getSeq[Any](0).length).getOrElse(0)
-      val n = df.select(col(idCol))
-        .limit(math.min(ProbeCountCap, Int.MaxValue.toLong).toInt).count()
-      (dims, n)
-    }
-
   def exactCosinePairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, blocks: Int = 0): DataFrame = {
     val b = if (blocks > 0) blocks
@@ -462,67 +459,6 @@ object Similarity {
       .select(least(col("id_l"), col("id_r")).as("id_a"),
         greatest(col("id_l"), col("id_r")).as("id_b"),
         round(col("sim"), 6).as("sim"))
-  }
-
-  /** Block-matrix exact pairs — the single-node-fastest variant: the
-    * corpus (id, vector, norm) is collected into one primitive broadcast
-    * block; each partition streams its rows against the block in a tight
-    * primitive loop (no per-pair UDF, no ArrayData copies; ~10× on the
-    * scorer). GUARDED: the corpus must fit a driver/executor memory
-    * budget — above `maxBlockBytes` (or for non-integral ids) this
-    * delegates to the shuffle-only [[exactCosinePairs]] instead of
-    * OOMing the driver.
-    */
-  def exactCosinePairsBlock(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, maxBlockBytes: Long = 512L << 20): DataFrame = {
-    if (!OpUtil.isIntegralId(df.schema(idCol).dataType))
-      return exactCosinePairs(df, idCol, vecCol, threshold)
-    val (dims, n) = corpusStats(df, idCol, vecCol)
-    val maxDocs = if (dims == 0) 0L else maxBlockBytes / (8L * dims + 24L)
-    // a count AT the probe cap is a lower bound, not an exact size —
-    // refuse the broadcast path rather than trust it
-    if (n > maxDocs || n >= ProbeCountCap)
-      return exactCosinePairs(df, idCol, vecCol, threshold)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(col(idCol).cast("long"),
-        col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-    val block = rows.collect().sortBy(_._1)
-    val ids = block.map(_._1)
-    val vecs = block.map(_._2)
-    val norms = vecs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((ids, vecs, norms))
-    val out = rows.mapPartitions { it =>
-      val (bids, bvecs, bnorms) = bc.value
-      it.flatMap { case (id, v) =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        val nrm = math.sqrt(s)
-        // score only the strict upper triangle (id < corpus id)
-        val start = {
-          var lo = 0; var hi = bids.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (bids(mid) <= id) lo = mid + 1 else hi = mid
-          }
-          lo
-        }
-        (start until bids.length).iterator.flatMap { j =>
-          val w = bvecs(j)
-          var dot = 0.0; var k = 0
-          val n = math.min(v.length, w.length)
-          while (k < n) { dot += v(k) * w(k); k += 1 }
-          val sim = dot / (nrm * bnorms(j))
-          if (sim >= threshold) Some((id, bids(j), sim)) else None
-        }
-      }
-    }.toDF("id_a", "id_b", "sim")
-    out.select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
   }
 
   /** K-means document clustering: assign every embedding to one of `k`

@@ -66,7 +66,7 @@ object Pipeline {
   }
 
   /** 31-bit polynomial rolling hash of column `tok`/`s` — must stay in
-    * lock-step with Dedup.polyHash (h₀=7, ×131, mod 2^31−1). */
+    * lock-step with graft.functions.PolyHash31 (h₀=7, ×131, mod 2^31−1). */
   private def polyHashOf(c: String): String =
     s"list_reduce(list_prepend(CAST(7 AS BIGINT), " +
       s"list_transform(string_split($c, ''), ch -> CAST(ascii(ch) AS BIGINT))), " +
@@ -178,7 +178,7 @@ object Pipeline {
     // The portable 31-bit polynomial hash family lets DuckDB rebuild the
     // ENTIRE MinHash pipeline (shingles → hashes → 64 affine mins →
     // 16-band LSH join → signature-agreement estimate) and hash-verify
-    // it; the xxhash64 variant stays in the library for oracle-free use.
+    // it; it is the library's one MinHash family.
     Q("q24_minhash_pairs", minhashCandSql +
       """SELECT id_a, id_b, est_jaccard FROM est
         |WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin) { (s, d) =>

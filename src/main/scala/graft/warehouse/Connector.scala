@@ -34,9 +34,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
 
   def viewExists(name: String): Boolean = ViewStore.exists(viewsDir, name)
 
-  /** The stored SQL text of a persistent view. */
-  def viewSql(name: String): String = ViewStore.load(viewsDir, name).sql
-
   private val matViewsDir: Path = root.resolve("_matviews")
   private def mvTableDir(name: String): Path =
     matViewsDir.resolve(MatViewStore.canon(name))
@@ -2444,7 +2441,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : Option[DataFrame] = plan match {
     case c: org.apache.spark.sql.catalyst.plans.logical.Call =>
-      import org.apache.spark.sql.catalyst.expressions.NamedArgumentExpression
       // names WE claim: bare known names, and anything under the
       // graft/system prefix (unknown there refuses with the supported
       // list). Everything else — other catalogs, unknown bare names —
@@ -2675,7 +2671,6 @@ final class Connector(val spark: SparkSession, warehousePath: String) {
     require(!matViewExists(newName),
       s"rename: a MATERIALIZED VIEW already spells '$newName' — the " +
         "SQL namespace is shared")
-    val from = tableDir(oldName)
     val to = tableDir(newName)
     require(!Files.exists(to),
       s"rename: destination path '$to' already exists")

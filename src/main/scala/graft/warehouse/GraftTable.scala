@@ -526,13 +526,6 @@ final class GraftTable private (
     spark.read.parquet(snap.deleteFiles.map(f => dir.resolve(f).toString): _*)
   }
 
-  private def requireNoEqDeletes(op: String): Unit = {
-    val live = log.eqDeletesOf(log.snapshots, None)
-    require(live.isEmpty,
-      s"$op on $name requires materializing ${live.size} live " +
-        "merge-on-read delete(s) first — run compact()")
-  }
-
   /** Highest micro-batch id a streaming sink identified by `appId` has
     * COMMITTED into this table (the Delta `txn` lookup): scans visible
     * manifests for `graft.txn.*` markers. A sink replaying a batch
@@ -4002,7 +3995,8 @@ final class GraftTable private (
     // commit recorded its per-file position counts, positions are
     // never duplicated across commits, and a named file that was since
     // rewritten left the visible set with its positions)
-    if (dels.exists(d => !d._2.isInstanceOf[Tomb.Pos])) return None
+    val pos = dels.collect { case (sid, Tomb.Pos(_, named)) => (sid, named) }
+    if (pos.size != dels.size) return None
     val statsByFile = snaps.flatMap(_.stats).toMap
     val visible = log.dataFilesOf(snaps, asOf)
       .map(a => dir.relativize(Paths.get(a)).toString)
@@ -4011,7 +4005,7 @@ final class GraftTable private (
     val visibleSet = visible.toSet
     val bySid = snaps.map(s => s.snapshotId -> s).toMap
     var deducted = 0L
-    dels.foreach { case (sid, Tomb.Pos(_, named)) =>
+    pos.foreach { case (sid, named) =>
       named.intersect(visibleSet).foreach { f =>
         GraftTable.posCountOf(snaps, bySid, sid, f) match {
           case Some(n) => deducted += n

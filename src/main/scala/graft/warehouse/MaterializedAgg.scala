@@ -2,7 +2,7 @@ package graft.warehouse
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained materialized AGGREGATE view: a GraftTable
@@ -65,10 +65,10 @@ final class MaterializedAgg private (
     groupCols: Seq[String],
     sumCols: Seq[String],
     minMaxCols: Seq[String],
-    filterSql: Option[String] = None,
-    avgCols: Seq[String] = Nil,
-    nnCols: Seq[String] = Nil,
-    derived: Seq[(String, String)] = Nil) {
+    filterSql: Option[String],
+    avgCols: Seq[String],
+    nnCols: Seq[String],
+    derived: Seq[(String, String)]) {
 
   import MaterializedAgg._
 

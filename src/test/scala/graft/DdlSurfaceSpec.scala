@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.warehouse.{Connector, GraftTable, PartitionField}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-17 DDL-surface contract: every common DDL verb over a

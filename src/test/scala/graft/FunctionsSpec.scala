@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.PolyHash31
 import graft.operators.Dedup
 
 class FunctionsSpec extends AnyFunSuite {

@@ -411,9 +411,11 @@ class PipelineSpec extends AnyFunSuite {
     val afterPoly = spark.sparkContext.getPersistentRDDs.size
     assert(afterPoly == before + 1,
       s"one persisted signature relation expected (before=$before after=$afterPoly)")
-    // different hash family → its own cache entry (params are part of the key)
-    val sigXx = Dedup.minhashSignatures(docs, "doc_id", "text")
-    assert(!(sigXx eq sig1))
+    // different params → their own cache entry (params are part of the key)
+    val sig32 = Dedup.minhashSignaturesPoly(docs, "doc_id", "text", numHashes = 32)
+    assert(!(sig32 eq sig1))
+    assert(sig32.first().getSeq[Long](1).length === 32)
+    assert(Dedup.minhashSignaturesPoly(docs, "doc_id", "text", numHashes = 32) eq sig32)
     // candidates ride the cached signatures and still compute correctly
     val pairs = Dedup.minhashCandidatesPoly(docs, "doc_id", "text", threshold = 0.4)
     assert(pairs.count() >= 0)
@@ -449,23 +451,6 @@ class PipelineSpec extends AnyFunSuite {
     if (exact.nonEmpty)
       assert(lsh.size.toDouble / exact.size >= 0.5,
         s"recall ${lsh.size.toDouble / exact.size}")
-  }
-
-  test("exactCosinePairsBlock matches the shuffle-only grid plan exactly") {
-    val emb = T.embeddings(spark, sf)
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b", "sim").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val grid = asSet(Similarity.exactCosinePairs(emb, "vec_id", "embedding", 0.4))
-    val block = asSet(Similarity.exactCosinePairsBlock(emb, "vec_id", "embedding", 0.4))
-    assert(grid === block)
-    assert(grid.nonEmpty)
-    // grid invariants: ordered ids, no self pairs, no duplicates
-    assert(grid.forall { case (a, b, _) => a < b })
-    // a tiny memory budget must route the block variant to the grid
-    val guarded = asSet(Similarity.exactCosinePairsBlock(
-      emb, "vec_id", "embedding", 0.4, maxBlockBytes = 1024L))
-    assert(guarded === grid)
   }
 
   test("bitmask Jaccard paths respect the doc-count cap (strategy keys on docs too)") {
@@ -1142,11 +1127,11 @@ class PipelineSpec extends AnyFunSuite {
       val (probed, strategy) = crossFilterRows(batch, corpus, t)
       assert(strategy === "probe")
       assert(sortRows(probed) === want, s"probe at t=$t")
-      // ids ≥ 2^62 cannot be parity-tagged, and the union engine scores
-      // rows that share an id as one document: both are left out of the
-      // union run
-      val small = batch.filter(r => r._1 == null ||
-        (r._1 < (1L << 62) && batch.count(_._1 == r._1) == 1))
+      // ids ≥ 2^62 cannot be parity-tagged: they are left out of the
+      // union run. Rows that share an id stay in, each judged on its own
+      // text.
+      val small = batch.filter(r => r._1 == null || r._1 < (1L << 62))
+      assert(small.groupBy(_._1).exists { case (id, rs) => id != null && rs.size > 1 })
       val (unioned, _) = crossFilterRows(small, corpus, t, cap = 1L)
       assert(sortRows(unioned) === sortRows(refCrossFilter(small, corpus, t)),
         s"union at t=$t")
@@ -1190,12 +1175,14 @@ class PipelineSpec extends AnyFunSuite {
       assert(crossFilterRows(batch, corpus, t)._1.isEmpty, s"probe at t=$t")
       assert(crossFilterRows(batch, corpus, t, cap = 0L)._1.isEmpty, s"union at t=$t")
     }
-    // character 3-grams: U+1F600 in front of fullwidth text adds two
-    // grams to its 8, J = 0.8. In UTF-16 order the emoji-led gram comes
-    // first, in code-point order last; a merge over one order that
-    // compares in the other steps past every common gram.
+    // character 3-grams: two U+1F600 in front of fullwidth text add two
+    // grams to its 8, J = 0.8, when a character is a code point (UTF-16
+    // units would cut four grams through the surrogate pairs, J = 2/3).
+    // In UTF-16 order the emoji-led grams come first, in code-point
+    // order last; a merge over one order that compares in the other
+    // steps past every common gram.
     val fw = "ｆｇｈ，ｉｊｋ，ｌｍ"
-    val grams = Seq((1L, "😀" + fw), (2L, fw)).toDF("id", "text")
+    val grams = Seq((1L, "😀😀" + fw), (2L, fw)).toDF("id", "text")
     val before = Dedup.bitmaskDocCap
     try {
       for (cap <- Seq(before, 1L)) {
@@ -1206,6 +1193,61 @@ class PipelineSpec extends AnyFunSuite {
           s"char 3-grams, strategy ${Dedup.lastJaccardStrategy.get()}")
       }
     } finally Dedup.bitmaskDocCap = before
+  }
+
+  test("Jaccard self-joins refuse a repeated id on every strategy") {
+    import spark.implicits._
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    def words(vocab: Int): Seq[String] = {
+      val rnd = new scala.util.Random(vocab)
+      Seq.fill(20)(Seq.fill(8)(s"w${rnd.nextInt(vocab)}").mkString(" "))
+    }
+    def letters(alphabet: Int): Seq[String] = {
+      val rnd = new scala.util.Random(alphabet)
+      Seq.fill(20)(Seq.fill(10)(('a' + rnd.nextInt(alphabet)).toChar).mkString)
+    }
+    val wordJoin = (df: org.apache.spark.sql.DataFrame) =>
+      Dedup.jaccardJoin(df, "id", "text", 0.5)
+    val charJoin = (df: org.apache.spark.sql.DataFrame) =>
+      Dedup.charNgramJaccard(df, "id", "text", 3, 0.5)
+    // each join over a small vocabulary (≤ 64 tokens) and a wide one; the
+    // repeated row of char 3-grams is too short for any gram, so it
+    // brings no tokens of its own
+    for ((kind, join, small, wide, repeat) <- Seq(
+        ("words", wordJoin, words(30), words(200), "novel words here"),
+        ("char 3-grams", charJoin, letters(3), letters(10), "ab"))) {
+      // string ids rule out both bitmask strategies, so over a wide
+      // vocabulary the prefix strategy runs without the doc-count probe
+      for ((strategy, texts, stringIds, cap) <- Seq(
+          ("bitmask64", small, false, Dedup.bitmaskDocCap),
+          ("bitmask-wide", wide, false, Dedup.bitmaskDocCap),
+          ("prefix", small, false, 1L),
+          ("prefix", wide, true, Dedup.bitmaskDocCap))) {
+        def frame(rows: Seq[(Int, String)]) =
+          if (stringIds) rows.map { case (i, t) => (s"d$i", t) }.toDF("id", "text")
+          else rows.map { case (i, t) => (i.toLong, t) }.toDF("id", "text")
+        val rows = texts.zipWithIndex.map(_.swap)
+        val before = Dedup.bitmaskDocCap
+        try {
+          Dedup.bitmaskDocCap = cap
+          join(frame(rows)).collect()
+          assert(Dedup.lastJaccardStrategy.get() === strategy, kind)
+          val e = intercept[Exception](join(frame(rows :+ (3 -> repeat))).collect())
+          val id = if (stringIds) "d3" else "3"
+          assert(chain(e).exists(_.contains(s"ids must be unique, id repeated: $id")),
+            s"$kind, $strategy: ${chain(e).mkString(" | ")}")
+        } finally Dedup.bitmaskDocCap = before
+      }
+    }
+  }
+
+  test("charNgrams steps by code point: no n-gram splits a surrogate pair") {
+    import spark.implicits._
+    val grams = Seq("A😀b😀").toDF("text")
+      .select(Dedup.charNgrams(2)(col("text"))).as[Seq[String]].head()
+    // distinct, lowercased, in code-point order (U+1F600 after 'b')
+    assert(grams === Seq("a😀", "b😀", "😀b"))
   }
 
   test("crossNearDupFilter drops cross-side near-copies, keeps novel docs") {

@@ -215,9 +215,7 @@ class PlanSpec extends AnyFunSuite {
     Similarity.exactCosinePairs(emb, "vec_id", "embedding", 0.8)
     val before = settledJobCount()
     // same corpus plan again: the (dims, count) cache must answer — no
-    // jobs may run while the query is BUILT (exactCosinePairsBlock also
-    // shares the cache, but its block path collects by design, so only
-    // the shuffle-only builder can be audited for zero jobs)
+    // jobs may run while the query is BUILT
     Similarity.exactCosinePairs(emb, "vec_id", "embedding", 0.8)
     val after = settledJobCount()
     assert(after === before,
@@ -489,8 +487,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("diff reads only the files that changed between the cuts — never the table") {
-    val spark2 = spark
-    import spark2.implicits._
     val c = new graft.warehouse.Connector(spark,
       java.nio.file.Files.createTempDirectory("graft-diffplan").toString)
     c.createTable("tdp", spark.range(0, 20000).toDF("id"))

@@ -826,7 +826,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("table sink addBatch evaluates the micro-batch source plan exactly once") {
-    import spark.implicits._
     val outDir = Files.createTempDirectory("graft-sink1e").resolve("t")
     val acc = spark.sparkContext.longAccumulator("sink-evals")
     val bump = udf { id: Long => acc.add(1L); id }.asNondeterministic()

@@ -262,7 +262,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("diff yields exact row changelogs across append/upsert/delete and is silent across compact") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val c = new Connector(spark, freshWarehouse())
     val b1 = spark.range(0, 1000).toDF("id").withColumn("v", $"id" * 10)
     c.createTable("td", b1)
@@ -1933,7 +1933,6 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("driver-side partition transforms equal the engine's expressions") {
     import graft.warehouse.PartitionField
-    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
     // bucket over longs — the driver evaluates the SAME Murmur3Hash
     // Catalyst expression; a divergence here silently breaks pruning
@@ -2673,7 +2672,6 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("renameColumn is metadata-only and era-correct: old files keep their data") {
-    import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft-ren-")
     val t = GraftTable.create(spark, dir, "t",
       Seq((1L, "a"), (2L, "b")).toDF("id", "v")).get
@@ -2813,7 +2811,6 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("column defaults fill era-correctly through renamed-era (slow path) reads") {
-    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft-defr-")
     val t = GraftTable.create(spark, dir, "t",
@@ -2891,7 +2888,6 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("row lineage assigns through partitioned writes and era-projected (renamed) reads") {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft-rlp-")
     val t = GraftTable.create(spark, dir, "t",
       (1L to 60L).map(i => (i, i % 3)).toDF("id", "b")).get
