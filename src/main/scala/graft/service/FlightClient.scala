@@ -87,7 +87,7 @@ final class FlightClient(spark: SparkSession, val host: String, val port: Int,
   def doGet(table: String): FlightClient.Fetched =
     call(Wire.obj("action" -> "do_get", "table" -> table)) { (r, in) =>
       val body = ArrowCodec.read(spark, in)
-      FlightClient.Fetched(body.df, r.num("snapshot_id"), () => body.cleanup())
+      FlightClient.Fetched(body.df, body.rows, r.num("snapshot_id"), () => body.cleanup())
     }
 
   /** Incremental read: rows appended in `(since, snapshot]` for the
@@ -99,7 +99,7 @@ final class FlightClient(spark: SparkSession, val host: String, val port: Int,
     call(Wire.obj("action" -> "get_changes", "table" -> table,
         "since" -> since, "until" -> until)) { (r, in) =>
       val body = ArrowCodec.read(spark, in)
-      FlightClient.Fetched(body.df, r.num("snapshot_id"), () => body.cleanup())
+      FlightClient.Fetched(body.df, body.rows, r.num("snapshot_id"), () => body.cleanup())
     }
 
   /** The source's operation log in `(since, head]` as (snapshotId,
@@ -126,7 +126,7 @@ final class FlightClient(spark: SparkSession, val host: String, val port: Int,
     call(Wire.obj("action" -> "get_delete_keys", "table" -> table,
         "since" -> snapshotId)) { (r, in) =>
       val body = ArrowCodec.read(spark, in)
-      FlightClient.Fetched(body.df, r.num("snapshot_id"), () => body.cleanup())
+      FlightClient.Fetched(body.df, body.rows, r.num("snapshot_id"), () => body.cleanup())
     }
 
   /** Changelog read: `_change_type`-tagged rows in `(since, snapshot]`,
@@ -135,7 +135,7 @@ final class FlightClient(spark: SparkSession, val host: String, val port: Int,
     call(Wire.obj("action" -> "get_diff", "table" -> table,
         "since" -> since)) { (r, in) =>
       val body = ArrowCodec.read(spark, in)
-      FlightClient.Fetched(body.df, r.num("snapshot_id"), () => body.cleanup())
+      FlightClient.Fetched(body.df, body.rows, r.num("snapshot_id"), () => body.cleanup())
     }
 
   /** Schema only (reference client command: `icerunner.py:942-952`). */
@@ -192,9 +192,10 @@ object FlightClient {
     * advertisement changes while the old node keeps serving). */
   val EndpointTtlMs: Long = 60000L
 
-  /** A fetched body plus the snapshot it was pinned at. `cleanup()`
-    * releases any client-side spill chunks once the rows are consumed. */
-  final case class Fetched(df: DataFrame, snapshotId: Long,
+  /** A fetched body, its decoded row count (known without a Spark job)
+    * and the snapshot it was pinned at. `cleanup()` releases any
+    * client-side spill chunks once the rows are consumed. */
+  final case class Fetched(df: DataFrame, rows: Long, snapshotId: Long,
       cleanup: () => Unit = () => ())
   final case class Info(schema: StructType, totalRecords: Long,
       snapshotId: Long, host: String, port: Int)

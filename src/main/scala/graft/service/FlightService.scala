@@ -179,31 +179,15 @@ final class FlightService(connector: Connector, port: Int = 0,
         // compactions that get_changes refuses, carrying only the
         // delta over the wire — the mirror's alternative to a full
         // re-copy after a source rewrite. Rows arrive with a
-        // `_change_type` column. Since r14 computed from the
-        // PER-COMMIT change feed and NETTED back to diff's insert/
-        // delete contract (transient in-window churn cancels, so the
-        // mirror's exceptAll apply stays sound) — unlike the file-set
-        // diff this stays valid across MERGE-ON-READ deletes in the
-        // window (previously a forced full rebuild) and skips
+        // `_change_type` column. The per-commit change walk netted
+        // once over the window (GraftTable.netChanges): transient
+        // in-window churn cancels, so the mirror's exceptAll apply
+        // stays sound; unlike the file-set diff this stays valid
+        // across MERGE-ON-READ deletes in the window and skips
         // maintenance compacts instead of paying a full-table compare.
         val t = connector.loadTable(req.table)
         val snap = t.currentSnapshotId.getOrElse(0L)
-        val df = {
-          import org.apache.spark.sql.functions.{col, lit, when}
-          val feed = t.changeFeed(req.since, snap)
-          val cols = feed.columns.filterNot(Set("_change_type",
-            "_commit_snapshot_id", "_commit_timestamp")).toSeq
-          // one-pass netting (GraftTable.multisetNet): the exceptAll-
-          // both-ways shape evaluated the WHOLE feed plan 4× per diff
-          val tagged = feed.withColumn("__gd_s",
-            when(col("_change_type").isin("insert", "update_postimage"),
-              1L).otherwise(-1L))
-            .select((cols.map(col) :+ col("__gd_s")): _*)
-          graft.warehouse.GraftTable.multisetNet(tagged, cols, "__gd_s")
-            .withColumn("_change_type",
-              when(col("__gd_s") === 1L, lit("insert")).otherwise(lit("delete")))
-            .drop("__gd_s")
-        }
+        val df = t.netChanges(req.since, snap)
         Wire.writeLine(out, Wire.obj("ok" -> true, "snapshot_id" -> Wire.JNum(snap)))
         writeBody(df, out)
 

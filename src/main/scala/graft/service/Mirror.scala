@@ -240,7 +240,7 @@ object Mirror {
     def flushAppends(until: Long): Unit = if (until > prev) {
       val f = data.getChanges(sourceTable, prev, until)
       try {
-        val n = f.df.count()
+        val n = f.rows
         if (n > 0) {
           alignForDelta(data, sourceTable, connector, targetTable, f.df.schema)
           val tgtCols = connector.loadTable(targetTable).schema.fieldNames.toSeq
@@ -264,7 +264,7 @@ object Mirror {
         } else {
           val f = data.getDeleteKeys(sourceTable, id)
           try {
-            applied += f.df.count()
+            applied += f.rows
             connector.loadTable(targetTable).deleteKeysMor(f.df)
           } finally f.cleanup()
         }
@@ -302,16 +302,18 @@ object Mirror {
         alignForDelta(data, sourceTable, connector, targetTable,
           org.apache.spark.sql.types.StructType(
             f.df.schema.fields.filterNot(_.name == "_change_type")))
+        // a window that netted to nothing (maintenance, or churn that
+        // cancels) leaves the replica's rows as they are
+        if (f.rows == 0) return ("incremental_diff", 0L, f.snapshotId)
         val tgtCols = connector.loadTable(targetTable).schema.fieldNames.toSeq
         val ins = f.df.filter(col("_change_type") === "insert")
           .select(tgtCols.map(col): _*)
         val del = f.df.filter(col("_change_type") === "delete")
           .select(tgtCols.map(col): _*)
-        val applied = f.df.count()
         connector.replaceTable(targetTable,
           connector.query(targetTable).select(tgtCols.map(col): _*)
             .exceptAll(del).unionByName(ins))
-        ("incremental_diff", applied, f.snapshotId)
+        ("incremental_diff", f.rows, f.snapshotId)
       }
     } finally f.cleanup()
   }
@@ -344,7 +346,7 @@ object Mirror {
               try {
                 if (f.snapshotId == l) ("up_to_date", 0L, l)
                 else {
-                  val n = f.df.count()
+                  val n = f.rows
                   if (n > 0) {
                     // additive source evolution: widen the replica and
                     // keep appending deltas (pre-evolution files in

@@ -1071,10 +1071,110 @@ final class GraftTable private (
     dir.relativize(Paths.get(java.net.URI.create(uri).getPath)).toString
 
   /** The distinct files `probe`'s `__f` column names, manifest-relative
-    * and sorted — a driver list bounded by the affected file count. */
-  private def affectedFiles(probe: DataFrame): Seq[String] =
-    probe.select("__f").distinct().collect()
-      .map(r => relOfUri(r.getString(0))).toSeq.sorted
+    * and sorted — a driver list bounded by the affected file count.
+    * Each task ships its own distinct names, so the probe is one
+    * shuffle-free job (a `distinct()` costs a shuffle and a second job). */
+  private def affectedFiles(probe: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.Encoders
+    probe.select("__f").as(Encoders.STRING)
+      .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.map(relOfUri).toSeq.sorted
+  }
+
+  /** The rows of a driver-local plan — a local relation, alone or under
+    * the coalescing repartition [[graft.service.ArrowCodec.read]] puts
+    * over a body — with its output column names. None for any plan
+    * whose rows would take a Spark job to see. */
+  private def localRows(df: DataFrame)
+      : Option[(Seq[String], Seq[org.apache.spark.sql.catalyst.InternalRow])] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
+    def local(p: LogicalPlan) = p match {
+      case l: LocalRelation if !l.isStreaming => Some((l.output.map(_.name), l.data))
+      case _ => None
+    }
+    df.queryExecution.optimizedPlan match {
+      case Repartition(_, false, child) => local(child)
+      case p => local(p)
+    }
+  }
+
+  /** How a copy-on-write merge matches stored rows to the incoming key
+    * tuples, null-safely (`<=>`, so a NULL key finds its stored NULL
+    * twin): `hit` keeps the stored rows whose key is an incoming key,
+    * `miss` the others. `bounds` is the single key's (min, max) for
+    * stats pruning — None when there are several keys, a NULL key, no
+    * key, or a type with no range stats (range pruning would be unsound:
+    * file stats skip nulls). */
+  private final case class KeyMatch(hit: DataFrame => DataFrame,
+      miss: DataFrame => DataFrame, bounds: Option[(Any, Any)])
+
+  /** [[KeyMatch]] for `incoming`'s `keyCols`. A driver-local `incoming`
+    * ([[localRows]]) whose key types compare by value is matched with an
+    * in-set filter over its key tuples, and its bounds are taken on the
+    * driver: no Spark job, no broadcast. Any other plan is matched with
+    * semi- and anti-joins against its key projection (duplicate keys are
+    * harmless to both) and pays one aggregate for its bounds. */
+  private def keyMatch(incoming: DataFrame, keyCols: Seq[String]): KeyMatch = {
+    import org.apache.spark.sql.GraftColumnBridge.{column => ec, expression => ex}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.functions.{col, lit, struct, when}
+    import org.apache.spark.sql.types._
+    val keyed = incoming.select(keyCols.map(col): _*)
+    val names = keyed.columns.toSeq
+    val types = keyed.schema.fields.toSeq.map(_.dataType)
+    // types whose in-set lookup (hash or ordering) agrees with `<=>`
+    // (float -0.0/NaN and collated strings would not)
+    val byValue = types.forall {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+           TimestampType | TimestampNTZType => true
+      case t => t == StringType
+    }
+    val local = localRows(incoming).filter { case (out, _) =>
+      byValue && names.forall(out.contains) }
+    local match {
+      case Some((out, data)) =>
+        val ords = names.map(out.indexOf)
+        val tuples = data.map(r => ords.zip(types).map { case (o, t) => r.get(o, t) })
+        val vals = tuples.map(_.head)
+        val member =
+          if (tuples.isEmpty) lit(false)
+          else if (keyCols.size > 1)
+            // a struct is never NULL, and the struct in-set compares by
+            // ordering, under which NULL fields are equal
+            ec(InSet(ex(struct(keyCols.map(col): _*)),
+              tuples.map(t => InternalRow.fromSeq(t): Any).toSet))
+          else when(col(keyCols.head).isNull, lit(vals.contains(null)))
+            .otherwise(ec(InSet(ex(col(keyCols.head)), vals.filter(_ != null).toSet)))
+        val bounds =
+          if (keyCols.size > 1 || vals.isEmpty || vals.contains(null)) None
+          else {
+            val ord: Ordering[Any] = types.head match {
+              case StringType => Ordering.by((v: Any) =>
+                v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+              case _ => Ordering.by((v: Any) => v.asInstanceOf[Number].longValue)
+            }
+            for (lo <- GraftTable.boundOf(vals.min(ord), types.head);
+                 hi <- GraftTable.boundOf(vals.max(ord), types.head)) yield (lo, hi)
+          }
+        KeyMatch(_.filter(member), _.filter(!member), bounds)
+      case None =>
+        val keys = incoming.select(keyCols.map(c => col(c).as(s"__k_$c")): _*)
+        val cond = keyCols.map(c => col(c) <=> col(s"__k_$c")).reduce(_ && _)
+        val bounds =
+          if (keyCols.size != 1) None
+          else {
+            import org.apache.spark.sql.functions.{max, min, sum}
+            val k = col(keyCols.head)
+            val r = incoming.agg(min(k), max(k),
+              sum(when(k.isNull, 1L).otherwise(0L))).collect().head
+            if (r.isNullAt(0) || r.getLong(2) > 0) None
+            else Some((r.get(0), r.get(1)))
+          }
+        KeyMatch(_.join(keys, cond, "left_semi"), _.join(keys, cond, "left_anti"),
+          bounds)
+    }
+  }
 
   /** The partition fields `sch` can derive (a spec column absent from
     * the frame being written cannot partition it). */
@@ -1257,6 +1357,13 @@ final class GraftTable private (
     // constraints gate the rows that LAND (tombstone rows only remove);
     // checked once up front — the retry loop re-reads state, not input
     enforceConstraints(upserts, "merge")
+    // null-SAFE key matching: a NULL key must match its stored NULL
+    // twin (plain equality would never match, so every upsert of a
+    // NULL-keyed row would accumulate a duplicate). ALL incoming keys
+    // participate — update and delete targets both locate files and
+    // both evict the stored version; only upsert rows re-insert. Taken
+    // once, after the first attempt's schema check.
+    lazy val km = keyMatch(incoming, keyCols)
     // Live merge-on-read tombstones do NOT block a merge (the Iceberg
     // rewrite stance, since r13): the rewrite applies them to its
     // survivor selection below, so rewritten files carry no deleted
@@ -1273,37 +1380,18 @@ final class GraftTable private (
           s"merge schema mismatch for $name: table column ${f.name}: " +
             s"${f.dataType} absent or mistyped in incoming ${incoming.schema}")
       }
-      // null-SAFE key projection: a NULL key must match its stored NULL
-      // twin (plain equality would never match, so every upsert of a
-      // NULL-keyed row would accumulate a duplicate). ALL incoming keys
-      // participate — update and delete targets both locate files and
-      // both evict the stored version; only upsert rows re-insert.
-      val keys = incoming
-        .select(keyCols.map(c => col(c).as(s"__k_$c")): _*).distinct()
-      val keyCond = keyCols.map(c => col(c) <=> col(s"__k_$c")).reduce(_ && _)
       // probe: which current files hold a matching key? Manifest stats
       // prune non-intersecting files first (single-key tables clustered
       // on the key skip most of a 100 TB table before any scan); the
       // scan itself is key-projected, and file paths come back as a
       // bounded driver list.
-      val probeSrc =
-        if (keyCols.size == 1) {
-          val k = keyCols.head
-          import org.apache.spark.sql.functions.{max => fmax, min => fmin, sum => fsum, when => fwhen}
-          val bounds = incoming.agg(fmin(col(k)), fmax(col(k)),
-            fsum(fwhen(col(k).isNull, 1L).otherwise(0L))).collect().head
-          // range pruning is sound only for non-NULL incoming keys:
-          // file stats skip nulls, so a stored NULL twin could hide in
-          // a file whose recorded range misses [min, max]
-          if (bounds.isNullAt(0) || bounds.getLong(2) > 0)
-            readTagged(Some(base.snapshotId), "__f")
-          else readWhereAllImpl(
-            Seq((k, Some(bounds.get(0)), Some(bounds.get(1)))),
-            Some(base.snapshotId), Some("__f"))
-        } else readTagged(Some(base.snapshotId), "__f")
-      val keyHitFiles = affectedFiles(probeSrc
-        .select(keyCols.map(col) :+ col("__f"): _*)
-        .join(keys, keyCond))
+      val probeSrc = km.bounds match {
+        case Some((lo, hi)) => readWhereAllImpl(Seq((keyCols.head, Some(lo), Some(hi))),
+          Some(base.snapshotId), Some("__f"))
+        case None => readTagged(Some(base.snapshotId), "__f")
+      }
+      val keyHitFiles = affectedFiles(km.hit(probeSrc
+        .select(keyCols.map(col) :+ col("__f"): _*)))
       // the not-matched-by-source arm adds every file holding a stored
       // row with NO incoming key that satisfies its condition — those
       // rows must be dropped, so their files join the rewrite set (an
@@ -1311,8 +1399,7 @@ final class GraftTable private (
       val nmsFiles = whenNotMatchedBySourceDelete match {
         case None => Nil
         case Some(c) =>
-          affectedFiles(readTagged(Some(base.snapshotId), "__f")
-            .join(keys, keyCond, "left_anti")
+          affectedFiles(km.miss(readTagged(Some(base.snapshotId), "__f"))
             .filter(coalesce(c, lit(false))))
       }
       val affected = (keyHitFiles ++ nmsFiles).distinct.sorted
@@ -1329,7 +1416,7 @@ final class GraftTable private (
       // columns under lineage): every incoming row then inserts
       val srcAll = rewriteSource(base, affected,
         schemaAsOf(Some(base.snapshotId)), lineage)
-      val survivors0 = srcAll.join(keys, keyCond, "left_anti")
+      val survivors0 = km.miss(srcAll)
       // not-matched-by-source deletes: unmatched stored rows whose arm
       // condition is TRUE are dropped (NULL keeps, SQL WHEN-semantics)
       val survivors = whenNotMatchedBySourceDelete match {
@@ -1352,7 +1439,7 @@ final class GraftTable private (
             "would duplicate; dedupe the batch first")
           // stored id per matched key (one row per incoming key; min
           // disambiguates duplicate-keyed stored rows)
-          val idByKey = srcAll.join(keys, keyCond, "left_semi")
+          val idByKey = km.hit(srcAll)
             .groupBy(keyCols.map(col): _*)
             .agg(fmin(col(GraftTable.RowIdCol)).as("__mid"))
             .select(keyCols.map(c => col(c).as(s"__mk_$c")) :+ col("__mid"): _*)
@@ -3469,6 +3556,53 @@ final class GraftTable private (
     * identity-true view of a replacement. */
   def changeFeed(fromId: Long, toId: Long = Long.MaxValue,
       withRowIds: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val (sch, steps) = changeSteps(fromId, toId, withRowIds)
+    if (steps.isEmpty) {
+      val base =
+        if (withRowIds) emptyDf(sch)
+          .withColumn(GraftTable.RowIdCol, lit(null).cast("long"))
+          .withColumn(GraftTable.RowSeqCol, lit(null).cast("long"))
+        else emptyDf(sch)
+      base
+        .withColumn("_change_type", lit(null).cast("string"))
+        .withColumn("_commit_snapshot_id", lit(null).cast("long"))
+        .withColumn("_commit_timestamp", lit(null).cast("timestamp"))
+    } else steps.map(st => st.label(st.rows)).reduce(_ unionByName _)
+  }
+
+  /** The NET row change over `(fromId, toId]`: the rows to delete from
+    * and insert into `read(fromId)` to get `read(toId)` (as multisets),
+    * tagged `_change_type` ∈ {`insert`, `delete`} and era-projected to
+    * the `toId` schema — the changelog `get_diff` ships to a mirror.
+    * The [[changeFeed]] walk's signed rows are netted ONCE for the whole
+    * window ([[GraftTable.multisetNet]]): signed multiset sums are
+    * associative, so this equals netting each commit and then the
+    * window, without a per-commit shuffle or the update pairing the
+    * net drops anyway. Transient in-window churn cancels. Expired cuts
+    * refuse ([[HistoryExpiredException]]), as for the feed. */
+  def netChanges(fromId: Long, toId: Long = Long.MaxValue): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val (sch, steps) = changeSteps(fromId, toId, withRowIds = false)
+    val cols = sch.fieldNames.toSeq
+    if (steps.isEmpty) emptyDf(sch).withColumn("_change_type", lit("insert"))
+    else GraftTable.multisetNet(
+        steps.map(_.rows.select((cols :+ "__cf_s").map(col): _*))
+          .reduce(_ unionByName _), cols, "__cf_s")
+      .withColumn("_change_type",
+        when(col("__cf_s") === 1L, lit("insert")).otherwise(lit("delete")))
+      .drop("__cf_s")
+  }
+
+  /** The change walk [[changeFeed]] and [[netChanges]] share: the
+    * `toId` schema and, per commit (or per coalesced run of pure
+    * appends) in `(fromId, toId]`, the changed rows signed ±1 in
+    * `__cf_s` (+1 inserted, −1 deleted) with the step's `label`, which
+    * turns them into the feed's `_change_type`-tagged, commit-attributed
+    * rows. A run's rows also carry their scan file in `__cf_f`, which
+    * its label joins to the owning commit. */
+  private def changeSteps(fromId: Long, toId: Long, withRowIds: Boolean)
+      : (StructType, Seq[GraftTable.ChangeStep]) = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit,
       max => fmax, min => fmin, sum => fsum, when => fwhen}
     val snaps = log.snapshots
@@ -3492,10 +3626,17 @@ final class GraftTable private (
     def readVis(fs: Seq[(String, Long)], dels: Seq[(Long, Tomb)]): DataFrame =
       if (withRowIds) readWithLineage(fs, dels, sch, snaps)
       else readWithDeletes(fs, dels, sch, snaps)
+    def signed(df: DataFrame, sign: Long): DataFrame =
+      df.withColumn("__cf_s", lit(sign))
     def stamp(df: DataFrame, s: Snapshot): DataFrame =
       df.withColumn("_commit_snapshot_id", lit(s.snapshotId))
         .withColumn("_commit_timestamp",
           lit(new java.sql.Timestamp(s.timestampMs)))
+    // a one-sided commit's label: the sign is the change type
+    def bySign(s: Snapshot)(rows: DataFrame): DataFrame =
+      stamp(rows.withColumn("_change_type",
+        fwhen(col("__cf_s") === 1L, lit("insert")).otherwise(lit("delete")))
+        .drop("__cf_s"), s)
     // ----- CoW commits (and plain adds): file-set diff of ONE commit
     // s's added files as visible AT CUT s: readWithDeletes applies the
     // tombstones live at s era-scoped, so a rollback's re-added old
@@ -3517,39 +3658,34 @@ final class GraftTable private (
         .filter { case (a, _) => remSet.contains(relOf(a)) }
       readVis(fs, log.eqDeletesOf(snaps, Some(prevId)))
     }
-    // Net a rewrite's two sides and pair delete+insert rows sharing a
-    // recorded merge key into update pre/post images; unpaired rows
-    // stay delete/insert. ONE PASS over each side: the r14 shape
-    // (`d.exceptAll(i)` / `i.exceptAll(d)` feeding 4 key-set joins)
-    // re-evaluated the visAdded/visRemoved scan plans — themselves
-    // multi-join reads — up to 8× inside one feed plan (the q108/q117
-    // regression); here the sides union ±1-tagged, identical rows
-    // (survivors that merely moved files) cancel in one groupBy, and
-    // the pairing is a key-window over the survivors. Null keys group
+    // A rewrite's label: net its two sides and pair delete+insert rows
+    // sharing a recorded merge key into update pre/post images;
+    // unpaired rows stay delete/insert. ONE PASS over each side: the
+    // r14 shape (`d.exceptAll(i)` / `i.exceptAll(d)` feeding 4 key-set
+    // joins) re-evaluated the visAdded/visRemoved scan plans —
+    // themselves multi-join reads — up to 8× inside one feed plan (the
+    // q108/q117 regression); here the ±1-signed sides cancel identical
+    // rows (survivors that merely moved files) in one groupBy, and the
+    // pairing is a key-window over the survivors. Null keys group
     // together, matching the old null-safe join. Under withRowIds the
     // pairing key is ROW IDENTITY itself — exact for id-preserving
     // rewrites (update, CoW delete, AND merge, whose matched rows
     // inherit the stored id); empty-on-purpose for the re-minting
     // region replacements (overwrite/replace).
-    def paired(dels: DataFrame, ins: DataFrame, s: Snapshot): DataFrame = {
+    def paired(s: Snapshot)(rows: DataFrame): DataFrame = {
       val ks =
         if (withRowIds) Some(Seq(GraftTable.RowIdCol))
         else s.properties.get(GraftTable.DmlKeysKey)
           .map(_.split(',').toSeq.filter(_.nonEmpty))
           .filter(k => k.nonEmpty && k.forall(sch.fieldNames.contains))
-      val cols = dels.columns.toSeq
-      val net = GraftTable.multisetNet(
-        dels.withColumn("__cf_s", lit(-1L))
-          .unionByName(ins.withColumn("__cf_s", lit(1L))), cols, "__cf_s")
+      val net = GraftTable.multisetNet(rows,
+        rows.columns.toSeq.filterNot(_ == "__cf_s"), "__cf_s")
       ks match {
-        case None =>
-          net.withColumn("_change_type",
-            fwhen(col("__cf_s") === 1L, lit("insert")).otherwise(lit("delete")))
-            .drop("__cf_s")
+        case None => bySign(s)(net)
         case Some(keys) =>
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(keys.map(col): _*)
-          net
+          stamp(net
             .withColumn("__cf_hi",
               fmax(fwhen(col("__cf_s") === 1L, 1).otherwise(0)).over(w))
             .withColumn("__cf_hd",
@@ -3561,22 +3697,22 @@ final class GraftTable private (
               .otherwise(
                 fwhen(col("__cf_hi") === 1, lit("update_preimage"))
                   .otherwise(lit("delete"))))
-            .drop("__cf_s", "__cf_hi", "__cf_hd")
+            .drop("__cf_s", "__cf_hi", "__cf_hd"), s)
       }
     }
-    def cowChanges(s: Snapshot, prevId: Long): Option[DataFrame] = {
-      val df = (s.addedFiles.nonEmpty, s.removedFiles.nonEmpty) match {
-        case (true, false) => visAdded(s).withColumn("_change_type", lit("insert"))
+    def cowChanges(s: Snapshot, prevId: Long): Option[GraftTable.ChangeStep] =
+      (s.addedFiles.nonEmpty, s.removedFiles.nonEmpty) match {
+        case (true, false) =>
+          Some(GraftTable.ChangeStep(signed(visAdded(s), 1L), bySign(s)))
         case (false, true) =>
-          visRemoved(s, prevId).withColumn("_change_type", lit("delete"))
+          Some(GraftTable.ChangeStep(signed(visRemoved(s, prevId), -1L), bySign(s)))
         case (true, true) =>
-          paired(visRemoved(s, prevId), visAdded(s), s)
-        case (false, false) => return None
+          Some(GraftTable.ChangeStep(signed(visRemoved(s, prevId), -1L)
+            .unionByName(signed(visAdded(s), 1L)), paired(s)))
+        case (false, false) => None
       }
-      Some(stamp(df, s))
-    }
     // ----- MOR delete commits: the rows the tombstone killed
-    def killedBy(s: Snapshot): Option[DataFrame] = {
+    def killedBy(s: Snapshot): Option[GraftTable.ChangeStep] = {
       val delsAtS = log.eqDeletesOf(snaps, Some(s.snapshotId))
       val mine = delsAtS.filter(_._1 == s.snapshotId).map(_._2)
       if (mine.isEmpty) return None
@@ -3664,8 +3800,8 @@ final class GraftTable private (
               else emptyDf(sch)
             }
       }
-      Some(stamp(parts.reduce(_ unionByName _)
-        .withColumn("_change_type", lit("delete")), s))
+      Some(GraftTable.ChangeStep(signed(parts.reduce(_ unionByName _), -1L),
+        bySign(s)))
     }
     val window = snaps.filter(s => s.snapshotId > fromId && s.snapshotId <= to)
     // ----- a maximal RUN of consecutive pure-append commits reads as ONE
@@ -3687,9 +3823,7 @@ final class GraftTable private (
         s.operation == "publish") &&
         s.removedFiles.isEmpty && s.deleteFiles.isEmpty &&
         s.addedFiles.nonEmpty
-    def runInserts(run: Seq[Snapshot]): DataFrame = {
-      import org.apache.spark.sql.functions.{broadcast, concat, raise_error, url_decode}
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, TimestampType}
+    def runInserts(run: Seq[Snapshot]): GraftTable.ChangeStep = {
       val lastId = run.last.snapshotId
       val owner: Map[String, Snapshot] = run.iterator
         .flatMap(s => s.addedFiles.iterator.map(_ -> s)).toMap
@@ -3700,6 +3834,11 @@ final class GraftTable private (
         if (withRowIds) readWithLineage(fs, dels, sch, snaps,
           tagFile = Some("__cf_f"))
         else readWithDeletes(fs, dels, sch, snaps, tagFile = Some("__cf_f"))
+      GraftTable.ChangeStep(signed(tagged, 1L), attributed(owner))
+    }
+    def attributed(owner: Map[String, Snapshot])(rows: DataFrame): DataFrame = {
+      import org.apache.spark.sql.functions.{broadcast, concat, raise_error, url_decode}
+      import org.apache.spark.sql.types.{LongType, StringType, StructField, TimestampType}
       val dirAbs = dir.toAbsolutePath.toString
       val mapDf = spark.createDataFrame(
         spark.sparkContext.parallelize(owner.toSeq.sortBy(_._1).map {
@@ -3709,7 +3848,7 @@ final class GraftTable private (
           StructField("__cf_rel", StringType),
           StructField("__cf_sid", LongType),
           StructField("__cf_ts", TimestampType))))
-      val withRel = tagged
+      val withRel = rows
         .withColumn("__cf_dir", lit(dirAbs))
         .withColumn("__cf_dec", url_decode(col("__cf_f")))
         .withColumn("__cf_rel", expr(
@@ -3730,7 +3869,7 @@ final class GraftTable private (
         .withColumn("_commit_timestamp", col("__cf_ts"))
         .select(outCols.map(col): _*)
     }
-    def oneCommit(s: Snapshot): Option[DataFrame] = {
+    def oneCommit(s: Snapshot): Option[GraftTable.ChangeStep] = {
       val idx = snaps.indexWhere(_.snapshotId == s.snapshotId)
       val prevId = if (idx > 0) snaps(idx - 1).snapshotId else 0L
       s.operation match {
@@ -3756,37 +3895,27 @@ final class GraftTable private (
     // walks as a zero-row maintenance commit); emit its delete-applied
     // visible set as inserts attributed to it, matching diff(0, …)'s
     // empty-before-set behavior.
-    val baseline: Option[DataFrame] = snaps.headOption
+    val baseline: Option[GraftTable.ChangeStep] = snaps.headOption
       .filter(f => fromId == 0 && to >= f.snapshotId &&
         f.operation == "compact")
-      .map(f => stamp(visAdded(f).withColumn("_change_type", lit("insert")), f))
-    val runsB = Seq.newBuilder[DataFrame]
+      .map(f => GraftTable.ChangeStep(signed(visAdded(f), 1L), bySign(f)))
+    val steps = Seq.newBuilder[GraftTable.ChangeStep]
+    steps ++= baseline
     var pending = List.empty[Snapshot]
     def flush(): Unit = {
       pending.reverse match {
         case Nil =>
-        case one :: Nil => oneCommit(one).foreach(runsB += _)
-        case run => runsB += runInserts(run)
+        case one :: Nil => steps ++= oneCommit(one)
+        case run => steps += runInserts(run)
       }
       pending = Nil
     }
     window.foreach { s =>
       if (pureAppend(s)) pending ::= s
-      else { flush(); oneCommit(s).foreach(runsB += _) }
+      else { flush(); steps ++= oneCommit(s) }
     }
     flush()
-    val parts = baseline.toSeq ++ runsB.result()
-    if (parts.isEmpty) {
-      val base =
-        if (withRowIds) emptyDf(sch)
-          .withColumn(GraftTable.RowIdCol, lit(null).cast("long"))
-          .withColumn(GraftTable.RowSeqCol, lit(null).cast("long"))
-        else emptyDf(sch)
-      base
-        .withColumn("_change_type", lit(null).cast("string"))
-        .withColumn("_commit_snapshot_id", lit(null).cast("long"))
-        .withColumn("_commit_timestamp", lit(null).cast("timestamp"))
-    } else parts.reduce(_ unionByName _)
+    (sch, steps.result())
   }
 
   // ------------------------------------------------------------ lineage
@@ -4087,22 +4216,8 @@ final class GraftTable private (
       try emptyDf(sch).filter(cond).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       } catch { case _: Exception => None }
-    def ext(l: Literal): Option[Any] = Option(l.value).flatMap { v =>
-      l.dataType match {
-        case _: DecimalType => None
-        case _: NumericType => Some(v)
-        case StringType => Some(v.toString)
-        case TimestampType => Some(new java.sql.Timestamp(
-          Math.floorDiv(v.asInstanceOf[Long], 1000L)))
-        case TimestampNTZType => Some(java.time.LocalDateTime.ofInstant(
-          java.time.Instant.ofEpochMilli(
-            Math.floorDiv(v.asInstanceOf[Long], 1000L)),
-          java.time.ZoneOffset.UTC))
-        case DateType => Some(java.sql.Date.valueOf(
-          java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong)))
-        case _ => None
-      }
-    }
+    def ext(l: Literal): Option[Any] =
+      Option(l.value).flatMap(GraftTable.boundOf(_, l.dataType))
     // the analyzer leaves `Cast(Literal)` unfolded (constant folding is
     // an optimizer rule) — fold any foldable side here; unwrap a
     // NUMERIC-upcast Cast around the attribute (comparing an int column
@@ -4770,6 +4885,33 @@ object GraftTable {
     * rewrite materializes it beside `_row_id`: survivors keep their
     * read value, changed/minted rows get the committing snapshot's id. */
   val RowSeqCol = "_last_updated_sequence_number"
+
+  /** One step of the change walk ([[GraftTable.changeFeed]]): a commit's
+    * (or an append run's) changed rows signed ±1 in `__cf_s`, and the
+    * label that turns them into the feed's tagged, attributed rows. */
+  private[warehouse] final case class ChangeStep(rows: DataFrame,
+      label: DataFrame => DataFrame)
+
+  /** A stats-pruning bound ([[FileStat.mayContain]]'s value forms) for
+    * the Catalyst value `v` of type `dt`; None for a type whose bounds
+    * do not prune. */
+  private[warehouse] def boundOf(v: Any, dt: DataType): Option[Any] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case _: DecimalType => None
+      case _: NumericType => Some(v)
+      case StringType => Some(v.toString)
+      case TimestampType => Some(new java.sql.Timestamp(
+        Math.floorDiv(v.asInstanceOf[Long], 1000L)))
+      case TimestampNTZType => Some(java.time.LocalDateTime.ofInstant(
+        java.time.Instant.ofEpochMilli(
+          Math.floorDiv(v.asInstanceOf[Long], 1000L)),
+        java.time.ZoneOffset.UTC))
+      case DateType => Some(java.sql.Date.valueOf(
+        java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong)))
+      case _ => None
+    }
+  }
 
   /** Multiset-cancel a ±1-tagged union in ONE pass: group identical
     * rows, net the sign, re-expand |net| copies tagged with the

@@ -258,10 +258,14 @@ class PlanSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     // Spark jobs per call on these inputs, as measured when the budgets
-    // were introduced. A budget may only ever tighten.
-    val budgets = Map("append" -> 1, "upsert" -> 9, "deleteWhere" -> 3,
+    // were introduced or last tightened (upsert and merge 9, deleteWhere
+    // and updateWhere 3, overwriteWhere 4 before the copy-on-write probe
+    // became one job and a driver-local key set stopped needing the
+    // bounds aggregate and the key broadcasts). A budget may only ever
+    // tighten.
+    val budgets = Map("append" -> 1, "upsert" -> 2, "deleteWhere" -> 2,
       "deletePosMor" -> 5, "compact" -> 2, "replace" -> 1, "sinkBatch" -> 2,
-      "merge" -> 9, "updateWhere" -> 3, "overwriteWhere" -> 4)
+      "merge" -> 2, "updateWhere" -> 2, "overwriteWhere" -> 3)
     def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, s"v$i")).toDF("id", "v")
     def table(): GraftTable = GraftTable.create(spark,
       Files.createTempDirectory("graft-budget-"), "t", rows(0L, 200L)).get
@@ -352,8 +356,10 @@ class PlanSpec extends AnyFunSuite {
     // Spark jobs per call on a driver-local 200-row body, client and
     // server together, as measured when the budgets were introduced
     // (when every encode ran one job per slice: encode 4, doPut 5 and
-    // doUpsert 10 at local[4]). A budget may only ever tighten.
-    val budgets = Map("encodeLocal" -> 0, "doPut" -> 1, "doUpsert" -> 6)
+    // doUpsert 10 at local[4]) or last tightened (doUpsert 6 before the
+    // one-job probe and the driver-local key set). A budget may only
+    // ever tighten.
+    val budgets = Map("encodeLocal" -> 0, "doPut" -> 1, "doUpsert" -> 2)
     val sample = SampleData.create(spark, 200, "default")
     val rows: java.util.List[Row] = sample.collect().toSeq.asJava
     def body() = spark.createDataFrame(rows, sample.schema)
@@ -435,6 +441,53 @@ class PlanSpec extends AnyFunSuite {
     assert(p2.contains("BroadcastHashJoin"), s"vocab side must broadcast:\n$p2")
     assert(!p2.contains("SortMergeJoin"),
       s"token stream must not shuffle for the vocab join:\n$p2")
+  }
+
+  test("get_diff and an incremental_diff mirror tick stay within their Spark job budgets") {
+    import graft.service.{FlightClient, FlightService, Mirror, SyncState}
+    import graft.warehouse.Connector
+    val s = spark
+    import s.implicits._
+    // Spark jobs per call over a window of an append, an upsert and a
+    // copy-on-write delete, as measured when the budgets were introduced
+    // (get_diff 5 and the tick 8 when every commit of the window netted
+    // on its own and the mirror counted each fetched body). get_diff is
+    // the server alone; the tick is client and server together. A
+    // budget may only ever tighten.
+    val budgets = Map("getDiff" -> 2, "diffTick" -> 4)
+    def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, s"v$i")).toDF("id", "v")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val measured = withJobCounter("diff job budgets") { jobsOf =>
+      // created inside the job group, so the service's handler threads
+      // inherit it and their jobs are counted too
+      val src = new Connector(spark, tmp("graft-diffbudget-"))
+      val svc = new FlightService(src)
+      try {
+        val client = new FlightClient(spark, "localhost", svc.boundPort)
+        val url = s"grpc://localhost:${svc.boundPort}/src"
+        val replica = new Connector(spark, tmp("graft-diffbudget-r-"))
+        val state = SyncState(tmp("graft-diffbudget-s-"))
+        client.doPut("src", rows(0L, 200L))
+        Mirror.performSync(client, url, "src", replica, "dst", state)
+        val since = state.load(url, "dst").sourceSnapshotId.get
+        client.doPut("src", rows(1000L, 1100L))
+        client.doUpsert("src", rows(150L, 250L).withColumn("v", lit("u")), Seq("id"))
+        src.delete("src", col("id").between(10L, 50L))
+        val diffJobs = jobsOf(client.getDiff("src", since))
+        var status = ""
+        val tickJobs = jobsOf {
+          status = Mirror.performSync(client, url, "src", replica, "dst", state).status
+        }
+        assert(status === "incremental_diff")
+        assert(replica.query("dst").exceptAll(src.query("src")).isEmpty &&
+          src.query("src").exceptAll(replica.query("dst")).isEmpty)
+        Map("getDiff" -> diffJobs, "diffTick" -> tickJobs)
+      } finally svc.close()
+    }
+    info(s"jobs per call: ${measured.toSeq.sortBy(_._1).mkString(", ")}")
+    budgets.foreach { case (op, budget) =>
+      assert(measured(op) <= budget, s"$op ran ${measured(op)} jobs, budget $budget")
+    }
   }
 
   test("token budget broadcasts the offset table; no global single-partition window") {

@@ -506,6 +506,108 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("property: get_diff's one-pass net equals per-commit netting and read(head) − read(since)") {
+    // Random DML/MOR/maintenance/evolution histories over two schemas
+    // (a nullable single key; a two-column key with NULLs in both), keys
+    // drawn from a small range so batches hit stored rows in many files.
+    // For sampled windows (since, to], netChanges must equal (a) the
+    // per-commit-netted feed get_diff served before and (b) the multiset
+    // difference of the two reads, and applied to read(since) it must
+    // give read(to).
+    val spark = SparkTestSession.spark
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.functions.{col, concat, lit, when}
+    import org.apache.spark.sql.types._
+    import graft.warehouse.GraftTable
+    final case class Shape(schema: StructType, keys: Seq[String],
+        delArm: Column, pred: Int => Column, set: Map[String, Column])
+    val shapes = Seq(
+      Shape(StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
+        Seq("id"), col("v") === "a", r => col("id") % 7 === r.toLong,
+        Map("v" -> concat(col("v"), lit("u")))),
+      Shape(StructType(Seq(StructField("k1", IntegerType), StructField("k2", StringType),
+          StructField("amt", LongType))),
+        Seq("k1", "k2"), col("amt") % 3 === 0L, r => col("k1") === r % 5,
+        Map("amt" -> (col("amt") + 1L))))
+    val rnd = new scala.util.Random(0xD1F5)
+    def value(dt: DataType, key: Boolean): Any =
+      if (rnd.nextInt(10) == 0) null
+      else dt match {
+        case LongType => if (key) rnd.nextInt(40).toLong else rnd.nextInt(1000).toLong
+        case IntegerType => rnd.nextInt(5)
+        case _ => Seq("a", "b", "c", "d")(rnd.nextInt(4))
+      }
+    def canon(rows: Seq[Row]): Seq[String] = rows.map(_.toSeq.mkString("|")).sorted
+    for ((shape, si) <- shapes.zipWithIndex) {
+      def frame(sch: StructType, n: Int, distinctKeys: Boolean = false): DataFrame = {
+        val rows = Seq.fill(n)(Row.fromSeq(sch.fields.toSeq.map(f =>
+          value(f.dataType, shape.keys.contains(f.name)))))
+        val kept =
+          if (!distinctKeys) rows
+          else rows.distinctBy(r => shape.keys.map(k => r.get(sch.fieldIndex(k))))
+        spark.createDataFrame(java.util.Arrays.asList(kept: _*), sch).repartition(2)
+      }
+      val t = GraftTable.create(spark, Files.createTempDirectory("graft-netprop-"),
+        s"n$si", frame(shape.schema, 40)).get
+      // every operation at least once, in a random order, plus six more
+      val schedule = rnd.shuffle((0 to 9) ++ Seq.fill(6)(rnd.nextInt(10)))
+      schedule.foreach {
+        case 0 => t.append(frame(t.schema, 8))
+        case 1 => t.upsert(frame(t.schema, 6, distinctKeys = true), shape.keys)
+        case 2 => t.merge(frame(t.schema, 6, distinctKeys = true), shape.keys, shape.delArm)
+        case 3 => t.deleteWhere(shape.pred(rnd.nextInt(7)))
+        case 4 => t.updateWhere(shape.pred(rnd.nextInt(7)), shape.set)
+        case 5 => t.deleteWhereMor(shape.pred(rnd.nextInt(7)))
+        case 6 => t.deleteKeysMor(frame(t.schema, 4).select(shape.keys.map(col): _*))
+        case 7 => t.compact(targetFiles = 2)
+        case 8 if !t.schema.fieldNames.contains("extra") =>
+          t.addColumns(StructType(Seq(StructField("extra", LongType))))
+        case _ => t.append(frame(t.schema, 5))
+      }
+      val ops = t.log.snapshots.map(_.operation)
+      assert(Seq("delete", "update", "eqdelete", "merge", "evolve").forall(ops.contains),
+        s"history misses an operation kind: $ops")
+      val ids = t.log.snapshots.map(_.snapshotId)
+      val windows = Seq((ids.head, ids.last), (ids(ids.size / 2), ids.last),
+        (ids(2), ids(ids.size - 3)), (ids.last, ids.last))
+      windows.foreach { case (since, to) =>
+        val sch = t.read(Some(to)).schema
+        val cols = sch.fieldNames.toSeq
+        def readAt(id: Long): Seq[Row] = {
+          val df = t.read(Some(id))
+          df.select(cols.map(c =>
+            if (df.columns.contains(c)) col(c) else lit(null).cast(sch(c).dataType).as(c)): _*)
+            .collect().toSeq
+        }
+        val before = readAt(since); val after = readAt(to)
+        def minus(a: Seq[Row], b: Seq[Row]): Seq[Row] = {
+          val left = scala.collection.mutable.Map(b.groupBy(identity)
+            .map { case (r, rs) => r -> rs.size }.toSeq: _*)
+          a.filter(r => left.get(r) match {
+            case Some(n) if n > 0 => left(r) = n - 1; false
+            case _ => true
+          })
+        }
+        val want = canon(minus(after, before).map(r => Row.fromSeq(r.toSeq :+ "insert")) ++
+          minus(before, after).map(r => Row.fromSeq(r.toSeq :+ "delete")))
+        val net = t.netChanges(since, to).collect().toSeq
+        val feed = t.changeFeed(since, to)
+        val perCommit = GraftTable.multisetNet(
+          feed.withColumn("__s", when(col("_change_type")
+            .isin("insert", "update_postimage"), 1L).otherwise(-1L))
+            .select((cols :+ "__s").map(col): _*), cols, "__s")
+          .withColumn("_change_type", when(col("__s") === 1L, lit("insert"))
+            .otherwise(lit("delete"))).drop("__s").collect().toSeq
+        assert(canon(net) === want, s"net != read diff over ($since, $to]: $ops")
+        assert(canon(perCommit) === want, s"per-commit net differs over ($since, $to]: $ops")
+        val (ins, del) = net.partition(_.getString(cols.size) == "insert")
+        val applied = minus(before, del.map(r => Row.fromSeq(r.toSeq.init))) ++
+          ins.map(r => Row.fromSeq(r.toSeq.init))
+        assert(canon(applied) === canon(after), s"apply over ($since, $to] != read($to): $ops")
+      }
+    }
+  }
+
   test("property: row identity is preserved/minted exactly as declared across random histories") {
     // Unique-key regime (one row per id) so identity is decidable per
     // key. Each op declares its identity contract: PRESERVE (update,
